@@ -24,3 +24,9 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+from . import lazyzip as _lazyzip
+
+# every Python worker imports mre when it unpickles an mre kernel, so this
+# is where per-task PySpark overhead is trimmed (see mre.lazyzip)
+_lazyzip.install()

@@ -29,6 +29,7 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
+import os
 import time
 from typing import Optional
 
@@ -36,7 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io import read_table, write_append, write_overwrite
+from .io import local_path, read_table, write_append, write_overwrite
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
                       gopher_quality, gopher_repetition, hash_split,
                       jaccard_on_candidates, minhash_bands,
@@ -327,10 +328,9 @@ def completed_stages(spark: SparkSession, lineage_dst: str,
     a pre-params_hash lineage table are conservatively treated as
     parameter-mismatched (recompute — the overwrite sinks make that
     correct, merely not free)."""
-    import os
-    if "://" not in lineage_dst and not lineage_dst.startswith("iceberg:"):
-        if not os.path.exists(lineage_dst):
-            return set()
+    local = local_path(spark, lineage_dst)
+    if local is not None and not os.path.exists(local):
+        return set()
     try:
         lin = read_table(spark, lineage_dst)
     except Exception:
@@ -906,36 +906,52 @@ def _index_meta(spark: SparkSession, index_dst: str):
     written meta cannot exist)."""
     from .io import ICEBERG_PREFIX, _hadoop_fs
     meta_path = f"{index_dst}/meta"
-    cached = _META_CACHE.get(index_dst)
-    if cached is not None:
-        return cached
     if meta_path.startswith(ICEBERG_PREFIX):
+        stamp = None
+    else:
+        fs, p = _hadoop_fs(spark, meta_path)
+        if not fs.exists(p):
+            return None
+        stamp = _meta_stamp(fs, p)
+    cached = _META_CACHE.get(index_dst)
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
+    if stamp is None:
         try:
             r = read_table(spark, meta_path).first()
         except Exception:
             return None
     else:
-        fs, p = _hadoop_fs(spark, meta_path)
-        if not fs.exists(p):
-            return None
         r = read_table(spark, meta_path).first()   # errors propagate
     f = r.__fields__
     meta = {"k": r["k"], "n": r["n"],
             "bands": r["bands"] if "bands" in f else None,
             "parts": r["parts"] if "parts" in f else None}
-    _META_CACHE[index_dst] = meta
+    _META_CACHE[index_dst] = (stamp, meta)
     return meta
 
 
-# Build parameters are immutable for the life of an index path (written
-# once by build_dedup_index; appends/compaction/deletion never change
-# them), so the one-row meta read — a full Spark job per ingest call,
-# and every ingest epoch pays it at least twice — is memoized per path
-# within the process. build_dedup_index drops the entry before
-# rewriting (a rebuilt index at the same path gets fresh parameters);
-# an ABSENT meta (None) is never cached so an index built later in the
-# process is picked up.
-_META_CACHE: dict[str, dict] = {}
+def _meta_stamp(fs, p) -> tuple:
+    """Identity of the meta table as written: its entries' names and
+    modification times. A rebuild at the same path — by this or another
+    process — writes a new uniquely named part file, so the stamp
+    changes even on stores without directory mtimes."""
+    return tuple(sorted((e.getPath().getName(), e.getModificationTime())
+                        for e in fs.listStatus(p)))
+
+
+# Build parameters are immutable for the life of an index build, so the
+# one-row meta read — a full Spark job per ingest call, and every ingest
+# epoch pays it at least twice — is memoized per path within the process,
+# keyed on ``_meta_stamp``: a rebuild at the same path with different
+# (k, n), by any process, changes the stamp and is re-read, so
+# update_dedup_index's parameter guard never checks stale meta. Checking
+# the stamp costs one directory listing, not a job. ``iceberg:`` tables
+# have no stamp here and keep the plain per-path memo (single-writer);
+# build_dedup_index drops the entry before rewriting. An ABSENT meta
+# (None) is never cached, so an index built later in the process is
+# picked up.
+_META_CACHE: dict[str, tuple] = {}
 
 
 def _bucket_expr(table: str, parts: int):
@@ -1394,7 +1410,7 @@ def compact_dedup_index(spark: SparkSession, index_dst: str,
         tables.append("bands")
     for table in tables:
         path = f"{index_dst}/{table}"
-        if atomic_rename_fs(path):
+        if atomic_rename_fs(spark, path):
             recover_swapped_dir(spark, path)   # heal a prior crash
         df = read_table(spark, path)
         partitioned = "pb" in df.columns
@@ -1407,7 +1423,7 @@ def compact_dedup_index(spark: SparkSession, index_dst: str,
         if table == "bands":
             df = df.sortWithinPartitions("band_idx", "band_hash")
         pcol = "pb" if partitioned else None
-        if not atomic_rename_fs(path):
+        if not atomic_rename_fs(spark, path):
             # table formats / object stores: overwrite is either atomic
             # (iceberg) or rename is not (s3) — write through the
             # dispatch and let the catalog/committer own atomicity
@@ -1473,7 +1489,7 @@ def remove_from_dedup_index(spark: SparkSession, doc_ids,
 
     def _full_rewrite(table: str, keep: DataFrame) -> None:
         path = f"{index_dst}/{table}"
-        if not atomic_rename_fs(path):
+        if not atomic_rename_fs(spark, path):
             snap = keep.localCheckpoint(eager=True)
             write_overwrite(snap, path)
             _release_local_checkpoint(snap)

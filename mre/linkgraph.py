@@ -180,8 +180,12 @@ def pagerank_hosts(edges: DataFrame, iters: int = 4,
     probe = edges.select("src_host", "dst_host", "weight") \
         .limit(int(driver_edge_cap) + 1).collect()
     if len(probe) <= driver_edge_cap:
-        ew = {(r["src_host"], r["dst_host"]): int(r["weight"])
-              for r in probe}
+        # duplicate (src, dst) rows add up, as in the distributed loop's
+        # join + sum — the result is a function of the edge multiset
+        ew: dict = {}
+        for r in probe:
+            k = (r["src_host"], r["dst_host"])
+            ew[k] = ew.get(k, 0) + int(r["weight"])
         hosts_l = sorted({h for e in ew for h in e})
         n = len(hosts_l)
         spark = edges.sparkSession

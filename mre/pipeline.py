@@ -32,6 +32,7 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
 
 from __future__ import annotations
 
+import os
 import time
 from typing import Iterable, Iterator, Optional
 
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core.extract import extract_one
-from .io import read_pages, read_table, write_append, \
+from .io import local_path, read_pages, read_table, write_append, \
     write_overwrite_partitions
 from .schema import EXTRACT_SCHEMA
 
@@ -332,13 +333,12 @@ def completed_buckets(spark: SparkSession, lineage_dst: str,
                       run_id: str) -> Optional[DataFrame]:
     # cheap existence probe first: avoids a scary (but harmless)
     # FileNotFoundException WARN in the Spark log on the very first run.
-    # Local scheme-less paths only — for hdfs://, s3a://, iceberg: etc the
+    # Local filesystem only — for hdfs://, s3a://, iceberg: etc an os
     # probe would be always-False (silently disabling resume), so those
     # rely on the try/except below instead.
-    if "://" not in lineage_dst and not lineage_dst.startswith("iceberg:"):
-        import os
-        if not os.path.exists(lineage_dst):
-            return None
+    local = local_path(spark, lineage_dst)
+    if local is not None and not os.path.exists(local):
+        return None
     try:
         lin = read_table(spark, lineage_dst)
     except Exception:

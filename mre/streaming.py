@@ -170,10 +170,13 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
     file (a torn file would fail the WHOLE epochs-table read, which
     ``_epoch_phases`` maps to 'no phases' — exactly the unsafe
     full-recompute the marker protocol exists to prevent). Remote and
-    iceberg: destinations keep the committer-backed Spark write."""
-    from .io import ICEBERG_PREFIX, write_append
-    if "://" not in epochs_dst \
-            and not epochs_dst.startswith(ICEBERG_PREFIX):
+    iceberg: destinations keep the committer-backed Spark write.
+    ``mre.io.local_path`` decides "local" from the resolved Hadoop
+    filesystem, so a ``file:/x`` marker lands where ``read_table`` looks
+    for it."""
+    from .io import local_path, write_append
+    local = local_path(spark, epochs_dst)
+    if local is not None:
         try:
             import datetime
             import os
@@ -181,7 +184,7 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
 
             import pyarrow as pa
             import pyarrow.parquet as pq
-            os.makedirs(epochs_dst, exist_ok=True)
+            os.makedirs(local, exist_ok=True)
             tbl = pa.table({
                 "epoch": pa.array([int(epoch_id)], pa.int64()),
                 "phase": pa.array([phase], pa.string()),
@@ -193,9 +196,9 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
                     pa.timestamp("us", tz="UTC")),
             })
             name = f"part-marker-{uuid.uuid4().hex}.parquet"
-            tmp = os.path.join(epochs_dst, f".{name}")
+            tmp = os.path.join(local, f".{name}")
             pq.write_table(tbl, tmp)
-            os.rename(tmp, os.path.join(epochs_dst, name))
+            os.rename(tmp, os.path.join(local, name))
             return
         except ImportError:
             pass

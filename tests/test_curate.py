@@ -888,6 +888,30 @@ def test_update_dedup_index_param_guard_and_strict_meta(spark, docs,
         update_dedup_index(spark, batch, idx)
 
 
+def test_index_meta_memo_sees_rebuild_by_another_process(spark, docs,
+                                                         tmp_path):
+    """ADVICE r8 (low): the per-process meta memo must not serve stale
+    build parameters. Another process rebuilding the index at the same
+    path with a different (k, n) leaves this process's memo entry in
+    place; restoring the entry after an in-process rebuild models that.
+    update_dedup_index's guard must then see the NEW parameters."""
+    from mre.curate import (_META_CACHE, _index_meta, build_dedup_index,
+                            update_dedup_index)
+    idx = str(tmp_path / "idx")
+    build_dedup_index(spark, docs, idx, k=32, n=3)
+    assert _index_meta(spark, idx)["k"] == 32
+    memo = dict(_META_CACHE)
+    build_dedup_index(spark, docs, idx, k=64, n=4)
+    _META_CACHE.update(memo)       # the other process's stale entry
+    batch = spark.createDataFrame(
+        [(7200, _variant(7200) + " rebuilt meta fresh tail")],
+        "doc_id long, text string")
+    with pytest.raises(ValueError, match="built with"):
+        update_dedup_index(spark, batch, idx, k=32, n=3)
+    assert (_index_meta(spark, idx)["k"], _index_meta(spark, idx)["n"]) \
+        == (64, 4)
+
+
 def test_recover_swapped_dir(spark, tmp_path):
     """ADVICE r6 #4: a crash between swap_dirs' two renames leaves the
     table only at path.old — recover_swapped_dir restores it, and a

@@ -85,6 +85,26 @@ def test_pagerank_driver_path_matches_distributed(spark):
     assert fast == slow and len(fast) == 6
 
 
+def test_pagerank_duplicate_edge_rows_sum_on_both_paths(spark):
+    """An edge frame that repeats a (src_host, dst_host) pair — not a
+    host_edges collapse — gives the same ranks on the driver fast path
+    as on the distributed loop, which sums the repeats; and both equal
+    the collapsed frame's ranks."""
+    from mre.linkgraph import pagerank_hosts
+    schema = "src_host string, dst_host string, weight long"
+    dup = spark.createDataFrame(
+        [("p0", "hub", 1), ("p0", "hub", 2), ("p1", "hub", 1),
+         ("hub", "p0", 1), ("hub", "p1", 3), ("hub", "p1", 1)], schema)
+    collapsed = spark.createDataFrame(
+        [("p0", "hub", 3), ("p1", "hub", 1),
+         ("hub", "p0", 1), ("hub", "p1", 4)], schema)
+    fast = {tuple(r) for r in pagerank_hosts(dup, iters=4).collect()}
+    slow = {tuple(r) for r in pagerank_hosts(dup, iters=4,
+                                             driver_edge_cap=0).collect()}
+    ref = {tuple(r) for r in pagerank_hosts(collapsed, iters=4).collect()}
+    assert fast == slow == ref and len(fast) == 3
+
+
 def test_link_pages_parse_back_to_builder_arithmetic(spark):
     """Parsing the built link pages recovers exactly the builder's
     arithmetic: per page 1 + doc_id%3 edges, no self targets, plus the
