@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 ICEBERG_PREFIX = "iceberg:"
 
 
+def default_driver_mem() -> str:
+    """A quarter of physical memory, 1g-16g: with a fixed 16g heap G1 grows
+    the driver JVM past a 16 GB machine until the OOM killer ends it."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(1, min(16, gib // 4))}g"
+
+
 def get_spark(app: str = "mre", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """SparkSession with the pipeline's standard configs.
@@ -54,7 +61,7 @@ def get_spark(app: str = "mre", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
-                os.environ.get("MRE_DRIVER_MEM", "16g"))
+                os.environ.get("MRE_DRIVER_MEM") or default_driver_mem())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

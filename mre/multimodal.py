@@ -777,7 +777,7 @@ def extract_media_features(media: DataFrame,
         for pdf in batches:
             sizes = pdf["payload"].map(
                 lambda b: len(b) if b is not None else 0)
-            # byte-capped re-chunk (mirrors mre.pipeline._chunks_by_bytes)
+            # byte-capped re-chunk (rule of pipeline.extract_batch_arrow)
             start, acc = 0, 0
             bounds = []
             for i, sz in enumerate(sizes):

@@ -34,27 +34,19 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Iterable, Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core.extract import extract_one
 from .io import local_path, read_pages, read_table, write_append, \
     write_overwrite_partitions
-from .schema import EXTRACT_SCHEMA
-
-# mapInPandas output: extraction columns + per-row bookkeeping + echoed salt
-EXTRACT_FULL_SCHEMA = (
-    "url string, headline string, pubdate timestamp, authors array<string>, "
-    "extracted_text string, ok int, n_bytes_html bigint, wall_us bigint, "
-    "salt_bucket int"
-)
+from .schema import EXTRACT_FULL_SCHEMA, EXTRACT_SCHEMA
 
 RESULT_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
 
-DEFAULT_BYTE_CAP = 64 << 20  # 64 MB of html per pandas chunk
+DEFAULT_BYTE_CAP = 64 << 20  # 64 MB of html per Arrow chunk
 
 
 # --------------------------------------------------------------------------
@@ -90,9 +82,7 @@ def dedup_first_latest(pages: DataFrame) -> DataFrame:
     kept = (pages.join(latest, "url")
             .filter(F.col("warc_ts") == F.col("_max_ts"))
             .drop("_max_ts"))
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (kept.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    return dedup_latest(kept)
 
 
 def dedup_latest_in_bucket(pages: DataFrame) -> DataFrame:
@@ -123,105 +113,28 @@ def with_salt_bucket(pages: DataFrame, buckets: int) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# P6 — the extraction map (iterator pandas UDF via mapInPandas)
+# P6 — the extraction map (iterator Arrow UDF via mapInArrow)
 
 
-def _chunks_by_bytes(pdf: pd.DataFrame, byte_cap: int) -> Iterator[pd.DataFrame]:
-    """Split one Arrow batch so each chunk's total html bytes ≤ byte_cap
-    (single giant rows still pass through alone)."""
-    sizes = pdf["html"].map(lambda b: len(b) if b is not None else 0)
-    if sizes.sum() <= byte_cap:
-        yield pdf
-        return
-    start, acc = 0, 0
-    for i, sz in enumerate(sizes):
-        if acc + sz > byte_cap and i > start:
-            yield pdf.iloc[start:i]
-            start, acc = i, 0
-        acc += sz
-    if start < len(pdf):
-        yield pdf.iloc[start:]
-
-
-def _extract_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-    urls = pdf["url"].tolist()
-    htmls = pdf["html"].tolist()
-    salts = pdf["salt_bucket"].tolist() if "salt_bucket" in pdf.columns \
-        else [0] * len(urls)
-    if "warc_ts" in pdf.columns:
-        captures = [t.to_pydatetime() if t is not None else None
-                    for t in pdf["warc_ts"]]
-    else:
-        captures = [None] * len(urls)
-    ctypes = pdf["content_type"].tolist() \
-        if "content_type" in pdf.columns else [None] * len(urls)
-    out = {k: [] for k in ("url", "headline", "pubdate", "authors",
-                           "extracted_text", "ok", "n_bytes_html",
-                           "wall_us", "salt_bucket")}
-    for url, html, salt, cap, ct in zip(urls, htmls, salts, captures,
-                                        ctypes):
-        t0 = time.perf_counter_ns()
-        r = extract_one(url, bytes(html) if html is not None else None,
-                        capture_ts=cap, content_type=ct)
-        wall_us = (time.perf_counter_ns() - t0) // 1000
-        out["url"].append(url)
-        out["headline"].append(r.headline)
-        out["pubdate"].append(r.pubdate)
-        out["authors"].append(r.authors)
-        out["extracted_text"].append(r.extracted_text)
-        out["ok"].append(1 if r.ok else 0)
-        out["n_bytes_html"].append(len(html) if html is not None else 0)
-        out["wall_us"].append(wall_us)
-        out["salt_bucket"].append(salt)
-    res = pd.DataFrame(out)
-    res["pubdate"] = pd.to_datetime(res["pubdate"])
-    return res
-
-
-def extract_batch(batches: Iterable[pd.DataFrame],
-                  byte_cap: int = DEFAULT_BYTE_CAP) -> Iterator[pd.DataFrame]:
-    """The body of mapInPandas — E15 over size-capped chunks.
+def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
+    """The body of mapInArrow — E15 over size-capped chunks, straight from
+    Arrow record batches to Arrow record batches (no pandas round-trip:
+    the block assembly for ~MB binary rows would be a measurable fraction
+    of the framework cost at scale).
 
     Cyclic GC is disabled during extraction with one manual collect per
     chunk: the generational collector otherwise rescans every live DOM
     container on allocation bursts, which saturates memory bandwidth and
-    caps multi-core scaling at ~0.5 efficiency (measured on this box:
-    0.53 → 0.76+ at 8→32 workers). Collect-per-chunk bounds worker RSS;
-    gc is re-enabled before returning so long-lived reused workers are
-    unaffected between tasks."""
-    import gc
-    gc_was_enabled = gc.isenabled()
-    gc.disable()
-    try:
-        for pdf in batches:
-            for chunk in _chunks_by_bytes(pdf, byte_cap):
-                yield _extract_chunk(chunk)
-                gc.collect()
-    finally:
-        if gc_was_enabled:
-            gc.enable()
-
-
-def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
-    """mapInArrow body — same semantics as extract_batch but without the
-    Arrow↔pandas round-trip (the pandas block assembly for ~MB binary rows
-    is a measurable fraction of the framework cost at scale)."""
+    caps multi-core scaling at ~0.5 efficiency (measured: 0.53 → 0.76+ at
+    8→32 workers). Collect-per-chunk bounds worker RSS; gc is re-enabled
+    before returning so long-lived reused workers are unaffected between
+    tasks."""
     import gc
 
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    out_type = pa.schema([
-        pa.field("url", pa.string()),
-        pa.field("headline", pa.string()),
-        pa.field("pubdate", pa.timestamp("us")),
-        pa.field("authors", pa.list_(pa.string())),
-        pa.field("extracted_text", pa.string()),
-        pa.field("ok", pa.int32()),
-        pa.field("n_bytes_html", pa.int64()),
-        pa.field("wall_us", pa.int64()),
-        pa.field("salt_bucket", pa.int32()),
-    ])
-
+    out_type = to_arrow_schema(EXTRACT_FULL_SCHEMA)
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
@@ -229,47 +142,33 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
             salts = batch.column("salt_bucket").to_pylist()
-            names = batch.schema.names
-            captures = (batch.column("warc_ts").to_pylist()
-                        if "warc_ts" in names else [None] * len(urls))
+            captures = batch.column("warc_ts").to_pylist()
             ctypes = (batch.column("content_type").to_pylist()
-                      if "content_type" in names else [None] * len(urls))
-            n = len(urls)
-            start = 0
+                      if "content_type" in batch.schema.names
+                      else [None] * len(urls))
+            sizes = [len(h) if h is not None else 0 for h in htmls]
+            n, start = len(urls), 0
             while start < n:
+                # chunk so sum(len(html)) <= byte_cap; a single oversize
+                # row still passes through alone
                 acc, end = 0, start
-                while end < n:
-                    sz = len(htmls[end]) if htmls[end] is not None else 0
-                    if acc + sz > byte_cap and end > start:
-                        break
-                    acc += sz
+                while end < n and (acc + sizes[end] <= byte_cap
+                                   or end == start):
+                    acc += sizes[end]
                     end += 1
-                cols = {k: [] for k in ("headline", "pubdate", "authors",
-                                        "extracted_text", "ok", "nb", "wu")}
+                res, wall_us = [], []
                 for i in range(start, end):
-                    html = htmls[i]
                     t0 = time.perf_counter_ns()
-                    r = extract_one(urls[i], html,
-                                    capture_ts=captures[i],
-                                    content_type=ctypes[i])
-                    cols["wu"].append(
-                        (time.perf_counter_ns() - t0) // 1000)
-                    cols["headline"].append(r.headline)
-                    cols["pubdate"].append(r.pubdate)
-                    cols["authors"].append(r.authors)
-                    cols["extracted_text"].append(r.extracted_text)
-                    cols["ok"].append(1 if r.ok else 0)
-                    cols["nb"].append(len(html) if html is not None else 0)
+                    res.append(extract_one(urls[i], htmls[i],
+                                           capture_ts=captures[i],
+                                           content_type=ctypes[i]))
+                    wall_us.append((time.perf_counter_ns() - t0) // 1000)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(urls[start:end], pa.string()),
-                     pa.array(cols["headline"], pa.string()),
-                     pa.array(cols["pubdate"], pa.timestamp("us")),
-                     pa.array(cols["authors"], pa.list_(pa.string())),
-                     pa.array(cols["extracted_text"], pa.string()),
-                     pa.array(cols["ok"], pa.int32()),
-                     pa.array(cols["nb"], pa.int64()),
-                     pa.array(cols["wu"], pa.int64()),
-                     pa.array(salts[start:end], pa.int32())],
+                    [urls[start:end], [r.headline for r in res],
+                     [r.pubdate for r in res], [r.authors for r in res],
+                     [r.extracted_text for r in res],
+                     [1 if r.ok else 0 for r in res], sizes[start:end],
+                     wall_us, salts[start:end]],
                     schema=out_type)
                 gc.collect()
                 start = end
@@ -280,14 +179,23 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
 
 def run_extract_df(pages: DataFrame, buckets: int,
                    byte_cap: int = DEFAULT_BYTE_CAP,
-                   dedup: bool = True) -> DataFrame:
-    """Pages DF → extraction DF (with bookkeeping columns), no sink.
+                   dedup: Optional[str] = "window",
+                   done: Optional[DataFrame] = None) -> DataFrame:
+    """Pages DF → extraction DF (with bookkeeping columns), no sink. The
+    one plan builder behind ``run_extract`` and ``streaming_extract``.
 
     Projection to (url, warc_ts, html) happens before the shuffle so
     shuffle bytes stay minimal (P3); html must survive the shuffle — it is
-    the UDF's input. Salting comes FIRST and the dedup window runs inside
-    the salted partitioning, so the corpus shuffles exactly once.
+    the UDF's input. Salting comes FIRST, so the corpus shuffles exactly
+    once (see ``run_extract`` for the two ``dedup`` strategies; ``None``
+    skips url dedup, for an input already deduped upstream). ``done`` is a
+    frame of completed ``salt_bucket`` values: a tiny distinct list,
+    broadcast-anti-joined BEFORE the shuffle, so completed buckets never
+    shuffle their html at all.
     """
+    if dedup not in ("window", "two-phase", None):
+        raise ValueError(
+            f"dedup must be 'window', 'two-phase' or None: {dedup!r}")
     # keep: minimal shuffle payload (P3) + the optional content_type side
     # column (WARC sources carry the HTTP header; it feeds E1's decode)
     keep = ["url", "warc_ts", "html"]
@@ -296,10 +204,17 @@ def run_extract_df(pages: DataFrame, buckets: int,
     pages = pages.filter(F.col("html").isNotNull())
     pages = pages.select(*keep)
     pages = with_salt_bucket(pages, buckets)
+    if done is not None:
+        pages = pages.join(F.broadcast(done), "salt_bucket", "left_anti")
+    if dedup == "two-phase":
+        # skew-resilient path: dedup before the html-carrying shuffle
+        pages = dedup_first_latest(pages)
     # repartition by url: HashPartitioning places each row at
-    # pmod(hash(url), B) == its salt_bucket -> bucket == physical partition
+    # pmod(hash(url), B) == its salt_bucket -> bucket == physical partition;
+    # under "window" the dedup then runs inside that partitioning (no
+    # second exchange — see dedup_latest_in_bucket)
     pages = pages.repartition(buckets, F.col("url"))
-    if dedup:
+    if dedup == "window":
         pages = dedup_latest_in_bucket(pages)
     pages = pages.select(*keep, "salt_bucket")
     return pages.mapInArrow(
@@ -375,33 +290,8 @@ def run_extract(spark: SparkSession, src: str, dst: str, lineage_dst: str,
         buckets = max(4 * cores, 8)
 
     pages = read_pages(spark, src)
-    keep = ["url", "warc_ts", "html"]
-    if "content_type" in pages.columns:
-        keep.append("content_type")  # HTTP charset hint → E1 decode
-    pages = pages.filter(F.col("html").isNotNull())
-    pages = pages.select(*keep)
-    pages = with_salt_bucket(pages, buckets)
-
-    if resume:
-        done = completed_buckets(spark, lineage_dst, run_id)
-        if done is not None:
-            # tiny distinct bucket list → broadcast anti-join BEFORE the
-            # shuffle: completed buckets never shuffle their html at all
-            pages = pages.join(F.broadcast(done), "salt_bucket", "left_anti")
-
-    if dedup == "two-phase":
-        # skew-resilient path: dedup before the html-carrying shuffle
-        pages = dedup_first_latest(pages)
-    # single full-corpus shuffle of the KEPT captures: salt repartition;
-    # under "window" the dedup then runs inside that partitioning (no
-    # second exchange — see dedup_latest_in_bucket)
-    pages = pages.repartition(buckets, F.col("url"))  # partition==bucket
-    if dedup == "window":
-        pages = dedup_latest_in_bucket(pages)
-    pages = pages.select(*keep, "salt_bucket")
-    extracted = (pages
-                 .mapInArrow(lambda it: extract_batch_arrow(it, byte_cap),
-                             EXTRACT_FULL_SCHEMA)
+    done = completed_buckets(spark, lineage_dst, run_id) if resume else None
+    extracted = (run_extract_df(pages, buckets, byte_cap, dedup, done)
                  .withColumn("partition_id", F.spark_partition_id()))
 
     # write-then-commit: results land partitioned by bucket (idempotent via
@@ -436,16 +326,14 @@ def golden_diff(actual: DataFrame, expected: DataFrame) -> DataFrame:
 
     ``exceptAll`` both ways keeps duplicate-sensitivity; the union is
     labelled by side for debugging."""
-    cols = [f.name for f in EXTRACT_SCHEMA.fields]
-    a, e = actual.select(*cols), expected.select(*cols)
+    a, e = actual.select(*RESULT_COLS), expected.select(*RESULT_COLS)
     return (a.exceptAll(e).withColumn("side", F.lit("actual_only"))
             .unionAll(e.exceptAll(a).withColumn("side", F.lit("expected_only"))))
 
 
 __all__ = [
     "dedup_latest", "dedup_latest_in_bucket", "dedup_first_latest",
-    "extract_batch_arrow",
-    "with_salt_bucket", "extract_batch", "run_extract_df",
+    "extract_batch_arrow", "with_salt_bucket", "run_extract_df",
     "run_extract", "read_results", "lineage_rollup", "completed_buckets",
     "golden_diff", "EXTRACT_FULL_SCHEMA", "RESULT_COLS", "DEFAULT_BYTE_CAP",
 ]

@@ -1,7 +1,8 @@
 """Authoritative schemas (SURVEY.md §1.2).
 
-Declared once and shared by the pandas-UDF ``returnType``, the sink DDL,
-the fixture generator, and every test — so schema drift is impossible.
+Declared once and shared by the ``mapInArrow`` kernel
+(``extract_batch_arrow``), the sink, the fixture generator, and every test
+— so schema drift is impossible.
 
 All timestamps are UTC; every Spark session this package creates pins
 ``spark.sql.session.timeZone=UTC`` (SURVEY.md §4.3 determinism row).
@@ -42,29 +43,15 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
-# Per-partition lineage/metrics rows for resumable runs
-# (BASELINE.json:north_rule "resumable from checkpoint with per-partition
-# lineage + metrics").
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("salt_bucket", IntegerType(), False),
-        StructField("n_rows", LongType(), False),
-        StructField("n_ok", LongType(), False),
-        StructField("n_failed", LongType(), False),
-        StructField("bytes_html", LongType(), False),
-        StructField("wall_ms", LongType(), False),
-        StructField("completed_at", TimestampType(), False),
-    ]
-)
-
-# Extraction output + the lineage bookkeeping columns emitted in one pass by
-# mapInPandas (split into the two tables by the pipeline afterwards).
-EXTRACT_WITH_METRICS_SCHEMA = StructType(
-    list(EXTRACT_SCHEMA.fields)
+# Output of the extraction kernel (``extract_batch_arrow`` in mapInArrow):
+# extraction columns, per-row lineage bookkeeping and the echoed salt
+# bucket, all nullable as the kernel emits them.
+EXTRACT_FULL_SCHEMA = StructType(
+    [StructField(f.name, f.dataType, True) for f in EXTRACT_SCHEMA.fields]
     + [
-        StructField("ok", IntegerType(), False),
-        StructField("n_bytes_html", LongType(), False),
+        StructField("ok", IntegerType(), True),
+        StructField("n_bytes_html", LongType(), True),
+        StructField("wall_us", LongType(), True),
+        StructField("salt_bucket", IntegerType(), True),
     ]
 )

@@ -2,15 +2,16 @@
 
 The extraction core is stateless per row, so streaming is a thin wrapper:
 ``readStream`` over a pages source → watermark + streaming dedup on url →
-the same ``extract_batch`` mapInPandas → sink. The watermark bounds the
-dedup state (at 10^12-doc scale the state store would otherwise grow
-without bound). Dedup semantics are selectable at the API:
+the batch plan builder ``run_extract_df`` (salt, shuffle, mapInArrow over
+``extract_batch_arrow``) with its own url dedup off → sink. The watermark
+bounds the dedup state (at 10^12-doc scale the state store would otherwise
+grow without bound). Dedup semantics are selectable at the API:
 ``keep="first"`` (immediate emit, first capture wins) or ``keep="latest"``
 (batch-parity within the watermark window via max_by) — see
 ``streaming_extract``.
 
 Not on the byte-parity bar (the reference has no streaming); covered by
-tests/test_streaming.py with a file source and one micro-batch.
+tests/test_streaming_multimodal.py with a file source and one micro-batch.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import EXTRACT_FULL_SCHEMA, extract_batch, with_salt_bucket
+from .pipeline import run_extract_df
 from .schema import PAGES_SCHEMA
 
 
@@ -71,10 +72,7 @@ def streaming_extract(pages: DataFrame, buckets: int = 32,
                    .dropDuplicatesWithinWatermark(["url"]))
     else:
         raise ValueError(f"keep must be 'first' or 'latest', got {keep!r}")
-    salted = with_salt_bucket(deduped, buckets)
-    return (salted
-            .select("url", "warc_ts", "html", "salt_bucket")
-            .mapInPandas(extract_batch, EXTRACT_FULL_SCHEMA))
+    return run_extract_df(deduped, buckets, dedup=None)
 
 
 def sessionize_events(events: DataFrame, gap_minutes: int = 10,

@@ -42,7 +42,7 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=None,
                     help="salt buckets (default 4x defaultParallelism)")
     ap.add_argument("--byte-cap", type=int, default=64 << 20,
-                    help="max html bytes per pandas chunk")
+                    help="max html bytes per Arrow chunk")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--dedup", choices=["window", "two-phase"],
                     default="window",

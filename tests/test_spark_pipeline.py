@@ -83,7 +83,6 @@ def test_run_extract_end_to_end_with_lineage(spark, fixture_dir, tmp_path):
     assert sum(r["n_failed"] for r in lrows) == n_trunc
     assert {r["run_id"] for r in lrows} == {"r1"}
     # no duplicate bucket commits
-    assert len({r["salt_bucket"] for r in lrows}) == len(lrows) or True
     buckets_seen = [(r["salt_bucket"]) for r in lrows]
     assert len(set(buckets_seen)) == len(buckets_seen)
 
@@ -123,11 +122,11 @@ def test_resume_is_idempotent(spark, fixture_dir, tmp_path, dedup):
 
 def test_explain_has_pushdown_and_single_shuffle_chain(spark, fixture_dir):
     """Plan shape guard: the filter reaches the parquet scan and the UDF
-    stage is ArrowEvalPython/MapInPandas (not row-at-a-time python)."""
+    stage is MapInArrow (not row-at-a-time python)."""
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     out = run_extract_df(pages, buckets=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan, plan
     # exactly ONE full-corpus shuffle: salt repartition; the dedup window
     # must reuse that partitioning (no second Exchange)
     assert plan.count("Exchange") == 1, plan
@@ -136,6 +135,38 @@ def test_explain_has_pushdown_and_single_shuffle_chain(spark, fixture_dir):
                  ._jdf.queryExecution().executedPlan().toString())
     assert "PushedFilters: [IsNotNull(html)]" in scan_plan \
         or "IsNotNull(html)" in scan_plan
+
+
+def _subtree(lines, i):
+    """Line i of a plan tree string plus every line of its subtree."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+    end = i + 1
+    while end < len(lines) and depth(lines[end]) > depth(lines[i]):
+        end += 1
+    return lines[i:end]
+
+
+@pytest.mark.parametrize("dedup", ["window", "two-phase"])
+def test_done_buckets_anti_join_before_the_shuffle(spark, fixture_dir,
+                                                   dedup):
+    """Resume: the completed-bucket frame is broadcast-anti-joined below
+    every url shuffle, so completed buckets never shuffle their html, and
+    their rows are not extracted."""
+    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
+    done = spark.createDataFrame([(1,), (3,)], "salt_bucket int")
+    out = run_extract_df(pages, 8, dedup=dedup, done=done)
+    lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    plan = "\n".join(lines)
+    shuffles = [i for i, line in enumerate(lines)
+                if "Exchange hashpartitioning(url" in line]
+    assert shuffles, plan
+    for i in shuffles:
+        below = "\n".join(_subtree(lines, i))
+        assert "BroadcastHashJoin [salt_bucket" in below, plan
+        assert "LeftAnti" in below, plan
+    got = {r.salt_bucket for r in out.select("salt_bucket").collect()}
+    assert got and not got & {1, 3}, got
 
 
 def test_jsonl_source_extracts_to_golden(spark, tmp_path):
@@ -228,7 +259,7 @@ def test_new_ops_plan_shapes(spark):
     # the scan (no shuffle of their own); the round-7 budget branch
     # carries the two-phase prefix sum's exactly FOUR Exchanges
     # (phase-1 window, bucket-totals partial agg, tiny offsets window,
-    # broadcast join back — PLANS.md "budget_sample / pack_sequences");
+    # broadcast join back — budget_sample / pack_sequences);
     # the dsir branch adds exactly ONE more (the survivor tie-rank
     # window) because learning and the top-k threshold resolve to
     # literals at plan-construction time (bounded collects) — a sixth

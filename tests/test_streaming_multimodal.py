@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 
 def test_streaming_extract_matches_batch(spark, fixture_dir, tmp_path):
-    from mre.fixtures import gen_golden
+    from mre.pipeline import golden_diff
     from mre.streaming import start_extract_stream
 
     src = str(tmp_path / "stream_src")
@@ -30,11 +30,8 @@ def test_streaming_extract_matches_batch(spark, fixture_dir, tmp_path):
     # share identical html, so extraction output is identical either way
     assert out.count() == 120
     golden = spark.read.parquet(f"{fixture_dir}/golden.parquet")
-    joined = (out.select("url", "headline")
-              .join(golden.select("url", F.col("headline").alias("g")),
-                    "url"))
-    assert joined.filter(
-        ~(F.col("headline").eqNullSafe(F.col("g")))).count() == 0
+    diff = golden_diff(out, golden)  # all five EXTRACT_SCHEMA columns
+    assert diff.count() == 0, diff.limit(5).toPandas()
 
 
 def test_streaming_ingest_dedups_across_micro_batches(spark, tmp_path):
