@@ -1,18 +1,17 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Oracle registry for mre's operators.
 
-``entry(spark)`` — flagship: derive Common-Crawl-style pages
-deterministically from the sf0.001 ``documents`` table (doc_id-keyed
-fixture templates, FIXTURES.md) and run the full extraction pipeline
-(salt → single shuffle → in-bucket dedup → mapInArrow extract),
-returning the EXTRACT_SCHEMA frame.
+``queries()`` maps a name to a Spark query that runs an mre operator over
+the TPC-H-style test tables (``MRE_ORACLE_SF``, TESTDATA.md);
+``oracle_sql()`` maps the same names to a DuckDB query computing the
+expected rows independently (aliases match column-for-column): direct SQL
+where expressible, and golden parquets for the hash-dependent ops — the
+extraction flagship from the doc_id-keyed fixture spec (mre/fixtures.py),
+MinHash/SimHash/winnowing/lineage from the independent replay layer
+(mre/oracle_replay.py: from-scratch XXH64 + Spark-variant murmur3_32,
+verified against the engine's own hash fns).
 
-``queries()`` — one entry per implemented operator (SURVEY.md §2A/§2B +
-mre.textops); ``oracle_sql()`` covers EVERY entry (aliases match
-column-for-column): direct DuckDB SQL where expressible, and golden
-parquets for the hash-dependent ops — the flagship from the doc_id-keyed
-fixture spec (mre/fixtures.py), MinHash/SimHash/winnowing/lineage from the
-independent replay layer (mre/oracle_replay.py: from-scratch XXH64 +
-Spark-variant murmur3_32, verified against the engine's own hash fns).
+``tests/test_entry_oracle.py`` runs every pair; ``perfbench/checks.py``
+runs the ``curation_pipeline`` SQL as the corpus workload's check.
 """
 
 from __future__ import annotations
@@ -29,9 +28,6 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import Window  # noqa: E402
-
-SF_DEFAULT = "/root/testdata/sf0.001"
 
 
 def _prep(spark: SparkSession) -> None:
@@ -93,129 +89,8 @@ def q_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "extracted_text")
 
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return q_extract(spark, SF_DEFAULT)
-
-
 # --------------------------------------------------------------------------
-# relational operators (P2/P3/P5/P8-style) over the TPC-H-ish tables
-
-
-def q_filter_project(spark, sf_dir):
-    _prep(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.filter((F.col("l_shipdate") >= "1995-01-01")
-                      & (F.col("l_discount") > 0.05))
-            .select("l_orderkey", "l_linenumber", "l_quantity",
-                    F.round(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")), 4)
-                    .alias("net_price")))
-
-
-def q_agg_pricing(spark, sf_dir):
-    _prep(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-                 F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 4)
-                 .alias("sum_disc_price"),
-                 F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-                 F.count("*").alias("count_order")))
-
-
-def q_join_nations(spark, sf_dir):
-    _prep(spark)
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (c.join(F.broadcast(n),
-                   c["c_nationkey"] == n["n_nationkey"])
-            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-            .groupBy("r_name", "n_name")
-            .agg(F.count("*").alias("n_customers"),
-                 F.round(F.sum("c_acctbal"), 4).alias("total_acctbal")))
-
-
-def q_join_orders_revenue(spark, sf_dir):
-    """Manual push-agg-below-join: lineitem revenue is pre-aggregated per
-    l_orderkey BEFORE joining orders (o_orderpriority is functionally
-    dependent on o_orderkey, so results are identical) — the join input
-    shrinks from |lineitem| rows to |orderkeys| rows, which at 100 TB is
-    the difference between shuffling line items and shuffling orders."""
-    _prep(spark)
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem")
-    rev = (li.groupBy("l_orderkey")
-           .agg(F.round(F.sum(F.col("l_extendedprice")
-                              * (1 - F.col("l_discount"))), 4)
-                .alias("revenue")))
-    return (o.join(rev, o["o_orderkey"] == rev["l_orderkey"])
-            .select("o_orderkey", "o_orderpriority", "revenue")
-            .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-            .limit(10))
-
-
-def q_window_latest_event(spark, sf_dir):
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id"))
-    return (ev.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "event_id", "event_type", "ts"))
-
-
-def q_window_running(spark, sf_dir):
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = (Window.partitionBy("user_id")
-         .orderBy(F.asc("ts"), F.asc("event_id"))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return ev.select("user_id", "event_id",
-                     F.round(F.sum("value").over(w), 3)
-                     .alias("running_value"))
-
-
-def q_topk_docs(spark, sf_dir):
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents")
-    return (d.orderBy(F.desc("n_chars"), F.asc("doc_id"))
-            .select("doc_id", "lang", "n_chars").limit(10))
-
-
-def q_rollup_cube_docs(spark, sf_dir):
-    """ROLLUP and CUBE over the same grouping, distinguished by an ``op``
-    tag — one driver row exercises both grouping-set expansions (the
-    registry is capped at the driver's 50-entry check window, SURVEY
-    §7.4, so same-shape operators share a tagged-union entry)."""
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents")
-    aggs = [F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.max("n_chars").alias("max_chars")]
-    r = d.rollup("lang", "source").agg(*aggs) \
-        .withColumn("op", F.lit("rollup"))
-    c = d.cube("lang", "source").agg(*aggs).withColumn("op", F.lit("cube"))
-    return r.unionAll(c).select("op", "lang", "source", "n_docs",
-                                "total_chars", "max_chars")
-
-
-def q_set_ops(spark, sf_dir):
-    """EXCEPT and INTERSECT as one tagged union (registry-window rule,
-    SURVEY §7.4) — both set operators still run and value-check."""
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").alias("doc_id"))
-    ex = d.distinct().exceptAll(ev.distinct()) \
-        .withColumn("op", F.lit("except"))
-    it = d.distinct().intersect(ev.distinct()) \
-        .withColumn("op", F.lit("intersect"))
-    return ex.unionAll(it).select("op", "doc_id")
+# crawl bookkeeping (mre.sources.cdx, mre.linkgraph) over the test tables
 
 
 def _robots_fixture(d) -> "DataFrame":
@@ -349,26 +224,8 @@ def q_full_outer(spark, sf_dir):
     return fo.unionAll(delta).unionAll(plan)
 
 
-def q_events_daily(spark, sf_dir):
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"),
-                       F.col("event_type"))
-            .agg(F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("total_value")))
-
-
 # --------------------------------------------------------------------------
 # training-data ops (mre.textops) over documents / embeddings
-
-
-def q_event_stats(spark, sf_dir):
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("n_users"),
-                 F.round(F.median("value"), 3).alias("median_value"),
-                 F.round(F.stddev_pop("value"), 3).alias("sd_value")))
 
 
 # BPE driver-row constants (shared by the Spark branch and the oracle
@@ -662,64 +519,6 @@ def q_source_stats(spark, sf_dir):
     return stats.unionAll(lk).unionAll(mx)
 
 
-def q_lang_sources(spark, sf_dir):
-    """Array-aggregation breadth: per-language sorted distinct source list.
-    The array is joined to a scalar in the driver-facing select (§7.2 rule
-    7 — the driver canonicalizer can't sort array cells), with sort_array
-    making the aggregation order-insensitive on both engines."""
-    _prep(spark)
-    return (_t(spark, sf_dir, "documents")
-            .groupBy("lang")
-            .agg(F.array_join(F.sort_array(F.collect_set("source")),
-                              chr(31)).alias("sources"),
-                 F.countDistinct("source").alias("n_sources")))
-
-
-def q_length_quantiles(spark, sf_dir):
-    """Exact per-language length percentiles — the corpus length-
-    distribution report. Spark `percentile` and DuckDB `quantile_cont`
-    share the rank q*(n-1) linear interpolation; outputs are snapped to a
-    fixed 4-decimal grid in BOTH engines (ADVICE r3: relying on
-    bit-identical interpolated doubles sidesteps SURVEY §7.1's grid rule
-    and can regress on last-ulp rounding). The interpolated fractions here
-    have ≤2 true decimal digits, so the grid is far coarser than any ulp
-    noise and never sits on a .xxxx5 tie."""
-    _prep(spark)
-    return (_t(spark, sf_dir, "documents")
-            .groupBy("lang")
-            .agg(F.round(F.expr("percentile(n_chars, 0.5D)"), 4)
-                 .alias("p50"),
-                 F.round(F.expr("percentile(n_chars, 0.9D)"), 4)
-                 .alias("p90"),
-                 F.round(F.expr("percentile(n_chars, 0.99D)"), 4)
-                 .alias("p99"),
-                 F.count("*").alias("n_docs")))
-
-
-def q_length_deciles(spark, sf_dir):
-    """Decile histogram WITHOUT a global sort (the scale-shaped way): one
-    aggregate computes the 9 boundary values, broadcast back as a single
-    row, and each doc buckets itself by counting boundaries below it —
-    a corpus-size global ntile window would single-partition the sort."""
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents")
-    qs = ", ".join(f"{q / 10}D" for q in range(1, 10))
-    # boundaries snapped to the 4-decimal grid in both engines (ADVICE
-    # r3) so a last-ulp interpolation difference can never flip a
-    # bucket-membership comparison
-    b = (d.agg(F.expr(f"transform(percentile(n_chars, array({qs})),"
-                      f" x -> round(x, 4))").alias("bs"))
-         .withColumn("k", F.lit(1)))
-    return (d.withColumn("k", F.lit(1))
-            .join(F.broadcast(b), "k")
-            .withColumn("decile", F.expr(
-                "1 + size(filter(bs, x -> n_chars > x))"))
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("n_chars").alias("min_chars"),
-                 F.max("n_chars").alias("max_chars")))
-
-
 def q_media_meta(spark, sf_dir):
     """The multimodal family as one tagged union (registry-window rule),
     all REAL byte-level parsing, no decode libs. Shared schema
@@ -950,17 +749,6 @@ def q_winnow_dups(spark, sf_dir):
     return ex.unionAll(gd).select("variant", "doc_a", "doc_b", "n_shared")
 
 
-def q_json_props(spark, sf_dir):
-    """Semi-structured extraction: JSON props column → typed field, agg."""
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (ev.groupBy("event_type")
-            .agg(F.sum(k).alias("sum_k"),
-                 F.round(F.avg(k), 3).alias("avg_k"),
-                 F.count("*").alias("n_events")))
-
-
 def q_semi_anti_join(spark, sf_dir):
     """LEFT SEMI and LEFT ANTI joins, plus the INCREMENTAL-INGEST dedup
     path, as one tagged union (registry-window rule, SURVEY §7.4).
@@ -1000,54 +788,6 @@ def q_semi_anti_join(spark, sf_dir):
     ing = surv.withColumn("op", F.lit("ingest"))
     return (semi.unionAll(anti).unionAll(ing)
             .select("op", "doc_id", "lang", "n_chars"))
-
-
-def q_grouping_sets(spark, sf_dir):
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("documents_gs")
-    return spark.sql("""
-        SELECT lang, source, count(*) AS n_docs,
-               sum(n_chars) AS total_chars
-        FROM documents_gs
-        GROUP BY GROUPING SETS ((lang), (source), ())
-    """)
-
-
-def q_sessionize_batch(spark, sf_dir):
-    """Batch twin of the streaming sessionize (gap > 10 min starts a new
-    session): lag → session-start flags → running count → per-session agg.
-    SQL-oracle-able, so the sessionization semantics get a driver check
-    the streaming operator can't have."""
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    gap_us = 600 * 1_000_000  # exact integer microseconds on both engines
-    # ts is TIMESTAMP_NTZ in the parquet; session TZ is pinned UTC, so the
-    # cast to TIMESTAMP is exact and unix_micros stays integer-precise
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev = F.lag(us).over(w)
-    new_s = F.when(prev.isNull() | ((us - prev) > gap_us), 1).otherwise(0)
-    sess = (ev.withColumn("new_s", new_s)
-            .withColumn("session_id", F.sum("new_s").over(
-                w.rowsBetween(Window.unboundedPreceding,
-                              Window.currentRow))))
-    return (sess.groupBy("user_id", "session_id")
-            .agg(F.min("ts").alias("session_start"),
-                 F.max("ts").alias("session_end"),
-                 F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 3).alias("total_value")))
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_pivot_events(spark, sf_dir):
-    _prep(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-            .pivot("event_type", _EVENT_TYPES)
-            .agg(F.round(F.sum("value"), 3)))
 
 
 _URL_NORM_STEPS = [
@@ -1506,18 +1246,7 @@ def q_pdf_extract(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "extract_flagship": q_extract,
-        "filter_project": q_filter_project,
-        "agg_pricing": q_agg_pricing,
-        "join_nations": q_join_nations,
-        "join_orders_revenue": q_join_orders_revenue,
-        "window_latest_event": q_window_latest_event,
-        "window_running": q_window_running,
-        "topk_docs": q_topk_docs,
-        "rollup_cube_docs": q_rollup_cube_docs,
-        "set_ops": q_set_ops,
         "full_outer": q_full_outer,
-        "events_daily": q_events_daily,
-        "event_stats": q_event_stats,
         "token_stats": q_token_stats,
         "quality_score": q_quality,
         "lang_id": q_lang_id,
@@ -1532,19 +1261,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_ngrams": q_top_ngrams,
         "source_stats": q_source_stats,
         "media_meta": q_media_meta,
-        "length_quantiles": q_length_quantiles,
-        "length_deciles": q_length_deciles,
-        "lang_sources": q_lang_sources,
         "simhash_near_dups": q_simhash_near_dups,
         "ann_brute_force": q_ann_brute_force,
         "ann_lsh": q_ann_lsh,
         "pdf_extract": q_pdf_extract,
         "lineage_rollup": q_lineage_rollup,
-        "json_props": q_json_props,
         "semi_anti_join": q_semi_anti_join,
-        "grouping_sets": q_grouping_sets,
-        "sessionize_batch": q_sessionize_batch,
-        "pivot_events": q_pivot_events,
         "ivf_ann": q_ivf_ann,
         "url_dedup": q_url_dedup,
         "profile_docs": q_profile_docs,
@@ -2053,36 +1775,6 @@ def oracle_sql() -> dict[str, str]:
                   ON r.node = e.b)
             SELECT node AS doc_id, min(label) AS cluster_id
             FROM reach GROUP BY node{_P2}
-        """,
-        "lang_sources": """
-            SELECT lang,
-                   array_to_string(list_sort(list(DISTINCT source)),
-                                   chr(31)) AS sources,
-                   count(DISTINCT source) AS n_sources
-            FROM documents GROUP BY lang
-        """,
-        "length_quantiles": """
-            SELECT lang,
-                   round(quantile_cont(n_chars, 0.5), 4) AS p50,
-                   round(quantile_cont(n_chars, 0.9), 4) AS p90,
-                   round(quantile_cont(n_chars, 0.99), 4) AS p99,
-                   count(*) AS n_docs
-            FROM documents GROUP BY lang
-        """,
-        "length_deciles": """
-            WITH b AS (
-                SELECT list_transform(quantile_cont(n_chars,
-                    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-                    x -> round(x, 4)) AS bs
-                FROM documents),
-            d AS (
-                SELECT n_chars,
-                       1 + len(list_filter(b.bs, x -> n_chars > x))
-                           AS decile
-                FROM documents, b)
-            SELECT decile, count(*) AS n_docs,
-                   min(n_chars) AS min_chars, max(n_chars) AS max_chars
-            FROM d GROUP BY decile
         """,
         "media_meta": """
             SELECT 'meta' AS op, doc_id AS media_id,
@@ -2890,15 +2582,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(min(doc_id) AS BIGINT) AS min_doc_id
             FROM documents GROUP BY 1, 2
         """,
-        "json_props": """
-            SELECT event_type,
-                   CAST(sum(CAST(json_extract_string(props, '$.k')
-                       AS BIGINT)) AS BIGINT) AS sum_k,
-                   round(avg(CAST(json_extract_string(props, '$.k')
-                       AS BIGINT)), 3) AS avg_k,
-                   count(*) AS n_events
-            FROM events GROUP BY event_type
-        """,
         # op='ingest' replays dedup_increment stage by stage: within-batch
         # exact keep-min + fingerprint-anti vs the indexed (even) half in
         # plain SQL; the banded estimator stage comes from the MinHash
@@ -2962,123 +2645,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'ingest' AS op, doc_id, lang, n_chars FROM b3
             WHERE doc_id NOT IN (SELECT doc_id FROM losers){_P4I}
         """,
-        "grouping_sets": """
-            SELECT lang, source, count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars
-            FROM documents
-            GROUP BY GROUPING SETS ((lang), (source), ())
-        """,
-        "sessionize_batch": """
-            WITH x AS (
-                SELECT user_id, ts, event_id, value,
-                       CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                                 OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                                    > 600000000
-                            THEN 1 ELSE 0 END AS new_s
-                FROM events
-                WINDOW w AS (PARTITION BY user_id
-                             ORDER BY ts ASC, event_id ASC)),
-            s AS (
-                SELECT *, CAST(sum(new_s) OVER (
-                    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS session_id
-                FROM x)
-            SELECT user_id, session_id,
-                   min(ts) AS session_start, max(ts) AS session_end,
-                   count(*) AS n_events,
-                   round(sum(value), 3) AS total_value
-            FROM s GROUP BY user_id, session_id
-        """,
-        "pivot_events": """
-            SELECT date_trunc('day', ts) AS day,
-                   round(sum(value) FILTER (event_type = 'click'), 3)
-                       AS click,
-                   round(sum(value) FILTER (event_type = 'error'), 3)
-                       AS error,
-                   round(sum(value) FILTER (event_type = 'purchase'), 3)
-                       AS purchase,
-                   round(sum(value) FILTER (event_type = 'signup'), 3)
-                       AS signup,
-                   round(sum(value) FILTER (event_type = 'view'), 3)
-                       AS view
-            FROM events GROUP BY 1
-        """,
-        "filter_project": """
-            SELECT l_orderkey, l_linenumber, l_quantity,
-                   round(l_extendedprice * (1 - l_discount), 4) AS net_price
-            FROM lineitem
-            WHERE l_shipdate >= '1995-01-01' AND l_discount > 0.05
-        """,
-        "agg_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 4) AS sum_qty,
-                   round(sum(l_extendedprice), 4) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4)
-                       AS sum_disc_price,
-                   round(avg(l_quantity), 4) AS avg_qty,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "join_nations": """
-            SELECT r_name, n_name, count(*) AS n_customers,
-                   round(sum(c_acctbal), 4) AS total_acctbal
-            FROM customer
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name, n_name
-        """,
-        "join_orders_revenue": """
-            SELECT o_orderkey, o_orderpriority,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4)
-                       AS revenue
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-            GROUP BY o_orderkey, o_orderpriority
-            ORDER BY revenue DESC, o_orderkey ASC
-            LIMIT 10
-        """,
-        "window_latest_event": """
-            SELECT user_id, event_id, event_type, ts FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events) WHERE rn = 1
-        """,
-        "window_running": """
-            SELECT user_id, event_id,
-                   round(sum(value) OVER (
-                       PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                       3) AS running_value
-            FROM events
-        """,
-        "topk_docs": """
-            SELECT doc_id, lang, n_chars FROM documents
-            ORDER BY n_chars DESC, doc_id ASC LIMIT 10
-        """,
-        "rollup_cube_docs": """
-            SELECT 'rollup' AS op, lang, source, count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                   max(n_chars) AS max_chars
-            FROM documents GROUP BY ROLLUP (lang, source)
-            UNION ALL
-            SELECT 'cube' AS op, lang, source, count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                   max(n_chars) AS max_chars
-            FROM documents GROUP BY CUBE (lang, source)
-        """,
-        "set_ops": """
-            SELECT 'except' AS op, doc_id FROM (
-                SELECT DISTINCT doc_id FROM documents
-                EXCEPT
-                SELECT DISTINCT user_id AS doc_id FROM events)
-            UNION ALL
-            SELECT 'intersect' AS op, doc_id FROM (
-                SELECT DISTINCT doc_id FROM documents
-                INTERSECT
-                SELECT DISTINCT user_id AS doc_id FROM events)
-        """,
         "full_outer": """
             WITH d AS (SELECT doc_id, count(*) AS n_docs
                        FROM documents GROUP BY doc_id),
@@ -3133,19 +2699,6 @@ def oracle_sql() -> dict[str, str]:
                   AND (CASE WHEN (doc_id % 20) % 2 = 0
                             THEN (doc_id % 20) % 4 != 0
                             ELSE (doc_id % 20) % 3 != 0 END)))
-        """,
-        "events_daily": """
-            SELECT date_trunc('day', ts) AS day, event_type,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1, 2
-        """,
-        "event_stats": """
-            SELECT event_type,
-                   count(DISTINCT user_id) AS n_users,
-                   round(median(value), 3) AS median_value,
-                   round(stddev_pop(value), 3) AS sd_value
-            FROM events GROUP BY event_type
         """,
         "token_stats": _token_stats_oracle_sql(),
         # round 7: heur/lm/vocab tagged union. The 'lm' branches replay

@@ -2,14 +2,14 @@
 
 Capabilities of ``bcampbell/metareadability`` (headline / pubdate / byline
 extraction from raw news-article HTML; see SURVEY.md) plus arc90-style main
-content extraction, re-expressed as vectorized pandas/Arrow UDFs over Spark
-DataFrames — never a port (the reference at /root/reference was empty at
+content extraction, re-expressed as one Arrow kernel (``mapInArrow``) over
+Spark DataFrames — never a port (the reference source was not available at
 survey time; behavior is specified by SURVEY.md + FIXTURES.md and the
 ``[PUB:*]`` citations therein).
 
 Layout
 ------
-``mre.schema``      — authoritative StructTypes (pages / extract / lineage)
+``mre.schema``      — authoritative StructTypes (pages / extract output)
 ``mre.core``        — pure-Python extraction stages E1–E15 (no Spark imports)
 ``mre.pipeline``    — Spark pipeline operators P1–P10 (dedup, salt, extract,
                       lineage, resume, golden diff)
@@ -19,8 +19,11 @@ Layout
 ``mre.textops``     — training-data ops over document tables: dedup (exact,
                       MinHash-LSH, SimHash, n-gram Jaccard), ANN similarity,
                       language-ID, quality scoring, token counts, fingerprints
-``mre.multimodal``  — binary-column (image/audio) plumbing, decode stubbed
-``mre.streaming``   — Structured Streaming variant of the extract pipeline
+``mre.curate``      — composed curation stages, run_curate / run_corpus,
+                      incremental ingest dedup against a corpus index
+``mre.multimodal``  — binary-column (image/audio/video) header parsing,
+                      frames, resize and dedup; no pixel decode
+``mre.streaming``   — Structured Streaming ingest (dedup vs the index)
 """
 
 __version__ = "0.1.0"

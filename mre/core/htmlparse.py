@@ -32,15 +32,6 @@ VOID_ELEMENTS = frozenset(
     }
 )
 
-BLOCK_ELEMENTS = frozenset(
-    {
-        "address", "article", "aside", "blockquote", "div", "dl", "dd", "dt",
-        "fieldset", "figcaption", "figure", "footer", "form", "h1", "h2",
-        "h3", "h4", "h5", "h6", "header", "hr", "li", "main", "nav", "ol",
-        "p", "pre", "section", "table", "tbody", "td", "tfoot", "th",
-        "thead", "tr", "ul", "br", "title",
-    }
-)
 
 # start tag → tags it implicitly closes (nearest-first search up the stack)
 _IMPLIED_CLOSE = {
@@ -682,5 +673,5 @@ def parse_doc_stdlib(html: str) -> Node:
     return builder.root
 
 
-__all__ = ["Node", "parse_doc", "parse_doc_stdlib", "BLOCK_ELEMENTS",
-           "VOID_ELEMENTS", "unescape"]
+__all__ = ["Node", "parse_doc", "parse_doc_stdlib", "VOID_ELEMENTS",
+           "unescape"]

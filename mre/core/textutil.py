@@ -1,12 +1,12 @@
-"""E1 charset resolve/decode + E3 text render (SURVEY.md §2A).
+"""E1 charset resolve/decode + the shared text normalizers (SURVEY.md §2A).
 
 E1 mirrors the reference's decode order [PUB:util]: BOM → <meta charset> /
 http-equiv sniff over the byte prefix → utf-8 try → latin-1 fallback, always
 with errors="replace" so decoding never raises.
 
-E3 renders an element to visible text the way the reference's render_text
-does [PUB:util.render_text]: block tags break lines, inline tags do not,
-runs of whitespace collapse to one space, and the result is stripped.
+``collapse_ws`` is E3's whitespace rule (runs collapse to one space, the
+result is stripped); element rendering itself lives in
+``content._render_paragraphs``. ``slugify`` serves E5's url-slug match.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from __future__ import annotations
 import re
 from typing import Optional
 
-from .htmlparse import BLOCK_ELEMENTS, Node
 
 # --- E1: charset resolution ------------------------------------------------
 
@@ -104,9 +103,7 @@ def decode_html(b: bytes, content_type: Optional[str] = None) -> str:
         return b.decode("iso-8859-1", errors="replace")
 
 
-# --- E3: text rendering ----------------------------------------------------
-
-_WS_RX = re.compile(r"\s+")
+# --- E3: whitespace normalization ------------------------------------------
 
 
 def collapse_ws(s: str) -> str:
@@ -114,35 +111,6 @@ def collapse_ws(s: str) -> str:
     candidate text this way before scoring [PUB:util]). str.split is the
     C-level fast path — equivalent to the regex for all whitespace."""
     return " ".join(s.split())
-
-
-def render_text(node: Node) -> str:
-    """Element → visible text: block boundaries become newlines, inline text
-    concatenates, whitespace collapses within each line."""
-    lines: list[str] = []
-    buf: list[str] = []
-
-    def flush() -> None:
-        line = collapse_ws("".join(buf))
-        buf.clear()
-        if line:
-            lines.append(line)
-
-    def walk(n: Node) -> None:
-        is_block = n.tag in BLOCK_ELEMENTS
-        if is_block:
-            flush()
-        for c in n.content:
-            if isinstance(c, str):
-                buf.append(c)
-            else:
-                walk(c)
-        if is_block:
-            flush()
-
-    walk(node)
-    flush()
-    return "\n".join(lines)
 
 
 _SLUG_RX = re.compile(r"[^a-z0-9]+")
@@ -158,6 +126,5 @@ __all__ = [
     "decode_html",
     "sniff_charset",
     "collapse_ws",
-    "render_text",
     "slugify",
 ]

@@ -29,7 +29,6 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Optional
 
@@ -37,14 +36,11 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io import local_path, read_table, write_append, write_overwrite
+from .io import read_if_present, read_table, write_append, write_overwrite
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
                       gopher_quality, gopher_repetition, hash_split,
                       jaccard_on_candidates, minhash_bands,
                       minhash_near_dups, minhash_signatures, pii_scrub)
-
-CURATE_STAGES = ("quality", "exact_dedup", "near_dup", "decontaminate",
-                 "split")
 
 
 # --------------------------------------------------------------------------
@@ -327,13 +323,10 @@ def completed_stages(spark: SparkSession, lineage_dst: str,
     parameters are flipped back to an earlier set (A → B → A). Rows from
     a pre-params_hash lineage table are conservatively treated as
     parameter-mismatched (recompute — the overwrite sinks make that
-    correct, merely not free)."""
-    local = local_path(spark, lineage_dst)
-    if local is not None and not os.path.exists(local):
-        return set()
-    try:
-        lin = read_table(spark, lineage_dst)
-    except Exception:
+    correct, merely not free). No lineage table means none; a lineage
+    table that fails to read raises."""
+    lin = read_if_present(spark, lineage_dst)
+    if lin is None:
         return set()
     lin = lin.filter(F.col("run_id") == run_id)
     if params_hash is not None:
@@ -547,9 +540,8 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
     def _attempt(name: str) -> int:
         """1 + number of lineage rows already present for (run_id,
         stage) — tiny table, constant-shaped read."""
-        try:
-            lin = read_table(spark, lineage_dst)
-        except Exception:
+        lin = read_if_present(spark, lineage_dst)
+        if lin is None:
             return 1
         return 1 + lin.filter((F.col("run_id") == run_id)
                               & (F.col("stage") == name)).count()
@@ -558,10 +550,10 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
         """Skip-or-run one stage; returns its (re)readable output."""
         path = f"{dst}/{name}"
         if name in done:
-            try:
-                return read_table(spark, path)
-            except Exception:
-                pass  # committed but output missing → recompute
+            out = read_if_present(spark, path)
+            if out is not None:
+                return out
+            # committed but output missing → recompute
         t0 = time.monotonic()
         n_in = n_in_df.count()
         build().write.mode("overwrite").parquet(path)
@@ -784,43 +776,6 @@ def read_curated(spark: SparkSession, dst: str) -> DataFrame:
     return read_table(spark, f"{dst}/split")
 
 
-def curation_funnel(spark: SparkSession, dst: str,
-                    docs: DataFrame,
-                    group_col: str = "source") -> DataFrame:
-    """Per-source attribution of the curation funnel — WHICH domains
-    lose documents at WHICH stage ("why did my corpus shrink?"). For
-    every stage id-list materialized under ``{dst}/{stage}`` (whatever
-    subset of stages the run enabled, discovered from the directory),
-    counts the surviving docs per ``group_col``: one narrow semi-join
-    + count per stage, each against an id-list that is already on
-    disk — nothing recomputes. Columns: stage, <group_col>, n_docs.
-    Read it pivoted (stage × source) for the report."""
-    out = None
-    hadoop = spark._jvm.org.apache.hadoop
-    fs = hadoop.fs.FileSystem.get(spark._jsc.hadoopConfiguration())
-    path = hadoop.fs.Path(dst)
-    if not fs.exists(path):
-        raise FileNotFoundError(dst)
-    stages = sorted(
-        f.getPath().getName() for f in fs.listStatus(path)
-        if f.isDirectory())
-    base = docs.select("doc_id", group_col)
-    for stage in stages:
-        try:
-            ids = read_table(spark, f"{dst}/{stage}").select("doc_id")
-        except Exception:
-            continue  # non-id-list artifacts (bpe_merges, tokens, …)
-        cnt = (base.join(ids, "doc_id", "left_semi")
-               .groupBy(group_col)
-               .agg(F.count("*").alias("n_docs"))
-               .select(F.lit(stage).alias("stage"), group_col,
-                       "n_docs"))
-        out = cnt if out is None else out.unionByName(cnt)
-    if out is None:
-        raise ValueError(f"no stage outputs under {dst}")
-    return out
-
-
 def read_curate_lineage(spark: SparkSession, lineage_dst: str) -> DataFrame:
     """Curation lineage resolved to ONE row per (run_id, stage): the
     latest attempt (ADVICE r4 — recomputed stages append rather than
@@ -897,13 +852,10 @@ def _index_meta(spark: SparkSession, index_dst: str):
     ``bands`` (None for an index predating the pre-banded layout) and
     ``parts`` (None predating the hash-bucketed layout); None for a
     pre-meta index. ADVICE r6 #3: a genuinely ABSENT meta table selects
-    the legacy path (probed through the Hadoop FS API), but a meta table
-    that exists and fails to READ propagates — the old broad except made
-    a transient read failure silently skip the bands append on a
-    pre-banded index, leaving ``{index}/bands`` stale. ``iceberg:`` URIs
-    keep the lenient probe (a catalog read failure is indistinguishable
-    from table-absent there; iceberg commits are atomic, so a half-
-    written meta cannot exist)."""
+    the legacy path (``mre.io.read_if_present``), but a meta table that
+    exists and fails to READ propagates — the old broad except made a
+    transient read failure silently skip the bands append on a
+    pre-banded index, leaving ``{index}/bands`` stale."""
     from .io import ICEBERG_PREFIX, _hadoop_fs
     meta_path = f"{index_dst}/meta"
     if meta_path.startswith(ICEBERG_PREFIX):
@@ -916,13 +868,10 @@ def _index_meta(spark: SparkSession, index_dst: str):
     cached = _META_CACHE.get(index_dst)
     if cached is not None and cached[0] == stamp:
         return cached[1]
-    if stamp is None:
-        try:
-            r = read_table(spark, meta_path).first()
-        except Exception:
-            return None
-    else:
-        r = read_table(spark, meta_path).first()   # errors propagate
+    meta_df = read_if_present(spark, meta_path)
+    if meta_df is None:
+        return None
+    r = meta_df.first()
     f = r.__fields__
     meta = {"k": r["k"], "n": r["n"],
             "bands": r["bands"] if "bands" in f else None,
@@ -1606,11 +1555,10 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
             F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_rows")).first()
         cur = (int(sig["n_lineage_rows"]), int(sig["n_rows"]))
         prev = None
-        try:
-            m = read_table(spark, f"{workdir}/documents_meta").first()
+        meta = read_if_present(spark, f"{workdir}/documents_meta")
+        if meta is not None:
+            m = meta.first()
             prev = (int(m["n_lineage_rows"]), int(m["n_rows"]))
-        except Exception:
-            pass
         if prev != cur:
             docs.write.mode("overwrite").parquet(f"{workdir}/documents")
             write_overwrite(
@@ -1641,11 +1589,9 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
                **curate_knobs)
 
 
-__all__ = ["curate_df", "run_curate", "read_curated", "curation_funnel",
-           "completed_stages",
+__all__ = ["curate_df", "run_curate", "read_curated", "completed_stages",
            "quality_keep_ids", "exact_keeper_ids", "near_dup_loser_ids",
            "contaminated_ids", "media_loser_ids", "semantic_loser_ids",
-           "CURATE_STAGES",
            "read_curate_lineage",
            "extracted_to_documents", "run_corpus",
            "build_dedup_index", "update_dedup_index", "dedup_increment",

@@ -66,7 +66,6 @@ TAILS = [
     "met with a mixed response from the public",
 ]
 
-TZ_UTC = dt.timezone.utc
 EPOCH = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 _FAMILY_BANDS = [

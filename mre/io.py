@@ -167,60 +167,31 @@ def write_overwrite_partitions(df: DataFrame, dst: str,
          .parquet(dst))
 
 
-def compact_partitions(spark: SparkSession, path: str, partition_col: str,
-                       max_files_per_partition: int = 1) -> None:
-    """Small-file compaction for a partitioned parquet sink — the
-    maintenance job every long-running 100 TB pipeline needs (each
-    incremental/resumed run appends files; thousands of KB-sized files
-    per partition destroy scan throughput and driver planning time).
-
-    Rewrites each partition into ≤ ``max_files_per_partition`` files and
-    dynamic-partition-overwrites it — content is byte-preserved, layout
-    is not (tested via golden_diff == 0). With the default N=1 the
-    repartition key is the partition column alone (one task, one file
-    per partition value). With N>1 a within-partition salt joins the
-    key — repartitioning on the partition column alone would hash every
-    row of a partition value to ONE task regardless of the multiplier
-    (ADVICE r3: the knob was ineffective), so large partitions could
-    never regain write parallelism. The salt is a DETERMINISTIC hash of
-    the full row content (ADVICE r4: a nondeterministic per-row id —
-    monotonically_increasing_id — re-evaluates differently under task
-    retry / shuffle-fetch recomputation, hashing rows to different
-    reducers than the original attempt and silently duplicating or
-    dropping them — the SPARK-23207 class of bug; the round-robin sort
-    fix does not protect arbitrary nondeterministic keys). Content
-    hashing gives ≤N files per partition value and ~N tasks in flight;
-    identical rows co-locate in one file, which is harmless for
-    compaction (content, not layout, is the contract).
-    On Iceberg this maps to rewrite_data_files; the parquet path keeps
-    the same semantics for the sandbox."""
-    from pyspark.sql import functions as F
-
-    # materialize BEFORE overwriting the path being read (localCheckpoint
-    # breaks the plan's lineage to the source files; prod Iceberg uses
-    # rewrite_data_files and never needs this)
-    df = read_table(spark, path).localCheckpoint(eager=True)
-    # driver-side partition list is fine here: this is a maintenance op
-    # and the partition count is the (small) bucket count, not the rows
-    n_parts = df.select(partition_col).distinct().count()
-    n = max(n_parts, 1) * max_files_per_partition
-    if max_files_per_partition > 1:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                      F.lit(max_files_per_partition))
-        compacted = (df.withColumn("_cfs", salt)
-                     .repartition(n, F.col(partition_col), F.col("_cfs"))
-                     .drop("_cfs"))
-    else:
-        compacted = df.repartition(n, F.col(partition_col))
-    write_overwrite_partitions(compacted, path, partition_col)
-    # the checkpointed snapshot has served its purpose (the rewrite is
-    # on disk) — release it instead of leaking it for the session life
-    from .textops import _release_local_checkpoint
-    _release_local_checkpoint(df)
-
-
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return read_pages(spark, path)
+
+
+def read_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """``read_table(path)``, or None when the table is absent: its Hadoop
+    FS path does not exist, or holds no entry whose name starts with
+    neither ``_`` nor ``.`` (a write that never committed leaves only
+    ``_temporary/``). Every other read error propagates — the resume
+    probes built on this must not turn a corrupt or unreadable table into
+    "nothing done" and recompute everything. ``iceberg:`` tables keep a
+    lenient probe: a catalog read failure is indistinguishable from
+    table-absent there, and iceberg commits are atomic, so a half-written
+    table cannot exist."""
+    if path.startswith(ICEBERG_PREFIX):
+        try:
+            return read_table(spark, path)
+        except Exception:
+            return None
+    fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p) or all(
+            s.getPath().getName().startswith(("_", "."))
+            for s in fs.listStatus(p)):
+        return None
+    return read_table(spark, path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -246,11 +217,7 @@ def path_committed(spark: SparkSession, dst: str) -> bool:
       partial survivor set (and, for ingest, permanently pollutes the
       dedup index with the dropped remainder's absence)."""
     if dst.startswith(ICEBERG_PREFIX):
-        try:
-            read_table(spark, dst)
-            return True
-        except Exception:
-            return False
+        return read_if_present(spark, dst) is not None
     try:
         fs, p = _hadoop_fs(spark, f"{dst}/_SUCCESS")
         return bool(fs.exists(p))
@@ -355,8 +322,8 @@ def read_pages_jsonl(spark: SparkSession, src: str) -> DataFrame:
     df = spark.read.schema(wire).json(src)
     # same columns/types as PAGES_SCHEMA; JSON sources can't declare
     # non-null columns, so rows missing either non-null field (url,
-    # warc_ts) are dropped — downstream dedup windows / watermarks /
-    # dedup_first_latest all assume warc_ts is never null
+    # warc_ts) are dropped — the downstream dedup window and
+    # dedup_first_latest both assume warc_ts is never null
     _ = PAGES_SCHEMA
     return (df.filter(F.col("url").isNotNull()
                       & F.col("warc_ts").isNotNull())
@@ -364,23 +331,8 @@ def read_pages_jsonl(spark: SparkSession, src: str) -> DataFrame:
                     F.unbase64("html_b64").alias("html"), "text", "lang"))
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int, sort_col: str | None = None) -> None:
-    """P7 variant: persist a table bucketed (and optionally sorted) by the
-    join key — Spark's sort-merge-bucket layout. Two tables bucketed the
-    same way join with NO Exchange on either side (co-located join), the
-    100 TB answer to repeated large-large joins on a stable key. Requires
-    a metastore-backed saveAsTable (local derby in the sandbox; Hive/Glue/
-    Iceberg in prod)."""
-    w = df.write.mode("overwrite").format("parquet")
-    w = w.bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
 __all__ = ["get_spark", "read_pages", "write_append",
-           "write_overwrite_partitions", "read_table", "read_pages_jsonl",
-           "write_bucketed", "path_committed", "swap_dirs",
+           "write_overwrite_partitions", "read_table", "read_if_present",
+           "read_pages_jsonl", "path_committed", "swap_dirs",
            "atomic_rename_fs", "local_path", "recover_swapped_dir",
            "ICEBERG_PREFIX"]

@@ -1,14 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata (training-data pipeline requirement).
 
-The container has no image/audio libraries, so the *pixel/sample decode*
-step is a clearly-marked stub (``decode_media`` raises NotImplementedError
-unless a deterministic fake is requested). Everything else is REAL:
-container-format sniffing + header metadata (``sniff_media_meta`` /
-``media_meta`` — PNG IHDR, JPEG SOF scan, GIF screen descriptor, WAV fmt
-chunk, pure stdlib) and the Spark plumbing (schema, salted partitioning,
-mapInPandas batch shape, size-capped chunking). Swapping in
-Pillow/librosa in prod changes only the decode body.
+The container has no image/audio libraries, so there is no pixel/sample
+decode. Everything here works from the bytes alone: container-format
+sniffing + header metadata (``sniff_media_meta`` / ``media_meta`` — PNG
+IHDR, JPEG SOF scan, GIF screen descriptor, WAV fmt chunk, pure stdlib),
+frame and sample enumeration, resize to a re-sniffable container, and
+exact / banded media dedup, as mapInPandas or column-expression plans.
 """
 
 from __future__ import annotations
@@ -19,58 +17,15 @@ from typing import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
-                               StructField, StructType)
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("media_type", StringType(), False),  # image | audio | video
-    StructField("payload", BinaryType(), True),      # opaque encoded bytes
-    StructField("width", IntegerType(), True),       # typed metadata…
-    StructField("height", IntegerType(), True),
-    StructField("sample_rate", IntegerType(), True),
-    StructField("duration_ms", IntegerType(), True),
-])
-
-FEATURE_SCHEMA = (
-    "media_id bigint, media_type string, n_bytes bigint, sha1 string, "
-    "byte_entropy_x1000 bigint, feat array<double>, decode_ok int"
-)
-
-
-def synth_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table (payload bytes are a pure function of
-    media_id) — the test corpus for the plumbing."""
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"].tolist()
-            rows = []
-            for i in ids:
-                kind = ("image", "audio", "video")[i % 3]
-                payload = hashlib.sha256(
-                    f"media-{i}".encode()).digest() * (8 + i % 32)
-                rows.append({
-                    "media_id": i, "media_type": kind, "payload": payload,
-                    "width": 640 if kind != "audio" else None,
-                    "height": 480 if kind != "audio" else None,
-                    "sample_rate": 16000 if kind == "audio" else None,
-                    "duration_ms": 1000 + (i * 37) % 9000
-                    if kind != "image" else None,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              MEDIA_SCHEMA.fields])
-
-    base = spark.range(n).select(F.col("id").alias("media_id"))
-    return base.repartition(4).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
 # REAL (pure-stdlib) container-format sniffing — no Pillow/ffmpeg needed.
-# Pixel/sample decode stays stubbed (decode_media below), but format
-# detection and header metadata (dimensions, sample rate) come straight
-# from the byte layout of each container, which is exactly the metadata a
-# corpus pipeline wants before it ever decodes anything (size/aspect
-# filters, format routing, corrupt-file triage).
+# There is no pixel/sample decode, but format detection and header
+# metadata (dimensions, sample rate) come straight from the byte layout of
+# each container, which is exactly the metadata a corpus pipeline wants
+# before it ever decodes anything (size/aspect filters, format routing,
+# corrupt-file triage).
 
 
 def _bmff_boxes(buf: bytes, i: int, end: int):
@@ -563,9 +518,9 @@ def sample_frames(media: DataFrame, every_n: int = 1,
     size and start time in timescale units; ``left``/``top`` 0, width/
     height null — geometry rides the track header). Rows are emitted
     for frames 0, every_n, 2·every_n, … capped at ``max_frames``.
-    Pixel decode of a sampled frame remains the documented
-    ``decode_media`` stub (LZW/codecs); an ffmpeg-backed prod version
-    swaps the enumerators and keeps this exact schema/batching."""
+    Pixel decode of a sampled frame needs codecs (LZW, H.264) absent
+    here; an ffmpeg-backed prod version swaps the enumerators and keeps
+    this exact schema/batching."""
     def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["media_id", "frame_idx", "byte_offset", "left", "top",
                 "width", "height", "size", "t_units"]
@@ -617,7 +572,7 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     re-written at the target dimensions (``make_png/jpeg/gif`` — real
     signatures, real IHDR/SOF/descriptor, real CRCs), with src_sha1
     provenance. The one faked piece — pixel RESAMPLING — needs Pillow
-    (absent in this container; documented like ``decode_media``), so the
+    (absent in this container), so the
     emitted container carries no pixel data; prod swaps the body for
     `Image.open(...).resize(...)` and nothing else changes (schema,
     batching, re-sniff contract are identical). Non-image / unsniffable
@@ -752,75 +707,7 @@ def media_band_dedup(media: DataFrame,
         F.count("*").over(w).alias("band_size"))
 
 
-def decode_media(payload: bytes, media_type: str, fake: bool = False):
-    """STUB — media decoding needs Pillow/soundfile/ffmpeg, none of which
-    exist in this container. ``fake=True`` returns a deterministic
-    pseudo-decode (byte histogram) so the downstream plumbing is testable;
-    prod replaces this body with the real decoder."""
-    if not fake:
-        raise NotImplementedError(
-            "media decode requires Pillow/soundfile/ffmpeg (absent in this "
-            "container); call with fake=True for the deterministic stub")
-    counts = [0] * 16
-    for b in payload:
-        counts[b >> 4] += 1
-    return counts
-
-
-def extract_media_features(media: DataFrame,
-                           byte_cap: int = 64 << 20) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads with the same
-    size-capped batching discipline as the HTML pipeline."""
-    import math
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sizes = pdf["payload"].map(
-                lambda b: len(b) if b is not None else 0)
-            # byte-capped re-chunk (rule of pipeline.extract_batch_arrow)
-            start, acc = 0, 0
-            bounds = []
-            for i, sz in enumerate(sizes):
-                if acc + sz > byte_cap and i > start:
-                    bounds.append((start, i))
-                    start, acc = i, 0
-                acc += sz
-            bounds.append((start, len(pdf)))
-            for s, e in bounds:
-                chunk = pdf.iloc[s:e]
-                out = []
-                for _, row in chunk.iterrows():
-                    payload = row["payload"]
-                    if payload is None:
-                        out.append({"media_id": row["media_id"],
-                                    "media_type": row["media_type"],
-                                    "n_bytes": 0, "sha1": None,
-                                    "byte_entropy_x1000": 0,
-                                    "feat": None, "decode_ok": 0})
-                        continue
-                    payload = bytes(payload)
-                    hist = decode_media(payload, row["media_type"],
-                                        fake=True)
-                    total = max(sum(hist), 1)
-                    probs = [c / total for c in hist if c]
-                    ent = -sum(p * math.log2(p) for p in probs)
-                    out.append({
-                        "media_id": row["media_id"],
-                        "media_type": row["media_type"],
-                        "n_bytes": len(payload),
-                        "sha1": hashlib.sha1(payload).hexdigest(),
-                        "byte_entropy_x1000": int(ent * 1000),
-                        "feat": [float(c) / total for c in hist],
-                        "decode_ok": 1,
-                    })
-                yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-__all__ = ["MEDIA_SCHEMA", "FEATURE_SCHEMA", "MEDIA_META_SCHEMA",
-           "RESIZE_SCHEMA", "AUDIO_WINDOW_SCHEMA",
-           "synth_media", "decode_media", "extract_media_features",
+__all__ = ["MEDIA_META_SCHEMA", "RESIZE_SCHEMA", "AUDIO_WINDOW_SCHEMA",
            "sniff_media_meta", "media_meta", "resize_media",
            "audio_frame_windows", "wav_pcm_samples",
            "gif_frames", "mp4_frames", "sample_frames", "FRAME_SCHEMA",

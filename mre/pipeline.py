@@ -32,7 +32,6 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Optional
 
@@ -40,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core.extract import extract_one
-from .io import local_path, read_pages, read_table, write_append, \
+from .io import read_if_present, read_pages, read_table, write_append, \
     write_overwrite_partitions
 from .schema import EXTRACT_FULL_SCHEMA, EXTRACT_SCHEMA
 
@@ -182,7 +181,7 @@ def run_extract_df(pages: DataFrame, buckets: int,
                    dedup: Optional[str] = "window",
                    done: Optional[DataFrame] = None) -> DataFrame:
     """Pages DF → extraction DF (with bookkeeping columns), no sink. The
-    one plan builder behind ``run_extract`` and ``streaming_extract``.
+    one plan builder behind ``run_extract``.
 
     Projection to (url, warc_ts, html) happens before the shuffle so
     shuffle bytes stay minimal (P3); html must survive the shuffle — it is
@@ -246,18 +245,12 @@ def lineage_rollup(results: DataFrame, run_id: str) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, lineage_dst: str,
                       run_id: str) -> Optional[DataFrame]:
-    # cheap existence probe first: avoids a scary (but harmless)
-    # FileNotFoundException WARN in the Spark log on the very first run.
-    # Local filesystem only — for hdfs://, s3a://, iceberg: etc an os
-    # probe would be always-False (silently disabling resume), so those
-    # rely on the try/except below instead.
-    local = local_path(spark, lineage_dst)
-    if local is not None and not os.path.exists(local):
+    """Salt buckets of ``run_id`` already committed to lineage, or None
+    when there is no lineage table yet. A lineage table that fails to
+    read raises: resuming from "nothing done" would recompute the run."""
+    lin = read_if_present(spark, lineage_dst)
+    if lin is None:
         return None
-    try:
-        lin = read_table(spark, lineage_dst)
-    except Exception:
-        return None  # no lineage table yet → nothing completed
     return (lin.filter(F.col("run_id") == run_id)
             .select("salt_bucket").distinct())
 

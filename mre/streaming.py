@@ -1,17 +1,9 @@
-"""Structured Streaming variant of the extraction pipeline (SURVEY.md §2C).
-
-The extraction core is stateless per row, so streaming is a thin wrapper:
-``readStream`` over a pages source → watermark + streaming dedup on url →
-the batch plan builder ``run_extract_df`` (salt, shuffle, mapInArrow over
-``extract_batch_arrow``) with its own url dedup off → sink. The watermark
-bounds the dedup state (at 10^12-doc scale the state store would otherwise
-grow without bound). Dedup semantics are selectable at the API:
-``keep="first"`` (immediate emit, first capture wins) or ``keep="latest"``
-(batch-parity within the watermark window via max_by) — see
-``streaming_extract``.
-
-Not on the byte-parity bar (the reference has no streaming); covered by
-tests/test_streaming_multimodal.py with a file source and one micro-batch.
+"""Structured Streaming ingest (round 6): each micro-batch of newly crawled
+documents is deduplicated against the pre-banded corpus index
+(``mre.curate.dedup_increment``), its survivors land under
+``{accepted_dst}/epoch=N`` and the index is extended, with per-epoch phase
+markers making a retried micro-batch converge (``ingest_epoch``).
+``start_ingest_stream`` is the streaming twin of ``scripts/run_ingest.py``.
 """
 
 from __future__ import annotations
@@ -19,142 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import run_extract_df
-from .schema import PAGES_SCHEMA
-
-
-def read_pages_stream(spark: SparkSession, src_dir: str,
-                      max_files_per_trigger: int = 16) -> DataFrame:
-    """File-based streaming source over a directory of pages parquet.
-    In prod this would be Kafka/Kinesis or an Iceberg incremental read;
-    the transformation chain below is source-agnostic."""
-    return (spark.readStream
-            .schema(PAGES_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(src_dir))
-
-
-def streaming_extract(pages: DataFrame, buckets: int = 32,
-                      watermark: str = "1 hour",
-                      keep: str = "first") -> DataFrame:
-    """pages stream → extraction stream.
-
-    DEDUP SEMANTICS (API contract — pick per use case):
-
-    * ``keep="first"`` (default): ``dropDuplicatesWithinWatermark`` — the
-      FIRST capture per url wins and every kept row emits immediately
-      (lowest latency, bounded state). NOTE this differs from the batch
-      pipeline, which keeps the LATEST capture per url: a re-crawl with
-      changed html inside the watermark is DROPPED here.
-    * ``keep="latest"``: batch-parity within the watermark — per
-      (event-time window of the watermark size, url), keep the capture
-      with max warc_ts via ``max_by``. Rows emit only once the watermark
-      passes their window end (append-mode aggregation): higher latency,
-      same bounded state, and agreement with the batch window dedup for
-      duplicates landing in the same window.
-
-    True global latest-wins is unbounded state in a stream; the watermark
-    is the horizon in both modes."""
-    pages = pages.filter(F.col("html").isNotNull())
-    if keep == "latest":
-        deduped = (pages
-                   .withWatermark("warc_ts", watermark)
-                   .groupBy(F.window("warc_ts", watermark).alias("_w"),
-                            "url")
-                   .agg(F.max_by(F.struct("warc_ts", "html"),
-                                 "warc_ts").alias("_latest"))
-                   .select("url",
-                           F.col("_latest.warc_ts").alias("warc_ts"),
-                           F.col("_latest.html").alias("html")))
-    elif keep == "first":
-        deduped = (pages
-                   .withWatermark("warc_ts", watermark)
-                   .dropDuplicatesWithinWatermark(["url"]))
-    else:
-        raise ValueError(f"keep must be 'first' or 'latest', got {keep!r}")
-    return run_extract_df(deduped, buckets, dedup=None)
-
-
-def sessionize_events(events: DataFrame, gap_minutes: int = 10,
-                      watermark: str = "30 minutes") -> DataFrame:
-    """Custom stateful streaming operator: gap-based sessionization per
-    user via ``applyInPandasWithState`` (the arbitrary-state API).
-
-    State per user = (session_start, last_ts, n_events, total_value); a
-    session closes when no event arrives within ``gap_minutes`` of the
-    last one (event-time timeout driven by the watermark). Emits one row
-    per closed session — the pattern for any custom stateful op the
-    built-in windowed aggregations can't express.
-    """
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    gap = dt.timedelta(minutes=gap_minutes)
-
-    out_schema = ("user_id bigint, session_start timestamp, "
-                  "session_end timestamp, n_events bigint, "
-                  "total_value double")
-    state_schema = ("session_start timestamp, last_ts timestamp, "
-                    "n_events bigint, total_value double")
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start, last, n, total = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id, "session_start": start,
-                "session_end": last, "n_events": n,
-                "total_value": float(total)}])
-            return
-        start = last = None
-        n, total = 0, 0.0
-        if state.exists:
-            start, last, n, total = state.get
-        closed = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                ts = ts.to_pydatetime()
-                if last is not None and ts - last > gap:
-                    closed.append({
-                        "user_id": user_id, "session_start": start,
-                        "session_end": last, "n_events": n,
-                        "total_value": float(total)})
-                    start, n, total = ts, 0, 0.0
-                if start is None:
-                    start = ts
-                last = ts
-                n += 1
-                total += float(value)
-        state.update((start, last, n, total))
-        state.setTimeoutTimestamp(int(
-            (last + gap).timestamp() * 1000))
-        if closed:
-            yield pd.DataFrame(closed)
-
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
-
 
 def _epoch_phases(spark: SparkSession, epochs_dst: str,
                   epoch_id: int) -> set:
     """Marker phases already committed for this epoch ('written',
-    'indexed') — a tiny table read + constant-shaped collect."""
-    from .io import read_table
-    try:
-        e = read_table(spark, epochs_dst) \
-            .filter(F.col("epoch") == int(epoch_id))
-        return {r["phase"] for r in e.select("phase").distinct().collect()}
-    except Exception:
+    'indexed') — a tiny table read + constant-shaped collect. An absent
+    marker table means none; a marker table that fails to read raises."""
+    from .io import read_if_present
+    e = read_if_present(spark, epochs_dst)
+    if e is None:
         return set()
+    e = e.filter(F.col("epoch") == int(epoch_id))
+    return {r["phase"] for r in e.select("phase").distinct().collect()}
 
 
 def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
@@ -165,10 +33,9 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
     pure scheduling/commit overhead, twice per epoch (round 8). The
     rename is atomic on a local filesystem and Spark ignores
     dot-prefixed files, so a reader can never observe a torn marker
-    file (a torn file would fail the WHOLE epochs-table read, which
-    ``_epoch_phases`` maps to 'no phases' — exactly the unsafe
-    full-recompute the marker protocol exists to prevent). Remote and
-    iceberg: destinations keep the committer-backed Spark write.
+    file (a torn file would fail the WHOLE epochs-table read, and with
+    it every retry of the stream). Remote and iceberg: destinations
+    keep the committer-backed Spark write.
     ``mre.io.local_path`` decides "local" from the resolved Hadoop
     filesystem, so a ``file:/x`` marker lands where ``read_table`` looks
     for it."""
@@ -315,7 +182,7 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
     Scale notes: the per-batch cost is O(batch) — the index side of
     every join is a bucket-pruned scan feeding broadcast probes; the
     per-epoch partition layout doubles as time-ordered lineage (epoch
-    → files) and compacts with ``compact_partitions``. Use
+    → files). Use
     ``available_now=True`` for a drain-and-stop backfill run.
 
     ``compact_every=K`` (round 7) runs ``compact_dedup_index`` after
@@ -351,22 +218,4 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
     return writer.start()
 
 
-def start_extract_stream(spark: SparkSession, src_dir: str, dst_dir: str,
-                         checkpoint_dir: str, buckets: int = 32,
-                         keep: str = "first", watermark: str = "1 hour",
-                         max_files_per_trigger: int = 16):
-    """End-to-end streaming job; exactly-once via checkpoint + file sink.
-    Returns the StreamingQuery (caller awaits/stops). ``keep`` selects the
-    dedup semantics — see streaming_extract."""
-    pages = read_pages_stream(spark, src_dir, max_files_per_trigger)
-    extracted = streaming_extract(pages, buckets, watermark, keep)
-    return (extracted.writeStream
-            .format("parquet")
-            .option("path", dst_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .start())
-
-
-__all__ = ["read_pages_stream", "streaming_extract", "start_extract_stream",
-           "start_ingest_stream", "ingest_epoch", "sessionize_events"]
+__all__ = ["start_ingest_stream", "ingest_epoch"]

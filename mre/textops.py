@@ -1780,7 +1780,7 @@ def kmeans_cells(embeddings: DataFrame, k: int = 8, iters: int = 3,
       ``KMEANS_DECIMALS`` decimals — the rounding is what makes the
       next round's centroids identical across engines (summation-order
       noise is ~1e-13, nine orders below the grid step; the
-      ``length_quantiles`` grid rule). An emptied cell keeps its
+      SURVEY §7.1 grid rule). An emptied cell keeps its
       previous centroid.
     * returns (assignment frame with a ``cell`` column under the FINAL
       centroids, the centroid list).
@@ -2588,38 +2588,18 @@ def budget_sample(df: DataFrame, token_budget: int, *,
 DSIR_BUCKETS = 256
 
 
-def dsir_features_col(text_col: str = "text"):
-    """Unigram + bigram feature array (DSIR's hashed-ngram features)
-    from the shared whitespace tokenization: the non-empty tokens plus
-    space-joined adjacent pairs. Pure column expression — rides any
-    scan. Mirrored verbatim by the DuckDB oracle (1-indexed
-    range(1, len) there == the guarded sequence here)."""
-    toks = F.filter(tokens_col(text_col), lambda t: t != "")
-    # bigrams via zip_with against the 1-shifted slice — NEVER
-    # element_at(toks, i) inside a transform lambda: each element_at
-    # re-evaluates the whole tokenize subtree PER ELEMENT (O(len²) per
-    # doc — measured 17× slower on sf0.1; the SURVEY §7.7 rule-42
-    # class). zip_with pads the shorter side with null, concat
-    # propagates it, and the filter drops the padding row — so the
-    # list is exactly the adjacent pairs.
-    shifted = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
-    bigrams = F.filter(
-        F.zip_with(toks, shifted,
-                   lambda a, b: F.concat(a, F.lit(" "), b)),
-        lambda x: x.isNotNull())
-    return F.concat(toks, bigrams)
-
-
 def _with_dsir_features(df: DataFrame, text_col: str) -> DataFrame:
     """df + ``_ft`` feature array via a TWO-STEP build: the token
     array lands in a named ``_tk`` column first, and the bigram/concat
     expressions reference the COLUMN — CollapseProject keeps the
     projections separate for a multiply-referenced non-cheap
     expression, so the tokenizer runs once per row instead of ~4×
-    (measured 3.2× on the sf0.1 scoring scan; the single-expression
-    form in ``dsir_features_col`` re-evaluates the split per
-    reference)."""
+    (measured 3.2× on the sf0.1 scoring scan; a single-expression
+    form re-evaluates the split per reference)."""
     tk = F.col("_tk")
+    # bigrams zip the tokens with their 1-shifted slice (element_at inside
+    # a transform lambda would re-tokenize per element); zip_with pads
+    # the shorter side with null and the filter drops that pair
     shifted = F.slice(tk, 2, F.greatest(F.size(tk) - 1, F.lit(0)))
     bigrams = F.filter(
         F.zip_with(tk, shifted,
@@ -2787,7 +2767,7 @@ def dsir_topk(docs: DataFrame, target_pred, k: int,
 
 __all__ = [
     "release_caches", "cache_mark",
-    "dsir_features_col", "dsir_bucket_lr", "dsir_weights",
+    "dsir_bucket_lr", "dsir_weights",
     "dsir_topk", "topk_by_weight", "DSIR_BUCKETS",
     "c4_line_clean", "domain_cap", "url_filter", "budget_sample",
     "pack_sequences", "mixture_weights_bp",

@@ -10,7 +10,7 @@ from mre.core.fuzzydate import FuzzyDate
 from mre.core.headline import score_headline
 from mre.core.htmlparse import parse_doc
 from mre.core.pubdate import url_date
-from mre.core.textutil import collapse_ws, decode_html, render_text, slugify
+from mre.core.textutil import collapse_ws, decode_html, slugify
 
 # --- E1 decode --------------------------------------------------------------
 
@@ -161,11 +161,6 @@ def test_parse_unquoted_trailing_slash_keeps_element_open():
 
 
 # --- E3 render --------------------------------------------------------------
-
-
-def test_render_text_blocks_and_inline():
-    doc = parse_doc("<div><p>one  two</p><p>three <b>four</b></p>inline</div>")
-    assert render_text(doc) == "one two\nthree four\ninline"
 
 
 def test_collapse_ws():

@@ -2,8 +2,6 @@
 local[2] must reproduce the single-process golden outputs byte-identically,
 and the resume protocol must be idempotent."""
 
-import os
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -201,41 +199,6 @@ def test_jsonl_source_extracts_to_golden(spark, tmp_path):
             == g["authors"]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """write_bucketed: two tables bucketed+sorted on the same key join
-    co-located — SortMergeJoin with ZERO Exchange in the plan."""
-    import shutil
-
-    from mre.io import write_bucketed
-
-    for t in ("bkt_left", "bkt_right"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        loc = os.path.join(spark.conf.get(
-            "spark.sql.warehouse.dir").removeprefix("file:"), t)
-        shutil.rmtree(loc, ignore_errors=True)
-    d = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a"))
-    e = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b"))
-    write_bucketed(d, "bkt_left", "k", 8, sort_col="k")
-    write_bucketed(e, "bkt_right", "k", 8, sort_col="k")
-    # test tables are tiny → the planner would broadcast (which also turns
-    # bucketing off); disable auto-broadcast to exercise the large-large
-    # path the layout exists for
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = (spark.table("bkt_left")
-                  .join(spark.table("bkt_right"), "k")
-                  .select("k", "a", "b"))
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_new_ops_plan_shapes(spark):
     """Plan-shape guards for the round-2 operators: no surprise shuffles,
     filters stay JVM-side, no Python row processing."""
@@ -401,52 +364,6 @@ def test_read_pages_warc_and_jsonl_dispatch(spark, tmp_path):
     assert jl.count() == 10
     assert {r["url"] for r in jl.select("url").collect()} \
         == {FX.url_of(i) for i in range(10)}
-
-
-def test_compact_partitions_preserves_content(spark, fixture_dir, tmp_path):
-    """Compaction rewrites a fragmented partitioned sink into few files
-    with byte-identical content (golden_diff == 0)."""
-    import glob
-
-    from mre.io import compact_partitions
-
-    dst = str(tmp_path / "results")
-    lin = str(tmp_path / "lineage")
-    src = f"{fixture_dir}/pages.parquet"
-    run_extract(spark, src, dst, lin, run_id="rc", buckets=8)
-    # fragment the sink: append the same partitions in tiny files
-    frag = read_results(spark, dst)
-    before_golden = frag.orderBy("url").toPandas()
-    from mre.io import read_table, write_overwrite_partitions
-    full = read_table(spark, dst).localCheckpoint(eager=True)
-    write_overwrite_partitions(full.repartition(24), dst, "salt_bucket")
-    n_files_before = len(glob.glob(f"{dst}/*/*.parquet"))
-
-    compact_partitions(spark, dst, "salt_bucket")
-    n_files_after = len(glob.glob(f"{dst}/*/*.parquet"))
-    assert n_files_after < n_files_before
-    assert n_files_after <= 8  # ≤1 file per salt_bucket partition
-    after = read_results(spark, dst).orderBy("url").toPandas()
-    assert after["url"].tolist() == before_golden["url"].tolist()
-    assert after["extracted_text"].tolist() \
-        == before_golden["extracted_text"].tolist()
-
-    # N>1 keeps content and the ≤N contract while actually increasing
-    # write parallelism (ADVICE r3: the knob was a no-op before — the
-    # repartition hashed on the partition value alone, so every value
-    # landed in one task and one file regardless of N)
-    compact_partitions(spark, dst, "salt_bucket",
-                       max_files_per_partition=2)
-    per_part = {}
-    for f in glob.glob(f"{dst}/*/*.parquet"):
-        d = os.path.dirname(f)
-        per_part[d] = per_part.get(d, 0) + 1
-    assert all(c <= 2 for c in per_part.values()), per_part
-    assert any(c == 2 for c in per_part.values()), per_part
-    after2 = read_results(spark, dst).orderBy("url").toPandas()
-    assert after2["url"].tolist() == before_golden["url"].tolist()
-    assert after2["extracted_text"].tolist() \
-        == before_golden["extracted_text"].tolist()
 
 
 def test_round5_ops_plan_shapes(spark):
