@@ -6,7 +6,7 @@ the TPC-H-style test tables (``MRE_ORACLE_SF``, TESTDATA.md);
 expected rows independently (aliases match column-for-column): direct SQL
 where expressible, and golden parquets for the hash-dependent ops — the
 extraction flagship from the doc_id-keyed fixture spec (mre/fixtures.py),
-MinHash/SimHash/winnowing/lineage from the independent replay layer
+MinHash pairs and the lineage rollup from the independent replay layer
 (mre/oracle_replay.py: from-scratch XXH64 + Spark-variant murmur3_32,
 verified against the engine's own hash fns).
 
@@ -232,17 +232,15 @@ def q_full_outer(spark, sf_dir):
 # generator — VERDICT r6 #4): 12 merges learned from the top-120 words of
 # the first 300 chars of every 13th doc. Small enough that the oracle
 # replays the FULL learn as an unrolled 12-iteration CTE chain and the
-# apply as a pure replace chain; the corpus-scale operators
-# (mre.bpe.bpe_learn / bpe_tokenize) take production-sized parameters.
+# apply as a pure replace chain; run_curate runs the same operators
+# (mre.bpe.bpe_learn / bpe_tokenize) with production-sized parameters.
 _BPE_M, _BPE_V, _BPE_CAP, _BPE_MOD = 12, 120, 300, 13
 
 
 def q_token_stats(spark, sf_dir):
-    """Token accounting as a tagged union (registry-window rule,
+    """BPE token accounting as a tagged union (registry-window rule,
     SURVEY §7.4 #19). Shared schema (op, doc_id, m1..m4, s1):
 
-    * op='ws'     — the original whitespace/regex stats over the full
-      corpus: m1=n_chars, m2=n_ws_tokens, m3=n_regex_tokens, m4=n_punct.
     * op='merges' — the learned BPE merge table itself (doc_id=rank,
       m1=the winning pair's count at selection time, s1='left|right') —
       the LEARNER is value-checked, not just its downstream counts.
@@ -250,57 +248,32 @@ def q_token_stats(spark, sf_dir):
       those merges: m1=n_words, m2=n_subword_tokens, m3=token-string
       length, s1=the full space-joined token sequence (value-hashed →
       the segmentation is byte-checked cross-engine).
-    * op='pack' (round 7) — pack_sequences(seq_len=256), GPT-style
-      concatenate-and-cut batch assembly in per-source content-hash
-      order: m1=tok_cnt, m2=cum_before, m3=first_seq, m4=last_seq,
-      s1=source. The oracle replays the ONE-WINDOW cumsum, so the
-      exactness of the two-phase bucketed prefix sum is itself what
-      the driver checks.
 
     Learning is mre.bpe.bpe_learn (single distributed word count, then
     the driver-side merge loop over a bounded top-V vocabulary);
-    application is the pure-JVM mre.bpe.bpe_apply_expr replace chain —
-    single-pass merge semantics, see mre/bpe.py."""
-    from mre.bpe import bpe_apply_expr, bpe_learn
-    from mre.textops import token_stats
+    application is mre.bpe.bpe_tokenize, the per-doc UDF run_curate's
+    token accounting runs — single-pass merge semantics, see
+    mre/bpe.py."""
+    from mre.bpe import bpe_learn, bpe_tokenize
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    ws = token_stats(docs).select(
-        F.lit("ws").alias("op"), "doc_id",
-        F.col("n_chars_calc").cast("long").alias("m1"),
-        F.col("n_ws_tokens").cast("long").alias("m2"),
-        F.col("n_bpe_tokens").cast("long").alias("m3"),
-        F.col("n_punct").cast("long").alias("m4"),
-        F.lit(None).cast("string").alias("s1"))
     sl = docs.filter(F.col("doc_id") % _BPE_MOD == 0)
     merges = bpe_learn(sl, num_merges=_BPE_M, vocab_top=_BPE_V,
                        text_cap=_BPE_CAP)
-    toks = F.transform(
-        F.filter(F.split(F.substring("text", 1, _BPE_CAP), r"\s+"),
-                 lambda w: w != ""),
-        lambda w: bpe_apply_expr(w, merges))
-    joined = F.array_join(toks, " ")
-    bpe = sl.select(
+    bpe = bpe_tokenize(sl, merges, text_cap=_BPE_CAP,
+                       with_tokens=True).select(
         F.lit("bpe").alias("op"), "doc_id",
-        F.size(toks).cast("long").alias("m1"),
-        F.size(F.split(joined, " ")).cast("long").alias("m2"),
-        F.length(joined).cast("long").alias("m3"),
+        F.col("n_words").cast("long").alias("m1"),
+        F.col("n_bpe_tokens").alias("m2"),
+        F.length("bpe_tokens").cast("long").alias("m3"),
         F.lit(None).cast("long").alias("m4"),
-        joined.alias("s1"))
+        F.col("bpe_tokens").alias("s1"))
     mrows = spark.createDataFrame(
         [("merges", i + 1, c, None, None, None, f"{l}|{r}")
          for i, (l, r, c) in enumerate(merges)],
         "op string, doc_id long, m1 long, m2 long, m3 long, m4 long, "
         "s1 string")
-    from mre.textops import pack_sequences
-    pack = pack_sequences(docs, 256).select(
-        F.lit("pack").alias("op"), "doc_id",
-        F.col("tok_cnt").alias("m1"),
-        F.col("cum_before").alias("m2"),
-        F.col("first_seq").alias("m3"),
-        F.col("last_seq").alias("m4"),
-        F.col("source").alias("s1"))
-    return ws.unionByName(bpe).unionByName(mrows).unionByName(pack)
+    return bpe.unionByName(mrows)
 
 
 _LM_VOCAB_TOP = 64
@@ -309,8 +282,6 @@ _LM_VOCAB_TOP = 64
 def q_quality(spark, sf_dir):
     """Quality scoring as one tagged union (registry-window rule).
 
-    * op='heur' — the original length/punct/stopword heuristic features
-      + integer composite (quality_bp).
     * op='lm' (round 7) — CCNet-family unigram-LM perplexity scoring,
       self-trained on the same corpus: n_tokens=scored token count,
       quality_bp=nll_micro_mean (mean negative log-likelihood in
@@ -339,12 +310,9 @@ def q_quality(spark, sf_dir):
       floored deltas) and score replay in DuckDB."""
     from mre.textops import (_register_cache, gopher_ngram_battery,
                              lm_learn, lm_score, nb_score, nb_train,
-                             quality_score, tokens_col)
+                             tokens_col)
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    heur = quality_score(docs).select(
-        F.lit("heur").alias("op"), "doc_id", "n_tokens",
-        "stopword_ratio", "mean_token_len", "quality_bp")
     # ONE corpus token explode+count shared by the lm and nb learners
     # (round 8): cnt counts every token (lm semantics, label-independent)
     # while c0/c1 are the per-class sums nb needs — previously each
@@ -392,14 +360,18 @@ def q_quality(spark, sf_dir):
         F.col("nb_pred").cast("double").alias("stopword_ratio"),
         F.lit(None).cast("double").alias("mean_token_len"),
         F.col("margin_micro").alias("quality_bp"))
-    return (heur.unionByName(lm).unionByName(vrows).unionByName(rep)
-            .unionByName(nb))
+    return lm.unionByName(vrows).unionByName(rep).unionByName(nb)
 
 
 def q_lang_id(spark, sf_dir):
-    from mre.textops import lang_id
+    """Per-doc marker scores and the prediction, through the same
+    ``lang_pred_expr`` column the extract→curate adapter projects."""
+    from mre.textops import lang_pred_expr, lang_scores_exprs
     _prep(spark)
-    return lang_id(_t(spark, sf_dir, "documents"))
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        *[c.alias(f"score_{l}") for l, c in lang_scores_exprs().items()],
+        lang_pred_expr().alias("pred_lang"))
 
 
 def q_fingerprint(spark, sf_dir):
@@ -409,15 +381,11 @@ def q_fingerprint(spark, sf_dir):
 
 
 def q_exact_dedup(spark, sf_dir):
-    from mre.textops import exact_dedup
+    """Curation's exact-dedup stage: the keeper (min doc_id) of every
+    content-fingerprint group."""
+    from mre.curate import exact_keeper_ids
     _prep(spark)
-    return exact_dedup(_t(spark, sf_dir, "documents"))
-
-
-def q_jaccard_pairs(spark, sf_dir):
-    from mre.textops import jaccard_pairs
-    _prep(spark)
-    return jaccard_pairs(_t(spark, sf_dir, "documents"), n=3, threshold=0.2)
+    return exact_keeper_ids(_t(spark, sf_dir, "documents"))
 
 
 def q_minhash_near_dups(spark, sf_dir):
@@ -450,21 +418,11 @@ def q_contamination(spark, sf_dir):
     return benchmark_contamination(docs, evals, n=5)
 
 
-def q_top_ngrams(spark, sf_dir):
-    """Corpus-wide top-50 word bigrams with doc frequency (vocab /
-    stop-shingle discovery); deterministic count-then-lexical order."""
-    from mre.textops import top_ngrams
-    _prep(spark)
-    return top_ngrams(_t(spark, sf_dir, "documents"), n=2, k=50)
-
-
 def q_source_stats(spark, sf_dir):
     """Per-source/host analytics as one tagged union (registry-window
     rule). Shared schema (op, source, n_docs, total_chars, n_langs,
     n_dup_docs):
 
-    * op='stats' — the original per-source curation rollup (doc/char
-      counts, language spread, exact-dup-doc counts).
     * op='links' (round 7) — the host link-graph family: deterministic
       link pages are built per doc_id IN THE EXECUTORS (the media_meta
       builder device), anchors are extracted through the REAL lenient
@@ -479,12 +437,9 @@ def q_source_stats(spark, sf_dir):
       the unrolled iterations in SQL."""
     from mre.linkgraph import (extract_links, host_edges, link_pages_df,
                                pagerank_hosts)
-    from mre.textops import _register_cache, source_stats
+    from mre.textops import _register_cache
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    stats = source_stats(docs).select(
-        F.lit("stats").alias("op"), "source", "n_docs", "total_chars",
-        "n_langs", "n_dup_docs")
     links = _register_cache(
         extract_links(link_pages_df(docs)).persist())
     pr = pagerank_hosts(host_edges(links), iters=4)
@@ -516,7 +471,7 @@ def q_source_stats(spark, sf_dir):
                   F.col("weight_bp").alias("n_langs"),
                   F.expr("(1000000 * weight_bp) DIV 10000")
                   .cast("long").alias("n_dup_docs")))
-    return stats.unionAll(lk).unionAll(mx)
+    return lk.unionAll(mx)
 
 
 def q_media_meta(spark, sf_dir):
@@ -532,24 +487,6 @@ def q_media_meta(spark, sf_dir):
       c=sample_rate_hz for wav / duration_ms for mp4. The mp4 payloads
       alternate a 600-unit timescale so the sniffer's floor-division
       duration recovery is oracle-observable, not a pass-through.
-    * op='resize' — the image payloads run through ``resize_media``
-      (REAL container re-write at 32×24) and the RESIZED bytes are
-      re-sniffed by ``media_meta``: a=32, b=24 prove the emitted
-      containers genuinely carry the target dimensions.
-    * op='audio'  — the WAV payloads carry a deterministic s16 ramp;
-      ``audio_frame_windows`` REALLY decodes the PCM bytes and emits
-      integer-exact per-window stats: a=window_idx, b=peak, c=sum_sq —
-      replayed arithmetically by the oracle (builder and decoder meet
-      only at the RIFF byte layout).
-    * op='frames' — the GIF payloads are ANIMATED (1–3 image
-      descriptors with real sub-block streams); ``sample_frames``
-      walks the block structure (extensions, descriptors, LZW
-      sub-block length prefixes) and emits per-frame geometry:
-      a=frame_idx, b=frame width, c=frame height. Round 7: the MP4
-      payloads carry REAL sample tables (stts/stsz/stsc/stco) and the
-      same rows cover them via ``mp4_frames``' box walk — fmt='mp4',
-      a=frame_idx, b=sample size, c=start time in timescale units
-      (both builder parameters, replayed arithmetically).
     * op='dedup' / op='band' (round 7, VERDICT r6 #2) — media-payload
       dedup over a SECOND, coarsely-parameterized payload set (fmt =
       i%3, dims = (16+i%7, 16+i%5); the gif variant additionally
@@ -563,40 +500,27 @@ def q_media_meta(spark, sf_dir):
       parameter-tuple equality and DuckDB replays the groups from the
       parameter formulas.
     """
-    from mre.multimodal import (audio_frame_windows, make_gif, make_jpeg,
-                                make_mp4, make_png, make_wav,
-                                media_band_dedup, media_exact_dedup,
-                                media_meta, resize_media, sample_frames)
+    from mre.multimodal import (make_gif, make_jpeg, make_mp4, make_png,
+                                make_wav, media_band_dedup,
+                                media_exact_dedup, media_meta)
     _prep(spark)
     ids = _t(spark, sf_dir, "documents") \
         .select(F.col("doc_id").alias("media_id"))
 
     def gen(batches):
         import pandas as pd
-        builders = [make_png, make_jpeg]
+        builders = [make_png, make_jpeg, make_gif]
         for pdf in batches:
             rows = []
             for mid in pdf["media_id"]:
                 i = int(mid)
                 if i % 5 == 3:
-                    payload = make_wav(
-                        8000 + (i % 8) * 1000,
-                        samples=[((i * 7 + j * 13) % 2048) - 1024
-                                 for j in range(16)])
+                    payload = make_wav(8000 + (i % 8) * 1000)
                 elif i % 5 == 4:
                     payload = make_mp4(
                         16 + i % 317, 16 + i % 211,
                         500 + (i % 977) * 3,
-                        timescale=600 if i % 2 == 0 else 1000,
-                        frame_sizes=[32 + (i * 13 + j * 17) % 97
-                                     for j in range(1 + i % 4)],
-                        frame_duration=25 + i % 50)
-                elif i % 5 == 2:
-                    payload = make_gif(
-                        16 + i % 317, 16 + i % 211,
-                        frames=[(j, 2 * j, 8 + (i + 7 * j) % 64,
-                                 8 + (i + 11 * j) % 48)
-                                for j in range(1 + i % 3)])
+                        timescale=600 if i % 2 == 0 else 1000)
                 else:
                     payload = builders[i % 5](16 + i % 317, 16 + i % 211)
                 rows.append({"media_id": i, "payload": payload})
@@ -608,24 +532,6 @@ def q_media_meta(spark, sf_dir):
         F.col("width").alias("a"), F.col("height").alias("b"),
         F.coalesce(F.col("sample_rate_hz").cast("long"),
                    F.col("duration_ms")).alias("c"))
-    resized = media_meta(
-        resize_media(media, 32, 24).filter("resize_ok = 1")).select(
-        F.lit("resize").alias("op"), "media_id", "fmt",
-        F.col("width").alias("a"), F.col("height").alias("b"),
-        F.lit(None).cast("long").alias("c"))
-    audio = audio_frame_windows(media, window=4).select(
-        F.lit("audio").alias("op"), "media_id",
-        F.lit("wav").alias("fmt"),
-        F.col("window_idx").alias("a"), F.col("peak").alias("b"),
-        F.col("sum_sq").alias("c"))
-    frames = sample_frames(media, every_n=1).select(
-        F.lit("frames").alias("op"), "media_id",
-        F.when(F.col("size").isNull(), F.lit("gif"))
-        .otherwise(F.lit("mp4")).alias("fmt"),
-        F.col("frame_idx").alias("a"),
-        F.coalesce(F.col("size"), F.col("width")).alias("b"),
-        F.coalesce(F.col("t_units"),
-                   F.col("height").cast("long")).alias("c"))
 
     def gen_dup(batches):
         import pandas as pd
@@ -658,8 +564,7 @@ def q_media_meta(spark, sf_dir):
         F.col("keeper_id").cast("int").alias("a"),
         F.col("band_size").cast("int").alias("b"),
         F.lit(None).cast("long").alias("c"))
-    return (meta.unionAll(resized).unionAll(audio).unionAll(frames)
-            .unionAll(ded).unionAll(band))
+    return meta.unionAll(ded).unionAll(band)
 
 
 def q_dup_clusters(spark, sf_dir):
@@ -672,36 +577,6 @@ def q_dup_clusters(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_near_dups(docs, threshold=0.2).select("doc_a", "doc_b")
     return dup_clusters(pairs)
-
-
-def q_split_leakage(spark, sf_dir):
-    """Dedup-aware train/test leakage audit: near-dup pairs whose members
-    land on opposite sides of a deterministic content-hash split."""
-    from mre.textops import hash_split, minhash_near_dups, split_leakage
-    _prep(spark)
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_dups(docs, threshold=0.2).select("doc_a", "doc_b")
-    splits = hash_split(docs, "text", 0.5).select("doc_id", "split")
-    return split_leakage(pairs, splits)
-
-
-def q_simhash_near_dups(spark, sf_dir):
-    from mre.textops import simhash_near_dups
-    _prep(spark)
-    return simhash_near_dups(_t(spark, sf_dir, "documents"), max_hamming=3)
-
-
-def q_ann_brute_force(spark, sf_dir):
-    from mre.textops import ann_brute_force
-    _prep(spark)
-    return ann_brute_force(_t(spark, sf_dir, "embeddings"),
-                           n_queries=5, k=10)
-
-
-def q_ann_lsh(spark, sf_dir):
-    from mre.textops import ann_lsh
-    _prep(spark)
-    return ann_lsh(_t(spark, sf_dir, "embeddings"), n_queries=5, k=10)
 
 
 def q_gopher_quality(spark, sf_dir):
@@ -719,34 +594,6 @@ def q_gopher_quality(spark, sf_dir):
                         (F.col("keep") == 1)
                         & (F.col("pass_repetition") == 1))
             .withColumn("keep_strict", F.col("keep_strict").cast("int")))
-
-
-def q_cosine_dup_pairs(spark, sf_dir):
-    from mre.textops import cosine_dup_pairs
-    _prep(spark)
-    return cosine_dup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.3)
-
-
-def q_winnow_dups(spark, sf_dir):
-    """Winnowing passage near-dup pairs, BOTH execution shapes as one
-    tagged union (VERDICT r4 #3 — the corpus-scale guarded path is now
-    driver-oracled, not just pytest-covered): variant='exact' runs with
-    guards off (full inverted-index join; oracle = the from-scratch
-    XXH64 replay golden); variant='guarded' applies max_df=20 (viral
-    fingerprints leave the index before pairing — the 10^12-doc shape;
-    its golden replays the same cutoff in pure Python). The exploded
-    fingerprint index is computed ONCE (winnow_exploded) and shared by
-    both variants — one corpus scan + rolling-hash transform, two
-    pair-joins."""
-    from mre.textops import winnow_dup_pairs, winnow_exploded
-    _prep(spark)
-    docs = _t(spark, sf_dir, "documents")
-    fps = winnow_exploded(docs)
-    ex = (winnow_dup_pairs(docs, fps=fps)
-          .withColumn("variant", F.lit("exact")))
-    gd = (winnow_dup_pairs(docs, max_df=20, fps=fps)
-          .withColumn("variant", F.lit("guarded")))
-    return ex.unionAll(gd).select("variant", "doc_a", "doc_b", "n_shared")
 
 
 def q_semi_anti_join(spark, sf_dir):
@@ -814,19 +661,13 @@ def q_url_dedup(spark, sf_dir):
       slash noise) must collapse to one canonical url via a pure-regex
       normalizer (JVM-side, no UDF). url_norm=the canonical url,
       n_variants=count, sample_raw=min raw variant.
-    * op='cap' — per-domain document cap (round 7: the anti-viral
-      quota that stops mega-hosts dominating the mix):
-      ``domain_cap(n=5)`` over one clean url per doc; 20 synthetic
-      domains × >5 docs each, keep the 5 lowest doc_ids per domain.
-      url_norm=the kept url, n_variants=domain_rank (the full
-      assignment is value-checked), sample_raw=the extracted domain.
     * op='uf' — url_filter (round 7, the RefinedWeb-family URL gate)
       over planted spam/digit-host/clean variants of the clean url
       (doc_id%23: digit-heavy host; %13: hard marker; %18: three soft
       hits; %9: two soft hits — kept): url_norm=the url,
       n_variants=spam_score*1000000 + host_digit_bp (both metrics in
       one packed long), sample_raw=keep_url."""
-    from mre.textops import domain_cap, url_filter
+    from mre.textops import url_filter
     _prep(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id")
     sid = (F.col("doc_id") % 20).cast("string")
@@ -847,11 +688,6 @@ def q_url_dedup(spark, sf_dir):
                 F.min("url").alias("sample_raw"))
            .select(F.lit("norm").alias("op"), "url_norm",
                    "n_variants", "sample_raw"))
-    cap = (domain_cap(d.select("doc_id", clean.alias("url")), 5)
-           .select(F.lit("cap").alias("op"),
-                   F.col("url").alias("url_norm"),
-                   F.col("domain_rank").cast("long").alias("n_variants"),
-                   F.col("domain").alias("sample_raw")))
     doc = F.col("doc_id")
     uf_url = (
         F.when(doc % 23 == 0,
@@ -890,15 +726,11 @@ def q_url_dedup(spark, sf_dir):
                   (F.col("allowed") * 1000000
                    + F.col("crawl_delay_ms")).alias("n_variants"),
                   F.col("host").alias("sample_raw")))
-    return nrm.unionAll(cap).unionAll(uf).unionAll(rb)
+    return nrm.unionAll(uf).unionAll(rb)
 
 
 def q_hash_sample(spark, sf_dir):
-    """Content-hash sampling, flat AND stratified, as one tagged union
-    (registry-window rule): op='flat' is the ~5% md5-bucket sample;
-    op='strat' applies per-language mixture quotas (en 5%, fr 60%,
-    everything else 25%) via the same engine-stable bucket — the
-    mixture-weighting step of corpus assembly, value-checked per row.
+    """Content-hash sampling as one tagged union (registry-window rule).
     op='budget' (round 7) — budget_sample with a flat 700-token
     per-source cap: docs taken in md5-hash order per source while the
     running whitespace-token total stays ≤ the budget; lang carries
@@ -910,16 +742,9 @@ def q_hash_sample(spark, sf_dir):
     device), exact top-n//5 by (weight desc, doc_id) via the sort-free
     histogram threshold; n_chars carries the integer weight so the
     whole learn→score→select chain is value-checked per row."""
-    from mre.textops import (budget_sample, dsir_topk, hash_sample,
-                             stratified_sample)
+    from mre.textops import budget_sample, dsir_topk
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    flat = hash_sample(docs, "text", 0.05) \
-        .select(F.lit("flat").alias("op"), "doc_id", "lang", "n_chars")
-    strat = stratified_sample(docs, "text", "lang",
-                              {"en": 0.05, "fr": 0.6},
-                              default_rate=0.25) \
-        .select(F.lit("strat").alias("op"), "doc_id", "lang", "n_chars")
     budg = budget_sample(docs, 700).select(
         F.lit("budget").alias("op"), "doc_id",
         F.col("source").alias("lang"),
@@ -928,7 +753,7 @@ def q_hash_sample(spark, sf_dir):
                      docs.count() // 5).select(
         F.lit("dsir").alias("op"), "doc_id", "lang",
         F.col("dsir_weight_micro").alias("n_chars"))
-    return flat.unionAll(strat).unionAll(budg).unionAll(dsir)
+    return budg.unionAll(dsir)
 
 
 def q_hash_split(spark, sf_dir):
@@ -971,8 +796,6 @@ def q_sentence_dedup(spark, sf_dir):
     (registry-window rule, SURVEY §7.4 #19). Shared schema
     (op, doc_id, m1..m4, text_out); per-branch meaning:
 
-    * op='stats'     — sentence_dedup_stats: m1=n_sents, m2=n_dup_sents,
-      m3=dup_bp, m4=flag_dup, text_out=NULL.
     * op='depassage' — remove_dup_passages (VERDICT r4 #2, the rewrite
       half of passage dedup): m1=n_parts, m2=n_removed, m3=bytes_removed,
       m4=length(rewritten), text_out=the rewritten text itself
@@ -1013,17 +836,9 @@ def q_sentence_dedup(spark, sf_dir):
       text_out=NULL."""
     from mre.textops import (c4_line_clean, gopher_dup_sections,
                              gopher_line_rules, pii_scrub,
-                             remove_dup_passages, remove_dup_windows,
-                             sentence_dedup_stats)
+                             remove_dup_passages, remove_dup_windows)
     _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    stats = sentence_dedup_stats(docs).select(
-        F.lit("stats").alias("op"), "doc_id",
-        F.col("n_sents").cast("long").alias("m1"),
-        F.col("n_dup_sents").cast("long").alias("m2"),
-        F.col("dup_bp").cast("long").alias("m3"),
-        F.col("flag_dup").cast("long").alias("m4"),
-        F.lit(None).cast("string").alias("text_out"))
     dep = remove_dup_passages(docs).select(
         F.lit("depassage").alias("op"), "doc_id",
         F.col("n_parts").cast("long").alias("m1"),
@@ -1130,60 +945,29 @@ def q_sentence_dedup(spark, sf_dir):
         F.col("bullet_bp").cast("long").alias("m2"),
         F.col("ellipsis_bp").cast("long").alias("m3"),
         F.col("pass_line_rules").cast("long").alias("m4"), nulls)
-    return (stats.unionAll(dep).unionAll(pii).unionAll(desub)
-            .unionAll(c4).unionAll(gl).unionAll(gp).unionAll(glq))
+    return (dep.unionAll(pii).unionAll(desub).unionAll(c4).unionAll(gl)
+            .unionAll(gp).unionAll(glq))
 
 
-def q_profile_docs(spark, sf_dir):
-    from mre.textops import table_profile
-    _prep(spark)
-    return table_profile(_t(spark, sf_dir, "documents"))
-
-
-def q_ivf_ann(spark, sf_dir):
-    """The inverted-file embedding family as a tagged union (registry-
-    window rule). Shared schema (op, query_id, neighbor_id, cosine,
-    rank):
-
-    * op='ann' — IVF-Flat ANN against the FIXED deterministic coarse
-      quantizer (the original rows).
-    * op='semdedup' (round 7) — SemDeDup (Abbas et al. 2023): LEARNED
-      k-means (k=8, 3 deterministic Lloyd rounds, per-component
-      centroid rounding) clusters the embedding space, cosine
-      near-dups (round(cos,4) ≥ 0.3) are confirmed only within a
-      cluster, and every vector with a lower-id in-threshold neighbour
-      is dropped. query_id carries the witness (min such neighbour),
-      neighbor_id the dropped vector, rank the cell — the whole
-      cluster→confirm→drop chain is value-checked; the oracle replays
-      Lloyd's as an unrolled per-iteration CTE chain.
-    * op='lann' (round 7) — IVF-Flat with the LEARNED quantizer:
-      the same k-means cells, each query probing its 2 max-cosine
-      learned cells, candidates equi-joined on cell — the oracle
-      reuses the Lloyd chain and replays probe selection + ranking."""
-    from mre.textops import (_register_cache, ivf_ann, ivf_ann_learned,
-                             kmeans_cells, semdedup_losers)
+def q_semdedup(spark, sf_dir):
+    """SemDeDup (Abbas et al. 2023), the operator behind run_curate's
+    ``semantic_dedup`` stage: LEARNED k-means (k=8, 3 deterministic
+    Lloyd rounds, per-component centroid rounding) clusters the
+    embedding space, cosine near-dups (round(cos,4) ≥ 0.3) are confirmed
+    only within a cluster, and every vector with a lower-id in-threshold
+    neighbour is dropped. query_id carries the witness (min such
+    neighbour), neighbor_id the dropped vector, rank the cell — the
+    whole cluster→confirm→drop chain is value-checked; the oracle
+    replays Lloyd's as an unrolled per-iteration CTE chain."""
+    from mre.textops import semdedup_losers
     _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
-    ann = ivf_ann(emb, n_queries=5, k=10).select(
-        F.lit("ann").alias("op"), "query_id", "neighbor_id",
-        "cosine", "rank")
-    # ONE clustering shared by both learned branches (the Lloyd rounds
-    # are the expensive half); the assignment frame feeds two branches,
-    # so it is persisted (registered cache)
-    cells, cents = kmeans_cells(emb, k=8, iters=3)
-    cc = (_register_cache(cells.persist()), cents)
-    sd = semdedup_losers(emb, k=8, iters=3, threshold=0.3,
-                         cells_cents=cc).select(
+    return semdedup_losers(emb, k=8, iters=3, threshold=0.3).select(
         F.lit("semdedup").alias("op"),
         F.col("witness").alias("query_id"),
         F.col("vec_id").alias("neighbor_id"),
         "cosine",
         F.col("cell").alias("rank"))
-    la = ivf_ann_learned(emb, n_queries=5, k=10, kmeans_k=8,
-                         iters=3, nprobe=2, cells_cents=cc).select(
-        F.lit("lann").alias("op"), "query_id", "neighbor_id",
-        "cosine", "rank")
-    return ann.unionAll(sd).unionAll(la)
 
 
 def q_lineage_rollup(spark, sf_dir):
@@ -1207,11 +991,13 @@ def q_lineage_rollup(spark, sf_dir):
 
 def q_curation_pipeline(spark, sf_dir):
     """The composed curation pipeline (VERDICT r3 #2) as ONE driver row:
-    Gopher quality filter → exact dedup → MinHash-LSH candidates →
-    exact-Jaccard confirm (≥0.5) → connected-component clustering →
-    keep-one-per-cluster → 5-gram decontamination vs the every-97th-doc
-    eval set → deterministic 90/10 hash split. Returns each surviving
-    doc's (doc_id, lang, split).
+    ``run_curate``, the job every CLI and the corpus workload run, into
+    a fresh temp dir — Gopher quality filter → exact dedup → MinHash-LSH
+    candidates → exact-Jaccard confirm (≥0.5) → connected-component
+    clustering → keep-one-per-cluster → 5-gram decontamination vs the
+    every-97th-doc eval set → deterministic 90/10 hash split. Returns
+    each surviving doc's (doc_id, lang, split) read back with
+    ``read_curated``.
 
     The composition oracle replays every stage in SQL: quality + dedup +
     confirm + clustering + contamination are plain DuckDB over the same
@@ -1220,24 +1006,21 @@ def q_curation_pipeline(spark, sf_dir):
     band hashes, and est_jaccard are pure per-doc/per-pair functions
     (max_bucket=None), so candidates over a filtered corpus ARE the
     full-corpus candidates with both endpoints surviving."""
-    from mre.curate import curate_df
+    import tempfile
+    from mre.curate import read_curated, run_curate
     _prep(spark)
+    base = tempfile.mkdtemp(prefix="mre_curate_q_")
     docs = _t(spark, sf_dir, "documents")
-    evals = (docs.filter(F.col("doc_id") % 97 == 0)
-             .select(F.col("doc_id").alias("eval_id"), "text"))
-    out = curate_df(docs, evals, shingle_n=3, minhash_threshold=0.2,
-                    jaccard_threshold=0.5, contamination_n=5,
-                    contamination_min_shared=1, train_frac=0.9)
-    return out.select("doc_id", "lang", "split")
-
-
-def q_pdf_extract(spark, sf_dir):
-    """north_rule "PDF/layout parse": documents → real Flate-compressed
-    PDFs → pure-stdlib text extraction; exact SQL oracle re-creates the
-    deterministic line wrapping."""
-    from mre.pdf import run_pdf_extract
-    _prep(spark)
-    return run_pdf_extract(_t(spark, sf_dir, "documents"))
+    (docs.filter(F.col("doc_id") % 97 == 0)
+     .select(F.col("doc_id").alias("eval_id"), "text")
+     .write.parquet(f"{base}/evals"))
+    run_curate(spark, docs, f"{base}/out", f"{base}/lineage",
+               run_id="oracle_check", evals_src=f"{base}/evals",
+               shingle_n=3, minhash_threshold=0.2, jaccard_threshold=0.5,
+               contamination_n=5, contamination_min_shared=1,
+               train_frac=0.9)
+    return read_curated(spark, f"{base}/out").select("doc_id", "lang",
+                                                     "split")
 
 
 # --------------------------------------------------------------------------
@@ -1252,41 +1035,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": q_lang_id,
         "fingerprint": q_fingerprint,
         "exact_dedup": q_exact_dedup,
-        "jaccard_pairs": q_jaccard_pairs,
         "lsh_jaccard_verify": q_lsh_jaccard_verify,
         "minhash_near_dups": q_minhash_near_dups,
         "dup_clusters": q_dup_clusters,
-        "split_leakage": q_split_leakage,
         "contamination": q_contamination,
-        "top_ngrams": q_top_ngrams,
         "source_stats": q_source_stats,
         "media_meta": q_media_meta,
-        "simhash_near_dups": q_simhash_near_dups,
-        "ann_brute_force": q_ann_brute_force,
-        "ann_lsh": q_ann_lsh,
-        "pdf_extract": q_pdf_extract,
         "lineage_rollup": q_lineage_rollup,
         "semi_anti_join": q_semi_anti_join,
-        "ivf_ann": q_ivf_ann,
+        "semdedup": q_semdedup,
         "url_dedup": q_url_dedup,
-        "profile_docs": q_profile_docs,
         "hash_sample": q_hash_sample,
         "hash_split": q_hash_split,
         "sentence_dedup": q_sentence_dedup,
         "gopher_quality": q_gopher_quality,
-        "winnow_dup_pairs": q_winnow_dups,
-        "cosine_dup_pairs": q_cosine_dup_pairs,
         "curation_pipeline": q_curation_pipeline,
     }
 
 
-_STOPWORDS_SQL = "'the', 'a', 'of', 'and', 'in', 'to', 'is'"
-
-
 def _token_stats_oracle_sql() -> str:
-    """Generated oracle for the q_token_stats tagged union: the 'ws'
-    branch is the original per-doc stats SQL; the 'merges' + 'bpe'
-    branches replay the ENTIRE BPE stack in DuckDB — learning as an
+    """Generated oracle for the q_token_stats tagged union: the 'merges'
+    + 'bpe' branches replay the ENTIRE BPE stack in DuckDB — learning as an
     unrolled _BPE_M-iteration CTE chain (word count → top-_BPE_V vocab →
     per-iteration pair count / (cnt DESC, pair ASC) argmax / single-pass
     replace rewrite) and application as the same replace chain inside a
@@ -1348,15 +1117,6 @@ bpe AS (
              w -> trim({apply_expr})) AS toks
   FROM documents, mw WHERE doc_id % {_BPE_MOD} = 0
 )
-SELECT 'ws' AS op, doc_id,
-       length(text)::BIGINT AS m1,
-       len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS m2,
-       len(regexp_extract_all(text,
-           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS m3,
-       len(regexp_extract_all(text, '[.,;:!?]'))::BIGINT AS m4,
-       NULL::VARCHAR AS s1
-FROM documents
-UNION ALL
 SELECT 'bpe' AS op, doc_id, len(toks)::BIGINT AS m1,
        len(string_split(array_to_string(toks, ' '), ' '))::BIGINT AS m2,
        length(array_to_string(toks, ' '))::BIGINT AS m3,
@@ -1364,31 +1124,18 @@ SELECT 'bpe' AS op, doc_id, len(toks)::BIGINT AS m1,
        array_to_string(toks, ' ') AS s1
 FROM bpe
 UNION ALL
-SELECT 'pack' AS op, doc_id,
-       tok::BIGINT AS m1, (cum - tok)::BIGINT AS m2,
-       ((cum - tok) // 256)::BIGINT AS m3,
-       greatest((cum - 1) // 256, (cum - tok) // 256)::BIGINT AS m4,
-       source AS s1
-FROM (SELECT doc_id, source,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok,
-             sum(len(regexp_split_to_array(lower(trim(text)), '\\s+')))
-                 OVER (PARTITION BY source ORDER BY md5(text), doc_id
-                       ROWS UNBOUNDED PRECEDING) AS cum
-      FROM documents)
-UNION ALL
 {merges_rows}
 """
 
 
 def _source_stats_oracle_sql() -> str:
-    """Generated oracle for the q_source_stats tagged union: op='stats'
-    is the original per-source rollup; op='links' replays the link-page
-    builder ARITHMETIC (mre/linkgraph.py link_page_html — host, anchor
-    count and targets are pure doc_id arithmetic, mirrored verbatim:
-    the Spark side derives the same numbers by PARSING the built
-    pages) and PageRank as unrolled integer-floor iterations. All ops
-    are integer division, so the ranks match exactly (the micro-nat
-    device family)."""
+    """Generated oracle for the q_source_stats tagged union: op='links'
+    replays the link-page builder ARITHMETIC (mre/linkgraph.py
+    link_page_html — host, anchor count and targets are pure doc_id
+    arithmetic, mirrored verbatim: the Spark side derives the same
+    numbers by PARSING the built pages) and PageRank as unrolled
+    integer-floor iterations. All ops are integer division, so the ranks
+    match exactly (the micro-nat device family)."""
     from mre.linkgraph import PAGERANK_DAMPING_PCT as _D
     from mre.linkgraph import PAGERANK_SCALE as _S
     _IT = 4
@@ -1405,12 +1152,7 @@ def _source_stats_oracle_sql() -> str:
                 ON c.host = h.host
               GROUP BY h.host)""" for i in range(1, _IT + 1))
     return f"""
-            WITH fp AS (
-                SELECT doc_id, source, lang, n_chars,
-                       md5(lower(trim(text))) AS f
-                FROM documents),
-            freq AS (SELECT f, count(*) AS c FROM fp GROUP BY f),
-            lbase AS (SELECT doc_id, doc_id % 16 AS src FROM documents),
+            WITH lbase AS (SELECT doc_id, doc_id % 16 AS src FROM documents),
             ledges AS (
                 SELECT src, doc_id,
                        (src + 1 + ((doc_id * 7 + 5 * j.range) % 15))
@@ -1445,14 +1187,6 @@ def _source_stats_oracle_sql() -> str:
                        sum(1 + CASE WHEN doc_id % 5 = 0
                                     THEN 1 ELSE 0 END) AS selfs
                 FROM lbase GROUP BY 1)
-            SELECT 'stats' AS op, fp.source, count(*) AS n_docs,
-                   CAST(sum(fp.n_chars) AS BIGINT) AS total_chars,
-                   count(DISTINCT fp.lang) AS n_langs,
-                   CAST(sum(CASE WHEN freq.c > 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_dup_docs
-            FROM fp JOIN freq ON freq.f = fp.f
-            GROUP BY 2
-            UNION ALL
             SELECT 'links' AS op, s.src_host AS source,
                    CAST(s.edges AS BIGINT) AS n_docs,
                    CAST(pr{_IT}.r AS BIGINT) AS total_chars,
@@ -1490,8 +1224,8 @@ def oracle_sql() -> dict[str, str]:
     from mre.fixtures import write_oracle_golden
     golden = write_oracle_golden(
         os.path.join(_REPO, "dist", "extract_oracle_golden_v3_n5000.parquet"))
-    # MinHash/SimHash/winnowing are deterministic given their fixed params;
-    # mre/oracle_replay.py recomputes their expected pairs independently
+    # MinHash is deterministic given its fixed params;
+    # mre/oracle_replay.py recomputes the expected pairs independently
     # (from-scratch XXH64 + algorithm replay, no Spark) into per-corpus
     # golden parquets keyed by sum(length(text)) — the sf tables differ in
     # content, so the SQL picks its corpus at runtime from the view.
@@ -1529,24 +1263,11 @@ def oracle_sql() -> dict[str, str]:
         return f"\n            UNION ALL SELECT {nulls} WHERE 1 != {cov_expr}"
 
     _P2 = _cov_probe(_COV, "BIGINT", "BIGINT")
-    _P3L = _cov_probe(_COV, "BIGINT", "BIGINT", "BIGINT")
-    _P4W = _cov_probe(_COV, "VARCHAR", "BIGINT", "BIGINT", "BIGINT")
     _P3D = _cov_probe(_COV, "BIGINT", "BIGINT", "DOUBLE")
-    _P4S = _cov_probe(_COV, "BIGINT", "BIGINT", "VARCHAR", "VARCHAR")
     _P4I = _cov_probe(_COV, "VARCHAR", "BIGINT", "VARCHAR", "BIGINT")
     _PCUR = _cov_probe(_COV, "BIGINT", "VARCHAR", "VARCHAR")
     _PLIN = _cov_probe(_LCOV, "VARCHAR", "BIGINT", "BIGINT", "BIGINT",
                        "BIGINT", "BIGINT", "BIGINT")
-    # ann_lsh IS SQL-expressible: the hyperplanes are deterministic
-    # constants (xorshift64 stream, mre/textops.py _hyperplanes), inlined
-    # below; sign margins are ≥1e-4 on this data, far above any FP
-    # accumulation-order noise, so the bucket bits agree across engines.
-    # ivf_ann oracle: same construction, inverted-file flavor — the fixed
-    # centroids are inlined and cell/probe assignment is replayed in SQL.
-    from mre.textops import _ivf_centroids
-    cent_values = ",\n                ".join(
-        f"({i + 1}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(_ivf_centroids(16, 64)))
     # op='semdedup' k-means replay: Lloyd's unrolled per iteration —
     # seed = the 8 lowest vec_ids' exact embeddings, each round one
     # assignment CTE (row_number ORDER BY cosine DESC, cell == Spark's
@@ -1609,98 +1330,6 @@ def oracle_sql() -> dict[str, str]:
                    arg_min(cosine, vec_a) AS cosine,
                    CAST(cell AS INTEGER) AS rank
             FROM sp GROUP BY cell, vec_b"""
-    # op='lann': same Lloyd chain (duplicated subquery — DuckDB runs
-    # it twice, bounded), probes = top-2 learned cells per query,
-    # candidates equi-joined on cell, same rounded-cosine ranking as
-    # the fixed-quantizer branch.
-    lann_oracle = "WITH " + _sd_chain + f""",
-            lprobes AS MATERIALIZED (
-              SELECT query_id, q_emb, probe_cell FROM (
-                SELECT q.vec_id AS query_id, q.emb AS q_emb,
-                       c.cell AS probe_cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY list_cosine_similarity(q.emb,
-                                                           c.cent) DESC,
-                                    c.cell) AS prb
-                FROM (SELECT vec_id, emb FROM se WHERE vec_id < 5) q
-                CROSS JOIN sc{_SD_ITERS} c) WHERE prb <= 2)
-            SELECT 'lann' AS op, query_id, neighbor_id, cosine, rank
-            FROM (
-              SELECT p.query_id, e.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(p.q_emb, e.emb), 4)
-                         AS cosine,
-                     row_number() OVER (
-                         PARTITION BY p.query_id
-                         ORDER BY round(list_cosine_similarity(
-                             p.q_emb, e.emb), 4) DESC,
-                                  e.vec_id ASC) AS rank
-              FROM saF e JOIN lprobes p ON e.cell = p.probe_cell
-                                       AND e.vec_id != p.query_id)
-            WHERE rank <= 10"""
-    ivf_oracle = f"""
-            WITH c(cell_id, cent) AS (VALUES {cent_values}),
-            sims AS (
-                SELECT e.vec_id, e.embedding,
-                       c.cell_id,
-                       list_cosine_similarity(e.embedding::DOUBLE[],
-                                              c.cent) AS sim
-                FROM embeddings e CROSS JOIN c),
-            cells AS (
-                SELECT vec_id, embedding, cell_id AS cell FROM (
-                    SELECT *, row_number() OVER (
-                        PARTITION BY vec_id
-                        ORDER BY sim DESC, cell_id ASC) AS rn
-                    FROM sims) WHERE rn = 1),
-            probes AS (
-                SELECT vec_id AS query_id, embedding AS q_emb,
-                       cell_id AS probe_cell FROM (
-                    SELECT *, row_number() OVER (
-                        PARTITION BY vec_id
-                        ORDER BY sim DESC, cell_id ASC) AS prb
-                    FROM sims WHERE vec_id < 5) WHERE prb <= 2)
-            SELECT 'ann' AS op, query_id, neighbor_id, cosine, rank FROM (
-                SELECT p.query_id, e.vec_id AS neighbor_id,
-                       round(list_cosine_similarity(p.q_emb::DOUBLE[],
-                           e.embedding::DOUBLE[]), 4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY p.query_id
-                           ORDER BY round(list_cosine_similarity(
-                               p.q_emb::DOUBLE[], e.embedding::DOUBLE[]), 4)
-                               DESC, e.vec_id ASC) AS rank
-                FROM cells e JOIN probes p ON e.cell = p.probe_cell
-                                          AND e.vec_id != p.query_id)
-            WHERE rank <= 10
-            UNION ALL
-            SELECT * FROM ({semdedup_oracle})
-            UNION ALL
-            SELECT * FROM ({lann_oracle})
-        """
-    from mre.textops import _hyperplanes
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-        f"[{', '.join(repr(x) for x in p)}]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(_hyperplanes(8, 64)))
-    ann_lsh_oracle = f"""
-            WITH b AS (
-                SELECT vec_id, embedding, {bucket_terms} AS bucket
-                FROM embeddings),
-            q AS (SELECT vec_id AS query_id, embedding AS q_emb,
-                         bucket AS q_bucket
-                  FROM b WHERE vec_id < 5)
-            SELECT query_id, neighbor_id, cosine, rank FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       round(list_cosine_similarity(q.q_emb::DOUBLE[],
-                           e.embedding::DOUBLE[]), 4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY round(list_cosine_similarity(
-                               q.q_emb::DOUBLE[], e.embedding::DOUBLE[]), 4)
-                               DESC, e.vec_id ASC) AS rank
-                FROM b e JOIN q ON e.bucket = q.q_bucket
-                              AND e.vec_id != q.query_id)
-            WHERE rank <= 10
-        """
     extract_oracle = f"""
             SELECT g.url, g.headline, g.pubdate,
                    array_to_string(g.authors, chr(31)) AS authors,
@@ -1711,7 +1340,6 @@ def oracle_sql() -> dict[str, str]:
         """
     return {
         "extract_flagship": extract_oracle,
-        "ann_lsh": ann_lsh_oracle,
         "minhash_near_dups": f"""
             SELECT doc_a, doc_b, est_jaccard
             FROM read_parquet('{dedup["minhash_near_dups"]}')
@@ -1719,7 +1347,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # composition oracle (VERDICT r2 #1): candidate pairs come from the
         # independent MinHash replay golden; the exact Jaccard over those
-        # pairs is plain SQL (same shingle CTE as jaccard_pairs). LEFT JOIN
+        # pairs is plain SQL (the word 3-gram shingle CTE). LEFT JOIN
         # keeps zero-overlap candidates at jaccard 0.0, like the engine.
         "lsh_jaccard_verify": rf"""
             WITH cand AS (
@@ -1752,11 +1380,6 @@ def oracle_sql() -> dict[str, str]:
             FROM inter i
             JOIN sizes sa ON sa.doc_id = i.doc_a
             JOIN sizes sb ON sb.doc_id = i.doc_b{_P3D}
-        """,
-        "simhash_near_dups": f"""
-            SELECT doc_a, doc_b, hamming
-            FROM read_parquet('{dedup["simhash_near_dups"]}')
-            WHERE corpus_key = {_CK}{_P3L}
         """,
         # connected components via recursive CTE over the replay golden:
         # min reachable doc_id per node == min-label-propagation fixpoint
@@ -1801,40 +1424,6 @@ def oracle_sql() -> dict[str, str]:
                                   AS BIGINT)
                         END AS c
             FROM documents
-            UNION ALL
-            SELECT 'resize', doc_id,
-                   CASE doc_id % 5 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                        ELSE 'gif' END,
-                   CAST(32 AS INTEGER), CAST(24 AS INTEGER),
-                   CAST(NULL AS BIGINT)
-            FROM documents WHERE doc_id % 5 < 3
-            UNION ALL
-            SELECT 'audio', t.doc_id, 'wav',
-                   CAST(pos // 4 AS INTEGER),
-                   CAST(max(abs(((t.doc_id * 7 + pos * 13) % 2048)
-                                - 1024)) AS INTEGER),
-                   CAST(sum((((t.doc_id * 7 + pos * 13) % 2048) - 1024)
-                            * (((t.doc_id * 7 + pos * 13) % 2048)
-                               - 1024)) AS BIGINT)
-            FROM (SELECT doc_id, unnest(range(16)) AS pos
-                  FROM documents WHERE doc_id % 5 = 3) t
-            GROUP BY t.doc_id, pos // 4
-            UNION ALL
-            SELECT 'frames', doc_id, 'gif',
-                   CAST(j AS INTEGER),
-                   CAST(8 + (doc_id + 7 * j) % 64 AS INTEGER),
-                   CAST(8 + (doc_id + 11 * j) % 48 AS BIGINT)
-            FROM (SELECT doc_id, unnest(range(1 + doc_id % 3)) AS j
-                  FROM documents WHERE doc_id % 5 = 2)
-            UNION ALL
-            -- round 7: mp4 sample tables — size and start time are
-            -- builder parameters recovered from the stsz/stts bytes
-            SELECT 'frames', doc_id, 'mp4',
-                   CAST(j AS INTEGER),
-                   CAST(32 + (doc_id * 13 + j * 17) % 97 AS INTEGER),
-                   CAST(j * (25 + doc_id % 50) AS BIGINT)
-            FROM (SELECT doc_id, unnest(range(1 + doc_id % 4)) AS j
-                  FROM documents WHERE doc_id % 5 = 4)
             UNION ALL
             -- round 7: exact payload dedup groups = builder parameter
             -- tuples (builders are injective: dims / gif frame geometry
@@ -1887,49 +1476,7 @@ def oracle_sql() -> dict[str, str]:
             FROM sh s JOIN ev e ON s.shingle = e.shingle
             GROUP BY 1, 2
         """,
-        "top_ngrams": r"""
-            WITH toks AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-            sh AS (
-                SELECT doc_id,
-                       unnest(list_distinct(list_transform(
-                           range(1, len(t)),
-                           i -> t[i] || ' ' || t[i + 1]))) AS shingle
-                FROM toks WHERE len(t) >= 2)
-            SELECT shingle, count(*) AS n_docs
-            FROM sh GROUP BY shingle
-            ORDER BY n_docs DESC, shingle ASC LIMIT 50
-        """,
         "source_stats": _source_stats_oracle_sql(),
-        "split_leakage": f"""
-            WITH cand AS (
-                SELECT doc_a, doc_b
-                FROM read_parquet('{dedup["minhash_near_dups"]}')
-                WHERE corpus_key = {_CK}),
-            sp AS (
-                SELECT doc_id,
-                       CASE WHEN CAST(('0x' || substring(md5(text), 1, 4))
-                                AS INTEGER) < CAST(FLOOR(0.5 * 65536) AS INTEGER)
-                            THEN 'train' ELSE 'test' END AS split
-                FROM documents)
-            SELECT c.doc_a, c.doc_b,
-                   a.split AS split_a, b.split AS split_b
-            FROM cand c
-            JOIN sp a ON a.doc_id = c.doc_a
-            JOIN sp b ON b.doc_id = c.doc_b
-            WHERE a.split <> b.split{_P4S}
-        """,
-        "winnow_dup_pairs": f"""
-            SELECT 'exact' AS variant, doc_a, doc_b, n_shared
-            FROM read_parquet('{dedup["winnow_dup_pairs"]}')
-            WHERE corpus_key = {_CK}
-            UNION ALL
-            SELECT 'guarded' AS variant, doc_a, doc_b, n_shared
-            FROM read_parquet('{dedup["winnow_dup_pairs_guarded"]}')
-            WHERE corpus_key = {_CK}{_P4W}
-        """,
         # composition oracle for the end-to-end curation pipeline: every
         # stage replayed in plain SQL; the MinHash candidate stage comes
         # from the full-corpus replay golden restricted to surviving
@@ -2045,7 +1592,7 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{lineage_golden}')
             WHERE n_corpus = (SELECT count(*) FROM documents){_PLIN}
         """,
-        "ivf_ann": ivf_oracle,
+        "semdedup": semdedup_oracle,
         "url_dedup": r"""
             WITH u AS (
                 SELECT doc_id, unnest([
@@ -2064,22 +1611,6 @@ def oracle_sql() -> dict[str, str]:
                            '^https?://(www\.)*', 'https://', 'g'),
                            '([^:/])[?&/]+$', '\1', 'g') AS url_norm
                 FROM u),
-            capu AS (
-                SELECT doc_id,
-                       'https://example-' || (doc_id % 20)
-                           || '.com/articles/' || doc_id AS url
-                FROM documents),
-            capd AS (
-                SELECT doc_id, url,
-                       regexp_extract(lower(url),
-                           '^[a-z][a-z0-9+.-]*://(?:www\.)?([^/:?#]+)',
-                           1) AS domain
-                FROM capu),
-            capr AS (
-                SELECT url, domain,
-                       row_number() OVER (PARTITION BY domain
-                                          ORDER BY doc_id) AS rk
-                FROM capd),
             ufu AS (
                 SELECT doc_id,
                        CASE WHEN doc_id % 23 = 0
@@ -2136,11 +1667,6 @@ def oracle_sql() -> dict[str, str]:
                    min(url) AS sample_raw
             FROM n GROUP BY url_norm
             UNION ALL
-            SELECT 'cap' AS op, url AS url_norm,
-                   CAST(rk AS BIGINT) AS n_variants,
-                   domain AS sample_raw
-            FROM capr WHERE rk <= 5
-            UNION ALL
             SELECT 'uf' AS op, url AS url_norm,
                    CAST(score * 1000000 + hbp AS BIGINT) AS n_variants,
                    CAST(CAST(score < 100 AND hbp <= 5000
@@ -2170,38 +1696,13 @@ def oracle_sql() -> dict[str, str]:
                    'example-' || (doc_id % 20) || '.com' AS sample_raw
             FROM documents
         """,
-        "profile_docs": " UNION ALL ".join(
-            f"""
-            SELECT '{c}' AS col_name,
-                   count(*) FILTER ({c} IS NULL) AS n_nulls,
-                   count(DISTINCT {c}) AS n_distinct,
-                   CAST(min({c}) AS VARCHAR) AS min_s,
-                   CAST(max({c}) AS VARCHAR) AS max_s
-            FROM documents
-            """ for c in ["doc_id", "text", "lang", "source", "n_chars"]),
-        # the passage-dedup / text-scrub family tagged union: stats
-        # (sentence_dedup_stats) + depassage (remove_dup_passages — the
-        # rewritten text itself is in text_out, so the rewrite is
-        # byte-checked) + pii (pii_scrub over the synthetic-footer
-        # augmentation). Shared schema (op, doc_id, m1..m4, text_out).
+        # the passage-dedup / text-scrub family tagged union: depassage
+        # (remove_dup_passages — the rewritten text itself is in
+        # text_out, so the rewrite is byte-checked) + pii (pii_scrub over
+        # the synthetic-footer augmentation) + desub/c4/gdup/glq.
+        # Shared schema (op, doc_id, m1..m4, text_out).
         "sentence_dedup": rf"""
-            WITH s AS (
-                SELECT DISTINCT doc_id, md5(sentence) AS sent_key
-                FROM (SELECT doc_id,
-                             unnest(string_split(text, '. ')) AS sentence
-                      FROM documents)
-                WHERE length(sentence) >= 20),
-            f AS (
-                SELECT sent_key,
-                       count(DISTINCT doc_id) AS n_docs_with
-                FROM s GROUP BY sent_key),
-            p AS (
-                SELECT doc_id, count(*) AS n_sents,
-                       CAST(sum(CASE WHEN n_docs_with > 1
-                                     THEN 1 ELSE 0 END) AS BIGINT)
-                           AS n_dup_sents
-                FROM s JOIN f USING (sent_key) GROUP BY doc_id),
-            parts AS (
+            WITH parts AS (
                 SELECT doc_id, length(text) AS len0, pp.pos, pp.part,
                        md5(pp.part) AS pk
                 FROM (SELECT doc_id, text,
@@ -2407,15 +1908,6 @@ def oracle_sql() -> dict[str, str]:
                        CASE WHEN n_lines > 0
                             THEN ne * 10000 // n_lines ELSE 0 END AS ebp
                 FROM lqs)
-            SELECT 'stats' AS op, doc_id,
-                   CAST(n_sents AS BIGINT) AS m1,
-                   n_dup_sents AS m2,
-                   (n_dup_sents * 10000) // n_sents AS m3,
-                   CAST((n_dup_sents * 10000) // n_sents >= 5000
-                        AS BIGINT) AS m4,
-                   CAST(NULL AS VARCHAR) AS text_out
-            FROM p
-            UNION ALL
             SELECT 'depassage' AS op, doc_id,
                    CAST(m1 AS BIGINT) AS m1, m2,
                    CAST(len0 - length(text_out) AS BIGINT) AS m3,
@@ -2497,17 +1989,6 @@ def oracle_sql() -> dict[str, str]:
             FROM lqo
         """,
         "hash_sample": """
-            SELECT 'flat' AS op, doc_id, lang, n_chars FROM documents
-            WHERE CAST(('0x' || substring(md5(text), 1, 4)) AS INTEGER)
-                  < CAST(FLOOR(0.05 * 65536) AS INTEGER)
-            UNION ALL
-            SELECT 'strat' AS op, doc_id, lang, n_chars FROM documents
-            WHERE CAST(('0x' || substring(md5(text), 1, 4)) AS INTEGER)
-                  < CASE lang
-                        WHEN 'en' THEN CAST(FLOOR(0.05 * 65536) AS INTEGER)
-                        WHEN 'fr' THEN CAST(FLOOR(0.6 * 65536) AS INTEGER)
-                        ELSE CAST(FLOOR(0.25 * 65536) AS INTEGER) END
-            UNION ALL
             SELECT 'budget' AS op, doc_id, source AS lang,
                    CAST(cum AS BIGINT) AS n_chars
             FROM (SELECT doc_id, source,
@@ -2522,7 +2003,7 @@ def oracle_sql() -> dict[str, str]:
             -- op='dsir': the full DSIR learn->score->select replay.
             -- Feature list, bucket hash, add-1 micro-nat log-ratio and
             -- the integer per-doc sum mirror mre/textops.py
-            -- dsir_features_col/_dsir_bucket_col/dsir_bucket_lr op for
+            -- _with_dsir_features/_dsir_bucket_col/dsir_bucket_lr op for
             -- op; the ROW_NUMBER <= n//5 form is exactly what
             -- topk_by_weight's histogram threshold computes.
             SELECT 'dsir' AS op, doc_id, lang,
@@ -2701,7 +2182,7 @@ def oracle_sql() -> dict[str, str]:
                             ELSE (doc_id % 20) % 3 != 0 END)))
         """,
         "token_stats": _token_stats_oracle_sql(),
-        # round 7: heur/lm/vocab tagged union. The 'lm' branches replay
+        # round 7: lm/vocab/rep/nb tagged union. The 'lm' branches replay
         # the ENTIRE unigram-LM learn (token counts → top-V under the
         # (cnt DESC, tok ASC) total order → floor(-ln(cnt/total)*1e6)
         # micro-nats — the one float op, same IEEE sequence both
@@ -2714,14 +2195,6 @@ def oracle_sql() -> dict[str, str]:
                        length(regexp_replace(lower(trim(text)),
                            '\s+', '', 'g')) AS n_ns
                 FROM documents),
-            m AS (
-                SELECT doc_id,
-                       len(toks) AS n_tokens,
-                       greatest(len(toks), 1) AS n1,
-                       len(list_filter(toks,
-                           t -> t IN ({_STOPWORDS_SQL}))) AS n_stop,
-                       n_ns
-                FROM t),
             tok AS (
                 SELECT doc_id, unnest(list_filter(toks, x -> x <> ''))
                        AS tok
@@ -2842,19 +2315,11 @@ def oracle_sql() -> dict[str, str]:
                                     (SELECT delta FROM nboov))) AS s
                 FROM nbt LEFT JOIN nbv USING (tok)
                 GROUP BY nbt.doc_id)
-            SELECT 'heur' AS op, doc_id, n_tokens,
-                   round(n_stop / n1, 4) AS stopword_ratio,
-                   round(n_ns / n1, 4) AS mean_token_len,
-                   (least(n_tokens, 100)::BIGINT * 5
-                    + least(floor((n_stop * 1500) / n1)::BIGINT, 300)
-                    + CASE WHEN floor((n_ns * 100) / n1)::BIGINT
-                                BETWEEN 300 AND 800
-                           THEN 200 ELSE 0 END)::BIGINT AS quality_bp
-            FROM m
-            UNION ALL
-            SELECT 'lm', d.doc_id, coalesce(sc.n, 0),
-                   NULL::DOUBLE, NULL::DOUBLE,
-                   CAST(sc.ssum // sc.n AS BIGINT)
+            SELECT 'lm' AS op, d.doc_id AS doc_id,
+                   coalesce(sc.n, 0) AS n_tokens,
+                   NULL::DOUBLE AS stopword_ratio,
+                   NULL::DOUBLE AS mean_token_len,
+                   CAST(sc.ssum // sc.n AS BIGINT) AS quality_bp
             FROM documents d LEFT JOIN sc USING (doc_id)
             UNION ALL
             SELECT 'vocab', rnk, cnt, NULL::DOUBLE, NULL::DOUBLE, nll
@@ -2906,55 +2371,8 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
         """,
         "exact_dedup": """
-            SELECT md5(lower(trim(text))) AS fingerprint,
-                   min(doc_id) AS keeper_doc_id,
-                   count(*) AS n_copies
-            FROM documents GROUP BY 1
-        """,
-        "jaccard_pairs": r"""
-            WITH toks AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-            sh AS (
-                SELECT doc_id,
-                       unnest(list_distinct(list_transform(
-                           range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])))
-                           AS shingle
-                FROM toks WHERE len(t) >= 3),
-            sizes AS (
-                SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-            inter AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       count(*) AS n_inter
-                FROM sh a JOIN sh b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
-            SELECT doc_a, doc_b,
-                   round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 4)
-                       AS jaccard
-            FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.2
-        """,
-        "ann_brute_force": """
-            SELECT query_id, neighbor_id, cosine, rank FROM (
-                SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-                       round(list_cosine_similarity(
-                           q.embedding::DOUBLE[], e.embedding::DOUBLE[]),
-                           4) AS cosine,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY round(list_cosine_similarity(
-                               q.embedding::DOUBLE[],
-                               e.embedding::DOUBLE[]), 4) DESC,
-                               e.vec_id ASC) AS rank
-                FROM embeddings q
-                JOIN embeddings e ON e.vec_id != q.vec_id
-                WHERE q.vec_id < 5)
-            WHERE rank <= 10
+            SELECT min(doc_id) AS doc_id
+            FROM documents GROUP BY md5(lower(trim(text)))
         """,
         "gopher_quality": r"""
             WITH rg AS (
@@ -3020,30 +2438,8 @@ def oracle_sql() -> dict[str, str]:
                         <= 1800)::INT AS keep_strict
             FROM m LEFT JOIN rep ON rep.doc_id = m.doc_id
         """,
-        "cosine_dup_pairs": """
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   round(list_cosine_similarity(a.embedding::DOUBLE[],
-                       b.embedding::DOUBLE[]), 4) AS cosine
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.embedding::DOUBLE[],
-                       b.embedding::DOUBLE[]), 4) >= 0.3
-        """,
-        "pdf_extract": """
-            WITH t AS (
-                SELECT doc_id, string_split(text, ' ') AS toks
-                FROM documents)
-            SELECT doc_id,
-                   array_to_string(
-                       list_transform(
-                           range(0, cast(ceil(len(toks) / 8.0) AS INT)),
-                           i -> array_to_string(
-                               toks[i * 8 + 1 : i * 8 + 8], ' ')),
-                       chr(10)) AS pdf_text,
-                   1 AS ok
-            FROM t
-        """,
         # Every queries() entry has an oracle above — the hash-dependent
-        # ones (extract_flagship, minhash/simhash/winnow, lineage_rollup)
+        # ones (extract_flagship, minhash, lineage_rollup)
         # via golden parquets from mre/fixtures.py + mre/oracle_replay.py;
         # everything else as direct DuckDB SQL.
     }

@@ -16,13 +16,14 @@ Layout
 ``mre.io``          — source/sink abstraction (parquet in sandbox, Iceberg in
                       prod behind the same call sites)
 ``mre.fixtures``    — deterministic synthetic corpus (FIXTURES.md spec)
-``mre.textops``     — training-data ops over document tables: dedup (exact,
-                      MinHash-LSH, SimHash, n-gram Jaccard), ANN similarity,
-                      language-ID, quality scoring, token counts, fingerprints
+``mre.textops``     — the operators curation composes: fingerprints,
+                      MinHash-LSH + exact Jaccard confirm, clustering,
+                      decontamination, quality/LM/NB rules, SemDeDup,
+                      DSIR, mixture sampling, hash split
 ``mre.curate``      — composed curation stages, run_curate / run_corpus,
                       incremental ingest dedup against a corpus index
-``mre.multimodal``  — binary-column (image/audio/video) header parsing,
-                      frames, resize and dedup; no pixel decode
+``mre.multimodal``  — binary-column (image/audio/video) header sniffing
+                      and media dedup; no pixel decode
 ``mre.streaming``   — Structured Streaming ingest (dedup vs the index)
 """
 

@@ -1,8 +1,8 @@
 """Subword (BPE) token accounting for training-data budgets.
 
-``token_stats`` counts whitespace tokens, but corpus budgets are set in
-TOKENIZER tokens — a curation pipeline needs per-doc subword counts under
-the tokenizer it will actually train with (VERDICT r6 #4). This module is
+Corpus budgets are set in TOKENIZER tokens, not whitespace words — a
+curation pipeline needs per-doc subword counts under the tokenizer it
+will actually train with (VERDICT r6 #4). This module is
 a deterministic, dependency-free byte-pair-encoding stack:
 
 * :func:`bpe_learn` — learn a ranked merge table from the corpus.
@@ -12,13 +12,10 @@ a deterministic, dependency-free byte-pair-encoding stack:
   ``orderBy().limit()`` collect, never corpus-shaped). This mirrors how
   production tokenizers are built: train on a capped vocabulary/sample,
   apply at full scale.
-* :func:`bpe_apply_expr` — apply a (small) merge table as a chain of
-  JVM-side ``replace`` expressions inside ``F.transform`` — zero Python,
-  whole-stage-codegen friendly; the path the driver oracle replays.
-* :func:`bpe_tokenize` — corpus-scale application for large merge
-  tables (chained column expressions stop scaling past a few dozen
-  merges): an Arrow-batched pandas UDF with a per-batch word memo, the
-  documented slow-path pattern shared with SimHash.
+* :func:`bpe_tokenize` — corpus-scale application: an Arrow-batched
+  pandas UDF with a per-batch word memo (chained column expressions stop
+  scaling past a few dozen merges). ``run_curate``'s token accounting
+  runs it, and the registry's DuckDB oracle replays it in SQL.
 
 SINGLE-PASS MERGE SEMANTICS (the spec, chosen for cross-engine
 exactness): a word is symbolized as ``' c1 c2 … cn </w> '`` (space-
@@ -28,9 +25,9 @@ learning iteration counts adjacent symbol pairs over the vocabulary
 (count DESC, left ASC, right ASC) argmax, and rewrites every vocabulary
 entry with ONE left-to-right non-overlapping ``replace`` of
 ``' l r '`` → ``' lr '``. Application replays the learned merges in rank
-order with the same single replace each. Python ``str.replace``, Spark
-``replace`` and ANSI-SQL ``replace`` share these exact semantics, so the
-three implementations agree byte-for-byte — including on runs of
+order with the same single replace each. Python ``str.replace`` and
+ANSI-SQL ``replace`` share these exact semantics, so the UDF and the
+DuckDB replay agree byte-for-byte — including on runs of
 identical symbols (``'a a a a'`` under merge ``(a, a)`` becomes
 ``'aa a a'`` in one pass, not classic BPE's ``'aa aa'``; a pair that
 reappears is simply re-learnable at a later rank, which the learner does
@@ -167,22 +164,9 @@ def bpe_merges_df(spark: SparkSession, merges: Sequence[Merge]) -> DataFrame:
         "rank int, left string, right string, cnt long")
 
 
-def bpe_apply_expr(word_col: Column, merges: Sequence[Merge]) -> Column:
-    """Tokenized symbol sequence of one word (space-joined, trimmed) as a
-    pure column expression: symbolize, then the ranked single-pass
-    replace chain. JVM-side end to end — use inside ``F.transform`` over
-    a words array. Expression depth grows with the merge count; keep to
-    small tables (the driver row uses 12) and use :func:`bpe_tokenize`
-    for production-sized ones."""
-    c = F.concat(F.lit(" "), F.regexp_replace(word_col, "(.)", "$1 "),
-                 F.lit(EOW + " "))
-    for l, r, *_ in merges:
-        c = F.replace(c, F.lit(f" {l} {r} "), F.lit(f" {l}{r} "))
-    return F.trim(c)
-
-
 def tokenize_word(word: str, merges: Sequence[Merge]) -> list[str]:
-    """Driver/UDF-side twin of :func:`bpe_apply_expr` (same spec)."""
+    """One word's subword tokens under ``merges``: symbolize, then the
+    ranked single-pass replace chain (the spec above)."""
     s = _symbolize(word)
     for l, r, *_ in merges:
         s = s.replace(f" {l} {r} ", f" {l}{r} ")

@@ -207,97 +207,6 @@ def semantic_loser_ids(embeddings: DataFrame, *, k: int = 64,
 # the composed pipeline as one DataFrame (driver-checkable, no sink)
 
 
-def curate_df(docs: DataFrame, evals: Optional[DataFrame] = None, *,
-              shingle_n: int = 3, minhash_threshold: float = 0.2,
-              jaccard_threshold: float = 0.5, contamination_n: int = 5,
-              contamination_min_shared: int = 1,
-              train_frac: float = 0.9, strict_quality: bool = False,
-              pii_max: int | None = None,
-              ngram_battery: bool = False,
-              max_bucket: int | None = None,
-              media: Optional[DataFrame] = None,
-              media_dedup: str = "exact",
-              lm_max_nll: int | None = None,
-              lm_vocab_top: int = 4096,
-              dsir_top_frac: float | None = None,
-              dsir_target_lang: str = "en",
-              embeddings: Optional[DataFrame] = None,
-              semdedup_k: int = 64, semdedup_iters: int = 3,
-              semdedup_threshold: float = 0.95) -> DataFrame:
-    """The full curation chain as a single DataFrame: surviving docs with
-    their train/test ``split`` assignment (text column dropped).
-
-    ``evals`` is a small (eval_id, text) frame; None skips
-    decontamination. The post-dedup survivor frame feeds three downstream
-    scans (near-dup, decontamination, split) — persisted so the quality +
-    dedup semi-joins run once; ``run_curate`` materializes stage id-lists
-    to parquet instead, which is the 10^12-doc shape.
-
-    ``media`` (round 7, VERDICT r6 #2): an optional (doc_id, payload)
-    table of the docs' media attachments; when given, a media-payload
-    dedup stage runs right after text exact dedup — docs whose payload
-    duplicates a kept doc's (``media_dedup='exact'``: byte-identical
-    sha1; ``'band'``: same no-decode container band) are dropped, docs
-    without a media row pass through.
-
-    ``lm_max_nll`` (round 7): opt-in CCNet-family perplexity filter
-    after exact/media dedup — a unigram LM is learned from the dedup
-    survivors and docs scoring above ``lm_max_nll`` micro-nats mean
-    NLL (see ``lm_keep_ids``) are dropped before the expensive
-    near-dup stage.
-
-    Cache ownership (ADVICE r4): the persisted survivor frame (and the
-    intermediates the textops helpers persist) are registered in
-    ``mre.textops._LIVE_CACHES``; call ``mre.textops.release_caches()``
-    after materializing the result — unpersist is only a hint, so a
-    released plan stays correct and merely recomputes if re-run."""
-    from .textops import _register_cache
-    kept = docs.join(
-        quality_keep_ids(docs, strict=strict_quality, pii_max=pii_max,
-                         ngram_battery=ngram_battery),
-        "doc_id", "left_semi")
-    kept = kept.join(exact_keeper_ids(kept), "doc_id", "left_semi")
-    if media is not None:
-        # media restricted to LIVE docs first, so a dead doc can never
-        # claim keeper-min over a surviving copy
-        live_media = media.join(kept.select("doc_id"), "doc_id",
-                                "left_semi")
-        kept = kept.join(media_loser_ids(live_media, mode=media_dedup),
-                         "doc_id", "left_anti")
-    if embeddings is not None:
-        # semantic (SemDeDup) dedup — same live-docs-first rule
-        live_emb = embeddings.join(kept.select("doc_id"), "doc_id",
-                                   "left_semi")
-        kept = kept.join(
-            semantic_loser_ids(live_emb, k=semdedup_k,
-                               iters=semdedup_iters,
-                               threshold=semdedup_threshold),
-            "doc_id", "left_anti")
-    kept = _register_cache(kept.persist(StorageLevel.MEMORY_AND_DISK))
-    if lm_max_nll is not None:
-        kept = kept.join(
-            lm_keep_ids(kept, lm_max_nll, vocab_top=lm_vocab_top),
-            "doc_id", "left_semi")
-    losers = near_dup_loser_ids(kept, shingle_n=shingle_n,
-                                minhash_threshold=minhash_threshold,
-                                jaccard_threshold=jaccard_threshold,
-                                max_bucket=max_bucket)
-    kept = kept.join(losers, "doc_id", "left_anti")
-    if evals is not None:
-        kept = kept.join(
-            contaminated_ids(kept, evals, n=contamination_n,
-                             min_shared=contamination_min_shared),
-            "doc_id", "left_anti")
-    if dsir_top_frac is not None:
-        # DSIR importance selection toward the target-language subset
-        # (round 7; see run_curate's dsir_select stage for the shape)
-        from .textops import dsir_topk
-        k = int(kept.count() * float(dsir_top_frac))
-        kept = (dsir_topk(kept, F.col("lang") == dsir_target_lang, k)
-                .drop("dsir_n_feats", "dsir_weight_micro"))
-    return hash_split(kept, "text", train_frac).drop("text")
-
-
 # --------------------------------------------------------------------------
 # the resumable job (stage lineage, same story as run_extract)
 
@@ -821,8 +730,9 @@ def extracted_to_documents(results: DataFrame,
       they stay visible in the extraction lineage's n_failed).
     * ``lang`` = marker-heuristic language-ID over the extracted text
       (``lang_pred_expr`` — the prediction as a column expression, fused
-      into the same projection; a join back to ``lang_id`` would shuffle
-      the corpus text AND multiply rows on a doc_id collision);
+      into the same projection; a join back to a separate language-ID
+      frame would shuffle the corpus text AND multiply rows on a doc_id
+      collision);
       ``source`` = the url's host (the domain-rollup key).
     * headline / pubdate / authors ride along so the CURATED table is a
       complete training corpus, not ids that need a join back to the
@@ -1589,7 +1499,7 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
                **curate_knobs)
 
 
-__all__ = ["curate_df", "run_curate", "read_curated", "completed_stages",
+__all__ = ["run_curate", "read_curated", "completed_stages",
            "quality_keep_ids", "exact_keeper_ids", "near_dup_loser_ids",
            "contaminated_ids", "media_loser_ids", "semantic_loser_ids",
            "read_curate_lineage",

@@ -215,14 +215,16 @@ def path_committed(spark: SparkSession, dst: str) -> bool:
       output committer leaves partially-promoted part files that
       read_table happily loads — resuming from those silently adopts a
       partial survivor set (and, for ingest, permanently pollutes the
-      dedup index with the dropped remainder's absence)."""
+      dedup index with the dropped remainder's absence).
+
+    Only a real "no ``_SUCCESS``" answer is False: an I/O error (an
+    unknown scheme, an unreachable store) raises, because the caller's
+    answer to False is a recompute, and a recompute after a partial
+    index update drops the whole batch."""
     if dst.startswith(ICEBERG_PREFIX):
         return read_if_present(spark, dst) is not None
-    try:
-        fs, p = _hadoop_fs(spark, f"{dst}/_SUCCESS")
-        return bool(fs.exists(p))
-    except Exception:
-        return False
+    fs, p = _hadoop_fs(spark, f"{dst}/_SUCCESS")
+    return bool(fs.exists(p))
 
 
 def local_path(spark: SparkSession, path: str) -> str | None:

@@ -362,8 +362,8 @@ def fetch_plan(urls: DataFrame, robots: DataFrame,
 
     Shape: ``robots_allowed``'s broadcast join + ONE host-partitioned
     window over the fetch subset (re-crawl candidates, not the
-    corpus); a mega-host queue is one partition — cap it upstream with
-    ``domain_cap`` if a single host's queue outgrows a task."""
+    corpus); a mega-host queue is one partition — cap it upstream if a
+    single host's queue outgrows a task."""
     from pyspark.sql import Window
     ra = (robots_allowed(urls, robots, agent=agent)
           .filter(F.col("allowed") == 1))

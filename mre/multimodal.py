@@ -4,14 +4,14 @@ with typed metadata (training-data pipeline requirement).
 The container has no image/audio libraries, so there is no pixel/sample
 decode. Everything here works from the bytes alone: container-format
 sniffing + header metadata (``sniff_media_meta`` / ``media_meta`` — PNG
-IHDR, JPEG SOF scan, GIF screen descriptor, WAV fmt chunk, pure stdlib),
-frame and sample enumeration, resize to a re-sniffable container, and
-exact / banded media dedup, as mapInPandas or column-expression plans.
+IHDR, JPEG SOF scan, GIF screen descriptor, WAV fmt chunk, MP4 box walk,
+pure stdlib) and the exact / banded media dedup that curation's
+``media_dedup`` stage runs, as mapInPandas or column-expression plans.
+The ``make_*`` functions write minimal valid containers for fixtures.
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -186,7 +186,8 @@ def make_gif(width: int, height: int,
         -> bytes:
     """Minimal valid GIF89a; ``frames`` — (left, top, w, h) image
     descriptors with deterministic data sub-blocks — makes it a REAL
-    multi-frame (animated) container the frame enumerator can walk."""
+    multi-frame (animated) container whose bytes vary with the frame
+    geometry while the sniffed screen dimensions do not."""
     import struct
 
     out = b"GIF89a" + struct.pack("<HH", width, height) + b"\x00\x00\x00"
@@ -203,24 +204,14 @@ def make_gif(width: int, height: int,
 
 
 def make_mp4(width: int, height: int, duration_ms: int,
-             timescale: int = 1000,
-             frame_sizes: list[int] | None = None,
-             frame_duration: int = 100) -> bytes:
+             timescale: int = 1000) -> bytes:
     """Minimal VALID ISO-BMFF (MP4) container: ftyp + moov(mvhd v0 with
     timescale/duration, trak(tkhd v0 with 16.16-fixed dims)) + a tiny
     mdat. Injective in (width, height, stored duration units) — the dims
     live in tkhd, the duration in mvhd — so byte-equality equals
     parameter equality (the media_meta oracle's replay contract).
     Duration is stored as ``duration_ms * timescale // 1000`` units; a
-    non-1000 timescale makes the sniffer's integer division observable.
-
-    ``frame_sizes`` (round 7) adds a REAL sample table — mdia→minf→stbl
-    with stts (one run: n samples × ``frame_duration`` units), stsz
-    (per-sample byte sizes), stsc (one chunk) and stco (the mdat
-    payload's ABSOLUTE file offset, patched after layout) — and an mdat
-    whose j-th sample is ``size_j`` copies of byte ``j % 256``, so a
-    frame enumerator can be held to byte-level truth: the bytes at each
-    reported (offset, size) are checkable, not just the numbers."""
+    non-1000 timescale makes the sniffer's integer division observable."""
     import struct
 
     def box(typ: bytes, body: bytes) -> bytes:
@@ -240,91 +231,19 @@ def make_mp4(width: int, height: int, duration_ms: int,
                + bytes(8) + struct.pack(">HHHH", 0, 0, 0, 0) + matrix
                + struct.pack(">II", width << 16, height << 16))
     ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isommp41")
-    if not frame_sizes:
-        return (ftyp + box(b"moov", mvhd + box(b"trak", tkhd))
-                + box(b"mdat", b"\x00\x00\x00\x00"))
-
-    ns = len(frame_sizes)
-    mdat_body = b"".join(bytes([j % 256]) * s
-                         for j, s in enumerate(frame_sizes))
-
-    def stbl_with(chunk_off: int) -> bytes:
-        stts = box(b"stts", bytes(4) + struct.pack(">III", 1, ns,
-                                                   frame_duration))
-        stsz = box(b"stsz", bytes(4) + struct.pack(">II", 0, ns)
-                   + b"".join(struct.pack(">I", s) for s in frame_sizes))
-        stsc = box(b"stsc", bytes(4) + struct.pack(">IIII", 1, 1, ns, 1))
-        stco = box(b"stco", bytes(4) + struct.pack(">II", 1, chunk_off))
-        return box(b"stbl", stts + stsz + stsc + stco)
-
-    def moov_with(chunk_off: int) -> bytes:
-        mdhd = box(b"mdhd", bytes(4)
-                   + struct.pack(">IIII", 0, 0, timescale,
-                                 ns * frame_duration)
-                   + struct.pack(">HH", 0x55C4, 0))
-        hdlr = box(b"hdlr", bytes(8) + b"vide" + bytes(12) + b"\x00")
-        minf = box(b"minf", stbl_with(chunk_off))
-        mdia = box(b"mdia", mdhd + hdlr + minf)
-        return box(b"moov", mvhd + box(b"trak", tkhd + mdia))
-
-    # stco stores an absolute file offset; the moov LENGTH is offset-
-    # independent (fixed u32 field), so lay out once with 0 and patch
-    probe = moov_with(0)
-    chunk_off = len(ftyp) + len(probe) + 8          # mdat payload start
-    return ftyp + moov_with(chunk_off) + box(b"mdat", mdat_body)
+    return (ftyp + box(b"moov", mvhd + box(b"trak", tkhd))
+            + box(b"mdat", b"\x00\x00\x00\x00"))
 
 
-def make_wav(sample_rate: int, n_samples: int = 8,
-             samples: list[int] | None = None) -> bytes:
-    """Minimal valid mono 16-bit PCM WAV; ``samples`` (s16 ints) override
-    the default silence — the builder and ``wav_pcm_samples`` meet only
-    at the RIFF byte layout."""
+def make_wav(sample_rate: int) -> bytes:
+    """Minimal valid mono 16-bit PCM WAV: eight samples of silence."""
     import struct
 
-    if samples is not None:
-        data = b"".join(struct.pack("<h", s) for s in samples)
-    else:
-        data = b"\x00\x00" * n_samples
+    data = b"\x00\x00" * 8
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(data)) + data)
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def wav_pcm_samples(payload: bytes | None):
-    """REAL (pure-stdlib) PCM decode for 16-bit WAV: walk the RIFF
-    chunks, read the fmt chunk (PCM, 16-bit required), return the data
-    chunk as a list of s16 ints (first channel if multi-channel). None
-    for non-WAV / non-PCM16 / truncated payloads; never raises. This is
-    the one media family whose SAMPLE decode needs no external library —
-    images keep the documented decode stub."""
-    import struct
-    try:
-        if (payload is None or len(payload) < 12
-                or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE"):
-            return None
-        i, n = 12, len(payload)
-        channels = bits = None
-        while i + 8 <= n:
-            cid = payload[i:i + 4]
-            clen = int.from_bytes(payload[i + 4:i + 8], "little")
-            body = payload[i + 8:i + 8 + clen]
-            if cid == b"fmt " and len(body) >= 16:
-                audio_fmt, channels = struct.unpack("<HH", body[:4])
-                bits = int.from_bytes(body[14:16], "little")
-                if audio_fmt != 1 or bits != 16 or channels < 1:
-                    return None
-            elif cid == b"data":
-                if channels is None:
-                    return None
-                n_frames = len(body) // (2 * channels)
-                return [struct.unpack_from("<h", body,
-                                           f * 2 * channels)[0]
-                        for f in range(n_frames)]
-            i += 8 + clen + (clen & 1)
-        return None
-    except Exception:
-        return None
 
 
 MEDIA_META_SCHEMA = ("media_id bigint, fmt string, width int, height int, "
@@ -350,309 +269,6 @@ def media_meta(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(
         run, MEDIA_META_SCHEMA)
-
-
-def gif_frames(payload: bytes | None):
-    """REAL GIF frame enumeration (pure stdlib, no decode): walk the
-    block stream — logical screen descriptor (+ global color table),
-    extensions (0x21: label + length-prefixed sub-blocks), image
-    descriptors (0x2C: 9-byte descriptor + optional local color table +
-    LZW-min byte + sub-blocks) — and return one (offset, left, top,
-    width, height) tuple per frame. Correct sub-block walking is the
-    load-bearing part: LZW data contains arbitrary bytes, so scanning
-    for 0x2C without honoring the length prefixes would hallucinate
-    frames. None for non-GIF; truncated streams return the frames seen;
-    never raises."""
-    try:
-        if payload is None or payload[:6] not in (b"GIF87a", b"GIF89a"):
-            return None
-        n = len(payload)
-        if n < 13:
-            return []
-        flags = payload[10]
-        i = 13
-        if flags & 0x80:
-            i += 3 * (2 << (flags & 0x07))          # global color table
-        frames = []
-        while i < n:
-            b = payload[i]
-            if b == 0x3B:                           # trailer
-                break
-            if b == 0x21:                           # extension
-                i += 2                              # introducer + label
-                while i < n and payload[i] != 0:
-                    i += 1 + payload[i]             # sub-block
-                i += 1                              # block terminator
-                continue
-            if b == 0x2C:                           # image descriptor
-                if i + 10 > n:
-                    break
-                left = int.from_bytes(payload[i + 1:i + 3], "little")
-                top = int.from_bytes(payload[i + 3:i + 5], "little")
-                fw = int.from_bytes(payload[i + 5:i + 7], "little")
-                fh = int.from_bytes(payload[i + 7:i + 9], "little")
-                lflags = payload[i + 9]
-                frames.append((i, left, top, fw, fh))
-                i += 10
-                if lflags & 0x80:
-                    i += 3 * (2 << (lflags & 0x07))  # local color table
-                i += 1                               # LZW min code size
-                while i < n and payload[i] != 0:
-                    i += 1 + payload[i]              # LZW sub-block
-                i += 1
-                continue
-            break                                    # unknown block
-        return frames
-    except Exception:
-        return None
-
-
-def mp4_frames(payload: bytes | None):
-    """REAL MP4 sample enumeration (pure stdlib, no codec): box-walk
-    moov→trak→mdia→minf→stbl, read stts (per-sample durations), stsz
-    (per-sample sizes), stsc (samples per chunk) and stco (chunk
-    offsets), and derive every sample's ABSOLUTE byte offset (chunk
-    offset + cumulative in-chunk sizes) and start time in track
-    timescale units. Returns one (offset, size, t_units) tuple per
-    sample; None for non-BMFF payloads or containers without a sample
-    table; truncated/malformed boxes return what was parsed; never
-    raises. This is the video-container half of the frames family —
-    sample geometry rides the track header (constant per track), so
-    the per-sample facts are (offset, size, time)."""
-    try:
-        if payload is None or len(payload) < 12 \
-                or payload[4:8] != b"ftyp":
-            return None
-        stts = stsz = stsc = stco = None
-        n = len(payload)
-
-        def find(typ, i, end):
-            for t, s, e in _bmff_boxes(payload, i, end):
-                if t == typ:
-                    return s, e
-            return None
-
-        scope = find(b"moov", 0, n)
-        for typ in (b"trak", b"mdia", b"minf", b"stbl"):
-            if scope is None:
-                return None
-            scope = find(typ, *scope)
-        if scope is None:
-            return None
-        for t, s, e in _bmff_boxes(payload, *scope):
-            body = payload[s:e]
-            if t == b"stts":
-                stts = body
-            elif t == b"stsz":
-                stsz = body
-            elif t == b"stsc":
-                stsc = body
-            elif t == b"stco":
-                stco = body
-        if not (stts and stsz and stco):
-            return None
-        ns = int.from_bytes(stsz[8:12], "big")
-        fixed = int.from_bytes(stsz[4:8], "big")
-        sizes = ([fixed] * ns if fixed else
-                 [int.from_bytes(stsz[12 + 4 * j:16 + 4 * j], "big")
-                  for j in range(min(ns, (len(stsz) - 12) // 4))])
-        # stts runs → per-sample durations
-        durs = []
-        nruns = int.from_bytes(stts[4:8], "big")
-        for r in range(nruns):
-            o = 8 + 8 * r
-            if o + 8 > len(stts):
-                break
-            cnt = int.from_bytes(stts[o:o + 4], "big")
-            d = int.from_bytes(stts[o + 4:o + 8], "big")
-            durs.extend([d] * min(cnt, ns - len(durs)))
-        # stsc runs → samples per chunk (default: all in chunk 1)
-        chunks = [int.from_bytes(stco[8 + 4 * c:12 + 4 * c], "big")
-                  for c in range(int.from_bytes(stco[4:8], "big"))
-                  if 12 + 4 * c <= len(stco)]
-        spc = []
-        if stsc:
-            ne = int.from_bytes(stsc[4:8], "big")
-            ents = []
-            for r in range(ne):
-                o = 8 + 12 * r
-                if o + 12 > len(stsc):
-                    break
-                ents.append((int.from_bytes(stsc[o:o + 4], "big"),
-                             int.from_bytes(stsc[o + 4:o + 8], "big")))
-            for k, (first, cnt) in enumerate(ents):
-                last = (ents[k + 1][0] - 1 if k + 1 < len(ents)
-                        else len(chunks))
-                spc.extend([cnt] * max(last - first + 1, 0))
-        if not spc:
-            spc = [ns]
-        out, j, t = [], 0, 0
-        for c, coff in enumerate(chunks):
-            off = coff
-            take = spc[c] if c < len(spc) else (spc[-1] if spc else 0)
-            for _ in range(take):
-                if j >= len(sizes):
-                    break
-                out.append((off, sizes[j], t))
-                off += sizes[j]
-                t += durs[j] if j < len(durs) else 0
-                j += 1
-        return out
-    except Exception:
-        return None
-
-
-FRAME_SCHEMA = ("media_id bigint, frame_idx int, byte_offset bigint, "
-                "left int, top int, width int, height int, "
-                "size int, t_units bigint")
-
-
-def sample_frames(media: DataFrame, every_n: int = 1,
-                  max_frames: int | None = None) -> DataFrame:
-    """Frame-sampling over multi-frame payloads — the video half of the
-    prompt's decode/resize/frame-sample plumbing, with the half that
-    needs no codec done for REAL: animated-GIF frame enumeration
-    (``gif_frames`` block walk → per-frame byte offset + geometry;
-    ``size``/``t_units`` null) AND MP4 sample-table enumeration
-    (``mp4_frames`` stts/stsz/stsc/stco walk → per-sample byte offset,
-    size and start time in timescale units; ``left``/``top`` 0, width/
-    height null — geometry rides the track header). Rows are emitted
-    for frames 0, every_n, 2·every_n, … capped at ``max_frames``.
-    Pixel decode of a sampled frame needs codecs (LZW, H.264) absent
-    here; an ffmpeg-backed prod version swaps the enumerators and keeps
-    this exact schema/batching."""
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "frame_idx", "byte_offset", "left", "top",
-                "width", "height", "size", "t_units"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else None
-                gf = gif_frames(p)
-                if gf:
-                    taken = gf[::max(every_n, 1)]
-                    if max_frames is not None:
-                        taken = taken[:max_frames]
-                    for k, (off, left, top, fw, fh) in enumerate(taken):
-                        rows.append({"media_id": mid,
-                                     "frame_idx": k * max(every_n, 1),
-                                     "byte_offset": off, "left": left,
-                                     "top": top, "width": fw,
-                                     "height": fh, "size": None,
-                                     "t_units": None})
-                    continue
-                mf = mp4_frames(p)
-                if mf:
-                    taken = mf[::max(every_n, 1)]
-                    if max_frames is not None:
-                        taken = taken[:max_frames]
-                    for k, (off, sz, t) in enumerate(taken):
-                        rows.append({"media_id": mid,
-                                     "frame_idx": k * max(every_n, 1),
-                                     "byte_offset": off, "left": 0,
-                                     "top": 0, "width": None,
-                                     "height": None, "size": sz,
-                                     "t_units": t})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, FRAME_SCHEMA)
-
-
-RESIZE_SCHEMA = ("media_id bigint, fmt string, payload binary, "
-                 "orig_width int, orig_height int, width int, height int, "
-                 "src_sha1 string, resize_ok int")
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize over the binary column (training-data thumbnailing /
-    normalization step). REAL halves: the source container is parsed
-    with ``sniff_media_meta`` (format + original dimensions from actual
-    header bytes) and the output is a VALID container of the same format
-    re-written at the target dimensions (``make_png/jpeg/gif`` — real
-    signatures, real IHDR/SOF/descriptor, real CRCs), with src_sha1
-    provenance. The one faked piece — pixel RESAMPLING — needs Pillow
-    (absent in this container), so the
-    emitted container carries no pixel data; prod swaps the body for
-    `Image.open(...).resize(...)` and nothing else changes (schema,
-    batching, re-sniff contract are identical). Non-image / unsniffable
-    payloads pass through with resize_ok=0 and a null payload.
-
-    The contract a test can hold byte-level: re-sniffing the OUTPUT
-    payload yields exactly (fmt, width, height) — builder and sniffer
-    meet only at the container byte layout."""
-    builders = {"png": make_png, "jpeg": make_jpeg, "gif": make_gif}
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else None
-                fmt, w, h, _sr, _dur = sniff_media_meta(p)
-                if fmt in builders:
-                    rows.append({
-                        "media_id": mid, "fmt": fmt,
-                        "payload": builders[fmt](width, height),
-                        "orig_width": w, "orig_height": h,
-                        "width": width, "height": height,
-                        "src_sha1": hashlib.sha1(p).hexdigest(),
-                        "resize_ok": 1})
-                else:
-                    rows.append({
-                        "media_id": mid, "fmt": fmt, "payload": None,
-                        "orig_width": w, "orig_height": h,
-                        "width": None, "height": None,
-                        "src_sha1": hashlib.sha1(p).hexdigest()
-                        if p is not None else None,
-                        "resize_ok": 0})
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "fmt", "payload", "orig_width", "orig_height",
-                "width", "height", "src_sha1", "resize_ok"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, RESIZE_SCHEMA)
-
-
-AUDIO_WINDOW_SCHEMA = ("media_id bigint, window_idx int, start_sample "
-                       "bigint, n_samples int, peak int, sum_sq bigint")
-
-
-def audio_frame_windows(media: DataFrame, window: int = 4,
-                        hop: int | None = None) -> DataFrame:
-    """Frame-sampling over audio payloads: slice each WAV's REAL decoded
-    PCM stream (``wav_pcm_samples`` — pure-stdlib s16 parse, no fake)
-    into fixed-size windows at ``hop`` stride (default: non-overlapping)
-    and emit integer-exact per-window stats (peak = max |s|, sum_sq =
-    Σs²) — integers so a cross-engine oracle can replay them with no
-    float hazard. Rows explode per window; non-WAV payloads emit
-    nothing. The video analogue (decode + frame grab) needs ffmpeg and
-    stays behind the documented decode stub; this is the media family
-    where the full sample path is implementable from the stdlib."""
-    hop = hop or window
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else None
-                samples = wav_pcm_samples(p)
-                if not samples:
-                    continue
-                widx = 0
-                for start in range(0, len(samples) - window + 1, hop):
-                    win = samples[start:start + window]
-                    rows.append({
-                        "media_id": mid, "window_idx": widx,
-                        "start_sample": start, "n_samples": len(win),
-                        "peak": max(abs(s) for s in win),
-                        "sum_sq": sum(s * s for s in win)})
-                    widx += 1
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "window_idx", "start_sample", "n_samples",
-                "peak", "sum_sq"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, AUDIO_WINDOW_SCHEMA)
 
 
 def media_exact_dedup(media: DataFrame) -> DataFrame:
@@ -707,9 +323,6 @@ def media_band_dedup(media: DataFrame,
         F.count("*").over(w).alias("band_size"))
 
 
-__all__ = ["MEDIA_META_SCHEMA", "RESIZE_SCHEMA", "AUDIO_WINDOW_SCHEMA",
-           "sniff_media_meta", "media_meta", "resize_media",
-           "audio_frame_windows", "wav_pcm_samples",
-           "gif_frames", "mp4_frames", "sample_frames", "FRAME_SCHEMA",
+__all__ = ["MEDIA_META_SCHEMA", "sniff_media_meta", "media_meta",
            "media_exact_dedup", "media_band_dedup",
            "make_png", "make_jpeg", "make_gif", "make_wav", "make_mp4"]

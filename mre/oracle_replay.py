@@ -1,11 +1,12 @@
-"""Independent replays of the approximate-dedup operators, for exact
+"""Independent replays of the hash-dependent operators, for exact
 driver oracles.
 
-The MinHash / SimHash / winnowing queries are deterministic given their
-fixed parameters, but not expressible in DuckDB SQL (no xxhash64). This
-module recomputes their EXPECTED outputs from first principles — a
-from-scratch XXH64 (public algorithm, Collet's spec) plus a direct replay
-of each published algorithm over the raw text — with no Spark involvement,
+The MinHash near-dup pairs and the extraction lineage rollup are
+deterministic given their fixed parameters, but not expressible in DuckDB
+SQL (no xxhash64, no Spark murmur3). This module recomputes their
+EXPECTED outputs from first principles — a from-scratch XXH64 (public
+algorithm, Collet's spec), Spark's murmur3 variant and a direct replay of
+MinHash-LSH over the raw text — with no Spark involvement,
 and materializes them as per-corpus golden parquet files that
 ``oracle_sql()`` SELECTs. Golden rows are keyed by ``corpus_key =
 sum(length(text))`` so one parquet serves every scale factor's
@@ -218,88 +219,6 @@ def minhash_pairs_expected(texts: dict[int, str], k: int = 32, n: int = 3,
 
 
 # --------------------------------------------------------------------------
-# SimHash replay
-
-
-def _simhash(text: str) -> int:
-    """64-bit majority fold over xxhash64(token) — includes duplicate
-    tokens, like transform(toks, xxhash64)."""
-    hs = [xxh64_str(t) & _MASK64 for t in _tokens(text)]
-    if not hs:
-        return 0
-    n = len(hs)
-    val = 0
-    for bit in range(64):
-        ones = sum((h >> bit) & 1 for h in hs)
-        if 2 * ones >= n:
-            val |= 1 << bit
-    return val - (1 << 64) if val >= (1 << 63) else val
-
-
-def simhash_pairs_expected(texts: dict[int, str],
-                           max_hamming: int = 3) -> list[tuple]:
-    """(doc_a, doc_b, hamming) — any equal 16-bit band ⇒ candidate,
-    popcount(xor) ≤ max_hamming to keep."""
-    sh = {d: _simhash(t) for d, t in texts.items()}
-    buckets: dict = {}
-    for d, h in sh.items():
-        u = h & _MASK64
-        for b in range(4):
-            buckets.setdefault((b, (u >> (b * 16)) & 0xFFFF),
-                               []).append(d)
-    out = set()
-    for ds in buckets.values():
-        ds.sort()
-        for i in range(len(ds)):
-            for j in range(i + 1, len(ds)):
-                a, b = ds[i], ds[j]
-                ham = bin((sh[a] ^ sh[b]) & _MASK64).count("1")
-                if ham <= max_hamming:
-                    out.add((a, b, ham))
-    return sorted(out)
-
-
-# --------------------------------------------------------------------------
-# Winnowing replay
-
-
-def _winnow_fps(text: str, k: int, window: int) -> set[int]:
-    t = _JAVA_WS.sub(" ", _norm(text))
-    if len(t) < k + window:
-        return set()
-    grams = [xxh64_str(t[i:i + k]) for i in range(len(t) - k + 1)]
-    return {min(grams[j:j + window])
-            for j in range(len(t) - k - window + 1)}
-
-
-def winnow_pairs_expected(texts: dict[int, str], k: int = 8,
-                          window: int = 4, min_shared: int = 3,
-                          max_df: int | None = None) -> list[tuple]:
-    """(doc_a, doc_b, n_shared) for pairs sharing ≥ min_shared winnowing
-    fingerprints. ``max_df`` replays the corpus-scale guard EXACTLY as
-    mre.textops.winnow_dup_pairs applies it: fingerprints present in
-    more than max_df docs leave the index before pairing, and n_shared
-    counts in the filtered space (per-doc fingerprint sets are already
-    distinct, so df = number of docs containing the fingerprint)."""
-    fps = {d: _winnow_fps(t, k, window) for d, t in texts.items()}
-    inv: dict = {}
-    for d, s in fps.items():
-        for fp in s:
-            inv.setdefault(fp, []).append(d)
-    shared: dict = {}
-    for ds in inv.values():
-        if max_df is not None and len(ds) > max_df:
-            continue
-        ds.sort()
-        for i in range(len(ds)):
-            for j in range(i + 1, len(ds)):
-                p = (ds[i], ds[j])
-                shared[p] = shared.get(p, 0) + 1
-    return sorted((a, b, c) for (a, b), c in shared.items()
-                  if c >= min_shared)
-
-
-# --------------------------------------------------------------------------
 # Lineage rollup replay (P7/P8 driver check). The flagship's pages are a
 # pure function of the sf's doc_id set (0..n-1), so the expected lineage
 # table is a pure function of n: bucket = pmod(murmur3(url), B) (identical
@@ -377,8 +296,8 @@ def testdata_sf_dirs(root: str = "/root/testdata",
                      max_docs: int = 2000) -> tuple[str, ...]:
     """Discover documents corpora from the testdata layout at call time
     (ADVICE r2: never hardcode sf dirs). Corpora above ``max_docs`` are
-    skipped by default — the pure-Python winnow replay emits ~10.5M golden
-    rows in ~80s at 5000 docs — but the corpus named by ``$MRE_ORACLE_SF``
+    skipped by default — the MinHash replay is pure Python and grows
+    with the corpus — but the corpus named by ``$MRE_ORACLE_SF``
     is ALWAYS included, so running the oracle harness at a bigger sf just
     needs that env var (plus a one-time golden materialization)."""
     import glob
@@ -411,7 +330,7 @@ def _read_texts(sf_dir: str) -> tuple[int, dict[int, str]]:
 
 def write_dedup_goldens(out_dir: str,
                         sf_dirs: tuple[str, ...] | None = None) -> dict:
-    """Materialize the three golden pair tables under ``out_dir``; skipped
+    """Materialize the golden pair tables under ``out_dir``; skipped
     when already present with every corpus_key covered. Returns
     {query_name: parquet_path} plus a ``"coverage"`` entry — a parquet
     listing every corpus_key the goldens were computed for, so oracle SQL
@@ -429,18 +348,6 @@ def write_dedup_goldens(out_dir: str,
         "minhash_near_dups": (
             lambda texts: minhash_pairs_expected(texts, threshold=0.2),
             "est_jaccard", pa.float64()),
-        "simhash_near_dups": (
-            lambda texts: simhash_pairs_expected(texts, max_hamming=3),
-            "hamming", pa.int64()),
-        "winnow_dup_pairs": (
-            lambda texts: winnow_pairs_expected(texts),
-            "n_shared", pa.int64()),
-        # corpus-scale guarded variant (VERDICT r4 #3): same winnowing,
-        # viral fingerprints (df > 20) dropped before pairing — the
-        # max_df value here must match q_winnow_dups' guarded branch
-        "winnow_dup_pairs_guarded": (
-            lambda texts: winnow_pairs_expected(texts, max_df=20),
-            "n_shared", pa.int64()),
     }
     paths = {q: os.path.join(out_dir, f"{q}_golden.parquet") for q in specs}
     if os.path.exists(cov_path) \
@@ -479,6 +386,5 @@ def write_dedup_goldens(out_dir: str,
 
 
 __all__ = ["xxh64", "xxh64_str", "murmur3_32", "spark_pmod_bucket",
-           "minhash_pairs_expected", "simhash_pairs_expected",
-           "winnow_pairs_expected", "write_dedup_goldens",
+           "minhash_pairs_expected", "write_dedup_goldens",
            "lineage_expected", "write_lineage_golden", "testdata_sf_dirs"]

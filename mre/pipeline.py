@@ -178,7 +178,7 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
 
 def run_extract_df(pages: DataFrame, buckets: int,
                    byte_cap: int = DEFAULT_BYTE_CAP,
-                   dedup: Optional[str] = "window",
+                   dedup: str = "window",
                    done: Optional[DataFrame] = None) -> DataFrame:
     """Pages DF → extraction DF (with bookkeeping columns), no sink. The
     one plan builder behind ``run_extract``.
@@ -186,15 +186,13 @@ def run_extract_df(pages: DataFrame, buckets: int,
     Projection to (url, warc_ts, html) happens before the shuffle so
     shuffle bytes stay minimal (P3); html must survive the shuffle — it is
     the UDF's input. Salting comes FIRST, so the corpus shuffles exactly
-    once (see ``run_extract`` for the two ``dedup`` strategies; ``None``
-    skips url dedup, for an input already deduped upstream). ``done`` is a
-    frame of completed ``salt_bucket`` values: a tiny distinct list,
+    once (see ``run_extract`` for the two ``dedup`` strategies). ``done``
+    is a frame of completed ``salt_bucket`` values: a tiny distinct list,
     broadcast-anti-joined BEFORE the shuffle, so completed buckets never
     shuffle their html at all.
     """
-    if dedup not in ("window", "two-phase", None):
-        raise ValueError(
-            f"dedup must be 'window', 'two-phase' or None: {dedup!r}")
+    if dedup not in ("window", "two-phase"):
+        raise ValueError(f"dedup must be 'window' or 'two-phase': {dedup!r}")
     # keep: minimal shuffle payload (P3) + the optional content_type side
     # column (WARC sources carry the HTTP header; it feeds E1's decode)
     keep = ["url", "warc_ts", "html"]

@@ -9,7 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from mre.bpe import (bpe_apply_expr, bpe_learn, bpe_merges_df,
+from mre.bpe import (bpe_learn, bpe_merges_df,
                      bpe_tokenize, tokenize_word, _learn_from_vocab)
 
 
@@ -98,33 +98,6 @@ def test_learn_spark_equals_local(spark, corpus):
             wc.update(w for w in r["text"].split() if w)
     top = sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:50]
     assert merges == _learn_from_vocab(top, 10)
-
-
-def test_expr_equals_udf_path(spark, corpus):
-    merges = bpe_learn(corpus, num_merges=12, vocab_top=50)
-    udf = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"], r["bpe_tokens"])
-           for r in bpe_tokenize(corpus, merges,
-                                 with_tokens=True).collect()}
-    toks = F.transform(
-        F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != ""),
-        lambda w: bpe_apply_expr(w, merges))
-    expr = {r["doc_id"]: (r["n_words"], r["n_bpe"], r["s"])
-            for r in corpus.select(
-                "doc_id", F.size(F.filter(
-                    F.split(F.col("text"), r"\s+"),
-                    lambda w: w != "")).alias("n_words"),
-                F.size(F.split(F.array_join(toks, " "), " "))
-                .alias("n_bpe"),
-                F.array_join(toks, " ").alias("s")).collect()}
-    for did, (nw, nb, s) in udf.items():
-        if did == 200:          # null text: UDF yields 0 tokens
-            assert (nb, s) == (0, None)
-            continue
-        enw, enb, es = expr[did]
-        assert s == es and nw == enw
-        # n_bpe via split-join equals the UDF count unless the doc is
-        # empty (join of zero arrays -> [''] has size 1)
-        assert nb == (enb if s else 0)
 
 
 def test_text_cap(spark, corpus):

@@ -5,7 +5,7 @@ near-dups / contamination, and the stage-lineage resume protocol."""
 import pytest
 from pyspark.sql import functions as F
 
-from mre.curate import curate_df, read_curated, run_curate
+from mre.curate import read_curated, run_curate
 
 # the stages a default run_curate commits, one lineage row each
 CURATE_STAGES = ("quality", "exact_dedup", "near_dup", "decontaminate",
@@ -57,8 +57,22 @@ def evals(spark):
                                  "eval_id long, text string")
 
 
-def test_curate_df_stage_semantics(docs, evals):
-    out = curate_df(docs, evals).collect()
+def _curated(spark, tmp_path, docs, evals, tag="c", **knobs):
+    """A fresh ``run_curate`` of ``docs`` into ``tmp_path/tag``, read
+    back with ``read_curated``; ``evals`` None skips decontamination."""
+    ev = None
+    if evals is not None:
+        ev = str(tmp_path / f"{tag}_evals")
+        evals.write.parquet(ev)
+    dst = str(tmp_path / tag)
+    run_curate(spark, docs, dst, str(tmp_path / f"{tag}_lineage"),
+               run_id=tag, evals_src=ev, **knobs)
+    return read_curated(spark, dst)
+
+
+def test_run_curate_stage_semantics(spark, docs, evals, tmp_path):
+    curated = _curated(spark, tmp_path, docs, evals)
+    out = curated.collect()
     ids = {r["doc_id"] for r in out}
     # quality failure removed
     assert 120 not in ids
@@ -73,11 +87,12 @@ def test_curate_df_stage_semantics(docs, evals):
     assert ids == set(range(20)) | {100, 110}
     # every survivor got a deterministic split; text column dropped
     assert all(r["split"] in ("train", "test") for r in out)
-    cols = {c for c in curate_df(docs, evals).columns}
+    cols = {c for c in curated.columns}
     assert "text" not in cols and "split" in cols
 
 
-def test_curate_df_strict_quality_applies_repetition(spark, docs, evals):
+def test_run_curate_strict_quality_applies_repetition(spark, docs, evals,
+                                                      tmp_path):
     """strict_quality additionally drops docs failing the repetition
     rule: a keyword-stuffed (but otherwise Gopher-passing) doc survives
     the default pipeline and is removed by the strict one."""
@@ -85,16 +100,18 @@ def test_curate_df_strict_quality_applies_repetition(spark, docs, evals):
                + "of a deal to have with that be real here now")
     docs2 = docs.unionByName(spark.createDataFrame(
         [(200, stuffed, "en", "srcC", 0)], docs.schema))
-    loose = {r["doc_id"] for r in curate_df(docs2, evals).collect()}
+    loose = {r["doc_id"] for r in
+             _curated(spark, tmp_path, docs2, evals, "loose").collect()}
     strict = {r["doc_id"] for r in
-              curate_df(docs2, evals, strict_quality=True).collect()}
+              _curated(spark, tmp_path, docs2, evals, "strict",
+                       strict_quality=True).collect()}
     assert 200 in loose
     assert 200 not in strict
     assert strict <= loose
 
 
-def test_curate_df_ngram_battery_drops_five_gram_looper(spark, docs,
-                                                        evals):
+def test_run_curate_ngram_battery_drops_five_gram_looper(spark, docs,
+                                                         evals, tmp_path):
     """ngram_battery (round 7, the full Gopher Table A1 n-gram rules)
     drops a doc whose duplicate 5-gram character fraction exceeds the
     0.15 cut but whose top-bigram occupancy passes the strict rule —
@@ -107,30 +124,30 @@ def test_curate_df_ngram_battery_drops_five_gram_looper(spark, docs,
     docs2 = docs.unionByName(spark.createDataFrame(
         [(210, looped, "en", "srcC", 0)], docs.schema))
     base = {r["doc_id"] for r in
-            curate_df(docs2, evals, strict_quality=True).collect()}
+            _curated(spark, tmp_path, docs2, evals, "base",
+                     strict_quality=True).collect()}
     bat = {r["doc_id"] for r in
-           curate_df(docs2, evals, strict_quality=True,
-                     ngram_battery=True).collect()}
+           _curated(spark, tmp_path, docs2, evals, "bat",
+                    strict_quality=True, ngram_battery=True).collect()}
     assert 210 in base
     assert 210 not in bat
     assert bat <= base
 
 
-def test_curate_df_no_evals_skips_decontamination(docs):
-    ids = {r["doc_id"] for r in curate_df(docs, None).collect()}
+def test_run_curate_no_evals_skips_decontamination(spark, docs, tmp_path):
+    ids = {r["doc_id"] for r in
+           _curated(spark, tmp_path, docs, None).collect()}
     assert 130 in ids  # nothing to decontaminate against
     assert ids == set(range(20)) | {100, 110, 130}
 
 
-def test_curate_output_is_leakage_free(spark, docs, evals):
+def test_curate_output_is_leakage_free(spark, docs, evals, tmp_path):
     """The guarantee the pipeline exists to provide: after keep-one-per-
     cluster, NO confirmed near-dup pair (exact jaccard ≥ threshold) has
-    both members surviving — so none can cross the train/test split
-    (split_leakage over survivors is empty by construction)."""
-    from mre.textops import (jaccard_on_candidates, minhash_near_dups,
-                             split_leakage)
+    both members surviving — so none can cross the train/test split."""
+    from mre.textops import jaccard_on_candidates, minhash_near_dups
 
-    out = curate_df(docs, evals)
+    out = _curated(spark, tmp_path, docs, evals)
     survivors = out.select("doc_id")
     cands = minhash_near_dups(docs, threshold=0.2).select("doc_a", "doc_b")
     confirmed = (jaccard_on_candidates(cands, docs)
@@ -142,9 +159,6 @@ def test_curate_output_is_leakage_free(spark, docs, evals):
                   .join(survivors.withColumnRenamed("doc_id", "doc_b"),
                         "doc_b", "left_semi"))
     assert both_alive.count() == 0
-    leaks = split_leakage(both_alive,
-                          out.select("doc_id", "split"))
-    assert leaks.count() == 0
 
 
 def test_run_curate_resume_is_idempotent(spark, docs, evals, tmp_path):
@@ -274,12 +288,14 @@ def test_run_curate_param_change_recomputes(spark, docs, evals, tmp_path):
     assert spark.read.parquet(lin).count() == 2 * len(CURATE_STAGES)
 
 
-def test_composed_run_releases_caches(spark, docs, evals):
-    """ADVICE r4 cache hygiene: after materializing a composed curate_df
-    plus the self-join textops helpers, release_caches() returns the
-    session to its persisted-RDD baseline (localCheckpoint frames from
-    other tests excluded by baseline diffing)."""
-    from mre.textops import jaccard_pairs, release_caches, winnow_dup_pairs
+def test_composed_run_releases_caches(spark, docs):
+    """ADVICE r4 cache hygiene: after materializing the helpers curation
+    composes (each persists intermediates that feed several join
+    branches), release_caches() returns the session to its
+    persisted-RDD baseline (localCheckpoint frames from other tests
+    excluded by baseline diffing)."""
+    from mre.textops import (jaccard_on_candidates, minhash_near_dups,
+                             release_caches, remove_dup_passages)
 
     def persisted_ids():
         it = spark.sparkContext._jsc.getPersistentRDDs()
@@ -287,9 +303,9 @@ def test_composed_run_releases_caches(spark, docs, evals):
 
     release_caches()  # drop anything earlier module-scoped tests left
     base = persisted_ids()
-    curate_df(docs, evals).count()
-    jaccard_pairs(docs, threshold=0.2).count()
-    winnow_dup_pairs(docs, max_df=50).count()
+    cands = minhash_near_dups(docs, threshold=0.2).select("doc_a", "doc_b")
+    jaccard_on_candidates(cands, docs).count()
+    remove_dup_passages(docs).count()
     assert len(persisted_ids() - base) > 0  # helpers did persist
     n = release_caches()
     assert n >= 3
@@ -507,15 +523,17 @@ def test_run_curate_param_flip_back_recomputes(spark, docs, evals,
 def test_release_caches_is_scopeable(spark, docs, evals):
     """cache_mark/since: releasing a later scope leaves earlier
     registrations (another live plan's caches) untouched."""
-    from mre.textops import (_LIVE_CACHES, cache_mark, jaccard_pairs,
+    from mre.textops import (_LIVE_CACHES, cache_mark,
+                             jaccard_on_candidates, minhash_near_dups,
                              release_caches)
     release_caches()
-    jaccard_pairs(docs, threshold=0.2).count()   # outer plan's caches
+    minhash_near_dups(docs, threshold=0.2).count()   # outer plan's caches
     outer = len(_LIVE_CACHES)
     assert outer > 0
     mark = cache_mark()
-    from mre.textops import winnow_dup_pairs
-    winnow_dup_pairs(docs, max_df=50).count()    # inner job's caches
+    pairs = spark.createDataFrame([(100, 101), (110, 111)],
+                                  "doc_a long, doc_b long")
+    jaccard_on_candidates(pairs, docs).count()       # inner job's caches
     assert len(_LIVE_CACHES) > mark
     release_caches(since=mark)                   # inner job cleans up
     assert len(_LIVE_CACHES) == outer            # outer caches survive
@@ -794,6 +812,17 @@ def test_path_committed_requires_success_marker(spark, tmp_path):
     assert not path_committed(spark, str(tmp_path / "absent"))
 
 
+def test_path_committed_raises_on_io_error(spark):
+    """An I/O error is not "not committed": run_ingest answers False
+    with a recompute, which after a partial index update would drop the
+    whole batch. A filesystem that cannot even be resolved must raise."""
+    from py4j.protocol import Py4JJavaError
+
+    from mre.io import path_committed
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        path_committed(spark, "nosuchfs://bucket/x")
+
+
 def test_dedup_index_param_guard_and_idempotent_update(spark, docs,
                                                        tmp_path):
     """A k/n mismatch with the index's recorded build parameters fails
@@ -1014,8 +1043,9 @@ def test_media_dedup_stage_in_curation(spark, docs, evals, tmp_path):
     Docs whose media payload is byte-identical to a kept doc's are
     dropped (keep-min), docs without media pass through, and the
     'band' mode additionally collapses same-container-geometry
-    payloads whose bytes differ. Exercised through curate_df AND the
-    resumable run_curate (stage lineage row + id-list)."""
+    payloads whose bytes differ. The operator is checked directly in
+    both modes, then through the resumable run_curate (stage lineage
+    row + id-list)."""
     from mre.curate import media_loser_ids
     from mre.multimodal import make_gif, make_png
 
@@ -1032,15 +1062,6 @@ def test_media_dedup_stage_in_curation(spark, docs, evals, tmp_path):
     band_losers = {r["doc_id"]
                    for r in media_loser_ids(media, mode="band").collect()}
     assert band_losers == {1, 3}
-
-    out = curate_df(docs, evals, media=media)
-    ids = {r["doc_id"] for r in out.collect()}
-    assert 1 not in ids          # exact media dup dropped
-    assert {0, 2, 3} <= ids      # keeper + band-only dups survive
-    assert 19 in ids             # doc without media passes through
-    out_band = curate_df(docs, evals, media=media, media_dedup="band")
-    ids_b = {r["doc_id"] for r in out_band.collect()}
-    assert 1 not in ids_b and 3 not in ids_b and {0, 2} <= ids_b
 
     # the resumable job: media_dedup gets a lineage row + an id-list
     src = str(tmp_path / "docs")
@@ -1173,8 +1194,8 @@ def test_lm_filter_stage_in_curation(spark, docs, evals, tmp_path):
     """Round-7 CCNet-family perplexity filter: a quality-passing doc
     made of out-of-vocab gibberish scores a strictly higher mean NLL
     than every normal survivor; with a threshold between the two, the
-    lm_filter stage drops exactly it — through curate_df AND the
-    resumable run_curate (lineage row + id-list, resume no-op)."""
+    lm_filter stage of the resumable run_curate drops it (lineage row
+    + id-list, resume no-op)."""
     from mre.curate import exact_keeper_ids, lm_keep_ids, quality_keep_ids
     from mre.textops import lm_learn, lm_score, lm_vocab_rows
 
@@ -1196,13 +1217,6 @@ def test_lm_filter_stage_in_curation(spark, docs, evals, tmp_path):
     rest_max = max(v for k, v in scores.items() if k != 140)
     assert scores[140] > rest_max
     thr = (scores[140] + rest_max) // 2
-
-    base_ids = {r["doc_id"] for r in curate_df(docs2, evals).collect()}
-    lm_ids = {r["doc_id"]
-              for r in curate_df(docs2, evals, lm_max_nll=thr,
-                                 lm_vocab_top=64).collect()}
-    assert 140 in base_ids
-    assert lm_ids == base_ids - {140}
 
     # zero-token docs have no evidence -> dropped by the keep filter
     empty = spark.createDataFrame([(1, "aa bb aa"), (2, "   ")],
@@ -1380,19 +1394,6 @@ def test_run_curate_dsir_select_stage(spark, docs, evals, tmp_path):
     before = read_curate_lineage(spark, lin).count()
     run_curate(spark, src, dst, lin, run_id="ds1", dsir_top_frac=0.5)
     assert read_curate_lineage(spark, lin).count() == before
-
-
-def test_curate_df_dsir_matches_run_curate(spark, docs, tmp_path):
-    """The single-DataFrame API applies the same DSIR cut."""
-    out = {r["doc_id"] for r in
-           curate_df(docs, None, dsir_top_frac=0.5).collect()}
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    dst, lin = str(tmp_path / "c2"), str(tmp_path / "l2")
-    run_curate(spark, src, dst, lin, run_id="ds2", dsir_top_frac=0.5)
-    split = {r["doc_id"]
-             for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert out == split and out
 
 
 def test_run_curate_semantic_dedup_stage(spark, docs, evals, tmp_path):

@@ -92,7 +92,6 @@ def test_query_matches_oracle(spark, name):
 
 
 @pytest.mark.parametrize("name", ["minhash_near_dups", "dup_clusters",
-                                  "split_leakage", "winnow_dup_pairs",
                                   "lineage_rollup"])
 def test_coverage_guard_fires_on_uncovered_corpus(name):
     """ADVICE r3: the loud-coverage probe must error on an UNCOVERED

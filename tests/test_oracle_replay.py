@@ -1,12 +1,10 @@
 """Unit tests for mre.oracle_replay — the independent (no-Spark) replays
-that back the MinHash/SimHash/winnowing driver oracles. The full
+that back the MinHash driver oracles. The full
 differential against the live Spark queries runs in test_entry_oracle.py;
 these pin the building blocks."""
 
-from mre.oracle_replay import (_round_half_up, _simhash, _tokens,
-                               minhash_pairs_expected,
-                               simhash_pairs_expected,
-                               winnow_pairs_expected, xxh64, xxh64_str)
+from mre.oracle_replay import (_round_half_up, _tokens,
+                               minhash_pairs_expected, xxh64, xxh64_str)
 
 # Vectors verified against Spark's xxhash64() (seed 42) in-session.
 XXH64_SPARK_VECTORS = {
@@ -40,25 +38,15 @@ def test_round_half_up_vs_bankers():
     assert _round_half_up(0.5, 0) == 1.0
 
 
-def test_simhash_single_token_is_its_hash_bits():
-    h = xxh64_str("alpha")
-    assert _simhash("alpha") == h
-
-
 def test_identical_docs_pair_everywhere():
     texts = {1: "alpha beta gamma delta epsilon zeta",
              2: "alpha beta gamma delta epsilon zeta",
              3: "completely different words here now okay"}
     mh = minhash_pairs_expected(texts, threshold=0.2)
     assert (1, 2, 1.0) in mh
-    sh = simhash_pairs_expected(texts, max_hamming=3)
-    assert (1, 2, 0) in sh
-    wn = winnow_pairs_expected(texts, min_shared=1)
-    assert any(p[:2] == (1, 2) for p in wn)
 
 
 def test_disjoint_docs_never_pair():
     texts = {1: "aaa bbb ccc ddd eee fff",
              2: "ggg hhh iii jjj kkk lll"}
     assert minhash_pairs_expected(texts, threshold=0.2) == []
-    assert winnow_pairs_expected(texts, min_shared=1) == []

@@ -10,7 +10,6 @@ from hypothesis import strategies as st
 from mre.core.extract import extract_one
 from mre.core.fuzzydate import parse_date, parse_time
 from mre.core.htmlparse import parse_doc
-from mre.core.pdftext import extract_pdf_text
 from mre.core.textutil import collapse_ws, decode_html
 
 SETTINGS = dict(max_examples=200, deadline=None)
@@ -63,13 +62,6 @@ def test_extract_one_total(b):
     assert r.url == "https://fuzz.example/a/1"
     if not r.ok:
         assert r.headline is None and r.extracted_text is None
-
-
-@given(st.binary(max_size=2048))
-@settings(**SETTINGS)
-def test_pdf_total(b):
-    out = extract_pdf_text(b)
-    assert out is None or isinstance(out, str)
 
 
 @given(st.text(max_size=500))

@@ -206,23 +206,22 @@ def test_new_ops_plan_shapes(spark):
 
     sf = "/root/testdata/sf0.001"
 
-    # url_dedup (round-7 norm/cap/uf/robots union): explode + regex
+    # url_dedup (round-7 norm/uf/robots union): explode + regex
     # normalize + the URL-filter scoring are pure projections — the
-    # norm groupBy and the cap window are the only corpus-keyed
-    # Exchanges; the robots branch adds its bounded 20-row host
-    # distinct plus the robots-table BroadcastExchange (a fifth
-    # Exchange string means a corpus-keyed shuffle crept in)
+    # norm groupBy is the only corpus-keyed Exchange; the robots branch
+    # adds its bounded 20-row host distinct plus the robots-table
+    # BroadcastExchange (a fourth Exchange string means a corpus-keyed
+    # shuffle crept in)
     plan = em.queries()["url_dedup"](spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 4, plan
+    assert plan.count("Exchange") == 3, plan
     assert plan.count("BroadcastExchange") == 1, plan
     assert "BatchEvalPython" not in plan and "EvalPython" not in plan
 
-    # hash_sample: the flat/strat md5-bucket filters are JVM-side over
-    # the scan (no shuffle of their own); the round-7 budget branch
-    # carries the two-phase prefix sum's exactly FOUR Exchanges
-    # (phase-1 window, bucket-totals partial agg, tiny offsets window,
-    # broadcast join back — budget_sample / pack_sequences);
+    # hash_sample: the round-7 budget branch carries the two-phase
+    # prefix sum's exactly FOUR Exchanges (phase-1 window, bucket-totals
+    # partial agg, tiny offsets window, broadcast join back —
+    # budget_sample);
     # the dsir branch adds exactly ONE more (the survivor tie-rank
     # window) because learning and the top-k threshold resolve to
     # literals at plan-construction time (bounded collects) — a sixth
@@ -235,18 +234,11 @@ def test_new_ops_plan_shapes(spark):
     assert "NestedLoop" not in plan, plan
     assert "EvalPython" not in plan
 
-    # profile_docs: single wide aggregate — the documents parquet is
-    # scanned exactly once despite profiling 5 columns
-    plan = em.queries()["profile_docs"](spark, sf) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1, plan
-
-    # ivf_ann: candidate restriction is a broadcast equi-join on cell,
+    # semdedup: the within-cell block pairs are an equi-join on cell,
     # never a cartesian product
-    plan = em.queries()["ivf_ann"](spark, sf) \
+    plan = em.queries()["semdedup"](spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_round3_ops_plan_shapes(spark):
@@ -269,14 +261,6 @@ def test_round3_ops_plan_shapes(spark):
     assert "InMemoryTableScan" in plan, plan[:2000]
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
     assert "BatchEvalPython" not in plan
-
-    # top_ngrams: map-side partial aggregation before the shuffle (only
-    # (ngram, count) rows move) and a TakeOrdered top-k, not a global sort
-    plan = em.queries()["top_ngrams"](spark, sf) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "partial_count" in plan, plan[:2000]
-    assert "TakeOrderedAndProject" in plan, plan[:2000]
-    assert plan.count("Scan parquet") == 1, plan[:2000]
 
     # dup_clusters: the returned labels frame must be localCheckpoint-
     # truncated — its plan is a bare RDD scan projection, NOT the nested

@@ -1,5 +1,6 @@
-"""Property-level tests for the near-dup / similarity operators that have
-no SQL oracle: MinHash-LSH, SimHash, LSH-ANN (recall vs brute force)."""
+"""Property-level tests for the curation operators in mre.textops: the
+near-dup family (MinHash-LSH, exact Jaccard on candidates, clustering),
+the quality and rewrite rules, and the sampling/selection operators."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,13 +22,42 @@ def docs_with_dups(spark):
     return base.unionByName(near).unionByName(exact)
 
 
+def _exact_jaccard(docs, n=3, threshold=0.0):
+    """Reference exact word n-gram Jaccard over every doc pair, in pure
+    Python on oracle_replay's Spark-faithful tokenizer and HALF_UP
+    rounding: {(doc_a, doc_b): round(J, 4)} for pairs sharing at least
+    one shingle with J >= threshold."""
+    from mre.oracle_replay import _round_half_up, _tokens
+    sets = {}
+    for r in docs.collect():
+        t = _tokens(r["text"])
+        if len(t) >= n:
+            sets[r["doc_id"]] = {" ".join(t[i:i + n])
+                                 for i in range(len(t) - n + 1)}
+    ids = sorted(sets)
+    out = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            inter = len(sets[a] & sets[b])
+            if inter:
+                j = _round_half_up(
+                    inter / (len(sets[a]) + len(sets[b]) - inter))
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
 def test_exact_dedup_finds_exact_copies(spark, docs_with_dups):
-    from mre.textops import exact_dedup
-    out = exact_dedup(docs_with_dups)
-    dups = out.filter(F.col("n_copies") >= 2)
-    assert dups.count() == 50  # each base doc + its +20000 copy
+    from mre.curate import exact_keeper_ids
+    keepers = {r["doc_id"]
+               for r in exact_keeper_ids(docs_with_dups).collect()}
+    base = {r["doc_id"]
+            for r in docs_with_dups.filter("doc_id < 10000").collect()}
+    # each base doc + its +20000 copy collapse to one keeper
+    assert len(keepers) == docs_with_dups.count() - 50
     # keeper is always the min doc_id (the base one)
-    assert dups.filter(F.col("keeper_doc_id") >= 10000).count() == 0
+    assert base <= keepers
+    assert not keepers & {i + 20000 for i in base}
 
 
 def test_minhash_finds_planted_near_dups(spark, docs_with_dups):
@@ -45,13 +75,11 @@ def test_minhash_finds_planted_near_dups(spark, docs_with_dups):
 
 
 def test_minhash_est_vs_exact_jaccard(spark, docs_with_dups):
-    from mre.textops import jaccard_pairs, minhash_near_dups
+    from mre.textops import minhash_near_dups
     est = {(r["doc_a"], r["doc_b"]): r["est_jaccard"]
            for r in minhash_near_dups(docs_with_dups, threshold=0.3)
            .collect()}
-    exact = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-             for r in jaccard_pairs(docs_with_dups, threshold=0.3)
-             .collect()}
+    exact = _exact_jaccard(docs_with_dups, threshold=0.3)
     common = set(est) & set(exact)
     assert common, "estimator and exact sets should overlap"
     # MinHash is an unbiased estimator; mean abs error should be modest
@@ -59,107 +87,18 @@ def test_minhash_est_vs_exact_jaccard(spark, docs_with_dups):
     assert sum(errs) / len(errs) < 0.2
 
 
-def test_simhash_deterministic_and_exact_copy_zero_distance(
-        spark, docs_with_dups):
-    from mre.textops import simhash
-    sh = {r["doc_id"]: r["simhash"]
-          for r in simhash(docs_with_dups).collect()}
-    for i in [d for d in sh if d < 10000]:
-        assert sh[i] == sh[i + 20000]  # identical text → identical simhash
-    sh2 = {r["doc_id"]: r["simhash"]
-           for r in simhash(docs_with_dups).collect()}
-    assert sh == sh2
-
-
-def test_simhash_near_dups_find_near_copies(spark, docs_with_dups):
-    from mre.textops import simhash_near_dups
-    pairs = simhash_near_dups(docs_with_dups, max_hamming=8)
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    exact_pairs = {(i, i + 20000) for i in
-                   [r["doc_id"] for r in docs_with_dups
-                    .filter("doc_id < 10000").collect()]}
-    assert exact_pairs <= found
-
-
-def test_ann_lsh_recall_vs_brute_force(spark):
-    from mre.textops import ann_brute_force, ann_lsh
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = ann_brute_force(emb, n_queries=5, k=10)
-    lsh = ann_lsh(emb, n_queries=5, k=10, n_planes=4)
-    bf_set = {(r["query_id"], r["neighbor_id"]) for r in bf.collect()}
-    lsh_rows = lsh.collect()
-    lsh_set = {(r["query_id"], r["neighbor_id"]) for r in lsh_rows}
-    # approximate: some recall expected with 4 planes (16 buckets over 500)
-    assert len(lsh_set & bf_set) > 0
-    # every LSH neighbour's cosine must match the brute-force cosine for
-    # the same pair (same scoring path)
-    bf_cos = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-              for r in bf.collect()}
-    for r in lsh_rows:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in bf_cos:
-            assert abs(r["cosine"] - bf_cos[key]) < 1e-9
-
-
-def test_cosine_blocks_bounded_and_blocking_invariant(spark):
-    """VERDICT r4 #1: with the count-derived default, no collect_list
-    block row grows with the corpus (rows/block stays ~block_rows), and
-    the pair OUTPUT is identical under any explicit blocking."""
-    from mre.textops import _cosine_blocks, cosine_dup_pairs
-
-    # 20k tiny vectors — large enough for balls-in-bins concentration
-    n, block_rows = 20000, 256
-    emb = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.array((F.col("id") % 7).cast("double") + 1.0,
-                (F.col("id") % 3).cast("double")).alias("embedding"))
-    n_blocks = -(-n // block_rows)
-    sizes = (_cosine_blocks(emb, n_blocks)
-             .select(F.size("rows").alias("s")).collect())
-    assert len(sizes) == n_blocks
-    assert sum(r["s"] for r in sizes) == n
-    # expectation is 256/block; hash spread keeps the max well bounded —
-    # the property that matters: independent of n, never O(corpus)
-    assert max(r["s"] for r in sizes) <= 2 * block_rows
-
-    # blocking-invariance of the OUTPUT on a small slice
-    small = emb.filter("vec_id < 300")
-    a = {(r["vec_a"], r["vec_b"], r["cosine"])
-         for r in cosine_dup_pairs(small, threshold=0.99,
-                                   n_blocks=1).collect()}
-    b = {(r["vec_a"], r["vec_b"], r["cosine"])
-         for r in cosine_dup_pairs(small, threshold=0.99,
-                                   n_blocks=7).collect()}
-    c = {(r["vec_a"], r["vec_b"], r["cosine"])
-         for r in cosine_dup_pairs(small, threshold=0.99,
-                                   block_rows=64).collect()}
-    assert a == b == c and len(a) > 0
-
-
 def test_lang_id_priority_tiebreak(spark):
-    from mre.textops import lang_id
+    from mre.textops import lang_pred_expr
     pdf = spark.createDataFrame(
         [(1, "the cat and the dog"),     # en markers
          (2, "le chat et la porte"),     # fr markers
          (3, "qwzx bnmp vvvv"),          # nothing → und
          (4, "der hund und die katze")],  # de markers
         ["doc_id", "text"])
-    out = {r["doc_id"]: r["pred_lang"] for r in lang_id(pdf).collect()}
+    out = {r["doc_id"]: r["pred_lang"] for r in
+           pdf.select("doc_id", lang_pred_expr().alias("pred_lang"))
+           .collect()}
     assert out == {1: "en", 2: "fr", 3: "und", 4: "de"}
-
-
-def test_winnow_fingerprints_and_pairs(spark, docs_with_dups):
-    from mre.textops import winnow_dup_pairs, winnow_fingerprints
-    fps = {r["doc_id"]: r["fingerprints"]
-           for r in winnow_fingerprints(docs_with_dups).collect()}
-    base_ids = [d for d in fps if d < 10000]
-    # identical text → identical fingerprint sets
-    for i in base_ids:
-        assert fps[i] == fps[i + 20000]
-    # exact copies share all fingerprints → pairs found
-    pairs = winnow_dup_pairs(docs_with_dups, min_shared=3)
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-    assert {(i, i + 20000) for i in base_ids} <= found
 
 
 def test_minhash_bucket_cap_prunes_hot_buckets(spark):
@@ -182,20 +121,18 @@ def test_minhash_bucket_cap_prunes_hot_buckets(spark):
 
 def test_jaccard_on_candidates_matches_corpus_wide(spark, docs_with_dups):
     """The candidate-restricted exact Jaccard must equal the corpus-wide
-    inverted-index result on every pair it is given, and must keep
+    all-pairs reference on every pair it is given, and must keep
     zero-overlap candidate pairs at 0.0 instead of dropping them."""
-    from mre.textops import (jaccard_on_candidates, jaccard_pairs,
-                             minhash_near_dups)
+    from mre.textops import jaccard_on_candidates, minhash_near_dups
 
     cands = minhash_near_dups(docs_with_dups, threshold=0.3) \
         .select("doc_a", "doc_b")
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
            for r in jaccard_on_candidates(cands, docs_with_dups).collect()}
     assert set(got) == {(r["doc_a"], r["doc_b"]) for r in cands.collect()}
-    ref = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in jaccard_pairs(docs_with_dups, threshold=0.0).collect()}
+    ref = _exact_jaccard(docs_with_dups)
     for pair, j in got.items():
-        # pairs sharing no shingle don't appear in the inverted index
+        # pairs sharing no shingle don't appear in the reference
         assert j == ref.get(pair, 0.0)
 
 
@@ -211,23 +148,6 @@ def test_jaccard_on_candidates_zero_overlap_pair(spark):
            for r in jaccard_on_candidates(pairs, docs).collect()}
     assert got[(1, 2)] == 0.0            # kept, not dropped
     assert got[(1, 3)] == 0.3333         # 1 shared 3-gram of 3 total
-
-
-def test_sentence_dedup_hot_key(spark):
-    """One viral boilerplate sentence shared by 500 docs (the skew case
-    the reduced join-back side exists for) must still count correctly."""
-    from mre.textops import sentence_dedup_stats
-
-    viral = "All rights reserved by the publisher of this fine website."
-    rows = [(i, f"Document {i} body sentence number {i} padded out. "
-             + viral) for i in range(500)]
-    rows.append((1000, "A unique document with one lonely sentence here."))
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r["doc_id"]: (r["n_sents"], r["n_dup_sents"], r["flag_dup"])
-           for r in sentence_dedup_stats(docs).collect()}
-    assert got[7] == (2, 1, 1)      # own sentence + viral one → 50% dup
-    assert got[1000] == (1, 0, 0)   # unique doc untouched
-    assert sum(v[1] for v in got.values()) == 500  # viral counted once/doc
 
 
 def test_dup_clusters_chain_and_islands(spark):
@@ -325,44 +245,10 @@ def test_gopher_repetition_flags_stuffed_docs(spark):
     assert 3200 <= got[1]["top_ngram_bp"] <= 3400
 
 
-def test_split_leakage_flags_only_crossers(spark):
-    from mre.textops import split_leakage
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (1, 3)],
-                                  ["doc_a", "doc_b"])
-    splits = spark.createDataFrame(
-        [(1, "train"), (2, "test"), (3, "train")], ["doc_id", "split"])
-    got = {(r["doc_a"], r["doc_b"]) for r in
-           split_leakage(pairs, splits).collect()}
-    assert got == {(1, 2), (2, 3)}  # (1,3) is train/train — no leak
-
-
-def test_jaccard_pairs_max_df_guard(spark):
-    """max_df drops stop-shingles from the inverted index: a viral
-    boilerplate shingle can no longer connect the whole corpus, while
-    pairs sharing rare shingles keep their (filtered-space) jaccard."""
-    from mre.textops import jaccard_pairs
-
-    viral = "all rights reserved by this site"  # 6-token stop text
-    rows = [(i, f"unique words number {i} only here. " + viral)
-            for i in range(30)]
-    rows += [(100, "green tea brewing methods compared carefully today"),
-             (101, "green tea brewing methods compared carefully today")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    wide = jaccard_pairs(docs, threshold=0.01).count()
-    guarded = jaccard_pairs(docs, threshold=0.01, max_df=5)
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in guarded.collect()}
-    assert wide >= 30 * 29 / 2       # boilerplate connects everything
-    assert set(got) == {(100, 101)}  # only the true near-dup survives
-    assert got[(100, 101)] == 1.0
-
-
 def test_near_dup_family_hot_bucket_guards(spark):
-    """max_bucket / max_df are reachable from every user-facing near-dup
-    op (minhash, simhash, winnow) and prune hot clusters consistently."""
-    from mre.textops import (minhash_near_dups, simhash_near_dups,
-                             winnow_dup_pairs)
+    """max_bucket is reachable from the user-facing MinHash near-dup op
+    and prunes a hot cluster while the true pair survives."""
+    from mre.textops import minhash_near_dups
 
     viral = ("the exact same viral boilerplate body repeated verbatim "
              "across this entire cluster of documents forever and ever")
@@ -375,16 +261,6 @@ def test_near_dup_family_hot_bucket_guards(spark):
     mh = {(r["doc_a"], r["doc_b"]) for r in
           minhash_near_dups(docs, threshold=0.9, max_bucket=5).collect()}
     assert mh == {(100, 101)}
-
-    assert simhash_near_dups(docs).count() >= 66
-    sh = {(r["doc_a"], r["doc_b"]) for r in
-          simhash_near_dups(docs, max_bucket=5).collect()}
-    assert sh == {(100, 101)}
-
-    assert winnow_dup_pairs(docs).count() >= 66
-    wn = {(r["doc_a"], r["doc_b"]) for r in
-          winnow_dup_pairs(docs, max_df=5).collect()}
-    assert wn == {(100, 101)}
 
 
 def test_remove_dup_passages_strips_planted_boilerplate(spark):
@@ -538,32 +414,6 @@ def test_remove_dup_windows_identity_and_boilerplate(spark):
         assert out2[i]["bytes_removed"] == len(boiler) + 1
 
 
-def test_stratified_sample_quotas_and_stability(spark):
-    from mre.textops import hash_sample, stratified_sample
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = stratified_sample(docs, "text", "lang",
-                            {"en": 0.0, "fr": 1.0}, default_rate=0.05)
-    rows = out.collect()
-    langs = {r["lang"] for r in rows}
-    assert "en" not in langs                       # rate 0 → none
-    n_fr_all = docs.filter("lang = 'fr'").count()
-    assert sum(r["lang"] == "fr" for r in rows) == n_fr_all  # rate 1 → all
-    # per-stratum decisions match the flat sampler at the same rate
-    # (same bucket function → same kept set)
-    flat5 = {r["doc_id"]
-             for r in hash_sample(docs, "text", 0.05).collect()}
-    others = {r["doc_id"] for r in rows
-              if r["lang"] not in ("en", "fr")}
-    flat_others = {r["doc_id"] for r in docs.join(
-        spark.createDataFrame([(d,) for d in flat5], "doc_id long"),
-        "doc_id", "left_semi").filter("lang not in ('en','fr')")
-        .collect()}
-    assert others == flat_others
-    # deterministic: re-evaluation returns the identical set
-    assert {r["doc_id"] for r in out.collect()} \
-        == {r["doc_id"] for r in rows}
-
-
 def test_c4_line_clean_rules(spark):
     """Each C4 rule on a hand-built page (round 7): terminal-punct
     keep, min-words drop, javascript-line drop, lorem-ipsum and
@@ -594,32 +444,6 @@ def test_c4_line_clean_rules(spark):
     # bytes_removed is exact
     assert out[1]["bytes_removed"] \
         == len(pages[0][1]) - len(out[1]["text"])
-
-
-def test_domain_cap_exact_and_salted(spark):
-    """domain_cap keeps the n lowest order-col docs per host (www./
-    case/port/path noise normalized away); the salted two-phase
-    variant returns the identical kept set."""
-    from mre.textops import domain_cap
-    rows = [(i, f"https://{'WWW.' if i % 3 == 0 else ''}"
-                f"Host-{i % 4}.example.com/p/{i}") for i in range(80)]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = domain_cap(df, 5)
-    got = [(r["domain"], r["doc_id"], r["domain_rank"])
-           for r in out.orderBy("domain", "domain_rank").collect()]
-    assert len(got) == 20      # 4 domains x cap 5
-    for d in range(4):
-        expect = sorted(i for i in range(80) if i % 4 == d)[:5]
-        keep = [i for dom, i, _ in got
-                if dom == f"host-{d}.example.com"]
-        assert keep == expect
-        ranks = [rk for dom, _, rk in got
-                 if dom == f"host-{d}.example.com"]
-        assert ranks == [1, 2, 3, 4, 5]
-    # exact two-phase equivalence on the same input
-    salted = {(r["domain"], r["doc_id"], r["domain_rank"])
-              for r in domain_cap(df, 5, salt=7).collect()}
-    assert salted == set(got)
 
 
 def test_lm_learn_score(spark):
@@ -827,36 +651,6 @@ def test_budget_sample(spark):
     assert got_w == replay({"A": 40, "B": 100})  # B not in map -> full
 
 
-def test_pack_sequences(spark):
-    """GPT-style packing (round 7): per-source hash-order concatenation
-    cut every seq_len tokens, replayed in pure Python; a doc straddling
-    a cut spans both sequences."""
-    import hashlib
-    from mre.textops import pack_sequences
-    rows = [(i, f"doc {i} " + "tok " * (i % 7), "A" if i % 2 else "B")
-            for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "source string")
-    got = {r["doc_id"]: (r["cum_before"], r["first_seq"], r["last_seq"],
-                         r["n_seqs"])
-           for r in pack_sequences(docs, 16).collect()}
-    by_src = {}
-    for i, t, s in rows:
-        by_src.setdefault(s, []).append(
-            (hashlib.md5(t.encode()).hexdigest(), i,
-             len(t.strip().split())))
-    expect = {}
-    for s, lst in by_src.items():
-        cum = 0
-        for h, i, n in sorted(lst):
-            first, last = cum // 16, max((cum + n - 1) // 16, cum // 16)
-            expect[i] = (cum, first, last, last - first + 1)
-            cum += n
-    assert got == expect
-    # at least one doc straddles a 16-token boundary in this corpus
-    assert any(v[3] > 1 for v in got.values())
-
-
 def test_nb_train_score(spark):
     """Self-trained multinomial NB (round 7): hand corpus with two
     separable classes, full micro-nat replay in pure Python (counts,
@@ -911,7 +705,7 @@ def test_hash_order_cumsum_bucket_width_invariance(spark):
     width (1 hex digit = 16 buckets, 2 = 256): (bucket, rest-of-hash)
     ordering equals global hash ordering for every prefix length, so
     widening the fan-out for huge sources cannot change a single row."""
-    from mre.textops import budget_sample, pack_sequences
+    from mre.textops import budget_sample
     rows = [(i, f"d{i} " + "w " * (i % 11), f"s{i % 3}")
             for i in range(120)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, "
@@ -921,12 +715,6 @@ def test_hash_order_cumsum_bucket_width_invariance(spark):
     b = {(r["doc_id"], r["cum_tokens"])
          for r in budget_sample(docs, 55, bucket_hex_digits=2).collect()}
     assert a == b and a
-    pa = {(r["doc_id"], r["cum_before"], r["first_seq"], r["last_seq"])
-          for r in pack_sequences(docs, 16).collect()}
-    pb = {(r["doc_id"], r["cum_before"], r["first_seq"], r["last_seq"])
-          for r in pack_sequences(docs, 16,
-                                  bucket_hex_digits=3).collect()}
-    assert pa == pb and len(pa) == 120
 
 
 def test_dsir_weights_match_python_replay(spark):
@@ -1105,27 +893,3 @@ def test_mixture_weights_bp_replay_and_temperature(spark):
             for r in mixture_weights_bp(docs, alpha_bp=5000).collect()}
     # temperature compresses: 90:10 natural (9000 bp) → ~3:1
     assert 7000 < half["big"] < 8000 and half["small"] > 2000
-
-
-def test_ivf_ann_learned_recall_and_scoring(spark):
-    """The learned-quantizer IVF returns the same cosine as brute
-    force for every pair it surfaces, with nonzero recall, and never
-    a query's own vector."""
-    from mre.textops import ann_brute_force, ivf_ann_learned
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bf = {(r["query_id"], r["neighbor_id"]): r["cosine"]
-          for r in ann_brute_force(emb, n_queries=5, k=10).collect()}
-    rows = ivf_ann_learned(emb, n_queries=5, k=10).collect()
-    assert rows and all(r["query_id"] != r["neighbor_id"] for r in rows)
-    hits = [r for r in rows
-            if (r["query_id"], r["neighbor_id"]) in bf]
-    assert hits
-    for r in hits:
-        assert abs(r["cosine"] - bf[(r["query_id"],
-                                     r["neighbor_id"])]) < 1e-9
-    # per query at most k rows, ranks dense from 1
-    per = {}
-    for r in rows:
-        per.setdefault(r["query_id"], []).append(r["rank"])
-    for q, rk in per.items():
-        assert sorted(rk) == list(range(1, len(rk) + 1)), q
