@@ -16,14 +16,14 @@ Layout
 ``mre.io``          — source/sink abstraction (parquet in sandbox, Iceberg in
                       prod behind the same call sites)
 ``mre.fixtures``    — deterministic synthetic corpus (FIXTURES.md spec)
-``mre.textops``     — the operators curation composes: fingerprints,
-                      MinHash-LSH + exact Jaccard confirm, clustering,
-                      decontamination, quality/LM/NB rules, SemDeDup,
-                      DSIR, mixture sampling, hash split
-``mre.curate``      — composed curation stages, run_curate / run_corpus,
-                      incremental ingest dedup against a corpus index
-``mre.multimodal``  — binary-column (image/audio/video) header sniffing
-                      and media dedup; no pixel decode
+``mre.textops``     — the operators curation composes: Gopher quality
+                      rules, fingerprints, MinHash-LSH + exact Jaccard
+                      confirm, clustering, decontamination, hash split
+``mre.curate``      — the five curation stages (quality → exact dedup →
+                      near-dup → decontaminate → split), run_curate /
+                      run_corpus, incremental ingest dedup against a
+                      corpus index
+``mre.linkgraph``   — robots.txt evaluation and the re-crawl fetch plan
 ``mre.streaming``   — Structured Streaming ingest (dedup vs the index)
 """
 

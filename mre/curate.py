@@ -8,6 +8,8 @@ user journey over a documents table, as one resumable job.
 Every stage exists (and is individually oracled) in ``mre.textops``; this
 module wires them into the single pipeline a 100 TB curation run actually
 executes, with the same stage-lineage/resume story ``run_extract`` has.
+These five stages are the whole pipeline; a stage belongs here only while a
+checked workload (``corpus_e2e``, the ``curation_pipeline`` oracle) runs it.
 
 Scale design (10^12 docs):
 * Stage checkpoints are NARROW — each stage materializes only the
@@ -30,6 +32,7 @@ Scale design (10^12 docs):
 from __future__ import annotations
 
 import time
+from collections import Counter
 from typing import Optional
 
 from pyspark import StorageLevel
@@ -38,60 +41,18 @@ from pyspark.sql import functions as F
 
 from .io import read_if_present, read_table, write_append, write_overwrite
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
-                      gopher_quality, gopher_repetition, hash_split,
-                      jaccard_on_candidates, minhash_bands,
-                      minhash_near_dups, minhash_signatures, pii_scrub)
+                      gopher_quality, hash_split, jaccard_on_candidates,
+                      minhash_bands, minhash_near_dups, minhash_signatures)
 
 
 # --------------------------------------------------------------------------
 # per-stage id computations (each returns a narrow doc_id frame)
 
 
-def quality_keep_ids(docs: DataFrame, strict: bool = False,
-                     pii_max: int | None = None,
-                     ngram_battery: bool = False) -> DataFrame:
+def quality_keep_ids(docs: DataFrame) -> DataFrame:
     """Stage 1 — docs passing all Gopher quality rules. Linear, pure
-    column expressions (mre.textops.gopher_quality), no shuffle.
-    ``strict`` additionally requires the repetition + format battery:
-    top-bigram occupancy ≤ the Gopher cut (``gopher_repetition``), the
-    duplicate-line/paragraph fraction rules (``gopher_dup_sections``,
-    round 7) — count-carrying doc_id-keyed shuffles; docs without
-    newline structure pass the section rules trivially — and the
-    bullet/ellipsis line-format rules (``gopher_line_rules``, round 7
-    — zero-shuffle column expressions). ``ngram_battery`` (round 7,
-    opt-in on top of ``strict`` because it is the one expensive member:
-    a 9-way n-gram explode) additionally requires the FULL Table A1
-    n-gram repetition battery (``gopher_ngram_battery``: top 2/3/4-gram
-    and duplicate 5..10-gram character fractions under the published
-    cuts). ``pii_max`` (VERDICT r4 #4) additionally drops docs with
-    more than that many PII matches (emails + phones + IPv4 literals,
-    mre.textops.pii_scrub) — another pure projection, no shuffle."""
-    keep = gopher_quality(docs).filter(F.col("keep") == 1).select("doc_id")
-    if strict:
-        from .textops import gopher_dup_sections, gopher_line_rules
-        rep = (gopher_repetition(docs)
-               .filter(F.col("pass_repetition") == 1).select("doc_id"))
-        keep = keep.join(rep, "doc_id", "left_semi")
-        sec = (gopher_dup_sections(docs)
-               .filter(F.col("pass_dup_sections") == 1).select("doc_id"))
-        keep = keep.join(sec, "doc_id", "left_semi")
-        fmt = (gopher_line_rules(docs)
-               .filter(F.col("pass_line_rules") == 1).select("doc_id"))
-        keep = keep.join(fmt, "doc_id", "left_semi")
-    if ngram_battery:
-        from .textops import gopher_ngram_battery
-        # one row per (doc, n) — the verdict repeats, so pick one n
-        # rather than paying a distinct shuffle
-        bat = (gopher_ngram_battery(docs)
-               .filter((F.col("n") == 2)
-                       & (F.col("pass_ngram_battery") == 1))
-               .select("doc_id"))
-        keep = keep.join(bat, "doc_id", "left_semi")
-    if pii_max is not None:
-        ok = (pii_scrub(docs).filter(F.col("n_pii") <= pii_max)
-              .select("doc_id"))
-        keep = keep.join(ok, "doc_id", "left_semi")
-    return keep
+    column expressions (mre.textops.gopher_quality), no shuffle."""
+    return gopher_quality(docs).filter(F.col("keep") == 1).select("doc_id")
 
 
 def exact_keeper_ids(docs: DataFrame) -> DataFrame:
@@ -138,75 +99,6 @@ def contaminated_ids(docs: DataFrame, evals: DataFrame, *, n: int = 5,
             .select("doc_id").distinct())
 
 
-def lm_keep_ids(docs: DataFrame, max_nll_micro: int,
-                vocab_top: int = 4096) -> DataFrame:
-    """LM perplexity-filter stage (round 7, CCNet-family — Wenzek et
-    al. 2020, self-trained: no external model files exist here): learn
-    a unigram LM over ``docs`` (``textops.lm_learn`` — one map-side-
-    combinable token-count shuffle, bounded vocab), score every doc
-    (``lm_score`` — a map-literal fold, pure projection, zero shuffle)
-    and keep doc_ids whose mean negative log-likelihood in MICRO-NATS
-    is ≤ ``max_nll_micro`` (perplexity = exp(nll/1e6), same ordering —
-    e.g. 7_000_000 ≈ perplexity 1096). Zero-token docs have no
-    evidence and are dropped (their score is NULL, which the ≤ filter
-    rejects). Training on the post-dedup survivors is deliberate:
-    duplicated boilerplate would otherwise dominate the unigram
-    counts, the failure CCNet orders dedup-before-LM to avoid."""
-    from .textops import lm_learn, lm_score, lm_vocab_rows
-    vocab, total = lm_learn(docs, vocab_top=vocab_top)
-    return (lm_score(docs, lm_vocab_rows(vocab), total)
-            .filter(F.col("nll_micro_mean") <= int(max_nll_micro))
-            .select("doc_id"))
-
-
-def media_loser_ids(media: DataFrame, mode: str = "exact", *,
-                    size_bucket_bytes: int | None = None) -> DataFrame:
-    """Media-payload dedup stage (VERDICT r6 #2) — the doc_ids to DROP
-    from a (doc_id, payload) media table: every doc that is not its
-    group's min doc_id, grouped by sha1 payload digest
-    (``mode='exact'``) or by no-decode container band (``mode='band'``
-    — fmt + sniffed dimensions, optionally a byte-size bucket; the
-    aggressive analogue for re-encoded copies, see
-    ``mre.multimodal.media_band_dedup``). Same keep-min semantics as
-    text exact dedup. Emitting LOSERS (anti-join shape) means docs
-    with no media row pass the stage untouched — a mixed corpus is the
-    normal case. One digest/band-keyed window shuffle; payload bytes
-    never shuffle in exact mode."""
-    from .multimodal import media_band_dedup, media_exact_dedup
-    m = media.select(F.col("doc_id").alias("media_id"), "payload")
-    if mode == "exact":
-        d = media_exact_dedup(m)
-    elif mode == "band":
-        d = media_band_dedup(m, size_bucket_bytes=size_bucket_bytes)
-    else:
-        raise ValueError(f"media dedup mode must be 'exact'|'band', "
-                         f"got {mode!r}")
-    return (d.filter(F.col("media_id") != F.col("keeper_id"))
-            .select(F.col("media_id").alias("doc_id")))
-
-
-def semantic_loser_ids(embeddings: DataFrame, *, k: int = 64,
-                       iters: int = 3,
-                       threshold: float = 0.95) -> DataFrame:
-    """Semantic (embedding-level) dedup stage — SemDeDup over a
-    (doc_id, embedding) side table: the doc_ids to DROP because their
-    embedding has an in-threshold lower-id neighbour in its k-means
-    cell (``textops.semdedup_losers``; greedy keep-by-lowest-id, the
-    shared dedup keep rule modulo cluster-min). Anti-join shape like
-    ``media_loser_ids``: docs without an embedding row pass untouched.
-    k bounds the within-cell quadratic — size it so corpus/k vectors
-    fit a matmul tile at the target scale."""
-    from .textops import semdedup_losers
-    emb = embeddings.select(F.col("doc_id").alias("vec_id"),
-                            "embedding")
-    return (semdedup_losers(emb, k=k, iters=iters, threshold=threshold)
-            .select(F.col("vec_id").alias("doc_id")))
-
-
-# --------------------------------------------------------------------------
-# the composed pipeline as one DataFrame (driver-checkable, no sink)
-
-
 # --------------------------------------------------------------------------
 # the resumable job (stage lineage, same story as run_extract)
 
@@ -221,33 +113,45 @@ def _params_hash(**params) -> str:
     return hashlib.md5(canon.encode("utf-8")).hexdigest()[:16]
 
 
-def completed_stages(spark: SparkSession, lineage_dst: str,
-                     run_id: str, params_hash: str | None = None) -> set:
-    """Stages already committed for this run_id (≤10 names — the collect
-    is a constant, never corpus-shaped). With ``params_hash`` given, a
-    stage only counts as done if its LATEST lineage row (max attempt —
-    the row describing what is actually on disk, since stage outputs are
-    overwrites) committed it under the SAME parameter digest: matching
-    any historical row would wrongly reuse stale outputs when a run_id's
-    parameters are flipped back to an earlier set (A → B → A). Rows from
-    a pre-params_hash lineage table are conservatively treated as
-    parameter-mismatched (recompute — the overwrite sinks make that
-    correct, merely not free). No lineage table means none; a lineage
-    table that fails to read raises."""
+def _lineage_rows(spark: SparkSession, lineage_dst: str,
+                  run_id: str) -> list[dict]:
+    """This run's lineage rows as dicts (a few per stage — the collect is
+    a constant, never corpus-shaped). No lineage table means none; a
+    lineage table that fails to read raises."""
     lin = read_if_present(spark, lineage_dst)
     if lin is None:
+        return []
+    return [r.asDict() for r in
+            lin.filter(F.col("run_id") == run_id).collect()]
+
+
+def _done_stages(rows: list[dict], params_hash: str | None) -> set:
+    """Stages the lineage rows commit. With ``params_hash`` given, a
+    stage only counts as done if its LATEST row (max attempt, then max
+    completed_at — the row describing what is actually on disk, since
+    stage outputs are overwrites) committed it under the SAME parameter
+    digest: matching any historical row would wrongly reuse stale
+    outputs when a run_id's parameters are flipped back to an earlier
+    set (A → B → A). Rows from a pre-params_hash lineage table are
+    conservatively treated as parameter-mismatched (recompute — the
+    overwrite sinks make that correct, merely not free)."""
+    if params_hash is None:
+        return {r["stage"] for r in rows}
+    if rows and "params_hash" not in rows[0]:
         return set()
-    lin = lin.filter(F.col("run_id") == run_id)
-    if params_hash is not None:
-        if "params_hash" not in lin.columns:
-            return set()
-        from pyspark.sql import Window
-        w = Window.partitionBy("stage").orderBy(
-            F.desc("attempt"), F.desc("completed_at"))
-        lin = (lin.withColumn("_rn", F.row_number().over(w))
-               .filter((F.col("_rn") == 1)
-                       & (F.col("params_hash") == params_hash)))
-    return {r["stage"] for r in lin.select("stage").distinct().collect()}
+    latest = {}
+    for r in sorted(rows, key=lambda r: (r["attempt"], r["completed_at"])):
+        latest[r["stage"]] = r
+    return {s for s, r in latest.items() if r["params_hash"] == params_hash}
+
+
+def completed_stages(spark: SparkSession, lineage_dst: str,
+                     run_id: str, params_hash: str | None = None) -> set:
+    """Stages already committed for this run_id (see ``_done_stages``
+    for how ``params_hash`` narrows them). No lineage table means none;
+    a lineage table that fails to read raises."""
+    return _done_stages(_lineage_rows(spark, lineage_dst, run_id),
+                        params_hash)
 
 
 def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
@@ -255,32 +159,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                shingle_n: int = 3, minhash_threshold: float = 0.2,
                jaccard_threshold: float = 0.5, contamination_n: int = 5,
                contamination_min_shared: int = 1, train_frac: float = 0.9,
-               strict_quality: bool = False, pii_max: int | None = None,
-               ngram_battery: bool = False,
-               max_bucket: int | None = None, resume: bool = True,
-               rewrite: str | None = None,
-               rewrite_max_df: int = 1,
-               media_src: Optional[str] = None,
-               media_dedup: str = "exact",
-               bpe_merges: int = 0,
-               bpe_vocab_top: int = 5000,
-               line_clean: bool = False,
-               lm_max_nll: int | None = None,
-               lm_vocab_top: int = 4096,
-               url_gate: bool = False,
-               token_budget: int | None = None,
-               budget_weights_bp: dict[str, int] | None = None,
-               budget_temperature_bp: int | None = None,
-               nb_gate: bool = False,
-               nb_vocab_top: int = 4096,
-               dsir_top_frac: float | None = None,
-               dsir_target_lang: str = "en",
-               embeddings_src: Optional[str] = None,
-               semdedup_k: int = 64, semdedup_iters: int = 3,
-               semdedup_threshold: float = 0.95,
-               robots_src: Optional[str] = None,
-               robots_agent: str = "mrebot",
-               input_tag: Optional[str] = None) -> None:
+               max_bucket: int | None = None, resume: bool = True) -> None:
     """Run the curation pipeline end-to-end with stage checkpoints.
 
     ``src`` is a documents table (doc_id, text, …) — a path/URI, or a
@@ -299,161 +178,22 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
     (write-then-commit, overwrite sinks). A recomputed stage appends a
     new lineage row with a bumped ``attempt`` counter, so duplicate
     (run_id, stage) rows are ordered and rollups can pick the latest
-    (ADVICE r4).
-
-    ``rewrite`` (round 6, opt-in) inserts a boilerplate-REWRITE stage
-    between quality and exact dedup: ``'passages'`` strips '. '-spans
-    (``remove_dup_passages``) and ``'windows'`` strips 8-token runs
-    (``remove_dup_windows``) whose digest recurs in more than
-    ``rewrite_max_df`` distinct docs. Running the rewrite BEFORE dedup
-    is the point: two docs that differ only in shared boilerplate
-    become exact duplicates and collapse in the next stage. Unlike the
-    id-list stages this one materializes ``{dst}/rewrite`` =
-    (doc_id, text) — a rewrite IS new corpus data (one corpus-text
-    write, same class as the extract sink; SURVEY §7.4 rule 24 governs
-    checkpoints, not data products) — and every downstream stage reads
-    its text from there. Default None leaves the pipeline exactly as
-    before.
-
-    ``media_src`` (round 7, VERDICT r6 #2): optional (doc_id, payload)
-    table of media attachments — inserts a ``media_dedup`` stage after
-    text exact dedup (exact sha1 payload dedup, or no-decode banding
-    with ``media_dedup='band'``; docs without media pass through). Like
-    every other stage it materializes a narrow id-list and is resumed
-    through the lineage.
-
-    ``bpe_merges`` > 0 (round 7, VERDICT r6 #4) appends a token-
-    accounting tail after the split: ``{dst}/bpe_merges`` = the BPE
-    merge table learned FROM THE SURVIVING CORPUS (mre.bpe.bpe_learn —
-    one word-count aggregation + the driver loop over a bounded
-    top-``bpe_vocab_top`` vocab), and ``{dst}/tokens`` = per-doc
-    (n_words, n_bpe_tokens) under those merges — the numbers a training
-    run budgets against, measured with the tokenizer the corpus itself
-    induces. Both resume through the lineage like every other stage;
-    the default (0) leaves the pipeline byte-identical.
-
-    ``line_clean`` (round 7) prepends the C4 line-level scrub
-    (``textops.c4_line_clean`` — the public C4 recipe: terminal-punct /
-    min-words / javascript line rules, lorem-ipsum / curly-brace page
-    drops) as stage 0: pages failing the page rules are dropped and
-    every survivor's text is rewritten to its kept lines, so all later
-    stages (quality, dedup, decontamination, split, BPE) see the
-    cleaned text. Off by default — the input docs must carry
-    newline-structured text for the rules to be meaningful.
-
-    ``lm_max_nll`` (round 7) inserts a CCNet-family unigram-LM
-    perplexity filter (``lm_keep_ids``) as an ``lm_filter`` stage
-    between exact/media dedup and near-dup: the LM is learned from the
-    dedup survivors (one token-count shuffle + a bounded
-    ``lm_vocab_top``-row vocab), scoring is a zero-shuffle map-literal
-    fold, and docs whose mean NLL exceeds the threshold (micro-nats;
-    perplexity = exp(nll/1e6)) are dropped before the most expensive
-    stage. Resumes through the lineage like every other stage.
-
-    ``url_gate`` (round 7) prepends the RefinedWeb-family URL filter
-    (``textops.url_filter``: blocklist score, digit-heavy hosts, length
-    cut — zero-shuffle projections) as the very first stage; requires a
-    ``url`` column (the extraction output has one) and raises if the
-    corpus lacks it. ``token_budget`` (round 7) inserts a
-    ``budget_sample`` mixture-assembly stage after decontamination:
-    the fully-curated survivors fill each source's token budget
-    (``budget_weights_bp`` = mixture shares in basis points; absent
-    sources get the flat cap) in deterministic content-hash order, and
-    only the sampled docs reach the split.
-    ``budget_temperature_bp`` (round 7) derives those shares from the
-    survivors themselves instead: temperature-scaled
-    share_s ∝ n_s^(alpha/10000) (``textops.mixture_weights_bp``, the
-    UniMax device), computed INSIDE the stage from the decontaminated
-    survivor counts (bounded per-source collect) — mutually exclusive
-    with an explicit ``budget_weights_bp``.
-
-    ``nb_gate`` (round 7) inserts an ``nb_filter`` stage right after
-    quality — the CCNet bootstrap: a multinomial Naive Bayes
-    classifier (``textops.nb_train``, bounded ``nb_vocab_top`` vocab)
-    is trained on the heuristic gate's own pass/fail verdicts and
-    quality survivors the classifier rejects are dropped; if either
-    verdict class is empty the stage is a recorded no-op.
-
-    ``dsir_top_frac`` (round 7) inserts a ``dsir_select`` stage after
-    decontamination (before the token-budget mixture): DSIR importance
-    selection (Xie et al. 2023) keeps the top fraction of survivors by
-    hashed-ngram importance weight toward the ``dsir_target_lang``
-    subset of the survivors themselves (the in-corpus stand-in for an
-    external target corpus). Learn = one feature-count shuffle to a
-    bounded 256-bucket log-ratio table; score = a zero-shuffle map-
-    literal fold; select = the sort-free histogram top-k
-    (``textops.dsir_topk``). Resumes through the lineage like every
-    other stage.
-
-    ``embeddings_src`` (round 7): an optional (doc_id, embedding)
-    side table — inserts a ``semantic_dedup`` stage (SemDeDup,
-    ``semantic_loser_ids``) right after media dedup: embeddings are
-    restricted to LIVE docs first (a dead doc can never claim
-    keeper-min over a surviving copy — the media-dedup rule), docs
-    whose embedding has an in-threshold lower-id neighbour in its
-    k-means cell are dropped, docs without an embedding row pass
-    through.
-
-    ``robots_src`` (round 7): an optional (host, robots_txt) table —
-    inserts a ``robots_filter`` stage right after the URL gate: docs
-    whose url the host's robots.txt disallows for ``robots_agent``
-    (REAL stdlib parser, RFC group selection —
-    ``mre.linkgraph.robots_allowed``) are dropped; hosts with no
-    robots row allow everything. Requires a ``url`` column like
-    ``url_gate``.
-
-    ``input_tag`` folds an upstream-input marker into the parameter
-    digest: a caller that pre-filters the corpus (e.g. run_corpus's
-    host-rank gate) tags the input so a changed pre-filter recomputes
-    stages instead of silently resuming against different data."""
+    (ADVICE r4). The run's lineage rows are read once, up front: they
+    give both the committed stages and each stage's next attempt."""
     from .textops import cache_mark, release_caches
-    if rewrite not in (None, "passages", "windows"):
-        raise ValueError(f"rewrite must be None|'passages'|'windows', "
-                         f"got {rewrite!r}")
     _mark = cache_mark()
     docs = src if isinstance(src, DataFrame) else read_table(spark, src)
     evals = read_table(spark, evals_src) if evals_src else None
-    media = read_table(spark, media_src) if media_src else None
-    emb = (read_table(spark, embeddings_src)
-           if embeddings_src else None)
     ph = _params_hash(
         evals_src=evals_src, shingle_n=shingle_n,
         minhash_threshold=minhash_threshold,
         jaccard_threshold=jaccard_threshold,
         contamination_n=contamination_n,
         contamination_min_shared=contamination_min_shared,
-        train_frac=train_frac, strict_quality=strict_quality,
-        pii_max=pii_max, ngram_battery=ngram_battery,
-        max_bucket=max_bucket,
-        rewrite=rewrite, rewrite_max_df=rewrite_max_df,
-        media_src=media_src, media_dedup=media_dedup,
-        bpe_merges=bpe_merges, bpe_vocab_top=bpe_vocab_top,
-        line_clean=line_clean,
-        lm_max_nll=lm_max_nll, lm_vocab_top=lm_vocab_top,
-        url_gate=url_gate, token_budget=token_budget,
-        budget_weights_bp=(tuple(sorted(budget_weights_bp.items()))
-                           if budget_weights_bp else None),
-        budget_temperature_bp=budget_temperature_bp,
-        nb_gate=nb_gate, nb_vocab_top=nb_vocab_top,
-        dsir_top_frac=dsir_top_frac,
-        dsir_target_lang=dsir_target_lang if dsir_top_frac else None,
-        embeddings_src=embeddings_src,
-        semdedup=((semdedup_k, semdedup_iters, semdedup_threshold)
-                  if embeddings_src else None),
-        robots_src=robots_src,
-        robots_agent=robots_agent if robots_src else None,
-        input_tag=input_tag)
-    done = completed_stages(spark, lineage_dst, run_id, ph) if resume \
-        else set()
-
-    def _attempt(name: str) -> int:
-        """1 + number of lineage rows already present for (run_id,
-        stage) — tiny table, constant-shaped read."""
-        lin = read_if_present(spark, lineage_dst)
-        if lin is None:
-            return 1
-        return 1 + lin.filter((F.col("run_id") == run_id)
-                              & (F.col("stage") == name)).count()
+        train_frac=train_frac, max_bucket=max_bucket)
+    rows = _lineage_rows(spark, lineage_dst, run_id)
+    done = _done_stages(rows, ph) if resume else set()
+    attempts = Counter(r["stage"] for r in rows)
 
     def _stage(name: str, build, n_in_df: DataFrame) -> DataFrame:
         """Skip-or-run one stage; returns its (re)readable output."""
@@ -470,133 +210,17 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
         n_out = out.count()
         wall_ms = int((time.monotonic() - t0) * 1000)
         row = spark.createDataFrame(
-            [(run_id, name, n_in, n_out, wall_ms, ph, _attempt(name))],
+            [(run_id, name, n_in, n_out, wall_ms, ph, attempts[name] + 1)],
             "run_id string, stage string, n_in long, n_out long, "
             "wall_ms long, params_hash string, attempt long")
         write_append(row.withColumn("completed_at", F.current_timestamp()),
                      lineage_dst)
         return out
 
-    if url_gate:
-        # stage 0 — the RefinedWeb-family URL gate, BEFORE any content
-        # work (zero-shuffle projection; cheapest possible first cut)
-        if "url" not in docs.columns:
-            raise ValueError(
-                "url_gate=True needs a 'url' column on the corpus "
-                "(extraction output has one; plain documents tables "
-                "may not)")
-        from .textops import url_filter as _url_filter
-        _pre_url = docs
-        sU = _stage("url_filter",
-                    lambda: _url_filter(_pre_url)
-                    .filter(F.col("keep_url") == 1).select("doc_id"),
-                    _pre_url)
-        docs = docs.join(sU, "doc_id", "left_semi")
-    if robots_src is not None:
-        # crawl-policy compliance — drop robots-disallowed docs before
-        # any content work (the other stage-0 family member)
-        if "url" not in docs.columns:
-            raise ValueError(
-                "robots_src needs a 'url' column on the corpus")
-        from .linkgraph import robots_allowed
-        robots = read_table(spark, robots_src)
-        _pre_rb = docs
-        sR0 = _stage(
-            "robots_filter",
-            lambda: _pre_rb.select("doc_id", "url")
-            .join(robots_allowed(_pre_rb.select("url"), robots,
-                                 agent=robots_agent)
-                  .filter(F.col("allowed") == 1).select("url"),
-                  "url", "left_semi").select("doc_id"),
-            _pre_rb)
-        docs = docs.join(sR0, "doc_id", "left_semi")
-    if line_clean:
-        from .textops import c4_line_clean
-        _raw = docs
-        sL = _stage("line_clean",
-                    lambda: c4_line_clean(_raw)
-                    .filter(F.col("keep") == 1)
-                    .select("doc_id", "text"),
-                    _raw)
-        # downstream stages see the page-filtered, line-rewritten text
-        # with the original metadata columns riding along
-        docs = _raw.drop("text").join(sL, "doc_id")
-    s1 = _stage("quality",
-                lambda: quality_keep_ids(docs, strict=strict_quality,
-                                         pii_max=pii_max,
-                                         ngram_battery=ngram_battery),
-                docs)
-    if nb_gate:
-        # CCNet-style bootstrap: train a Naive Bayes classifier on the
-        # heuristic gate's own verdicts (pass=1 / fail=0) and keep only
-        # quality survivors the classifier ALSO accepts — boundary docs
-        # that merely squeak past the rules but read like the rejected
-        # class are dropped. Degenerate corpora (either class empty)
-        # skip the stage as a no-op rather than failing the run.
-        from .textops import nb_score, nb_train
-        _s1_pre_nb = s1
-
-        def _nb_keep():
-            labeled = docs.join(
-                _s1_pre_nb.withColumn("label", F.lit(1)),
-                "doc_id", "left").withColumn(
-                "label", F.coalesce("label", F.lit(0)))
-            try:
-                model, meta = nb_train(labeled, "label",
-                                       vocab_top=nb_vocab_top)
-            except ValueError:
-                return _s1_pre_nb
-            ok = (nb_score(docs, model, meta)
-                  .filter(F.col("nb_pred") == 1).select("doc_id"))
-            return _s1_pre_nb.join(ok, "doc_id", "left_semi")
-
-        s1 = _stage("nb_filter", _nb_keep, _s1_pre_nb)
+    s1 = _stage("quality", lambda: quality_keep_ids(docs), docs)
     d2 = docs.join(s1, "doc_id", "left_semi")
-    base = docs
-    if rewrite is not None:
-        from .textops import remove_dup_passages, remove_dup_windows
-        _rw = (remove_dup_passages if rewrite == "passages"
-               else remove_dup_windows)
-        sR = _stage("rewrite",
-                    lambda: _rw(d2, max_df=rewrite_max_df)
-                    .select("doc_id", "text"),
-                    s1)
-        # downstream stages consume the REWRITTEN text with the
-        # original metadata columns riding along
-        base = docs.drop("text").join(sR, "doc_id")
-        d2 = base
     s2 = _stage("exact_dedup", lambda: exact_keeper_ids(d2), s1)
-    if media is not None:
-        _s2_text = s2   # pin: the lambda must see the TEXT-dedup ids
-        s2 = _stage(
-            "media_dedup",
-            lambda: _s2_text.join(
-                media_loser_ids(
-                    media.join(_s2_text, "doc_id", "left_semi"),
-                    mode=media_dedup),
-                "doc_id", "left_anti"),
-            _s2_text)
-    if emb is not None:
-        _s2_text2 = s2   # pin: the lambda must see the pre-semantic ids
-        s2 = _stage(
-            "semantic_dedup",
-            lambda: _s2_text2.join(
-                semantic_loser_ids(
-                    emb.join(_s2_text2, "doc_id", "left_semi"),
-                    k=semdedup_k, iters=semdedup_iters,
-                    threshold=semdedup_threshold),
-                "doc_id", "left_anti"),
-            _s2_text2)
-    if lm_max_nll is not None:
-        _s2_pre_lm = s2   # pin: the lambda must see the pre-LM ids
-        s2 = _stage(
-            "lm_filter",
-            lambda: _s2_pre_lm.join(
-                lm_keep_ids(base.join(_s2_pre_lm, "doc_id", "left_semi"),
-                            lm_max_nll, vocab_top=lm_vocab_top),
-                "doc_id", "left_semi"),
-            _s2_pre_lm)
-    d3 = base.join(s2, "doc_id", "left_semi")
+    d3 = docs.join(s2, "doc_id", "left_semi")
     s3 = _stage(
         "near_dup",
         lambda: s2.join(
@@ -606,7 +230,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                                max_bucket=max_bucket),
             "doc_id", "left_anti"),
         s2)
-    d4 = base.join(s3, "doc_id", "left_semi")
+    d4 = docs.join(s3, "doc_id", "left_semi")
     if evals is not None:
         s4 = _stage(
             "decontaminate",
@@ -617,62 +241,10 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
             s3)
     else:
         s4 = _stage("decontaminate", lambda: s3, s3)
-    if dsir_top_frac is not None:
-        # DSIR selection — keep the top fraction of fully-deduped,
-        # decontaminated survivors by importance weight toward the
-        # target-language subset, before mixture assembly sees them
-        from .textops import dsir_topk
-        _s4_pre_d = s4
-
-        def _dsir():
-            surv = base.join(_s4_pre_d, "doc_id", "left_semi")
-            k = int(surv.count() * float(dsir_top_frac))
-            return dsir_topk(surv,
-                             F.col("lang") == dsir_target_lang,
-                             k).select("doc_id")
-
-        s4 = _stage("dsir_select", _dsir, _s4_pre_d)
-    if token_budget is not None:
-        # mixture assembly — fill the per-source token budget from the
-        # fully-curated survivors, before the split freezes the corpus
-        from .textops import budget_sample, mixture_weights_bp
-        if budget_weights_bp and budget_temperature_bp is not None:
-            raise ValueError("budget_weights_bp and "
-                             "budget_temperature_bp are mutually "
-                             "exclusive")
-        _s4_pre_b = s4
-
-        def _budget():
-            surv = base.join(_s4_pre_b, "doc_id", "left_semi")
-            wbp = budget_weights_bp
-            if budget_temperature_bp is not None:
-                # bounded per-source collect, computed inside the
-                # stage so a resumed run never pays it
-                wbp = {r["source"]: int(r["weight_bp"])
-                       for r in mixture_weights_bp(
-                           surv, alpha_bp=budget_temperature_bp)
-                       .collect()}
-            return budget_sample(surv, token_budget,
-                                 weights_bp=wbp).select("doc_id")
-
-        s4 = _stage("budget_sample", _budget, _s4_pre_b)
-    d5 = base.join(s4, "doc_id", "left_semi")
+    d5 = docs.join(s4, "doc_id", "left_semi")
     _stage("split",
            lambda: hash_split(d5, "text", train_frac).drop("text"),
            s4)
-    if bpe_merges > 0:
-        from .bpe import bpe_learn, bpe_merges_df, bpe_tokenize
-        sM = _stage(
-            "bpe_merges",
-            lambda: bpe_merges_df(
-                spark, bpe_learn(d5, num_merges=bpe_merges,
-                                 vocab_top=bpe_vocab_top)),
-            s4)
-        # ≤ bpe_merges rows by construction — bounded, never
-        # corpus-shaped; ordered so application replays rank order
-        merges = [(r["left"], r["right"], r["cnt"])
-                  for r in sM.orderBy("rank").collect()]
-        _stage("tokens", lambda: bpe_tokenize(d5, merges), sM)
     # every stage is materialized to parquet above — the intermediates
     # the textops helpers persisted DURING THIS JOB are dead weight from
     # here on; scoped to the entry mark so checkpoints owned by other
@@ -1410,9 +982,7 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
                evals_src: Optional[str] = None,
                buckets: Optional[int] = None, dedup: str = "window",
                resume: bool = True, materialize_documents: bool = False,
-               wide_id: bool = False,
-               host_rank_top_frac: float | None = None,
-               host_rank_iters: int = 4, **curate_knobs) -> None:
+               wide_id: bool = False, **curate_knobs) -> None:
     """The end-to-end corpus job: crawl pages → extraction → curation,
     one command, with lineage for BOTH halves under one root.
 
@@ -1439,19 +1009,8 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
     bucket (run_extract's broadcast anti-join), the curation half per
     stage (run_curate's lineage). ``wide_id`` threads the 128-bit
     doc-identity knob through the adapter (see extracted_to_documents).
-    ``curate_knobs`` pass through to run_curate (thresholds, pii_max,
-    strict_quality, max_bucket, ...).
-
-    ``host_rank_top_frac`` (round 7): the link-based host-quality
-    prior — anchors are extracted from the RAW crawl pages (the only
-    place the HTML still exists) through the extraction parser,
-    PageRank runs ``host_rank_iters`` integer rounds over the weighted
-    host graph (mre/linkgraph.py), and only docs whose host ranks in
-    the top fraction (by rank_micro desc, host asc — the exact
-    ``topk_by_weight`` device) enter curation. The pre-filter is
-    folded into the curation parameter digest via ``input_tag`` so a
-    changed fraction recomputes stages instead of silently resuming
-    against different data."""
+    ``curate_knobs`` pass through to run_curate (thresholds,
+    train_frac, max_bucket, ...)."""
     from .pipeline import read_results, run_extract
     run_extract(spark, src, f"{workdir}/extracted",
                 f"{workdir}/lineage/extract", run_id=run_id,
@@ -1478,31 +1037,14 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
         # the copy was paid for — curate from it (narrower scans than
         # re-projecting the url-keyed extraction sink per stage)
         docs = read_table(spark, f"{workdir}/documents")
-    tag = curate_knobs.pop("input_tag", None)
-    if host_rank_top_frac is not None:
-        from .linkgraph import extract_links, host_edges, pagerank_hosts
-        from .textops import topk_by_weight
-        pages = read_table(spark, src).select("url", "html")
-        pr = pagerank_hosts(
-            host_edges(extract_links(pages)), iters=host_rank_iters)
-        n_hosts = pr.count()
-        allow = topk_by_weight(
-            pr, int(n_hosts * float(host_rank_top_frac)),
-            weight_col="rank_micro", id_col="host").select(
-            F.col("host").alias("source"))
-        docs = docs.join(F.broadcast(allow), "source", "left_semi")
-        tag = f"{tag or ''}|hostrank:{host_rank_top_frac}" \
-              f":{host_rank_iters}"
     run_curate(spark, docs, f"{workdir}/curated",
                f"{workdir}/lineage/curate", run_id=run_id,
-               evals_src=evals_src, resume=resume, input_tag=tag,
-               **curate_knobs)
+               evals_src=evals_src, resume=resume, **curate_knobs)
 
 
 __all__ = ["run_curate", "read_curated", "completed_stages",
            "quality_keep_ids", "exact_keeper_ids", "near_dup_loser_ids",
-           "contaminated_ids", "media_loser_ids", "semantic_loser_ids",
-           "read_curate_lineage",
+           "contaminated_ids", "read_curate_lineage",
            "extracted_to_documents", "run_corpus",
            "build_dedup_index", "update_dedup_index", "dedup_increment",
            "compact_dedup_index", "remove_from_dedup_index"]

@@ -38,52 +38,13 @@ def main() -> None:
     ap.add_argument("--dedup", choices=("window", "two-phase"),
                     default="window")
     ap.add_argument("--train-frac", type=float, default=0.9)
-    ap.add_argument("--strict-quality", action="store_true")
-    ap.add_argument("--pii-max", type=int, default=None)
     ap.add_argument("--max-bucket", type=int, default=None)
-    ap.add_argument("--rewrite", choices=("passages", "windows"),
-                    default=None,
-                    help="insert the boilerplate-rewrite curation stage "
-                         "(see run_curate.py --rewrite)")
-    ap.add_argument("--rewrite-max-df", type=int, default=1)
     ap.add_argument("--materialize-documents", action="store_true",
                     help="also write the doc_id-keyed corpus copy under "
                          "{workdir}/documents (skipped on no-op resume); "
                          "default is the zero-copy lazy adapter")
     ap.add_argument("--wide-id", action="store_true",
                     help="128-bit doc identity (doc_id + doc_id_hi)")
-    ap.add_argument("--url-gate", action="store_true",
-                    help="RefinedWeb URL filter as curation stage 0 "
-                         "(the extraction output carries url)")
-    ap.add_argument("--ngram-battery", action="store_true",
-                    help="full Gopher Table A1 n-gram repetition rules "
-                         "in the quality stage")
-    ap.add_argument("--nb-gate", action="store_true",
-                    help="CCNet-style Naive Bayes bootstrap on the "
-                         "quality gate's verdicts")
-    ap.add_argument("--lm-max-nll", type=int, default=None,
-                    help="unigram-LM perplexity cut in micro-nats")
-    ap.add_argument("--line-clean", action="store_true",
-                    help="C4 line-level cleaning as stage 0")
-    ap.add_argument("--token-budget", type=int, default=None,
-                    help="per-source training-token budget before the "
-                         "split (mixture assembly)")
-    ap.add_argument("--bpe-merges", type=int, default=0,
-                    help="learn a BPE merge table from the survivors "
-                         "and write per-doc token accounting")
-    ap.add_argument("--dsir-top-frac", type=float, default=None,
-                    help="DSIR importance selection: keep this fraction "
-                         "of curated survivors by importance weight "
-                         "toward the target-language subset")
-    ap.add_argument("--dsir-target-lang", default="en",
-                    help="target language for --dsir-top-frac")
-    ap.add_argument("--host-rank-frac", type=float, default=None,
-                    help="link-based host prior: PageRank the host "
-                         "graph extracted from the raw crawl pages and "
-                         "keep only docs from the top fraction of hosts")
-    ap.add_argument("--robots", default=None,
-                    help="optional (host, robots_txt) table enabling "
-                         "the robots_filter crawl-policy stage")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -96,23 +57,9 @@ def main() -> None:
                    evals_src=args.evals, buckets=args.buckets,
                    dedup=args.dedup, resume=not args.no_resume,
                    train_frac=args.train_frac,
-                   strict_quality=args.strict_quality,
-                   pii_max=args.pii_max, max_bucket=args.max_bucket,
-                   rewrite=args.rewrite,
-                   rewrite_max_df=args.rewrite_max_df,
+                   max_bucket=args.max_bucket,
                    materialize_documents=args.materialize_documents,
-                   wide_id=args.wide_id,
-                   url_gate=args.url_gate,
-                   ngram_battery=args.ngram_battery,
-                   nb_gate=args.nb_gate,
-                   lm_max_nll=args.lm_max_nll,
-                   line_clean=args.line_clean,
-                   token_budget=args.token_budget,
-                   bpe_merges=args.bpe_merges,
-                   dsir_top_frac=args.dsir_top_frac,
-                   dsir_target_lang=args.dsir_target_lang,
-                   host_rank_top_frac=args.host_rank_frac,
-                   robots_src=args.robots)
+                   wide_id=args.wide_id)
     finally:
         spark.stop()
 

@@ -44,93 +44,7 @@ def main() -> None:
     ap.add_argument("--contamination-n", type=int, default=5)
     ap.add_argument("--min-shared", type=int, default=1)
     ap.add_argument("--train-frac", type=float, default=0.9)
-    ap.add_argument("--strict-quality", action="store_true",
-                    help="also require the Gopher repetition + format "
-                         "rules (top-bigram occupancy, duplicate line/"
-                         "paragraph fractions, bullet/ellipsis lines) "
-                         "in the quality stage")
-    ap.add_argument("--ngram-battery", action="store_true",
-                    help="also require the full Gopher Table A1 n-gram "
-                         "repetition battery (top 2/3/4-gram and "
-                         "duplicate 5..10-gram char fractions) — the "
-                         "expensive member, a 9-way n-gram explode")
-    ap.add_argument("--pii-max", type=int, default=None,
-                    help="drop docs with more than this many PII matches "
-                         "(emails+phones+IPv4; default: rule off)")
     ap.add_argument("--max-bucket", type=int, default=None)
-    ap.add_argument("--rewrite", choices=("passages", "windows"),
-                    default=None,
-                    help="insert a boilerplate-rewrite stage before "
-                         "dedup: strip '. '-spans (passages) or 8-token "
-                         "runs (windows) recurring in > --rewrite-max-df "
-                         "distinct docs; docs differing only in shared "
-                         "boilerplate then collapse as exact dups")
-    ap.add_argument("--rewrite-max-df", type=int, default=1)
-    ap.add_argument("--media-src", default=None,
-                    help="(doc_id, payload) media table: inserts a "
-                         "media-payload dedup stage after text exact "
-                         "dedup (docs without media pass through)")
-    ap.add_argument("--media-dedup", choices=("exact", "band"),
-                    default="exact",
-                    help="exact = sha1 byte dedup; band = no-decode "
-                         "container banding (fmt + sniffed dims)")
-    ap.add_argument("--line-clean", action="store_true",
-                    help="prepend the C4 line-level scrub (terminal-"
-                         "punct/min-words/javascript line rules + "
-                         "lorem-ipsum/curly-brace page drops); input "
-                         "text must be newline-structured")
-    ap.add_argument("--bpe-merges", type=int, default=0,
-                    help="learn this many BPE merges from the surviving "
-                         "corpus and write {dst}/bpe_merges + {dst}/tokens "
-                         "(per-doc subword counts — the training-budget "
-                         "numbers); 0 disables")
-    ap.add_argument("--bpe-vocab-top", type=int, default=5000,
-                    help="vocabulary cap for BPE learning (most-frequent "
-                         "words; bounded driver-side merge loop)")
-    ap.add_argument("--lm-max-nll", type=int, default=None,
-                    help="opt-in CCNet-family unigram-LM perplexity "
-                         "filter: drop docs whose mean NLL exceeds this "
-                         "many micro-nats (perplexity = exp(nll/1e6)); "
-                         "the LM is learned from the dedup survivors")
-    ap.add_argument("--lm-vocab-top", type=int, default=4096,
-                    help="unigram-LM vocab size for --lm-max-nll")
-    ap.add_argument("--url-gate", action="store_true",
-                    help="prepend the RefinedWeb-family URL filter "
-                         "(blocklist score, digit-heavy hosts, length) "
-                         "as stage 0; requires a url column")
-    ap.add_argument("--token-budget", type=int, default=None,
-                    help="opt-in mixture assembly: per-source training-"
-                         "token budget filled from the curated "
-                         "survivors in content-hash order before the "
-                         "split")
-    ap.add_argument("--budget-temperature-bp", type=int, default=None,
-                    help="derive the per-source shares for "
-                         "--token-budget as n^(alpha/10000) over the "
-                         "survivor counts (UniMax-style temperature)")
-    ap.add_argument("--nb-gate", action="store_true",
-                    help="opt-in CCNet-style bootstrap: train a Naive "
-                         "Bayes classifier on the quality gate's own "
-                         "verdicts and drop survivors it rejects")
-    ap.add_argument("--dsir-top-frac", type=float, default=None,
-                    help="opt-in DSIR importance selection: keep this "
-                         "fraction of curated survivors by hashed-ngram "
-                         "importance weight toward the target-language "
-                         "subset (before --token-budget)")
-    ap.add_argument("--dsir-target-lang", default="en",
-                    help="target language for --dsir-top-frac")
-    ap.add_argument("--embeddings", default=None,
-                    help="optional (doc_id, embedding) table enabling "
-                         "the SemDeDup semantic_dedup stage")
-    ap.add_argument("--semdedup-threshold", type=float, default=0.95,
-                    help="within-cluster cosine threshold for "
-                         "--embeddings semantic dedup")
-    ap.add_argument("--semdedup-k", type=int, default=64,
-                    help="k-means cluster count for --embeddings")
-    ap.add_argument("--robots", default=None,
-                    help="optional (host, robots_txt) table enabling "
-                         "the robots_filter crawl-policy stage")
-    ap.add_argument("--robots-agent", default="mrebot",
-                    help="user-agent evaluated against --robots")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -147,30 +61,7 @@ def main() -> None:
                    contamination_n=args.contamination_n,
                    contamination_min_shared=args.min_shared,
                    train_frac=args.train_frac,
-                   strict_quality=args.strict_quality,
-                   ngram_battery=args.ngram_battery,
-                   pii_max=args.pii_max,
                    max_bucket=args.max_bucket,
-                   rewrite=args.rewrite,
-                   rewrite_max_df=args.rewrite_max_df,
-                   media_src=args.media_src,
-                   media_dedup=args.media_dedup,
-                   bpe_merges=args.bpe_merges,
-                   bpe_vocab_top=args.bpe_vocab_top,
-                   line_clean=args.line_clean,
-                   lm_max_nll=args.lm_max_nll,
-                   lm_vocab_top=args.lm_vocab_top,
-                   url_gate=args.url_gate,
-                   token_budget=args.token_budget,
-                   budget_temperature_bp=args.budget_temperature_bp,
-                   nb_gate=args.nb_gate,
-                   dsir_top_frac=args.dsir_top_frac,
-                   dsir_target_lang=args.dsir_target_lang,
-                   embeddings_src=args.embeddings,
-                   semdedup_threshold=args.semdedup_threshold,
-                   semdedup_k=args.semdedup_k,
-                   robots_src=args.robots,
-                   robots_agent=args.robots_agent,
                    resume=not args.no_resume)
     finally:
         spark.stop()

@@ -70,8 +70,20 @@ def _curated(spark, tmp_path, docs, evals, tag="c", **knobs):
     return read_curated(spark, dst)
 
 
-def test_run_curate_stage_semantics(spark, docs, evals, tmp_path):
+def test_run_curate_stage_semantics(spark, docs, evals, tmp_path,
+                                    monkeypatch):
+    import mre.curate as C
+    reads = []
+    real_read = C.read_if_present
+
+    def counting_read(spark_, path):
+        reads.append(path)
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(C, "read_if_present", counting_read)
     curated = _curated(spark, tmp_path, docs, evals)
+    # the run's lineage is read once, not once more per stage
+    assert reads.count(str(tmp_path / "c_lineage")) == 1
     out = curated.collect()
     ids = {r["doc_id"] for r in out}
     # quality failure removed
@@ -89,49 +101,6 @@ def test_run_curate_stage_semantics(spark, docs, evals, tmp_path):
     assert all(r["split"] in ("train", "test") for r in out)
     cols = {c for c in curated.columns}
     assert "text" not in cols and "split" in cols
-
-
-def test_run_curate_strict_quality_applies_repetition(spark, docs, evals,
-                                                      tmp_path):
-    """strict_quality additionally drops docs failing the repetition
-    rule: a keyword-stuffed (but otherwise Gopher-passing) doc survives
-    the default pipeline and is removed by the strict one."""
-    stuffed = ("the spam and offer " * 30
-               + "of a deal to have with that be real here now")
-    docs2 = docs.unionByName(spark.createDataFrame(
-        [(200, stuffed, "en", "srcC", 0)], docs.schema))
-    loose = {r["doc_id"] for r in
-             _curated(spark, tmp_path, docs2, evals, "loose").collect()}
-    strict = {r["doc_id"] for r in
-              _curated(spark, tmp_path, docs2, evals, "strict",
-                       strict_quality=True).collect()}
-    assert 200 in loose
-    assert 200 not in strict
-    assert strict <= loose
-
-
-def test_run_curate_ngram_battery_drops_five_gram_looper(spark, docs,
-                                                         evals, tmp_path):
-    """ngram_battery (round 7, the full Gopher Table A1 n-gram rules)
-    drops a doc whose duplicate 5-gram character fraction exceeds the
-    0.15 cut but whose top-bigram occupancy passes the strict rule —
-    the case only the battery catches."""
-    # a long unique prefix keeps every top-2/3/4-gram fraction low; the
-    # tail loops one 5-gram enough to push the dup-5-gram chars over 15%
-    uniq = " ".join(f"w{i:03d} common filler line {i}" for i in range(20))
-    looped = (uniq + " the deal to have with that be of and real "
-              + "alpha bravo charlie delta echo " * 8)
-    docs2 = docs.unionByName(spark.createDataFrame(
-        [(210, looped, "en", "srcC", 0)], docs.schema))
-    base = {r["doc_id"] for r in
-            _curated(spark, tmp_path, docs2, evals, "base",
-                     strict_quality=True).collect()}
-    bat = {r["doc_id"] for r in
-           _curated(spark, tmp_path, docs2, evals, "bat",
-                    strict_quality=True, ngram_battery=True).collect()}
-    assert 210 in base
-    assert 210 not in bat
-    assert bat <= base
 
 
 def test_run_curate_no_evals_skips_decontamination(spark, docs, tmp_path):
@@ -295,7 +264,7 @@ def test_composed_run_releases_caches(spark, docs):
     persisted-RDD baseline (localCheckpoint frames from other tests
     excluded by baseline diffing)."""
     from mre.textops import (jaccard_on_candidates, minhash_near_dups,
-                             release_caches, remove_dup_passages)
+                             release_caches)
 
     def persisted_ids():
         it = spark.sparkContext._jsc.getPersistentRDDs()
@@ -305,27 +274,10 @@ def test_composed_run_releases_caches(spark, docs):
     base = persisted_ids()
     cands = minhash_near_dups(docs, threshold=0.2).select("doc_a", "doc_b")
     jaccard_on_candidates(cands, docs).count()
-    remove_dup_passages(docs).count()
     assert len(persisted_ids() - base) > 0  # helpers did persist
     n = release_caches()
-    assert n >= 3
+    assert n == 2  # the signature frame and the pruned shingle sets
     assert persisted_ids() - base == set()
-
-
-def test_quality_stage_pii_knob(spark, docs, evals):
-    """pii_max threads the PII rule pack into stage 1: a quality-passing
-    doc stuffed with emails is dropped only when the knob is on."""
-    from mre.curate import quality_keep_ids
-    pii_doc = (_variant(300)
-               + " contact a@b.io c@d.org e@f.net g@h.com now")
-    docs2 = docs.unionByName(spark.createDataFrame(
-        [(300, pii_doc, "en", "srcC", 0)], docs.schema))
-    base = {r["doc_id"] for r in quality_keep_ids(docs2).collect()}
-    assert 300 in base  # passes Gopher rules
-    strict = {r["doc_id"]
-              for r in quality_keep_ids(docs2, pii_max=3).collect()}
-    assert 300 not in strict
-    assert strict == base - {300}  # ONLY the PII doc is affected
 
 
 def test_run_corpus_end_to_end(spark, tmp_path):
@@ -416,60 +368,6 @@ def test_run_corpus_materialized_copy_not_rewritten_on_resume(
     mtimes2 = {p: os.path.getmtime(p)
                for p in glob.glob(f"{wd}/documents/*")}
     assert mtimes2 == mtimes1
-
-
-def test_run_curate_rewrite_stage_collapses_boilerplate_dups(
-        spark, tmp_path):
-    """Round-6 opt-in rewrite stage: stripping shared boilerplate BEFORE
-    dedup makes docs that differ only in boilerplate exact duplicates.
-    Doc 300 = core1 + boiler, doc 306 = core1 alone; boiler rides in 5
-    docs (df=5 > rewrite_max_df=2), each core is in ≤2 docs (kept).
-    Without the rewrite both survive; with it, 306 keeps (min doc_id is
-    300... the rewritten 300 == core1 == 306's text, keeper = min id
-    300, loser 306)."""
-    from mre.curate import read_curated, run_curate
-    # boiler = 3 long '. '-sentences, ~180 tokens — large enough that
-    # core-vs-core+boiler stays BELOW the 0.5 exact-Jaccard confirm in
-    # the control run (the rewrite is what collapses the pair, not the
-    # near-dup stage)
-    boiler = ". ".join(
-        " ".join(f"legal{j} notice{j} clause{j}"
-                 for j in range(s * 20, s * 20 + 20))
-        for s in range(3))
-    rows = [(300 + i, _variant(300 + i) + ". " + boiler)
-            for i in range(5)]
-    rows.append((306, _variant(300)))        # == doc 300 minus boiler
-    docs2 = spark.createDataFrame(rows, "doc_id long, text string")
-    src = str(tmp_path / "docs")
-    docs2.write.parquet(src)
-
-    # control: no rewrite → 306 is NOT an exact dup of 300
-    run_curate(spark, src, str(tmp_path / "plain"),
-               str(tmp_path / "lin_plain"), run_id="rw0")
-    plain = {r["doc_id"] for r in
-             read_curated(spark, str(tmp_path / "plain")).collect()}
-    assert {300, 306} <= plain
-
-    run_curate(spark, src, str(tmp_path / "rw"),
-               str(tmp_path / "lin_rw"), run_id="rw1",
-               rewrite="passages", rewrite_max_df=2)
-    # the rewrite stage materialized rewritten text, boilerplate gone
-    rw = {r["doc_id"]: r["text"] for r in
-          spark.read.parquet(str(tmp_path / "rw" / "rewrite")).collect()}
-    assert all("legal0 notice0" not in t for t in rw.values())
-    assert rw[300] == _variant(300)          # now byte-equal to 306
-    out = {r["doc_id"] for r in
-           read_curated(spark, str(tmp_path / "rw")).collect()}
-    assert 300 in out and 306 not in out     # collapsed as exact dups
-    lin = spark.read.parquet(str(tmp_path / "lin_rw")).toPandas()
-    assert "rewrite" in set(lin["stage"])
-    assert len(lin) == len(CURATE_STAGES) + 1
-    # resume: same run_id + params → nothing recomputes
-    run_curate(spark, src, str(tmp_path / "rw"),
-               str(tmp_path / "lin_rw"), run_id="rw1",
-               rewrite="passages", rewrite_max_df=2)
-    assert spark.read.parquet(str(tmp_path / "lin_rw")).count() \
-        == len(CURATE_STAGES) + 1
 
 
 def test_read_curate_lineage_resolves_attempts(spark, docs, evals,
@@ -1036,518 +934,3 @@ def test_remove_from_dedup_index_flat_layout(spark, docs, tmp_path):
     out = dedup_increment(spark, batch, idx, threshold=0.5,
                           update_index=False)
     assert {r["doc_id"] for r in out.collect()} == {9100}
-
-
-def test_media_dedup_stage_in_curation(spark, docs, evals, tmp_path):
-    """VERDICT r6 #2: media-payload dedup composed into the pipeline.
-    Docs whose media payload is byte-identical to a kept doc's are
-    dropped (keep-min), docs without media pass through, and the
-    'band' mode additionally collapses same-container-geometry
-    payloads whose bytes differ. The operator is checked directly in
-    both modes, then through the resumable run_curate (stage lineage
-    row + id-list)."""
-    from mre.curate import media_loser_ids
-    from mre.multimodal import make_gif, make_png
-
-    # docs 0..3 get media; 0 and 1 share EXACT bytes; 2's gif shares
-    # dims with 3's but differs in frame geometry (band-dup only)
-    rows = [(0, make_png(20, 10)), (1, make_png(20, 10)),
-            (2, make_gif(30, 12, frames=[(0, 0, 8, 8)])),
-            (3, make_gif(30, 12, frames=[(0, 0, 9, 8)]))]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-
-    exact_losers = {r["doc_id"]
-                    for r in media_loser_ids(media).collect()}
-    assert exact_losers == {1}
-    band_losers = {r["doc_id"]
-                   for r in media_loser_ids(media, mode="band").collect()}
-    assert band_losers == {1, 3}
-
-    # the resumable job: media_dedup gets a lineage row + an id-list
-    src = str(tmp_path / "docs")
-    msrc = str(tmp_path / "media")
-    dst = str(tmp_path / "curated")
-    lin = str(tmp_path / "lineage")
-    docs.write.parquet(src)
-    media.write.parquet(msrc)
-    run_curate(spark, src, dst, lin, run_id="m1", media_src=msrc)
-    stages = {r["stage"] for r in spark.read.parquet(lin).collect()}
-    assert "media_dedup" in stages
-    final = {r["doc_id"] for r in read_curated(spark, dst).collect()}
-    assert 1 not in final and {0, 2, 3} <= final
-    # resume: nothing recomputes, no new lineage rows
-    n_lin = spark.read.parquet(lin).count()
-    run_curate(spark, src, dst, lin, run_id="m1", media_src=msrc)
-    assert spark.read.parquet(lin).count() == n_lin
-
-
-def test_run_curate_bpe_token_accounting(spark, docs, evals, tmp_path):
-    """Opt-in token-accounting tail (VERDICT r6 #4): bpe_merges > 0
-    learns a merge table from the SURVIVING corpus and writes per-doc
-    subword counts; counts equal a direct bpe_tokenize over the split
-    survivors under the persisted merges; resume is a no-op; the
-    default pipeline writes neither table."""
-    from mre.bpe import bpe_tokenize
-
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-
-    # default: no bpe outputs
-    run_curate(spark, src, str(tmp_path / "c0"),
-               str(tmp_path / "l0"), run_id="b0")
-    import os
-    assert not os.path.exists(str(tmp_path / "c0" / "tokens"))
-    assert not os.path.exists(str(tmp_path / "c0" / "bpe_merges"))
-
-    dst, lin = str(tmp_path / "c1"), str(tmp_path / "l1")
-    run_curate(spark, src, dst, lin, run_id="b1", bpe_merges=8,
-               bpe_vocab_top=100)
-    stages = {r["stage"] for r in spark.read.parquet(lin).collect()}
-    assert {"bpe_merges", "tokens"} <= stages
-    merges_df = spark.read.parquet(f"{dst}/bpe_merges")
-    merges = [(r["left"], r["right"], r["cnt"])
-              for r in merges_df.orderBy("rank").collect()]
-    assert 0 < len(merges) <= 8
-    toks = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-            for r in spark.read.parquet(f"{dst}/tokens").collect()}
-    survivors = {r["doc_id"] for r in read_curated(spark, dst).collect()}
-    assert set(toks) == survivors
-    # counts equal a direct application of the persisted merges to the
-    # surviving docs
-    surv_docs = docs.join(read_curated(spark, dst).select("doc_id"),
-                          "doc_id", "left_semi")
-    direct = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-              for r in bpe_tokenize(surv_docs, merges).collect()}
-    assert toks == direct
-    # subword counts are at least the word counts (every word is ≥1
-    # token) and the learner genuinely compressed something
-    assert all(nb >= nw for nw, nb in toks.values())
-
-    # resume: no recompute, no new lineage rows
-    n_lin = spark.read.parquet(lin).count()
-    run_curate(spark, src, dst, lin, run_id="b1", bpe_merges=8,
-               bpe_vocab_top=100)
-    assert spark.read.parquet(lin).count() == n_lin
-
-
-def test_run_curate_line_clean_stage(spark, docs, evals, tmp_path):
-    """Opt-in C4 line-level scrub as stage 0 (round 7): pages failing
-    the page rules are dropped before quality, survivors' text is
-    rewritten to kept lines, downstream stages consume the rewrite,
-    and resume is a no-op."""
-    from mre.textops import c4_line_clean
-    from pyspark.sql import functions as F
-
-    # give every doc newline structure: 6-word lines, even lines
-    # punctuated; doc_id % 11 == 0 gets a lorem-ipsum page-drop line.
-    # Text is replicated 4x first so the kept half still clears the
-    # Gopher 50-word floor — otherwise quality would empty the corpus
-    # and the downstream assertions would pass vacuously.
-    docs = docs.withColumn(
-        "text", F.concat_ws(" ", "text", "text", "text", "text"))
-    w = F.split("text", " ")
-    nl = F.floor((F.size(w) + F.lit(5)) / F.lit(6)).cast("int")
-    lines = F.transform(
-        F.sequence(F.lit(0), nl - 1),
-        lambda i: F.when(
-            i % 2 == 0,
-            F.concat(F.array_join(F.slice(w, i * 6 + 1, 6), " "),
-                     F.lit("."))
-        ).otherwise(F.array_join(F.slice(w, i * 6 + 1, 6), " ")))
-    structured = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 11 == 0,
-               F.concat(F.array_join(lines, "\n"),
-                        F.lit("\nlorem ipsum dolor sit amet three.")))
-        .otherwise(F.array_join(lines, "\n")))
-    src = str(tmp_path / "docs")
-    structured.write.parquet(src)
-
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="lc1", line_clean=True)
-    stages = {r["stage"] for r in spark.read.parquet(lin).collect()}
-    assert "line_clean" in stages
-    cleaned = spark.read.parquet(f"{dst}/line_clean")
-    expect = c4_line_clean(structured).filter("keep = 1") \
-        .select("doc_id", "text")
-    assert {r["doc_id"] for r in cleaned.collect()} \
-        == {r["doc_id"] for r in expect.collect()}
-    # page-drop class is gone before any later stage
-    assert cleaned.filter("doc_id % 11 = 0").count() == 0
-    # final survivors' split table is non-empty (the rewritten text
-    # clears the quality stage) and only contains cleaned docs
-    surv = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert surv and surv <= {r["doc_id"] for r in cleaned.collect()}
-    # resume: no recompute
-    n_lin = spark.read.parquet(lin).count()
-    run_curate(spark, src, dst, lin, run_id="lc1", line_clean=True)
-    assert spark.read.parquet(lin).count() == n_lin
-    # default run on the same src writes no line_clean stage
-    run_curate(spark, src, str(tmp_path / "c0"), str(tmp_path / "l0"),
-               run_id="lc0")
-    import os
-    assert not os.path.exists(str(tmp_path / "c0" / "line_clean"))
-
-
-def test_lm_filter_stage_in_curation(spark, docs, evals, tmp_path):
-    """Round-7 CCNet-family perplexity filter: a quality-passing doc
-    made of out-of-vocab gibberish scores a strictly higher mean NLL
-    than every normal survivor; with a threshold between the two, the
-    lm_filter stage of the resumable run_curate drops it (lineage row
-    + id-list, resume no-op)."""
-    from mre.curate import exact_keeper_ids, lm_keep_ids, quality_keep_ids
-    from mre.textops import lm_learn, lm_score, lm_vocab_rows
-
-    # ≥50 words, mean word len in range, ≥2 stopwords, all-alpha —
-    # passes Gopher quality but every content token is unique to it
-    gib = ("the and " * 2 + " ".join(f"gib{i}zz" for i in range(60))
-           + " over it goes")
-    docs2 = docs.unionByName(spark.createDataFrame(
-        [(140, gib, "en", "srcG", 0)], docs.schema))
-
-    # replicate the stage input (post quality + exact dedup) and derive
-    # a threshold strictly between the gibberish doc and everyone else
-    kept = docs2.join(quality_keep_ids(docs2), "doc_id", "left_semi")
-    kept = kept.join(exact_keeper_ids(kept), "doc_id", "left_semi")
-    vocab, total = lm_learn(kept, vocab_top=64)
-    scores = {r["doc_id"]: r["nll_micro_mean"]
-              for r in lm_score(kept, lm_vocab_rows(vocab), total)
-              .collect()}
-    rest_max = max(v for k, v in scores.items() if k != 140)
-    assert scores[140] > rest_max
-    thr = (scores[140] + rest_max) // 2
-
-    # zero-token docs have no evidence -> dropped by the keep filter
-    empty = spark.createDataFrame([(1, "aa bb aa"), (2, "   ")],
-                                  "doc_id long, text string")
-    keep = {r["doc_id"]
-            for r in lm_keep_ids(empty, 10**12, vocab_top=4).collect()}
-    assert keep == {1}
-
-    # the resumable job: lm_filter gets a lineage row + an id-list
-    src = str(tmp_path / "docs")
-    dst = str(tmp_path / "curated")
-    lin = str(tmp_path / "lineage")
-    docs2.write.parquet(src)
-    run_curate(spark, src, dst, lin, run_id="lm1", evals_src=None,
-               lm_max_nll=thr, lm_vocab_top=64)
-    stages = {r["stage"] for r in spark.read.parquet(lin).collect()}
-    assert "lm_filter" in stages
-    final = {r["doc_id"] for r in read_curated(spark, dst).collect()}
-    assert 140 not in final and 0 in final
-    # resume: nothing recomputes, no new lineage rows
-    n_lin = spark.read.parquet(lin).count()
-    run_curate(spark, src, dst, lin, run_id="lm1", evals_src=None,
-               lm_max_nll=thr, lm_vocab_top=64)
-    assert spark.read.parquet(lin).count() == n_lin
-    # default run on the same src writes no lm_filter stage
-    import os
-    run_curate(spark, src, str(tmp_path / "c0"), str(tmp_path / "l0"),
-               run_id="lm0")
-    assert not os.path.exists(str(tmp_path / "c0" / "lm_filter"))
-
-
-def test_run_curate_url_gate_stage(spark, docs, evals, tmp_path):
-    """Round-7 URL gate as stage 0: a spam-URL doc is dropped before
-    any content work, clean-URL docs flow through unchanged, and a
-    corpus without a url column raises."""
-    from pyspark.sql import functions as F
-    with_urls = docs.withColumn(
-        "url",
-        F.when(F.col("doc_id") == 0,
-               F.lit("https://example.com/xxx-casino-bonus"))
-        .otherwise(F.concat(F.lit("https://example.com/p/"),
-                            F.col("doc_id").cast("string"))))
-    src = str(tmp_path / "docs")
-    with_urls.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="ug1", url_gate=True)
-    kept = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/url_filter").collect()}
-    assert 0 not in kept and 1 in kept
-    surv = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert 0 not in surv and surv <= kept
-    with pytest.raises(ValueError, match="url"):
-        run_curate(spark, docs, dst, lin, run_id="ug2", url_gate=True)
-
-
-def test_run_curate_token_budget_stage(spark, docs, evals, tmp_path):
-    """Round-7 mixture-assembly tail: the budget_sample stage equals
-    budget_sample applied directly to the decontaminated survivors,
-    and only sampled docs reach the split."""
-    from mre.textops import budget_sample
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="tb1", token_budget=120)
-    base = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/decontaminate").collect()}
-    expect = {r["doc_id"] for r in budget_sample(
-        docs.join(spark.read.parquet(f"{dst}/decontaminate"),
-                  "doc_id", "left_semi"), 120).collect()}
-    got = {r["doc_id"]
-           for r in spark.read.parquet(f"{dst}/budget_sample").collect()}
-    assert got == expect and got < base
-    surv = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert surv == got
-
-
-def test_run_curate_nb_gate_stage(spark, docs, evals, tmp_path):
-    """Round-7 CCNet bootstrap: the nb_filter stage drops a
-    quality-passing doc written in the rejected class's vocabulary,
-    keeps the ordinary survivors, and equals a direct
-    nb_train/nb_score replay on the quality verdicts."""
-    from mre.textops import nb_score, nb_train
-    # ~30 quality-FAILING docs sharing a distinctive spam vocabulary
-    # (each under the 50-word floor), plus ONE long doc in the same
-    # vocabulary padded to pass the heuristics — the classifier should
-    # reject it even though the rules let it through
-    spam_short = [(300 + i,
-                   f"casino bonus {i} lottery jackpot win now prize "
-                   f"deal offer spin slots",
-                   "en", "srcS", 0) for i in range(30)]
-    spam_long = [(399,
-                  ("casino bonus lottery jackpot win prize spin slots "
-                   "the a of to deal offer money chips table bet odds "
-                   ) * 5,
-                  "en", "srcS", 0)]
-    docs2 = docs.unionByName(spark.createDataFrame(
-        spam_short + spam_long, docs.schema))
-    src = str(tmp_path / "docs")
-    docs2.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="nb1", nb_gate=True,
-               nb_vocab_top=512)
-    q = spark.read.parquet(f"{dst}/quality")
-    qs = {r["doc_id"] for r in q.collect()}
-    assert 399 in qs                      # heuristics let it through
-    kept = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/nb_filter").collect()}
-    assert 399 not in kept                # the classifier does not
-    assert set(range(20)) <= kept
-    # stage == direct replay on the same labels
-    labeled = docs2.withColumn(
-        "label", F.col("doc_id").isin(*qs).cast("int"))
-    model, meta = nb_train(labeled, "label", vocab_top=512)
-    ok = {r["doc_id"] for r in nb_score(docs2, model, meta)
-          .filter("nb_pred = 1").collect()}
-    assert kept == qs & ok
-    surv = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert surv <= kept
-
-
-def test_run_corpus_url_gate(spark, tmp_path):
-    """Round-7: --url-gate works across the zero-copy adapter (the
-    extraction output keeps url), dropping pages whose url trips the
-    blocklist before any content-stage work."""
-    from mre.curate import run_corpus
-    from mre.fixtures import write_fixture_parquet
-    from pyspark.sql import functions as F
-
-    fx = str(tmp_path / "fixtures")
-    write_fixture_parquet(fx, n=80)
-    # poison a handful of urls with a hard blocklist marker
-    pages = spark.read.parquet(f"{fx}/pages.parquet")
-    poisoned = pages.withColumn(
-        "url",
-        F.when(F.xxhash64("url") % 10 == 0,
-               F.concat(F.col("url"), F.lit("-xxx-casino")))
-        .otherwise(F.col("url")))
-    src = str(tmp_path / "pages2")
-    poisoned.write.parquet(src)
-    wd = str(tmp_path / "corpus")
-    run_corpus(spark, src, wd, run_id="ug", url_gate=True)
-    kept_urls = {r["url"] for r in spark.read.parquet(
-        f"{wd}/curated/url_filter").join(
-        spark.read.parquet(f"{wd}/extracted").withColumn(
-            "doc_id", F.xxhash64("url")), "doc_id").collect()}
-    assert kept_urls and all("-xxx-" not in u for u in kept_urls)
-
-
-def test_run_curate_dsir_select_stage(spark, docs, evals, tmp_path):
-    """Round-7 DSIR selection: the dsir_select stage equals dsir_topk
-    applied directly to the decontaminated survivors (top half toward
-    the 'en' target), only selected docs reach the split, and resume
-    skips the stage."""
-    from mre.curate import read_curate_lineage
-    from mre.textops import dsir_topk
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="ds1", dsir_top_frac=0.5)
-    base_ids = spark.read.parquet(f"{dst}/decontaminate")
-    surv = docs.join(base_ids, "doc_id", "left_semi")
-    k = int(surv.count() * 0.5)
-    expect = {r["doc_id"] for r in
-              dsir_topk(surv, F.col("lang") == "en", k).collect()}
-    got = {r["doc_id"]
-           for r in spark.read.parquet(f"{dst}/dsir_select").collect()}
-    assert got == expect and len(got) == k
-    split = {r["doc_id"]
-             for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert split == got
-    # resume with identical params: no new attempt rows
-    before = read_curate_lineage(spark, lin).count()
-    run_curate(spark, src, dst, lin, run_id="ds1", dsir_top_frac=0.5)
-    assert read_curate_lineage(spark, lin).count() == before
-
-
-def test_run_curate_semantic_dedup_stage(spark, docs, evals, tmp_path):
-    """Round-7 SemDeDup stage: a doc whose embedding duplicates a
-    lower-id SURVIVOR's is dropped; a duplicate of a DEAD doc's
-    embedding does not kill the survivor (live-docs-first rule); docs
-    without an embedding row pass through; resume is a no-op."""
-    from mre.curate import read_curate_lineage
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    v1 = [1.0, 0.0, 0.0, 0.0]
-    v2 = [0.0, 1.0, 0.0, 0.0]
-    emb_rows = [
-        (0, v1), (2, v1),      # 2 semantically dups surviving 0 → drop
-        (120, v2), (3, v2),    # 120 fails quality (dead): 3 must stay
-    ]
-    emb_src = str(tmp_path / "emb")
-    spark.createDataFrame(
-        emb_rows, "doc_id long, embedding array<float>"
-    ).write.parquet(emb_src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="sd1",
-               embeddings_src=emb_src, semdedup_k=2,
-               semdedup_threshold=0.999)
-    q = {r["doc_id"] for r in spark.read.parquet(f"{dst}/quality")
-         .collect()}
-    assert 120 not in q
-    sem = {r["doc_id"]
-           for r in spark.read.parquet(f"{dst}/semantic_dedup")
-           .collect()}
-    assert 2 not in sem and 0 in sem and 3 in sem
-    split = {r["doc_id"] for r in spark.read.parquet(f"{dst}/split")
-             .collect()}
-    assert 2 not in split and 3 in split and 0 in split
-    before = read_curate_lineage(spark, lin).count()
-    run_curate(spark, src, dst, lin, run_id="sd1",
-               embeddings_src=emb_src, semdedup_k=2,
-               semdedup_threshold=0.999)
-    assert read_curate_lineage(spark, lin).count() == before
-
-
-def test_run_corpus_host_rank_gate(spark, tmp_path):
-    """Round-7 link-based host prior: pages on a periphery host that
-    nothing links to are dropped when --host-rank-frac keeps the top
-    hosts; changing the fraction recomputes (input_tag) instead of
-    silently resuming."""
-    import datetime as dt
-
-    from mre.curate import run_corpus
-    from mre.fixtures import page_row
-
-    def page(doc_id, host, extra_links):
-        from mre.fixtures import paragraphs_of
-        r = page_row(doc_id)
-        links = "".join(f'<a href="http://{h}/x">l</a>'
-                        for h in extra_links)
-        body = "".join(f"<p>{p}</p>" for p in paragraphs_of(doc_id))
-        r["url"] = f"http://{host}/p/{doc_id}"
-        r["html"] = (b"<html><body><div>" + links.encode()
-                     + body.encode() + b"</div></body>")
-        return r
-
-    # hub gets links from everyone; periphery 'cold.org' only links out
-    rows = ([page(i, "hub.org", ["a.org"]) for i in range(4)]
-            + [page(10 + i, "a.org", ["hub.org", "hub.org"])
-               for i in range(4)]
-            + [page(20 + i, "cold.org", ["hub.org", "a.org"])
-               for i in range(4)])
-    pages = spark.createDataFrame(rows)
-    src = str(tmp_path / "pages")
-    pages.write.parquet(src)
-    wd = str(tmp_path / "wd")
-    run_corpus(spark, src, wd, run_id="hr1", host_rank_top_frac=0.67)
-    kept_hosts = {r["source"] for r in spark.read.parquet(
-        f"{wd}/curated/split").collect()}
-    assert "cold.org" not in kept_hosts
-    assert kept_hosts and kept_hosts <= {"hub.org", "a.org"}
-    # a changed fraction must recompute the curation stages
-    from mre.curate import read_curate_lineage
-    n1 = read_curate_lineage(spark, f"{wd}/lineage/curate").count()
-    run_corpus(spark, src, wd, run_id="hr1", host_rank_top_frac=0.34)
-    lin = read_curate_lineage(spark, f"{wd}/lineage/curate")
-    assert lin.filter(F.col("attempt") >= 2).count() > 0 or \
-        lin.count() > n1
-
-
-def test_run_curate_robots_filter_stage(spark, tmp_path):
-    """Round-7 crawl-policy stage: robots-disallowed docs drop before
-    any content work; hosts without a robots row pass; corpora
-    without a url column raise."""
-    rows = [(i, "the quick brown fox jumps over the lazy dog and the "
-                "cat sat on the mat with a hat and a bat for a while "
-                "before it went home to sleep on the warm soft bed "
-                "near the door of the house in the town by the river",
-             "en", f"h{i % 2}.org",
-             f"https://h{i % 2}.org/{'bad' if i % 3 == 0 else 'ok'}/{i}")
-            for i in range(12)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "url string").withColumn("n_chars", F.length("text"))
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    robots = spark.createDataFrame(
-        [("h0.org", "User-agent: *\nDisallow: /bad/\n")],
-        "host string, robots_txt string")
-    rsrc = str(tmp_path / "robots")
-    robots.write.parquet(rsrc)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="rb1", robots_src=rsrc)
-    kept = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/robots_filter")
-            .collect()}
-    # /bad/ on h0.org (even doc_id, i%3==0) disallowed; h1.org has no
-    # robots row so even its /bad/ urls pass
-    expect = {i for i in range(12)
-              if not (i % 2 == 0 and i % 3 == 0)}
-    assert kept == expect
-    split = {r["doc_id"] for r in spark.read.parquet(f"{dst}/split")
-             .collect()}
-    assert split <= kept and 0 not in split and 6 not in split
-    # no url column → raises
-    import pytest as _p
-    src2 = str(tmp_path / "docs2")
-    docs.drop("url").write.parquet(src2)
-    with _p.raises(ValueError, match="url"):
-        run_curate(spark, src2, str(tmp_path / "c2"),
-                   str(tmp_path / "l2"), run_id="rb2", robots_src=rsrc)
-
-
-def test_run_curate_budget_temperature(spark, docs, tmp_path):
-    """Round-7 temperature shares: the budget stage with
-    budget_temperature_bp equals budget_sample fed the
-    mixture_weights_bp dict computed on the decontaminated survivors;
-    explicit weights and temperature are mutually exclusive."""
-    from mre.textops import budget_sample, mixture_weights_bp
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="bt1", token_budget=200,
-               budget_temperature_bp=5000)
-    surv = docs.join(spark.read.parquet(f"{dst}/decontaminate"),
-                     "doc_id", "left_semi")
-    wbp = {r["source"]: int(r["weight_bp"])
-           for r in mixture_weights_bp(surv, alpha_bp=5000).collect()}
-    expect = {r["doc_id"]
-              for r in budget_sample(surv, 200, weights_bp=wbp)
-              .collect()}
-    got = {r["doc_id"]
-           for r in spark.read.parquet(f"{dst}/budget_sample")
-           .collect()}
-    assert got == expect and got
-    import pytest as _p
-    with _p.raises(ValueError, match="mutually exclusive"):
-        run_curate(spark, src, str(tmp_path / "c2"),
-                   str(tmp_path / "l2"), run_id="bt2",
-                   token_budget=200, budget_temperature_bp=5000,
-                   budget_weights_bp={"a": 5000})

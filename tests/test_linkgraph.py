@@ -1,130 +1,5 @@
-"""Host link-graph operators: real-parser anchor extraction and the
-integer fixed-point PageRank (mre/linkgraph.py)."""
-
-import pytest
-from pyspark.sql import functions as F
-
-
-def test_extract_links_resolution_and_self_drop(spark):
-    """Relative hrefs resolve to the page's own host (dropped as
-    self), absolute same-host links are dropped too, cross-host links
-    become edges — through the real lenient parser, including a
-    malformed unclosed tag."""
-    from mre.linkgraph import extract_links
-    pages = spark.createDataFrame(
-        [("http://a.org/x",
-          '<html><body><a href="/rel">r</a>'
-          '<a href="http://a.org/self">s</a>'
-          '<a href="http://b.org/t">b</a>'
-          '<a>no href</a>'
-          '<div><a href="http://c.org/u">c</a></body></html>'),
-         ("http://b.org/y",
-          '<p><a href="http://a.org/back">back</a>')],
-        "url string, html string")
-    rows = [(r["src_host"], r["dst_host"], r["kind"])
-            for r in extract_links(pages).collect()]
-    assert sorted(rows) == sorted([
-        ("a.org", "a.org", "self"),
-        ("a.org", "a.org", "self"),
-        ("a.org", "b.org", "edge"),
-        ("a.org", "c.org", "edge"),
-        ("b.org", "a.org", "edge")])
-
-
-def test_pagerank_matches_python_replay_and_orders_by_inlinks(spark):
-    """The integer floors replay exactly in pure Python, and a host
-    every other host links to outranks the periphery."""
-    from mre.linkgraph import pagerank_hosts
-    # star: p0..p4 -> hub; hub -> p0 (so the hub has out-edges); one
-    # doubled edge exercises weights
-    raw = ([(f"p{i}", "hub") for i in range(5)]
-           + [("p0", "hub"), ("hub", "p0")])
-    edges = (spark.createDataFrame(raw, "src_host string, dst_host string")
-             .groupBy("src_host", "dst_host")
-             .agg(F.count("*").alias("weight")))
-    got = {r["host"]: (r["out_weight"], r["in_weight"], r["rank_micro"])
-           for r in pagerank_hosts(edges, iters=4).collect()}
-
-    S, D, IT = 10**12, 85, 4
-    w = {}
-    for s, d in raw:
-        w[(s, d)] = w.get((s, d), 0) + 1
-    hosts = sorted({h for e in w for h in e})
-    n = len(hosts)
-    od = {}
-    for (s, _d), x in w.items():
-        od[s] = od.get(s, 0) + x
-    r = {h: S // n for h in hosts}
-    base = ((100 - D) * S) // (100 * n)
-    for _ in range(IT):
-        nxt = {h: base for h in hosts}
-        for (s, d), x in w.items():
-            nxt[d] += x * ((D * r[s]) // (100 * od[s]))
-        r = nxt
-    ind = {}
-    for (_s, d), x in w.items():
-        ind[d] = ind.get(d, 0) + x
-    for h in hosts:
-        assert got[h] == (od.get(h, 0), ind.get(h, 0), r[h]), h
-    assert got["hub"][2] > got["p1"][2] > 0
-
-
-def test_pagerank_driver_path_matches_distributed(spark):
-    """The round-8 driver fast path (below driver_edge_cap) must emit
-    bit-identical rows to the distributed iteration — the arithmetic is
-    all integer floors, so the parity is exact, not approximate."""
-    from mre.linkgraph import pagerank_hosts
-    raw = ([(f"p{i}", "hub") for i in range(5)]
-           + [("p0", "hub"), ("hub", "p0"), ("p3", "p4")])
-    edges = (spark.createDataFrame(raw, "src_host string, dst_host string")
-             .groupBy("src_host", "dst_host")
-             .agg(F.count("*").alias("weight")))
-    fast = {tuple(r) for r in pagerank_hosts(edges, iters=4).collect()}
-    slow = {tuple(r) for r in pagerank_hosts(edges, iters=4,
-                                             driver_edge_cap=0).collect()}
-    assert fast == slow and len(fast) == 6
-
-
-def test_pagerank_duplicate_edge_rows_sum_on_both_paths(spark):
-    """An edge frame that repeats a (src_host, dst_host) pair — not a
-    host_edges collapse — gives the same ranks on the driver fast path
-    as on the distributed loop, which sums the repeats; and both equal
-    the collapsed frame's ranks."""
-    from mre.linkgraph import pagerank_hosts
-    schema = "src_host string, dst_host string, weight long"
-    dup = spark.createDataFrame(
-        [("p0", "hub", 1), ("p0", "hub", 2), ("p1", "hub", 1),
-         ("hub", "p0", 1), ("hub", "p1", 3), ("hub", "p1", 1)], schema)
-    collapsed = spark.createDataFrame(
-        [("p0", "hub", 3), ("p1", "hub", 1),
-         ("hub", "p0", 1), ("hub", "p1", 4)], schema)
-    fast = {tuple(r) for r in pagerank_hosts(dup, iters=4).collect()}
-    slow = {tuple(r) for r in pagerank_hosts(dup, iters=4,
-                                             driver_edge_cap=0).collect()}
-    ref = {tuple(r) for r in pagerank_hosts(collapsed, iters=4).collect()}
-    assert fast == slow == ref and len(fast) == 3
-
-
-def test_link_pages_parse_back_to_builder_arithmetic(spark):
-    """Parsing the built link pages recovers exactly the builder's
-    arithmetic: per page 1 + doc_id%3 edges, no self targets, plus the
-    nav self and the doc_id%5 absolute self."""
-    from mre.linkgraph import extract_links, link_pages_df
-    docs = spark.range(40).select(F.col("id").alias("doc_id"))
-    links = extract_links(link_pages_df(docs)).collect()
-    per = {}
-    for r in links:
-        per.setdefault(r["src_host"], {"edge": 0, "self": 0})
-        per[r["src_host"]][r["kind"]] += 1
-    exp = {}
-    for d in range(40):
-        h = f"h{d % 16}.example.org"
-        exp.setdefault(h, {"edge": 0, "self": 0})
-        exp[h]["edge"] += 1 + d % 3
-        exp[h]["self"] += 1 + (1 if d % 5 == 0 else 0)
-    assert per == exp
-    assert all(r["src_host"] != r["dst_host"] for r in links
-               if r["kind"] == "edge")
+"""Crawl-policy operators: robots.txt evaluation through the stdlib
+parser and the politeness-scheduled fetch plan (mre/linkgraph.py)."""
 
 
 def test_robots_allowed_group_selection_and_defaults(spark):
@@ -212,21 +87,6 @@ def test_fetch_plan_schedules_per_host(spark):
     assert got["https://WWW.B.org/q1"] == ("b.org", 1, 0)
     assert got["https://b.org/q2"] == ("b.org", 2, 0)
     assert got["https://c.org/r1"] == ("c.org", 1, 0)
-
-
-def test_extract_links_tolerates_malformed_hrefs(spark):
-    """A href the stdlib url splitter REJECTS (unbalanced IPv6
-    bracket) is one skipped anchor, never a task failure; the page's
-    other links survive."""
-    from mre.linkgraph import extract_links
-    pages = spark.createDataFrame(
-        [("http://a.org/x",
-          '<a href="http://[">bad</a><a href="http://b.org/ok">g</a>'),
-         ("http://[bad/y", '<a href="http://c.org/z">x</a>')],
-        "url string, html string")
-    rows = [(r["src_host"], r["dst_host"], r["kind"])
-            for r in extract_links(pages).collect()]
-    assert rows == [("a.org", "b.org", "edge")]
 
 
 def test_robots_allowed_total_on_malformed_url(spark):

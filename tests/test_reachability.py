@@ -10,7 +10,12 @@ A reference is a name or a ``module.attr`` access resolved through the
 module's imports; names in ``__all__`` and in docstrings are strings and
 never count. The only exemptions are the test-support definitions below
 (fixture writers, the golden diff, the fuzz reference parser and the
-lineage reader), which are roots as well."""
+lineage reader), which are roots as well.
+
+The same rule holds for options: every parameter with a default of the
+three job entry points (``run_extract``, ``run_curate``, ``run_corpus``)
+must be passed by name from a CLI or the benchmark, or it is an option
+nothing sets."""
 
 import ast
 import functools
@@ -23,12 +28,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TEST_SUPPORT = {"golden_diff", "gen_golden", "write_fixture_parquet",
                 "write_warc_gz", "write_wet_gz", "write_sitemap",
                 "parse_doc_stdlib", "read_curate_lineage",
-                # oracle fixture writers (linkgraph, sources.cdx,
-                # multimodal): inputs for oracles of kept operators
-                "robots_txt_of", "link_page_html", "link_pages_df",
-                "format_cdxj_line", "write_cdxj_gz",
-                "make_png", "make_jpeg", "make_gif", "make_wav",
-                "make_mp4"}
+                # oracle fixture writers (linkgraph, sources.cdx):
+                # inputs for oracles of kept operators
+                "robots_txt_of", "format_cdxj_line", "write_cdxj_gz"}
 
 
 def _mre_modules() -> dict:
@@ -190,3 +192,58 @@ def test_exemption_is_a_definition(name):
     """An exemption that names nothing would hide a stale list."""
     every, _ = scan()
     assert sum(1 for _, n in every if n == name) == 1
+
+
+# job entry point -> the module defining it
+ENTRY_POINTS = {"run_extract": "mre.pipeline", "run_curate": "mre.curate",
+                "run_corpus": "mre.curate"}
+
+
+def _entry_def(name: str):
+    return next(node for node in _mre_modules()[ENTRY_POINTS[name]].body
+                if isinstance(node, ast.FunctionDef) and node.name == name)
+
+
+def _defaulted_params(fn) -> set:
+    """Names of ``fn``'s parameters that carry a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    named = pos[len(pos) - len(a.defaults):] if a.defaults else []
+    named += [k for k, d in zip(a.kwonlyargs, a.kw_defaults)
+              if d is not None]
+    return {p.arg for p in named}
+
+
+def _passed_keywords() -> dict:
+    """entry point -> keyword names passed to it by name from a call in
+    ``scripts/`` or ``perfbench/``. A keyword passed to ``run_corpus``
+    that ``run_corpus`` does not name itself counts for ``run_curate``,
+    which receives it through ``**curate_knobs``."""
+    corpus = _entry_def("run_corpus").args
+    corpus_own = {p.arg for p in (corpus.posonlyargs + corpus.args
+                                  + corpus.kwonlyargs)}
+    passed = {name: set() for name in ENTRY_POINTS}
+    for tree in _root_files().values():
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            if name not in ENTRY_POINTS:
+                continue
+            kws = {k.arg for k in n.keywords if k.arg is not None}
+            passed[name] |= kws
+            if name == "run_corpus":
+                passed["run_curate"] |= kws - corpus_own
+    return passed
+
+
+@pytest.mark.parametrize("entry", sorted(ENTRY_POINTS))
+def test_every_option_is_set_by_a_root(entry):
+    """A defaulted parameter that no CLI or benchmark call passes by name
+    is an option no user can reach: delete it or wire it to a flag."""
+    unset = sorted(_defaulted_params(_entry_def(entry))
+                   - _passed_keywords()[entry])
+    assert not unset, (f"{entry} options no CLI or benchmark call passes "
+                       f"by name: {unset}")

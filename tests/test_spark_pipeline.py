@@ -118,6 +118,45 @@ def test_resume_is_idempotent(spark, fixture_dir, tmp_path, dedup):
     assert lin2_rows.filter("count > 1").count() == 0
 
 
+def test_run_extract_crash_before_lineage_commit_recovers(
+        spark, fixture_dir, tmp_path, monkeypatch):
+    """Write-then-commit: a crash after the results sink is written but
+    before the lineage append commits no bucket, so the resumed run
+    re-extracts every bucket into the idempotent sink — rows equal a
+    clean run's, and each bucket has exactly one lineage row."""
+    import mre.pipeline as P
+
+    real_append = P.write_append
+    crashed = []
+
+    def append_crashing_once(df, path, *args, **kwargs):
+        if not crashed:
+            crashed.append(path)
+            raise RuntimeError("injected crash before the lineage commit")
+        return real_append(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(P, "write_append", append_crashing_once)
+    src = f"{fixture_dir}/pages.parquet"
+    dst, lin = str(tmp_path / "results"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extract(spark, src, dst, lin, run_id="f1", buckets=8)
+    assert crashed == [lin]
+    assert read_results(spark, dst).count() == N_DOCS  # sink was written
+    assert P.completed_buckets(spark, lin, "f1") is None  # nothing committed
+
+    run_extract(spark, src, dst, lin, run_id="f1", buckets=8)
+    clean_dst = str(tmp_path / "clean")
+    run_extract(spark, src, clean_dst, str(tmp_path / "clean_lineage"),
+                run_id="f1", buckets=8)
+    assert golden_diff(read_results(spark, dst),
+                       read_results(spark, clean_dst)).count() == 0
+    per_bucket = spark.read.parquet(lin).groupBy("salt_bucket").count()
+    assert per_bucket.filter("count != 1").count() == 0
+    clean_buckets = spark.read.parquet(str(tmp_path / "clean_lineage")) \
+        .select("salt_bucket").distinct().count()
+    assert per_bucket.count() == clean_buckets
+
+
 def test_explain_has_pushdown_and_single_shuffle_chain(spark, fixture_dir):
     """Plan shape guard: the filter reaches the parquet scan and the UDF
     stage is MapInArrow (not row-at-a-time python)."""
@@ -206,39 +245,16 @@ def test_new_ops_plan_shapes(spark):
 
     sf = "/root/testdata/sf0.001"
 
-    # url_dedup (round-7 norm/uf/robots union): explode + regex
-    # normalize + the URL-filter scoring are pure projections — the
-    # norm groupBy is the only corpus-keyed Exchange; the robots branch
-    # adds its bounded 20-row host distinct plus the robots-table
-    # BroadcastExchange (a fourth Exchange string means a corpus-keyed
-    # shuffle crept in)
+    # url_dedup (norm/robots union): explode + regex normalize are pure
+    # projections — the norm groupBy is the only corpus-keyed Exchange;
+    # the robots branch adds its bounded 20-row host distinct plus the
+    # robots-table BroadcastExchange (a fourth Exchange string means a
+    # corpus-keyed shuffle crept in)
     plan = em.queries()["url_dedup"](spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 3, plan
     assert plan.count("BroadcastExchange") == 1, plan
     assert "BatchEvalPython" not in plan and "EvalPython" not in plan
-
-    # hash_sample: the round-7 budget branch carries the two-phase
-    # prefix sum's exactly FOUR Exchanges (phase-1 window, bucket-totals
-    # partial agg, tiny offsets window, broadcast join back —
-    # budget_sample);
-    # the dsir branch adds exactly ONE more (the survivor tie-rank
-    # window) because learning and the top-k threshold resolve to
-    # literals at plan-construction time (bounded collects) — a sixth
-    # Exchange or a NestedLoop means the threshold frame got inlined
-    # as a duplicated subtree again (rule 43)
-    plan = em.queries()["hash_sample"](spark, sf) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 5, plan
-    assert "BroadcastExchange" in plan, plan
-    assert "NestedLoop" not in plan, plan
-    assert "EvalPython" not in plan
-
-    # semdedup: the within-cell block pairs are an equi-join on cell,
-    # never a cartesian product
-    plan = em.queries()["semdedup"](spark, sf) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan
 
 
 def test_round3_ops_plan_shapes(spark):
@@ -351,54 +367,15 @@ def test_read_pages_warc_and_jsonl_dispatch(spark, tmp_path):
 
 
 def test_round5_ops_plan_shapes(spark):
-    """Plan-shape guards for the round-5 operators: pii_scrub must stay a
-    zero-Exchange codegen projection; remove_dup_passages must broadcast
-    the dup-digest marker (corpus text shuffles exactly once, for the
-    rebuild) and keep map-side partial aggregation on the df count."""
-    from pyspark.sql import functions as F
-
-    from mre.textops import pii_scrub, remove_dup_passages
+    """Plan-shape guard for the quality stage's rule pack: gopher_quality
+    must stay a zero-Exchange codegen projection over one scan, with no
+    Python row processing."""
+    from mre.textops import gopher_quality
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-    plan = pii_scrub(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = gopher_quality(docs)._jdf.queryExecution().executedPlan() \
+        .toString()
     assert "Exchange" not in plan, plan[:2000]
     assert "BatchEvalPython" not in plan and "Python" not in plan
     assert plan.count("Scan parquet") == 1, plan[:2000]
-
-    plan = remove_dup_passages(docs) \
-        ._jdf.queryExecution().executedPlan().toString()
-    # dup-marker side broadcast: the wide (text-carrying) side never
-    # shuffles for the join
-    assert "BroadcastHashJoin" in plan, plan[:3000]
-    assert "SortMergeJoin" not in plan, plan[:3000]
-    # df count combines map-side before its digest shuffle
-    assert "partial_count(distinct doc_id" in plan \
-        or "partial_count" in plan, plan[:3000]
-    # exactly ONE exchange moves part text: the doc_id rebuild (plus the
-    # digest-count exchanges which carry (pk, count) rows and the
-    # broadcast — no second corpus-text shuffle)
-    assert "CartesianProduct" not in plan
-
-
-def test_round6_windows_plan_shape(spark):
-    """remove_dup_windows: the exploded window frame is persisted and
-    REUSED (InMemoryTableScan) by both its consumers (df count +
-    flagged-starts), so the source parquet is scanned at most twice
-    (window derivation + the token rebuild) — never once per branch;
-    no cartesian products anywhere."""
-    from mre.textops import remove_dup_windows
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = remove_dup_windows(docs, w=8, max_df=5) \
-        ._jdf.queryExecution().executedPlan().toString()
-    # BOTH consumers (df count, flagged-starts) read the cache
-    assert plan.count("InMemoryTableScan") >= 2, plan[:3000]
-    # live source scans: the rebuild's token scan + the cache build
-    # (the cached subtree's FileScan is re-PRINTED under every
-    # InMemoryRelation occurrence but executes once)
-    live = plan.count("Scan parquet") - (
-        plan.count("InMemoryRelation") - 1)
-    assert live <= 2, plan[:3000]
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan

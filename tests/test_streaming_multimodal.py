@@ -1,5 +1,4 @@
-"""Streaming ingest (file source, availableNow passes) + multimodal plumbing
-tests."""
+"""Streaming ingest tests (file source, availableNow passes)."""
 
 import os
 
@@ -68,13 +67,12 @@ def test_streaming_ingest_dedups_across_micro_batches(spark, tmp_path):
 
 
 def test_textops_are_streaming_compatible(spark, tmp_path):
-    """The stateless curation scorers (Gopher rules, repetition is NOT
-    stateless — excluded; lang-ID, PII scrub) are pure column
-    expressions, so the SAME functions run unchanged on a streaming
+    """The stateless curation scorers (Gopher rules, lang-ID) are pure
+    column expressions, so the SAME functions run unchanged on a streaming
     DataFrame and emit identical rows to the batch run. This is the
     streaming story for corpus curation: score-on-ingest with zero extra
     code."""
-    from mre.textops import gopher_quality, lang_pred_expr, pii_scrub
+    from mre.textops import gopher_quality, lang_pred_expr
 
     def lang_pred(docs):
         return docs.select("doc_id", lang_pred_expr().alias("pred_lang"))
@@ -89,7 +87,7 @@ def test_textops_are_streaming_compatible(spark, tmp_path):
     stream = (spark.readStream.schema("doc_id long, text string")
               .parquet(src))
     assert stream.isStreaming
-    for fn in (gopher_quality, lang_pred, pii_scrub):
+    for fn in (gopher_quality, lang_pred):
         out = fn(stream)  # must build without a streaming-unsupported op
         dst = str(tmp_path / f"out_{fn.__name__}")
         ckpt = str(tmp_path / f"ckpt_{fn.__name__}")
@@ -103,66 +101,6 @@ def test_textops_are_streaming_compatible(spark, tmp_path):
         got = spark.read.parquet(dst).orderBy("doc_id").toPandas()
         exp = fn(batch_df).orderBy("doc_id").toPandas()
         assert got.equals(exp), fn.__name__
-
-
-# --- real container-header sniffing (round 3) --------------------------------
-
-
-def test_sniff_media_meta_roundtrip():
-    from mre.multimodal import (make_gif, make_jpeg, make_mp4, make_png,
-                                make_wav, sniff_media_meta)
-
-    assert sniff_media_meta(make_png(333, 17)) == ("png", 333, 17,
-                                                   None, None)
-    assert sniff_media_meta(make_jpeg(640, 480)) == ("jpeg", 640, 480,
-                                                     None, None)
-    assert sniff_media_meta(make_gif(42, 99)) == ("gif", 42, 99,
-                                                  None, None)
-    assert sniff_media_meta(make_wav(16000)) == ("wav", None, None,
-                                                 16000, None)
-    assert sniff_media_meta(make_mp4(640, 360, 12345)) == \
-        ("mp4", 640, 360, None, 12345)
-    # non-1000 timescale: stored units floor-divide both ways — the
-    # sniffer reports floor(floor(ms*ts/1000)*1000/ts), observably
-    assert sniff_media_meta(make_mp4(320, 240, 7777, timescale=600)) == \
-        ("mp4", 320, 240, None, 7776)
-
-
-def test_sniff_media_meta_never_raises():
-    from mre.multimodal import make_png, sniff_media_meta
-
-    none5 = (None, None, None, None, None)
-    assert sniff_media_meta(b"garbage") == none5
-    assert sniff_media_meta(None) == none5
-    assert sniff_media_meta(b"") == none5
-    # truncated PNG: format detected, dimensions unknown
-    assert sniff_media_meta(make_png(10, 10)[:12]) == ("png", None, None,
-                                                       None, None)
-    # every prefix of every container must be handled
-    from mre.multimodal import make_gif, make_jpeg, make_mp4, make_wav
-    for b in (make_png(7, 9), make_jpeg(7, 9), make_gif(7, 9),
-              make_wav(8000), make_mp4(7, 9, 1234),
-              make_mp4(7, 9, 1234, timescale=600)):
-        for cut in range(len(b)):
-            fmt, w, h, sr, dur = sniff_media_meta(b[:cut])  # never raises
-
-
-def test_media_meta_spark(spark):
-    from mre.multimodal import media_meta, make_png
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"media_id": int(i), "payload": make_png(100 + int(i), 50)}
-                 for i in pdf["media_id"]])
-
-    ids = spark.range(8).selectExpr("id AS media_id")
-    media = ids.mapInPandas(gen, "media_id bigint, payload binary")
-    rows = {r["media_id"]: (r["fmt"], r["width"], r["height"])
-            for r in media_meta(media).collect()}
-    assert rows[3] == ("png", 103, 50)
-    assert len(rows) == 8
 
 
 def test_ingest_epoch_retry_after_partial_index_update(spark, tmp_path):

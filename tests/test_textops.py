@@ -1,6 +1,6 @@
 """Property-level tests for the curation operators in mre.textops: the
-near-dup family (MinHash-LSH, exact Jaccard on candidates, clustering),
-the quality and rewrite rules, and the sampling/selection operators."""
+near-dup family (MinHash-LSH, exact Jaccard on candidates, clustering)
+and the language-ID column."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -225,26 +225,6 @@ def test_dup_clusters_driver_path_matches_distributed(spark):
     assert (5, 0) in fast and (129, 100) in fast and (202, 200) in fast
 
 
-def test_gopher_repetition_flags_stuffed_docs(spark):
-    """Top-bigram occupancy: a keyword-stuffed page fails the ~0.18 cut,
-    varied prose passes, and short docs (< n tokens) pass with 0 bp."""
-    from mre.textops import gopher_repetition
-
-    stuffed = "buy cheap pills " * 30          # one bigram dominates
-    varied = ("the quick brown fox jumps over a lazy dog while many "
-              "other animals watch from the tall green grass nearby")
-    docs = spark.createDataFrame(
-        [(1, stuffed), (2, varied), (3, "one")], ["doc_id", "text"])
-    got = {r["doc_id"]: r for r in gopher_repetition(docs).collect()}
-    assert got[1]["pass_repetition"] == 0
-    assert got[1]["top_ngram_bp"] > 1800
-    assert got[2]["pass_repetition"] == 1
-    assert got[3]["pass_repetition"] == 1 and got[3]["top_ngram_bp"] == 0
-    # "buy cheap pills buy cheap pills ..." → bigrams cycle through 3
-    # forms; each ≈ 1/3 of occurrences
-    assert 3200 <= got[1]["top_ngram_bp"] <= 3400
-
-
 def test_near_dup_family_hot_bucket_guards(spark):
     """max_bucket is reachable from the user-facing MinHash near-dup op
     and prunes a hot cluster while the true pair survives."""
@@ -263,633 +243,3 @@ def test_near_dup_family_hot_bucket_guards(spark):
     assert mh == {(100, 101)}
 
 
-def test_remove_dup_passages_strips_planted_boilerplate(spark):
-    from mre.textops import remove_dup_passages
-    BOILER = ("this document is provided without any warranty "
-              "of any kind whatsoever")
-    docs = spark.createDataFrame(
-        [(1, f"unique alpha opening line here. {BOILER}. alpha tail ends"),
-         (2, f"unique beta opening line there. {BOILER}. beta tail ends"),
-         (3, "fully original text with no shared passages. short bits"),
-         (4, BOILER)],  # a doc that IS only boilerplate → rewritten to ''
-        "doc_id long, text string")
-    out = {r["doc_id"]: r for r in remove_dup_passages(docs).collect()}
-    assert BOILER not in out[1]["text"] and BOILER not in out[2]["text"]
-    assert out[1]["text"].startswith("unique alpha opening line here")
-    assert out[1]["text"].endswith("alpha tail ends")  # order preserved
-    assert out[1]["n_removed"] == 1 and out[1]["bytes_removed"] > 0
-    # untouched doc: rewrite is byte-identical, zero removal
-    assert out[3]["text"] == ("fully original text with no shared "
-                              "passages. short bits")
-    assert out[3]["n_removed"] == 0 and out[3]["bytes_removed"] == 0
-    assert out[4]["text"] == "" and out[4]["n_removed"] == 1
-    # short common spans are never touched (min_len floor)
-    short = spark.createDataFrame(
-        [(1, "hello there. some long unique sentence follows this one"),
-         (2, "hello there. different long unique sentence is right here")],
-        "doc_id long, text string")
-    o2 = {r["doc_id"]: r["text"]
-          for r in remove_dup_passages(short).collect()}
-    assert o2[1].startswith("hello there. ")
-    assert o2[2].startswith("hello there. ")
-
-
-def test_pii_scrub_counts_and_redaction(spark):
-    from mre.textops import pii_scrub
-    docs = spark.createDataFrame(
-        [(1, "reach alice.smith+spam@sub.example.co.uk or 555-123-4567"),
-         (2, "hosts 10.0.0.1 and 192.168.255.3; version 1.2 stays"),
-         (3, "totally clean prose with digits 1234 and a dot. end"),
-         (4, "two mails a@b.io c@d.org one phone +491 555 123 4567")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
-    assert (out[1]["n_emails"], out[1]["n_phones"], out[1]["n_ips"]) \
-        == (1, 1, 0)
-    assert "<EMAIL>" in out[1]["text"] and "<PHONE>" in out[1]["text"]
-    assert "alice" not in out[1]["text"]
-    assert out[2]["n_ips"] == 2 and out[2]["text"].count("<IP>") == 2
-    assert "version 1.2 stays" in out[2]["text"]  # no false positive
-    assert out[3]["n_pii"] == 0 and out[3]["text"].endswith("dot. end")
-    assert out[4]["n_emails"] == 2
-
-
-def test_remove_dup_passages_reconstruction_identity(spark):
-    """Split-on-'. '/rejoin-with-'. ' is an exact inverse for ANY text,
-    so docs with nothing removed come back byte-identical — including
-    adversarial separators, and pii_scrub redaction is idempotent."""
-    from mre.textops import pii_scrub, remove_dup_passages
-    texts = [
-        "plain sentence. another one",
-        "trailing separator. ",
-        "a.  double space after dot",
-        ". leading separator",
-        "no separator at all",
-        "",
-        "dots.but.no.spaces",
-        "many. . tiny. . parts. .",
-        "unicode ünïcødé. 中文句子。中文. done",
-        "ends with period.",
-        "a. b. c. d. e. f. g. h",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    # max_df huge → nothing is ever a duplicate → rewrite must be exact
-    out = {r["doc_id"]: r for r in
-           remove_dup_passages(docs, max_df=10**9).collect()}
-    for i, t in enumerate(texts):
-        assert out[i]["text"] == t, (i, t, out[i]["text"])
-        assert out[i]["n_removed"] == 0
-        assert out[i]["bytes_removed"] == 0
-    # pii idempotence: a second scrub finds nothing (tags carry no
-    # digits/@, so no pattern can match inside a redaction)
-    once = pii_scrub(spark.createDataFrame(
-        [(1, "a@b.io 10.0.0.1 555-123-4567 x@y.org 1.2.3.4")],
-        "doc_id long, text string"))
-    twice = pii_scrub(once.select("doc_id", "text")).collect()[0]
-    assert twice["n_pii"] == 0
-
-
-def test_remove_dup_windows_identity_and_boilerplate(spark):
-    """Substring-level dedup (VERDICT r5 #7): (a) with nothing flagged
-    the split-on-' '/rejoin is byte-identical for adversarial inputs;
-    (b) a boilerplate run planted mid-document in many docs is stripped
-    at TOKEN granularity (no sentence boundary needed) while each doc's
-    unique prose survives; (c) overlapping flagged windows merge into
-    one removed run."""
-    from mre.textops import remove_dup_windows
-
-    # (a) identity: huge max_df → nothing flagged → exact reconstruction
-    texts = [
-        "plain words separated by single spaces here",
-        "double  space and trailing space ",
-        " leading space",
-        "",
-        "one",
-        "tabs\tstay inside tokens and so. do dots",
-        "unicode ünïcødé 中文 done",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           remove_dup_windows(docs, w=3, max_df=10**9).collect()}
-    for i, t in enumerate(texts):
-        assert out[i]["text"] == t, (i, t, out[i]["text"])
-        assert out[i]["n_flagged"] == 0
-        assert out[i]["bytes_removed"] == 0
-
-    # (a2) seeded-random adversarial corpus: 200 texts over an alphabet
-    # of spaces, control chars, unicode, and dots — identity must hold
-    # byte-for-byte for every one (one Spark job, not one per example)
-    import random
-    rng = random.Random(40406)
-    alpha = list("ab .\t\n\x00\xa0é中.  ")
-    fuzz = ["".join(rng.choice(alpha) for _ in range(rng.randrange(0, 60)))
-            for _ in range(200)]
-    fdocs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(fuzz)], "doc_id long, text string")
-    fout = {r["doc_id"]: r["text"] for r in
-            remove_dup_windows(fdocs, w=4, max_df=10**9).collect()}
-    for i, t in enumerate(fuzz):
-        assert fout[i] == t, (i, repr(t), repr(fout[i]))
-
-    # (b) + (c): a 10-token license run inside each doc; every token
-    # adjacent to it is doc-unique, so the true duplicated substring is
-    # exactly the boilerplate
-    boiler = ("this content is licensed under the creative commons "
-              "attribution license")                     # 10 tokens
-    rows = [(i, f"intro{i} alpha{i} opener{i} " + boiler +
-             f" tail{i} beta{i} gamma{i} closing{i}")
-            for i in range(6)]
-    docs2 = spark.createDataFrame(rows, "doc_id long, text string")
-    out2 = {r["doc_id"]: r for r in
-            remove_dup_windows(docs2, w=8, max_df=2).collect()}
-    for i in range(6):
-        t = out2[i]["text"]
-        assert "licensed under the creative" not in t
-        assert t == (f"intro{i} alpha{i} opener{i} "
-                     f"tail{i} beta{i} gamma{i} closing{i}")
-        # 10 boiler tokens, w=8 → exactly 3 overlapping flagged windows
-        # merging into ONE removed run of exactly the boilerplate span
-        assert out2[i]["n_flagged"] == 3
-        assert out2[i]["bytes_removed"] == len(boiler) + 1
-
-
-def test_c4_line_clean_rules(spark):
-    """Each C4 rule on a hand-built page (round 7): terminal-punct
-    keep, min-words drop, javascript-line drop, lorem-ipsum and
-    curly-brace page drops, and the <3-kept-lines page drop."""
-    from mre.textops import c4_line_clean
-    good = "alpha beta gamma delta epsilon zeta."
-    pages = [
-        # 3 good lines + one unpunctuated + one short + one javascript
-        (1, "\n".join([good, "no terminal punctuation here at all",
-                       "too short.", 
-                       "please enable javascript to continue now.",
-                       good, good])),
-        (2, good + "\nlorem ipsum dolor sit amet consectetur.\n"
-            + good + "\n" + good),          # page drop: lorem ipsum
-        (3, good + "\nvar x = { a: 1 };\n" + good + "\n" + good),
-        (4, good + "\n" + good),            # only 2 kept -> keep=0
-    ]
-    out = {r["doc_id"]: r for r in c4_line_clean(
-        spark.createDataFrame(pages, "doc_id long, text string"))
-        .collect()}
-    assert (out[1]["n_lines"], out[1]["n_kept"], out[1]["keep"]) \
-        == (6, 3, 1)
-    assert out[1]["text"] == "\n".join([good, good, good])
-    # line rules pass inside dropped pages; the page flag is separate
-    assert out[2]["keep"] == 0 and out[2]["n_kept"] == 4
-    assert out[3]["keep"] == 0 and out[3]["n_kept"] == 3
-    assert out[4]["keep"] == 0 and out[4]["n_kept"] == 2
-    # bytes_removed is exact
-    assert out[1]["bytes_removed"] \
-        == len(pages[0][1]) - len(out[1]["text"])
-
-
-def test_lm_learn_score(spark):
-    """Unigram-LM perplexity scoring (round 7, CCNet-family): learn on
-    a hand corpus and replay the micro-nat arithmetic in pure Python —
-    vocab total order, OOV penalty, integer sums, zero-token NULLs."""
-    import math
-    from mre.textops import lm_learn, lm_score, lm_vocab_rows
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the mat"),
-         (2, "the the the zzz qqq"),
-         (3, "cat cat dog dog dog rareword"),
-         (4, "   "),
-         (5, "on on on the mat mat")],
-        "doc_id long, text string")
-    vocab, total = lm_learn(docs, vocab_top=5)
-    rows = lm_vocab_rows(vocab)
-    assert total == 23
-    counts = {"the": 6, "on": 4, "cat": 3, "dog": 3, "mat": 3}
-    # total order (cnt desc, tok asc) picks exactly these five
-    assert {t for t, _ in rows} == set(counts)
-    lut = {t: nll for t, nll in rows}
-    for t, c in counts.items():
-        assert lut[t] == math.floor(-math.log(c / 23) * 1e6)
-    oov = math.floor(-math.log(1 / 23) * 1e6)
-
-    def score(text):
-        toks = [t for t in text.lower().strip().split() if t]
-        s = sum(lut.get(t, oov) for t in toks)
-        return len(toks), s, s // len(toks) if toks else None
-    got = {r["doc_id"]: (r["lm_n_tokens"], r["nll_micro_sum"],
-                         r["nll_micro_mean"])
-           for r in lm_score(docs, rows, total).collect()}
-    for did, text in [(1, "the cat sat on the mat"),
-                      (2, "the the the zzz qqq"),
-                      (3, "cat cat dog dog dog rareword"),
-                      (5, "on on on the mat mat")]:
-        n, s, m = score(text)
-        assert got[did] == (n, s, m), did
-    # zero-token doc: no evidence -> NULL score, not a crash or a 0
-    assert got[4] == (0, None, None)
-    # a doc made of frequent tokens scores better (lower NLL) than one
-    # leaning on OOV mass
-    assert got[5][2] < got[3][2]
-
-
-def test_lm_score_plan_is_pure_projection(spark):
-    """lm_score is a map-literal fold over the token array — ZERO
-    shuffle, no Python eval: it must ride any corpus scan."""
-    from mre.textops import lm_learn, lm_score, lm_vocab_rows
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    vocab, total = lm_learn(docs, vocab_top=16)
-    plan = (lm_score(docs, lm_vocab_rows(vocab), total)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan, plan
-    assert "EvalPython" not in plan, plan
-
-
-def test_gopher_dup_sections(spark):
-    """Gopher duplicate-line/paragraph rules (round 7): hand pages with
-    known within-doc duplicate structure, replayed in pure Python —
-    occurrence and character-weighted fractions in basis points, trim +
-    empty-drop semantics, flat docs trivially pass."""
-    from mre.textops import gopher_dup_sections
-    p1 = "alpha beta\ngamma delta"                     # no dups
-    # 'dup line' ×2 of 4 lines (5000 bp); chars: dup 16 of 36
-    p2 = "dup line\nunique one\ndup line\nunique two"
-    # two identical paragraphs (2 lines each) + one distinct
-    p3 = "para a\npara b\n\nonly one\n\npara a\npara b"
-    p4 = "flat single line no newlines at all"
-    p5 = "  \n\n  "                                    # empties only
-    docs = spark.createDataFrame(
-        [(1, p1), (2, p2), (3, p3), (4, p4), (5, p5)],
-        "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict()
-           for r in gopher_dup_sections(docs).collect()}
-    assert got[1]["n_lines"] == 2 and got[1]["dup_line_bp"] == 0
-    assert got[1]["n_paras"] == 1 and got[1]["pass_dup_sections"] == 1
-    assert got[2]["n_lines"] == 4
-    assert got[2]["dup_line_bp"] == 5000
-    assert got[2]["dup_line_char_bp"] == 16 * 10000 // 36
-    assert got[2]["dup_para_bp"] == 0       # one paragraph, no dup
-    assert got[2]["pass_dup_sections"] == 0  # fails both line cuts
-    # p3: lines 'para a','para b' each ×2 of 5 → dup 4/5 = 8000 bp;
-    # paragraphs: 'para a\npara b' ×2 of 3 → 6666 bp
-    assert got[3]["n_lines"] == 5 and got[3]["dup_line_bp"] == 8000
-    assert got[3]["n_paras"] == 3 and got[3]["dup_para_bp"] == 6666
-    assert got[3]["pass_dup_sections"] == 0
-    assert got[4]["n_lines"] == 1 and got[4]["n_paras"] == 1
-    assert got[4]["pass_dup_sections"] == 1
-    # whitespace-only sections are dropped entirely
-    assert got[5]["n_lines"] == 0 and got[5]["n_paras"] == 0
-    assert got[5]["dup_line_bp"] == 0 and got[5]["pass_dup_sections"] == 1
-
-
-def test_gopher_ngram_battery(spark):
-    """Full Gopher Table A1 n-gram battery (round 7): hand pages with
-    known top-gram and duplicate-gram structure, char fractions replayed
-    by hand on the space-joined-token basis; dense (doc, n) output."""
-    from mre.textops import gopher_ngram_battery
-    p1 = "the cat sat on the mat and then the cat sat again"
-    p2 = "a b c d e a b c d e a b c d e"
-    docs = spark.createDataFrame(
-        [(1, p1), (2, p2), (3, "x"), (4, "")],
-        "doc_id long, text string")
-    rows = gopher_ngram_battery(docs).collect()
-    assert len(rows) == 4 * 9  # dense: every doc x n=2..10
-    got = {(r["doc_id"], r["n"]): r.asDict() for r in rows}
-    # p1 top 2-gram 'the cat' x2 (7 chars), basis len(p1)=49
-    assert got[(1, 2)]["char_bp"] == 2 * 7 * 10000 // 49
-    # p1 top 3-gram 'the cat sat' x2 (11 chars)
-    assert got[(1, 3)]["char_bp"] == 2 * 11 * 10000 // 49
-    # p1 has no repeated 4-gram: top still counts its single occurrence
-    assert got[(1, 4)]["char_bp"] == 17 * 10000 // 49
-    # p2 dup 5-grams: 'a b c d e' x3 + four rotations x2, all 9 chars;
-    # occurrence-weighted chars = 3*9 + 4*2*9 = 99 of basis 29
-    assert got[(2, 5)]["char_bp"] == 99 * 10000 // 29
-    assert got[(2, 5)]["pass_rule"] == 0
-    assert got[(2, 5)]["pass_ngram_battery"] == 0
-    # docs too short for any n-gram: zero, rule passes
-    assert got[(3, 7)]["char_bp"] == 0 and got[(3, 7)]["pass_rule"] == 1
-    assert got[(4, 10)]["char_bp"] == 0
-    assert got[(3, 2)]["pass_ngram_battery"] == 1
-
-
-def test_gopher_line_rules(spark):
-    """Gopher line-format rules (round 7): bullet-start and
-    ellipsis-end fractions on the basis-point grid; ASCII -/* need a
-    following space, unicode bullets match bare; empty docs pass."""
-    from mre.textops import gopher_line_rules
-    docs = spark.createDataFrame([
-        (1, "• one\n• two\n- three\nplain"),
-        (2, "read more...\nok\nfine…\nx\ny"),
-        (3, "-5 degrees\n*emphasis*"),
-        (4, "")], "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict()
-           for r in gopher_line_rules(docs).collect()}
-    assert got[1]["bullet_bp"] == 7500 and got[1]["pass_line_rules"] == 1
-    assert got[2]["ellipsis_bp"] == 4000 and got[2]["pass_line_rules"] == 0
-    assert got[3]["bullet_bp"] == 0  # -5 / *emphasis* are not bullets
-    assert got[4]["n_lines"] == 0 and got[4]["pass_line_rules"] == 1
-
-
-def test_url_filter(spark):
-    """RefinedWeb-family URL filter (round 7): occurrence-weighted
-    blocklist score (hard=100/soft=40), hostname digit fraction, and
-    length cut — hand URLs replayed by hand."""
-    from mre.textops import url_filter
-    docs = spark.createDataFrame([
-        (1, "https://example.com/articles/cooking"),
-        (2, "https://example.com/casino-night-charity"),      # 1 soft
-        (3, "https://best-casino.com/casino/casino-bonus-code"),  # 3+1 soft
-        (4, "https://example.com/xxx-content"),               # 1 hard
-        (5, "http://host12345678901.com/page"),               # digit host
-        (6, "https://example.com/" + "a" * 2100),             # too long
-        (7, "not a url at all"),
-    ], "doc_id long, url string")
-    got = {r["doc_id"]: r.asDict() for r in url_filter(docs).collect()}
-    assert got[1]["spam_score"] == 0 and got[1]["keep_url"] == 1
-    assert got[2]["spam_score"] == 40 and got[2]["keep_url"] == 1
-    # 'casino' x3 + 'bonus-code' x1 = 160
-    assert got[3]["spam_score"] == 160 and got[3]["keep_url"] == 0
-    assert got[4]["spam_score"] == 100 and got[4]["keep_url"] == 0
-    # host 'host12345678901.com': 11 digits of 19 chars
-    assert got[5]["host_digit_bp"] == 11 * 10000 // 19
-    assert got[5]["keep_url"] == 0
-    assert got[6]["keep_url"] == 0
-    # no scheme -> empty host -> digit rule vacuous
-    assert got[7]["host_digit_bp"] == 0 and got[7]["keep_url"] == 1
-
-
-def test_budget_sample(spark):
-    """Token-budget mixture sampler (round 7): the two-phase bucketed
-    prefix sum must equal a plain per-source hash-order cumsum replayed
-    in Python, budgets honored inclusively, weights_bp splitting the
-    budget per source."""
-    import hashlib
-    from mre.textops import budget_sample
-    rows = [(i, f"doc {i} " + "tok " * (i % 7), "A" if i % 2 else "B")
-            for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "source string")
-    # python replay: per source, order by (md5, doc_id), keep while
-    # running whitespace-token total <= budget
-    def replay(budget_by_src):
-        kept = {}
-        by_src = {}
-        for i, t, s in rows:
-            by_src.setdefault(s, []).append(
-                (hashlib.md5(t.encode()).hexdigest(), i,
-                 len(t.strip().split())))
-        for s, lst in by_src.items():
-            cum = 0
-            for h, i, n in sorted(lst):
-                cum += n
-                if cum <= budget_by_src[s]:
-                    kept[i] = cum
-        return kept
-    got = {r["doc_id"]: r["cum_tokens"]
-           for r in budget_sample(docs, 30).collect()}
-    assert got == replay({"A": 30, "B": 30})
-    got_w = {r["doc_id"]: r["cum_tokens"]
-             for r in budget_sample(
-                 docs, 100, weights_bp={"A": 4000}).collect()}
-    assert got_w == replay({"A": 40, "B": 100})  # B not in map -> full
-
-
-def test_nb_train_score(spark):
-    """Self-trained multinomial NB (round 7): hand corpus with two
-    separable classes, full micro-nat replay in pure Python (counts,
-    add-one smoothing, shared bounded vocab, OOV slot, prior), plus a
-    held-out-style doc containing OOV tokens; empty class raises."""
-    import math
-    from mre.textops import nb_score, nb_train
-    rows = [
-        (1, "good clean prose text here", 1),
-        (2, "good solid prose here again", 1),
-        (3, "spam spam casino offer spam", 0),
-        (4, "casino offer spam now", 0),
-        (5, "good prose casino unknowntok", 1),  # mixed + OOV at V=8
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "label int")
-    model, meta = nb_train(docs, "label", vocab_top=8)
-    got = {r["doc_id"]: r.asDict()
-           for r in nb_score(docs, model, meta).collect()}
-    # python replay
-    from collections import Counter
-    c0, c1 = Counter(), Counter()
-    for _, t, y in rows:
-        (c1 if y else c0).update(t.split())
-    tot0, tot1 = sum(c0.values()), sum(c1.values())
-    allc = Counter()
-    for t in set(c0) | set(c1):
-        allc[t] = c0[t] + c1[t]
-    vocab = sorted(allc, key=lambda t: (-allc[t], t))[:8]
-    v = len(vocab)
-    n0, n1 = 2, 3
-    nll = lambda c, d: math.floor(-math.log(c / d) * 1e6)
-    delta = {t: nll(c1[t] + 1, tot1 + v + 1) - nll(c0[t] + 1, tot0 + v + 1)
-             for t in vocab}
-    oov = nll(1, tot1 + v + 1) - nll(1, tot0 + v + 1)
-    prior = nll(n1, 5) - nll(n0, 5)
-    for i, t, y in rows:
-        m = prior + sum(delta.get(w, oov) for w in t.split())
-        assert got[i]["margin_micro"] == m, (i, got[i], m)
-        assert got[i]["nb_pred"] == (1 if m <= 0 else 0)
-    # classes separate: clean docs predict 1, spam docs 0
-    assert got[1]["nb_pred"] == 1 and got[2]["nb_pred"] == 1
-    assert got[3]["nb_pred"] == 0 and got[4]["nb_pred"] == 0
-    import pytest as _p
-    allone = docs.withColumn("label", F.lit(1))
-    with _p.raises(ValueError, match="both classes"):
-        nb_train(allone, "label")
-
-
-def test_hash_order_cumsum_bucket_width_invariance(spark):
-    """The two-phase prefix sum must be IDENTICAL for any bucket prefix
-    width (1 hex digit = 16 buckets, 2 = 256): (bucket, rest-of-hash)
-    ordering equals global hash ordering for every prefix length, so
-    widening the fan-out for huge sources cannot change a single row."""
-    from mre.textops import budget_sample
-    rows = [(i, f"d{i} " + "w " * (i % 11), f"s{i % 3}")
-            for i in range(120)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "source string")
-    a = {(r["doc_id"], r["cum_tokens"])
-         for r in budget_sample(docs, 55).collect()}
-    b = {(r["doc_id"], r["cum_tokens"])
-         for r in budget_sample(docs, 55, bucket_hex_digits=2).collect()}
-    assert a == b and a
-
-
-def test_dsir_weights_match_python_replay(spark):
-    """DSIR bucket log-ratios and per-doc weights replayed in pure
-    Python (math.log + floor micro-nats) — the same arithmetic the
-    DuckDB oracle runs; exactness is the contract."""
-    import hashlib
-    import math
-    from mre.textops import dsir_weights
-    rows = [(0, "the quick brown fox", "en"),
-            (1, "le renard brun rapide", "fr"),
-            (2, "the lazy dog sleeps", "en"),
-            (3, "", "en"),
-            (4, "one", "de"),
-            (5, "the the the quick quick", "en")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "lang string")
-    got = {r["doc_id"]: (r["dsir_n_feats"], r["dsir_weight_micro"])
-           for r in dsir_weights(docs, F.col("lang") == "en").collect()}
-
-    B = 256
-
-    def feats(text):
-        tk = [t for t in text.lower().strip().split() if t]
-        return tk + [f"{a} {b}" for a, b in zip(tk, tk[1:])]
-
-    def bucket(f):
-        return int(hashlib.md5(f.encode()).hexdigest()[:4], 16) % B
-
-    cr, ct = {}, {}
-    for _i, text, lang in rows:
-        for f in feats(text):
-            b = bucket(f)
-            cr[b] = cr.get(b, 0) + 1
-            if lang == "en":
-                ct[b] = ct.get(b, 0) + 1
-    tr = sum(cr.values())
-    tt = sum(ct.values())
-    nll = lambda c, d: math.floor(-math.log(c / d) * 1e6)
-    lr = {b: nll(cr.get(b, 0) + 1, tr + B) - nll(ct.get(b, 0) + 1, tt + B)
-          for b in range(B)}
-    for i, text, _lang in rows:
-        fs = feats(text)
-        assert got[i] == (len(fs), sum(lr[bucket(f)] for f in fs)), i
-    assert got[3] == (0, 0)  # empty text: no features, weight 0
-
-
-def test_topk_by_weight_equals_global_sort(spark):
-    """Histogram-threshold top-k == row_number over (w desc, id asc)
-    for every k, including tie groups straddling the threshold, k=0,
-    and k >= n."""
-    from pyspark.sql import Window
-    from mre.textops import topk_by_weight
-    rows = [(i, [5, 3, 3, 3, 1, 1, 0, 5, 3, 1][i]) for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, w long")
-    ranked = df.withColumn("rn", F.row_number().over(
-        Window.orderBy(F.desc("w"), F.asc("doc_id"))))
-    for k in [0, 1, 2, 3, 4, 5, 7, 10, 15]:
-        want = {r["doc_id"] for r in ranked.filter(F.col("rn") <= k)
-                .collect()}
-        got = {r["doc_id"] for r in
-               topk_by_weight(df, k, weight_col="w").collect()}
-        assert got == want, (k, got, want)
-
-
-def test_dsir_topk_prefers_target_like_docs(spark):
-    """Docs sharing the target subset's vocabulary outrank docs that
-    don't — the behavioral point of DSIR selection."""
-    from mre.textops import dsir_topk
-    en = [(i, "the quick brown fox jumps over the lazy dog", "en")
-          for i in range(8)]
-    fr = [(8 + i, "le renard brun saute par dessus le chien", "fr")
-          for i in range(8)]
-    # an unlabeled doc written in target-like vocabulary, and one not
-    probe = [(100, "the quick dog jumps", "xx"),
-             (101, "renard chien saute brun", "xx")]
-    docs = spark.createDataFrame(en + fr + probe,
-                                 "doc_id long, text string, lang string")
-    sel = dsir_topk(docs, F.col("lang") == "en", 9)
-    ids = {r["doc_id"] for r in sel.collect()}
-    assert 100 in ids and 101 not in ids
-    assert all(i in ids for i in range(8))
-
-
-def test_kmeans_cells_deterministic_and_separating(spark):
-    """Lloyd's with the deterministic seed separates two obvious
-    blobs, is reproducible run-to-run, and an emptied cell keeps its
-    previous centroid (duplicate seeds force one empty)."""
-    from mre.textops import kmeans_cells
-    a = [1.0, 0.0, 0.0, 0.0]
-    b = [0.0, 1.0, 0.0, 0.0]
-    rows = ([(i, [x + (0.01 * (i % 3)) for x in a]) for i in range(6)]
-            + [(10 + i, [x + (0.01 * (i % 3)) for x in b])
-               for i in range(6)])
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cells, cents = kmeans_cells(emb, k=2, iters=2)
-    got = {r["vec_id"]: r["cell"] for r in cells.collect()}
-    assert len(set(got[i] for i in range(6))) == 1
-    assert len(set(got[10 + i] for i in range(6))) == 1
-    assert got[0] != got[10]
-    cells2, cents2 = kmeans_cells(emb, k=2, iters=2)
-    assert cents == cents2
-    assert got == {r["vec_id"]: r["cell"] for r in cells2.collect()}
-    # duplicate seed vectors: every point lands in the FIRST max cell,
-    # the second cell empties and must keep its (seed) centroid
-    dup = spark.createDataFrame(
-        [(0, a), (1, a), (2, a)], "vec_id long, embedding array<float>")
-    _, dcents = kmeans_cells(dup, k=2, iters=1)
-    assert dcents[1] == [round(x, 6) for x in a]
-
-
-def test_kmeans_driver_path_matches_distributed(spark):
-    """The round-8 driver Lloyd fast path (below driver_vec_cap) must
-    produce the same centroids and assignments as the distributed
-    per-round aggregation — checked on the real sf0.001 embeddings
-    table with the driver-row parameters (k=8, iters=3)."""
-    from mre.textops import kmeans_cells
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet")
-    cells_f, cents_f = kmeans_cells(emb, k=8, iters=3)
-    cells_d, cents_d = kmeans_cells(emb, k=8, iters=3,
-                                    driver_vec_cap=0)
-    assert cents_f == cents_d
-    fast = {(r["vec_id"], r["cell"]) for r in cells_f.collect()}
-    slow = {(r["vec_id"], r["cell"]) for r in cells_d.collect()}
-    assert fast == slow
-
-
-def test_semdedup_losers_drop_planted_dups(spark):
-    """A planted copy (higher id, same vector) is dropped with its
-    original as witness; distinct-direction vectors survive."""
-    from mre.textops import semdedup_losers
-    import math as _m
-    base = []
-    for i in range(12):
-        v = [0.0] * 8
-        v[i % 4] = 1.0
-        v[4 + (i % 4)] = 0.5 * (1 + (i % 3))
-        n = _m.sqrt(sum(x * x for x in v))
-        base.append((i, [x / n for x in v]))
-    copies = [(100 + i, vec) for i, vec in base[:3]]
-    emb = spark.createDataFrame(base + copies,
-                                "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: (r["witness"], r["cosine"])
-           for r in semdedup_losers(emb, k=2, iters=2,
-                                    threshold=0.999).collect()}
-    for i in range(3):
-        assert 100 + i in out and out[100 + i][0] == i, out
-        assert out[100 + i][1] == 1.0
-    assert all(i not in out for i in range(12))
-
-
-def test_mixture_weights_bp_replay_and_temperature(spark):
-    """Floored pow micro-weights + basis points replay in pure Python;
-    alpha=10000 is proportional, alpha=0 uniform, 0.5 compresses."""
-    import math
-    from mre.textops import mixture_weights_bp
-    rows = ([(i, "x", "big") for i in range(90)]
-            + [(100 + i, "x", "small") for i in range(10)])
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "source string")
-    for abp in (0, 5000, 10000):
-        got = {r["source"]: (r["n_docs"], r["w_micro"], r["weight_bp"])
-               for r in mixture_weights_bp(docs, alpha_bp=abp)
-               .collect()}
-        w = {s: math.floor((n ** (abp / 10000.0)) * 1e6)
-             for s, n in (("big", 90), ("small", 10))}
-        t = sum(w.values())
-        for s, n in (("big", 90), ("small", 10)):
-            assert got[s] == (n, w[s], w[s] * 10000 // t), (abp, s)
-    flat = {r["source"]: r["weight_bp"]
-            for r in mixture_weights_bp(docs, alpha_bp=0).collect()}
-    assert flat["big"] == flat["small"] == 5000
-    half = {r["source"]: r["weight_bp"]
-            for r in mixture_weights_bp(docs, alpha_bp=5000).collect()}
-    # temperature compresses: 90:10 natural (9000 bp) → ~3:1
-    assert 7000 < half["big"] < 8000 and half["small"] > 2000
