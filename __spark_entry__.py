@@ -368,7 +368,13 @@ def q_url_dedup(spark, sf_dir):
       slash noise) must collapse to one canonical url via a pure-regex
       normalizer (JVM-side, no UDF). url_norm=the canonical url,
       n_variants=count, sample_raw=min raw variant.
-    * op='robots' — robots_allowed over the clean urls (see below)."""
+    * op='uf' — url_filter (round 7, the RefinedWeb-family URL gate)
+      over planted spam/digit-host/clean variants of the clean url
+      (doc_id%23: digit-heavy host; %13: hard marker; %18: three soft
+      hits; %9: two soft hits — kept): url_norm=the url,
+      n_variants=spam_score*1000000 + host_digit_bp (both metrics in
+      one packed long), sample_raw=keep_url."""
+    from mre.textops import url_filter
     _prep(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id")
     sid = (F.col("doc_id") % 20).cast("string")
@@ -389,6 +395,24 @@ def q_url_dedup(spark, sf_dir):
                 F.min("url").alias("sample_raw"))
            .select(F.lit("norm").alias("op"), "url_norm",
                    "n_variants", "sample_raw"))
+    doc = F.col("doc_id")
+    uf_url = (
+        F.when(doc % 23 == 0,
+               F.concat(F.lit("https://h"),
+                        (doc * 9973).cast("string"),
+                        F.lit("9999999.com/p")))
+        .when(doc % 13 == 0, F.concat(clean, F.lit("-xxx")))
+        .when(doc % 18 == 0,
+              F.concat(clean, F.lit("/casino-casino-casino")))
+        .when(doc % 9 == 0,
+              F.concat(clean, F.lit("/casino-bonus-code")))
+        .otherwise(clean))
+    uf = (url_filter(d.select("doc_id", uf_url.alias("url")))
+          .select(F.lit("uf").alias("op"),
+                  F.col("url").alias("url_norm"),
+                  (F.col("spam_score") * 1000000
+                   + F.col("host_digit_bp")).alias("n_variants"),
+                  F.col("keep_url").cast("string").alias("sample_raw")))
 
     # op='robots' — crawl-policy compliance: per-host robots.txt BUILT
     # by arithmetic in the executors (mre/linkgraph.py robots_txt_of:
@@ -409,7 +433,7 @@ def q_url_dedup(spark, sf_dir):
                   (F.col("allowed") * 1000000
                    + F.col("crawl_delay_ms")).alias("n_variants"),
                   F.col("host").alias("sample_raw")))
-    return nrm.unionAll(rb)
+    return nrm.unionAll(uf).unionAll(rb)
 
 
 def q_hash_split(spark, sf_dir):
@@ -772,10 +796,69 @@ def oracle_sql() -> dict[str, str]:
                            '([?&])utm_[a-z_]+=[^&#]*', '\1', 'g'),
                            '^https?://(www\.)*', 'https://', 'g'),
                            '([^:/])[?&/]+$', '\1', 'g') AS url_norm
-                FROM u)
+                FROM u),
+            ufu AS (
+                SELECT doc_id,
+                       CASE WHEN doc_id % 23 = 0
+                            THEN 'https://h' || (doc_id * 9973)
+                                 || '9999999.com/p'
+                            WHEN doc_id % 13 = 0
+                            THEN 'https://example-' || (doc_id % 20)
+                                 || '.com/articles/' || doc_id || '-xxx'
+                            WHEN doc_id % 18 = 0
+                            THEN 'https://example-' || (doc_id % 20)
+                                 || '.com/articles/' || doc_id
+                                 || '/casino-casino-casino'
+                            WHEN doc_id % 9 = 0
+                            THEN 'https://example-' || (doc_id % 20)
+                                 || '.com/articles/' || doc_id
+                                 || '/casino-bonus-code'
+                            ELSE 'https://example-' || (doc_id % 20)
+                                 || '.com/articles/' || doc_id
+                       END AS url
+                FROM documents),
+            ufs AS (
+                SELECT url,
+                       (len(regexp_extract_all(lower(url), 'porn'))
+                        + len(regexp_extract_all(lower(url), 'xxx'))
+                        + len(regexp_extract_all(lower(url), 'viagra'))
+                        + len(regexp_extract_all(lower(url), 'warez')))
+                           * 100
+                       + (len(regexp_extract_all(lower(url), 'casino'))
+                          + len(regexp_extract_all(lower(url),
+                                                   'lottery'))
+                          + len(regexp_extract_all(lower(url),
+                                                   'betting'))
+                          + len(regexp_extract_all(lower(url), 'pills'))
+                          + len(regexp_extract_all(lower(url),
+                                                   'torrent'))
+                          + len(regexp_extract_all(lower(url),
+                                                   'bonus-code'))
+                          + len(regexp_extract_all(lower(url),
+                                                   'free-money')))
+                           * 40 AS score,
+                       regexp_extract(lower(url),
+                           '^[a-z][a-z0-9+.-]*://(?:www\.)?([^/:?#]+)',
+                           1) AS host
+                FROM ufu),
+            ufo AS (
+                SELECT url, score,
+                       CASE WHEN length(host) > 0
+                            THEN length(regexp_replace(host, '[^0-9]',
+                                                       '', 'g'))
+                                 * 10000 // length(host)
+                            ELSE 0 END AS hbp
+                FROM ufs)
             SELECT 'norm' AS op, url_norm, count(*) AS n_variants,
                    min(url) AS sample_raw
             FROM n GROUP BY url_norm
+            UNION ALL
+            SELECT 'uf' AS op, url AS url_norm,
+                   CAST(score * 1000000 + hbp AS BIGINT) AS n_variants,
+                   CAST(CAST(score < 100 AND hbp <= 5000
+                             AND length(url) <= 2048 AS INTEGER)
+                        AS VARCHAR) AS sample_raw
+            FROM ufo
             UNION ALL
             -- op='robots': arithmetic twin of robots_txt_of (even host
             -- idx: a specific mrebot group disallows /articles/ iff

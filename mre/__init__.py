@@ -16,11 +16,13 @@ Layout
 ``mre.io``          — source/sink abstraction (parquet in sandbox, Iceberg in
                       prod behind the same call sites)
 ``mre.fixtures``    — deterministic synthetic corpus (FIXTURES.md spec)
-``mre.textops``     — the operators curation composes: Gopher quality
-                      rules, fingerprints, MinHash-LSH + exact Jaccard
-                      confirm, clustering, decontamination, hash split
+``mre.textops``     — the operators curation composes: URL gate, Gopher
+                      quality rules, fingerprints, MinHash-LSH + exact
+                      Jaccard confirm, clustering, decontamination, hash
+                      split
 ``mre.curate``      — the five curation stages (quality → exact dedup →
-                      near-dup → decontaminate → split), run_curate /
+                      near-dup → decontaminate → split) plus the opt-in
+                      URL gate, run_curate /
                       run_corpus, incremental ingest dedup against a
                       corpus index
 ``mre.linkgraph``   — robots.txt evaluation and the re-crawl fetch plan

@@ -8,8 +8,10 @@ user journey over a documents table, as one resumable job.
 Every stage exists (and is individually oracled) in ``mre.textops``; this
 module wires them into the single pipeline a 100 TB curation run actually
 executes, with the same stage-lineage/resume story ``run_extract`` has.
-These five stages are the whole pipeline; a stage belongs here only while a
-checked workload (``corpus_e2e``, the ``curation_pipeline`` oracle) runs it.
+These five stages are the whole default pipeline; a stage belongs here only
+while a checked workload (``corpus_e2e``, the ``curation_pipeline`` oracle)
+runs it. The one opt-in stage left, the ``url_gate`` URL filter, is the
+next to go under that rule.
 
 Scale design (10^12 docs):
 * Stage checkpoints are NARROW — each stage materializes only the
@@ -42,7 +44,8 @@ from pyspark.sql import functions as F
 from .io import read_if_present, read_table, write_append, write_overwrite
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
                       gopher_quality, hash_split, jaccard_on_candidates,
-                      minhash_bands, minhash_near_dups, minhash_signatures)
+                      minhash_bands, minhash_near_dups, minhash_signatures,
+                      url_filter)
 
 
 # --------------------------------------------------------------------------
@@ -159,7 +162,8 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                shingle_n: int = 3, minhash_threshold: float = 0.2,
                jaccard_threshold: float = 0.5, contamination_n: int = 5,
                contamination_min_shared: int = 1, train_frac: float = 0.9,
-               max_bucket: int | None = None, resume: bool = True) -> None:
+               max_bucket: int | None = None, resume: bool = True,
+               url_gate: bool = False) -> None:
     """Run the curation pipeline end-to-end with stage checkpoints.
 
     ``src`` is a documents table (doc_id, text, …) — a path/URI, or a
@@ -179,7 +183,13 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
     new lineage row with a bumped ``attempt`` counter, so duplicate
     (run_id, stage) rows are ordered and rollups can pick the latest
     (ADVICE r4). The run's lineage rows are read once, up front: they
-    give both the committed stages and each stage's next attempt."""
+    give both the committed stages and each stage's next attempt.
+
+    ``url_gate`` (round 7) prepends the RefinedWeb-family URL filter
+    (``textops.url_filter``: blocklist score, digit-heavy hosts, length
+    cut — zero-shuffle projections) as the very first stage; requires a
+    ``url`` column (the extraction output has one) and raises if the
+    corpus lacks it."""
     from .textops import cache_mark, release_caches
     _mark = cache_mark()
     docs = src if isinstance(src, DataFrame) else read_table(spark, src)
@@ -190,7 +200,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
         jaccard_threshold=jaccard_threshold,
         contamination_n=contamination_n,
         contamination_min_shared=contamination_min_shared,
-        train_frac=train_frac, max_bucket=max_bucket)
+        train_frac=train_frac, max_bucket=max_bucket, url_gate=url_gate)
     rows = _lineage_rows(spark, lineage_dst, run_id)
     done = _done_stages(rows, ph) if resume else set()
     attempts = Counter(r["stage"] for r in rows)
@@ -217,6 +227,20 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                      lineage_dst)
         return out
 
+    if url_gate:
+        # stage 0 — the RefinedWeb-family URL gate, BEFORE any content
+        # work (zero-shuffle projection; cheapest possible first cut)
+        if "url" not in docs.columns:
+            raise ValueError(
+                "url_gate=True needs a 'url' column on the corpus "
+                "(extraction output has one; plain documents tables "
+                "may not)")
+        _pre_url = docs
+        sU = _stage("url_filter",
+                    lambda: url_filter(_pre_url)
+                    .filter(F.col("keep_url") == 1).select("doc_id"),
+                    _pre_url)
+        docs = docs.join(sU, "doc_id", "left_semi")
     s1 = _stage("quality", lambda: quality_keep_ids(docs), docs)
     d2 = docs.join(s1, "doc_id", "left_semi")
     s2 = _stage("exact_dedup", lambda: exact_keeper_ids(d2), s1)

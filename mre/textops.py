@@ -1,10 +1,10 @@
 """Training-data pipeline operators over document tables.
 
 These are the corpus-preparation ops the curation pipeline
-(``mre.curate``) composes around the extractor: the Gopher quality
-rules, fingerprints and MinHash-LSH near-dup with exact n-gram Jaccard
-confirmation, connected components, benchmark decontamination, the
-language-ID column and the hash split.
+(``mre.curate``) composes around the extractor: the URL gate, the
+Gopher quality rules, fingerprints and MinHash-LSH near-dup with exact
+n-gram Jaccard confirmation, connected components, benchmark
+decontamination, the language-ID column and the hash split.
 
 Everything stays JVM-side (built-in functions, higher-order array
 expressions); only small connected-component graphs are labelled on
@@ -507,6 +507,61 @@ def gopher_quality(docs: DataFrame) -> DataFrame:
     )
 
 
+# URL spam markers in two tiers (the RefinedWeb-family soft-scoring
+# device, deterministic simplification): one hard hit — or enough soft
+# hits to reach the cutoff — drops the URL. Occurrences count, not
+# presence, so 'casino-casino-casino' scores 3x.
+URL_SPAM_HARD = ("porn", "xxx", "viagra", "warez")
+URL_SPAM_SOFT = ("casino", "lottery", "betting", "pills", "torrent",
+                 "bonus-code", "free-money")
+URL_SPAM_CUTOFF = 100
+URL_HOST_DIGIT_BP_CUT = 5000
+URL_MAX_LEN = 2048
+
+
+def url_filter(df: DataFrame, *, url_col: str = "url",
+               cutoff: int = URL_SPAM_CUTOFF,
+               host_digit_bp_cut: int = URL_HOST_DIGIT_BP_CUT,
+               max_len: int = URL_MAX_LEN) -> DataFrame:
+    """URL-level quality filter (RefinedWeb-family, Penedo et al. 2023
+    §3.1: URL scoring against a word blocklist plus structural rules —
+    the first gate a crawl pipeline applies, before any content is
+    fetched or parsed). Three deterministic rules over the lowercased
+    URL:
+
+    * ``spam_score`` — occurrence-weighted blocklist score: hard
+      markers (``URL_SPAM_HARD``) weigh 100, soft markers
+      (``URL_SPAM_SOFT``) 40; drop at ``cutoff`` (default 100: one
+      hard hit, or three soft hits).
+    * ``host_digit_bp`` — digit share of the hostname in basis points
+      (throwaway autogenerated hosts are digit-heavy); drop above
+      ``host_digit_bp_cut``.
+    * URL length > ``max_len`` drops (tracking-blob URLs).
+
+    Adds ``spam_score``, ``host_digit_bp``, ``keep_url`` to the input
+    rows. Pure column expressions (regexp counts) — ZERO shuffle, zero
+    UDF, rides any scan; exactly replayable in SQL."""
+    u = F.lower(F.col(url_col))
+    score = F.lit(0)
+    for m in URL_SPAM_HARD:
+        score = score + F.size(F.regexp_extract_all(u, F.lit(m), 0)) * 100
+    for m in URL_SPAM_SOFT:
+        score = score + F.size(F.regexp_extract_all(u, F.lit(m), 0)) * 40
+    host = F.regexp_extract(u, r"^[a-z][a-z0-9+.-]*://(?:www\.)?"
+                               r"([^/:?#]+)", 1)
+    n_dig = F.length(F.regexp_replace(host, r"[^0-9]", ""))
+    out = (df.withColumn("spam_score", score.cast("long"))
+           .withColumn("_h", host).withColumn("_hd", n_dig))
+    out = (out.withColumn(
+        "host_digit_bp",
+        F.when(F.length("_h") > 0, F.expr("_hd * 10000 div length(_h)"))
+        .otherwise(F.lit(0)).cast("long")).drop("_h", "_hd"))
+    keep = ((F.col("spam_score") < cutoff)
+            & (F.col("host_digit_bp") <= host_digit_bp_cut)
+            & (F.length(F.col(url_col)) <= max_len))
+    return out.withColumn("keep_url", keep.cast("int"))
+
+
 def hash_bucket_16(col) -> "F.Column":
     """Deterministic uniform bucket in [0, 65536) from md5's first 4 hex
     chars — md5 hex is identical in every engine, so samples/splits are
@@ -536,6 +591,7 @@ __all__ = [
     "minhash_bands", "EST_JACCARD_SQL",
     "minhash_near_dups",
     "gopher_quality",
+    "url_filter", "URL_SPAM_HARD", "URL_SPAM_SOFT",
     "LANG_MARKERS",
     "MERSENNE31",
 ]

@@ -45,6 +45,9 @@ def main() -> None:
                          "default is the zero-copy lazy adapter")
     ap.add_argument("--wide-id", action="store_true",
                     help="128-bit doc identity (doc_id + doc_id_hi)")
+    ap.add_argument("--url-gate", action="store_true",
+                    help="RefinedWeb URL filter as curation stage 0 "
+                         "(the extraction output carries url)")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -59,7 +62,8 @@ def main() -> None:
                    train_frac=args.train_frac,
                    max_bucket=args.max_bucket,
                    materialize_documents=args.materialize_documents,
-                   wide_id=args.wide_id)
+                   wide_id=args.wide_id,
+                   url_gate=args.url_gate)
     finally:
         spark.stop()
 

@@ -370,6 +370,34 @@ def test_run_corpus_materialized_copy_not_rewritten_on_resume(
     assert mtimes2 == mtimes1
 
 
+def test_run_corpus_url_gate(spark, tmp_path):
+    """Round-7: --url-gate works across the zero-copy adapter (the
+    extraction output keeps url), dropping pages whose url trips the
+    blocklist before any content-stage work."""
+    from mre.curate import run_corpus
+    from mre.fixtures import write_fixture_parquet
+    from pyspark.sql import functions as F
+
+    fx = str(tmp_path / "fixtures")
+    write_fixture_parquet(fx, n=80)
+    # poison a handful of urls with a hard blocklist marker
+    pages = spark.read.parquet(f"{fx}/pages.parquet")
+    poisoned = pages.withColumn(
+        "url",
+        F.when(F.xxhash64("url") % 10 == 0,
+               F.concat(F.col("url"), F.lit("-xxx-casino")))
+        .otherwise(F.col("url")))
+    src = str(tmp_path / "pages2")
+    poisoned.write.parquet(src)
+    wd = str(tmp_path / "corpus")
+    run_corpus(spark, src, wd, run_id="ug", url_gate=True)
+    kept_urls = {r["url"] for r in spark.read.parquet(
+        f"{wd}/curated/url_filter").join(
+        spark.read.parquet(f"{wd}/extracted").withColumn(
+            "doc_id", F.xxhash64("url")), "doc_id").collect()}
+    assert kept_urls and all("-xxx-" not in u for u in kept_urls)
+
+
 def test_read_curate_lineage_resolves_attempts(spark, docs, evals,
                                                tmp_path):
     """Rollups consume ONE row per (run_id, stage) — the latest attempt —
@@ -416,6 +444,31 @@ def test_run_curate_param_flip_back_recomputes(spark, docs, evals,
     out_a2 = read_curated(spark, dst).orderBy("doc_id").toPandas()
     # outputs reflect A again (0.9 split ≠ the 0.5 split left by B)
     assert out_a2["split"].tolist() != out_b["split"].tolist()
+
+
+def test_run_curate_url_gate_stage(spark, docs, evals, tmp_path):
+    """Round-7 URL gate as stage 0: a spam-URL doc is dropped before
+    any content work, clean-URL docs flow through unchanged, and a
+    corpus without a url column raises."""
+    from pyspark.sql import functions as F
+    with_urls = docs.withColumn(
+        "url",
+        F.when(F.col("doc_id") == 0,
+               F.lit("https://example.com/xxx-casino-bonus"))
+        .otherwise(F.concat(F.lit("https://example.com/p/"),
+                            F.col("doc_id").cast("string"))))
+    src = str(tmp_path / "docs")
+    with_urls.write.parquet(src)
+    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
+    run_curate(spark, src, dst, lin, run_id="ug1", url_gate=True)
+    kept = {r["doc_id"]
+            for r in spark.read.parquet(f"{dst}/url_filter").collect()}
+    assert 0 not in kept and 1 in kept
+    surv = {r["doc_id"]
+            for r in spark.read.parquet(f"{dst}/split").collect()}
+    assert 0 not in surv and surv <= kept
+    with pytest.raises(ValueError, match="url"):
+        run_curate(spark, docs, dst, lin, run_id="ug2", url_gate=True)
 
 
 def test_release_caches_is_scopeable(spark, docs, evals):

@@ -245,11 +245,12 @@ def test_new_ops_plan_shapes(spark):
 
     sf = "/root/testdata/sf0.001"
 
-    # url_dedup (norm/robots union): explode + regex normalize are pure
-    # projections — the norm groupBy is the only corpus-keyed Exchange;
-    # the robots branch adds its bounded 20-row host distinct plus the
-    # robots-table BroadcastExchange (a fourth Exchange string means a
-    # corpus-keyed shuffle crept in)
+    # url_dedup (round-7 norm/uf/robots union): explode + regex
+    # normalize + the URL-filter scoring are pure projections — the
+    # norm groupBy is the only corpus-keyed Exchange; the robots branch
+    # adds its bounded 20-row host distinct plus the robots-table
+    # BroadcastExchange (a fourth Exchange string means a corpus-keyed
+    # shuffle crept in)
     plan = em.queries()["url_dedup"](spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 3, plan

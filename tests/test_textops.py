@@ -243,3 +243,29 @@ def test_near_dup_family_hot_bucket_guards(spark):
     assert mh == {(100, 101)}
 
 
+def test_url_filter(spark):
+    """RefinedWeb-family URL filter (round 7): occurrence-weighted
+    blocklist score (hard=100/soft=40), hostname digit fraction, and
+    length cut — hand URLs replayed by hand."""
+    from mre.textops import url_filter
+    docs = spark.createDataFrame([
+        (1, "https://example.com/articles/cooking"),
+        (2, "https://example.com/casino-night-charity"),      # 1 soft
+        (3, "https://best-casino.com/casino/casino-bonus-code"),  # 3+1 soft
+        (4, "https://example.com/xxx-content"),               # 1 hard
+        (5, "http://host12345678901.com/page"),               # digit host
+        (6, "https://example.com/" + "a" * 2100),             # too long
+        (7, "not a url at all"),
+    ], "doc_id long, url string")
+    got = {r["doc_id"]: r.asDict() for r in url_filter(docs).collect()}
+    assert got[1]["spam_score"] == 0 and got[1]["keep_url"] == 1
+    assert got[2]["spam_score"] == 40 and got[2]["keep_url"] == 1
+    # 'casino' x3 + 'bonus-code' x1 = 160
+    assert got[3]["spam_score"] == 160 and got[3]["keep_url"] == 0
+    assert got[4]["spam_score"] == 100 and got[4]["keep_url"] == 0
+    # host 'host12345678901.com': 11 digits of 19 chars
+    assert got[5]["host_digit_bp"] == 11 * 10000 // 19
+    assert got[5]["keep_url"] == 0
+    assert got[6]["keep_url"] == 0
+    # no scheme -> empty host -> digit rule vacuous
+    assert got[7]["host_digit_bp"] == 0 and got[7]["keep_url"] == 1
