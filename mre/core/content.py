@@ -96,22 +96,24 @@ def _render_paragraphs(container: Node) -> list[str]:
     """Paragraph-level text of a container: direct scoring blocks rendered
     in document order, boilerplate-classed children skipped."""
     paras: list[str] = []
-
-    def walk(n: Node, in_para: bool) -> None:
-        for c in n.content:
-            if not isinstance(c, Node):
-                continue
-            if _NEG_CONTAINER_RX.search(c.class_id):
-                continue
-            if c.tag in _PARA_TAGS:
-                txt = collapse_ws(c.text_content())
-                if len(txt) >= _MIN_PARA_CHARS and _link_density(c) < 0.5:
-                    paras.append(txt)
-            else:
-                walk(c, in_para)
-
-    walk(container, False)
+    _walk_paragraphs(container, paras)
     return paras
+
+
+def _walk_paragraphs(n: Node, paras: list[str]) -> None:
+    # a module-level helper, not a nested closure: a recursive closure
+    # is a function <-> cell reference cycle on every call
+    for c in n.content:
+        if not isinstance(c, Node):
+            continue
+        if _NEG_CONTAINER_RX.search(c.class_id):
+            continue
+        if c.tag in _PARA_TAGS:
+            txt = collapse_ws(c.text_content())
+            if len(txt) >= _MIN_PARA_CHARS and _link_density(c) < 0.5:
+                paras.append(txt)
+        else:
+            _walk_paragraphs(c, paras)
 
 
 def extract_text(doc: Node) -> Optional[str]:

@@ -42,9 +42,11 @@ def extract_one(url: str, html: Optional[bytes],
     raises. ``capture_ts`` (the crawl's warc_ts) anchors relative
     datelines ("3 hours ago") — never the wall clock. ``content_type``
     (HTTP header, when the source table carries it) feeds the E1 charset
-    decode order."""
+    decode order. Leaves no cyclic garbage: the parsed tree is released
+    before returning, so callers may run it with cyclic GC disabled."""
     if html is None or len(html) == 0:
         return ExtractResult(url, *_FAILED, ok=False)
+    doc = None
     try:
         text = decode_html(html, content_type)
         doc = parse_doc(text)
@@ -65,6 +67,11 @@ def extract_one(url: str, html: Optional[bytes],
     except Exception:
         # malformed page → null outputs, never a task failure
         return ExtractResult(url, *_FAILED, ok=False)
+    finally:
+        # on every path: the page's DOM is freed here by reference
+        # counting, not by a later cyclic GC pass (SURVEY.md §7.1)
+        if doc is not None:
+            doc.release()
 
 
 __all__ = ["extract_one", "ExtractResult"]

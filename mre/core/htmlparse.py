@@ -1,4 +1,4 @@
-"""E2 — lenient HTML parse into a small mutable DOM (SURVEY.md §2A E2).
+"""E2 — lenient HTML parse into a small DOM (SURVEY.md §2A E2).
 
 The reference uses ``lxml.html.fromstring`` (libxml2 recovery mode)
 [PUB:__init__.extract]; lxml is absent in this sandbox [ENV], so this module
@@ -13,9 +13,11 @@ vendors a small recovery layer on stdlib ``html.parser``:
   text op ever sees them (the reference strips them before text extraction).
 
 The produced tree intentionally mirrors the subset of the lxml element API
-the extraction stages need: ``tag``, ``attrib``, ``children`` (nodes),
-``text parts`` interleaved in document order, parent links, and recursive
-iteration in document order.
+the extraction stages need: ``tag``, ``attrib``, child nodes and text parts
+interleaved in document order (``content``), parent links, and recursive
+iteration in document order. The tree is immutable once built (the
+doc-order caches rely on it); ``Node.release`` breaks its reference cycles
+when the caller is done with it.
 """
 
 from __future__ import annotations
@@ -67,15 +69,11 @@ class Node:
         self.attrib = attrib if attrib is not None else _EMPTY_ATTRS
         self.content: list = []  # str | Node
         self.parent = parent
-        self._flat: Optional[list] = None   # doc-order cache (root only)
+        self._flat: Optional[list] = None   # self + descendants, doc order
         self._class_id: Optional[str] = None
         self._iter_cache: Optional[dict] = None  # tags → filtered list
 
     # -- tree walking ------------------------------------------------------
-    @property
-    def children(self) -> list["Node"]:
-        return [c for c in self.content if isinstance(c, Node)]
-
     def _flatten(self) -> list["Node"]:
         """Self + descendants in document order (iterative; cached — the
         extraction stages traverse the same tree several times)."""
@@ -153,15 +151,14 @@ class Node:
             else:
                 c._collect_text(out)
 
-    def remove_child(self, child: "Node") -> None:
-        self.content = [c for c in self.content if c is not child]
-        child.parent = None
-        # invalidate doc-order caches up the ancestor chain
-        n: Optional[Node] = self
-        while n is not None:
-            n._flat = None
-            n._iter_cache = None
-            n = n.parent
+    def release(self) -> None:
+        """Break the reference cycles of this node and its descendants
+        (parent links, doc-order caches that hold their own node) so
+        reference counting frees the tree as soon as the last outside
+        reference goes, with no cyclic GC pass. Call it once the tree is
+        no longer needed."""
+        for n in self._flatten():
+            n.parent = n._flat = n._iter_cache = None
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"<Node {self.tag} {self.attrib.get('class','')!r}>"
@@ -654,22 +651,26 @@ def parse_doc(html: str) -> Node:
     """Parse possibly-malformed HTML into a Node tree; never raises on tag
     soup. Fast regex scanner by default; stdlib html.parser as the
     (deterministic, per-document) fallback on scanner errors."""
+    scanner = _FastScanner()
     try:
-        scanner = _FastScanner()
         scanner.feed(html)
         return scanner.root
     except Exception:
-        builder = _TreeBuilder()
-        builder.feed(html)
-        builder.close()
-        return builder.root
+        scanner.root.release()  # the partial tree is a reference cycle
+    return parse_doc_stdlib(html)
 
 
 def parse_doc_stdlib(html: str) -> Node:
-    """stdlib-driven parse (differential-testing reference)."""
+    """stdlib-driven parse: ``parse_doc``'s fallback and the
+    differential-testing reference. Releases its partial tree when
+    html.parser raises."""
     builder = _TreeBuilder()
-    builder.feed(html)
-    builder.close()
+    try:
+        builder.feed(html)
+        builder.close()
+    except Exception:
+        builder.root.release()
+        raise
     return builder.root
 
 

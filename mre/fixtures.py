@@ -400,9 +400,9 @@ def gen_golden(n: int) -> list[dict]:
 def write_oracle_golden(path: str, n: int = 5000) -> str:
     """Materialize the golden extraction table (doc_id-keyed, so a DuckDB
     oracle can JOIN it against any sf's ``documents`` view) at ``path``.
-    Pure function of doc_id → idempotent; regenerated only when missing or
-    under-sized. Timestamps naive == UTC, matching EXTRACT_SCHEMA under a
-    UTC session."""
+    Pure function of doc_id → idempotent; regenerated only when missing,
+    under-sized or unreadable. Timestamps naive == UTC, matching
+    EXTRACT_SCHEMA under a UTC session."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -410,8 +410,8 @@ def write_oracle_golden(path: str, n: int = 5000) -> str:
         try:
             if pq.read_metadata(path).num_rows >= n:
                 return path
-        except Exception:
-            pass
+        except (OSError, pa.ArrowInvalid):
+            pass  # truncated or corrupt cached file: regenerate it
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     schema = pa.schema([
         pa.field("doc_id", pa.int64(), nullable=False),

@@ -21,7 +21,9 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
 * memory: the UDF re-chunks every incoming Arrow batch so that
   ``sum(len(html)) <= byte_cap`` (default 64 MB) before any parse runs, on
   top of ``spark.sql.execution.arrow.maxRecordsPerBatch``; cyclic GC is
-  disabled inside the UDF (memory-bandwidth scaling, §7.1).
+  disabled for the whole UDF task and never collected (memory-bandwidth
+  scaling, §7.1): ``extract_one`` releases each page's DOM, so reference
+  counting frees it as soon as that page's extraction returns.
 * resume: results are partitioned by salt_bucket and written with dynamic
   partition overwrite → re-processing a bucket is idempotent; a bucket
   counts as done only once its lineage row is appended (write-then-commit
@@ -121,12 +123,14 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
     the block assembly for ~MB binary rows would be a measurable fraction
     of the framework cost at scale).
 
-    Cyclic GC is disabled during extraction with one manual collect per
-    chunk: the generational collector otherwise rescans every live DOM
-    container on allocation bursts, which saturates memory bandwidth and
-    caps multi-core scaling at ~0.5 efficiency (measured: 0.53 → 0.76+ at
-    8→32 workers). Collect-per-chunk bounds worker RSS; gc is re-enabled
-    before returning so long-lived reused workers are unaffected between
+    Cyclic GC is disabled for the whole task: the generational collector
+    otherwise rescans every live DOM container on allocation bursts,
+    which saturates memory bandwidth and caps multi-core scaling at ~0.5
+    efficiency (measured: 0.53 → 0.76+ at 8→32 workers). No collect runs
+    at all: ``extract_one`` leaves no cyclic garbage (it releases each
+    page's tree), so reference counting frees every page when its
+    extraction returns. GC is restored to its prior state before
+    returning, so long-lived reused workers are unaffected between
     tasks."""
     import gc
 
@@ -169,7 +173,6 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
                      [1 if r.ok else 0 for r in res], sizes[start:end],
                      wall_us, salts[start:end]],
                     schema=out_type)
-                gc.collect()
                 start = end
     finally:
         if gc_was_enabled:

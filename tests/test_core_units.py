@@ -1,11 +1,16 @@
 """Unit tests for the non-date extraction stages: charset decode (E1),
 lenient parse (E2), text render (E3), headline scoring (E4/E5), url dates
-(E6), byline cleaning (E12/E13), content extraction (E14)."""
+(E6), byline cleaning (E12/E13), content extraction (E14), and E15's
+no-cyclic-garbage invariant (extract_one and the extraction kernel)."""
+
+import gc
 
 import pytest
 
+from mre import fixtures as FX
 from mre.core.byline import byline_candidates, clean_authors, extract_authors
 from mre.core.content import extract_text
+from mre.core.extract import extract_one
 from mre.core.fuzzydate import FuzzyDate
 from mre.core.headline import score_headline
 from mre.core.htmlparse import parse_doc
@@ -142,15 +147,6 @@ def test_parse_unquoted_value_trailing_slash_matches_stdlib(html):
         ]
 
     assert dump(parse_doc(html)) == dump(parse_doc_stdlib(html))
-
-
-def test_iter_cache_invalidated_by_remove_child():
-    doc = parse_doc("<div><p>a</p><p>b</p></div>")
-    assert len(list(doc.iter("p"))) == 2  # primes the tag-filtered cache
-    div = next(doc.iter("div"))
-    p_first = div.children[0]
-    div.remove_child(p_first)
-    assert len(list(doc.iter("p"))) == 1  # cache must not serve stale list
 
 
 def test_parse_unquoted_trailing_slash_keeps_element_open():
@@ -341,3 +337,114 @@ def test_microdata_date_published():
                     "</body>")
     assert pick_pubdate(doc, "https://x.example/a/1") == \
         dt.datetime(2024, 3, 15, 10, 30)
+
+
+# --- E15: no cyclic garbage --------------------------------------------------
+# The extraction kernel runs with cyclic GC disabled and never collects
+# (SURVEY.md §7.1 rule 1), so every page's DOM must be freed by reference
+# counting: extract_one may leave no reference cycle behind on any path.
+
+
+def _cyclic_garbage(fn):
+    """Objects the cyclic collector finds unreachable after ``fn()`` ran
+    with GC disabled (0 = everything ``fn`` dropped was refcount-freed)."""
+    was = gc.isenabled()
+    gc.collect()
+    gc.disable()
+    try:
+        fn()
+        return gc.collect()
+    finally:
+        if was:
+            gc.enable()
+
+
+def _extract(i):
+    return extract_one(FX.url_of(i), FX.html_bytes_of(i),
+                       capture_ts=FX.warc_ts_of(i))
+
+
+def test_extract_one_leaves_no_cyclic_garbage():
+    ids = range(300)  # holds size residues 24 (large), 51 and 78 (medium)
+    assert {FX.size_class(i) for i in ids} == {"small", "medium", "large"}
+    assert len({FX.family_of(i) for i in ids}) == 13
+    res = []
+    assert _cyclic_garbage(lambda: res.extend(_extract(i) for i in ids)) == 0
+    assert 250 < sum(r.ok for r in res) < 300  # truncated pages fail
+
+
+def test_extract_one_failing_stage_leaves_no_cyclic_garbage(monkeypatch):
+    from mre.core import extract
+
+    def boom(doc):
+        raise RuntimeError("scorer bug")
+
+    monkeypatch.setattr(extract, "extract_text", boom)
+    res = []
+    assert _cyclic_garbage(lambda: res.append(_extract(0))) == 0
+    assert not res[0].ok
+
+
+def _feed_half_then_raise(real_feed):
+    def feed(self, s):
+        real_feed(self, s[:len(s) // 2])  # part of the tree is built
+        assert self.root.content
+        raise RuntimeError("parser bug")
+    return feed
+
+
+def test_parser_fallback_leaves_no_cyclic_garbage(monkeypatch):
+    from mre.core import htmlparse as H
+    want = _extract(24)
+    monkeypatch.setattr(H._FastScanner, "feed",
+                        _feed_half_then_raise(H._FastScanner.feed))
+    res = []
+    assert _cyclic_garbage(lambda: res.append(_extract(24))) == 0
+    assert res[0] == want  # the stdlib fallback parses the same tree
+    # the fallback failing as well: no result, still no garbage
+    monkeypatch.setattr(H._TreeBuilder, "feed",
+                        _feed_half_then_raise(H._TreeBuilder.feed))
+    res = []
+    assert _cyclic_garbage(lambda: res.append(_extract(24))) == 0
+    assert not res[0].ok
+
+
+def test_extract_kernel_keeps_gc_off_and_never_collects(monkeypatch):
+    from test_extract_kernel import CAP, IDS, _batches
+
+    from mre import pipeline
+
+    gc_on, collections = [], []
+    real = pipeline.extract_one
+
+    def spy(*a, **kw):
+        gc_on.append(gc.isenabled())
+        return real(*a, **kw)
+
+    def on_gc(phase, info):
+        if phase == "start":
+            collections.append(info["generation"])
+
+    def drain():
+        out = list(pipeline.extract_batch_arrow(iter(_batches()),
+                                                byte_cap=CAP))
+        assert len(out) > len(_batches())  # the byte cap split batches
+        assert sum(b.num_rows for b in out) == len(IDS) + 1
+
+    monkeypatch.setattr(pipeline, "extract_one", spy)
+    drain()  # GC enabled before: off for every page, back on after
+    assert gc.isenabled()
+    assert gc_on and not any(gc_on)
+    # GC disabled before: only an explicit collect could run, and none
+    # may; the pages were freed without one
+    gc.collect()
+    gc.disable()
+    gc.callbacks.append(on_gc)
+    try:
+        drain()
+        assert not gc.isenabled()
+        assert collections == []
+        assert gc.collect() == 0
+    finally:
+        gc.callbacks.remove(on_gc)
+        gc.enable()

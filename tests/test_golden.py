@@ -69,3 +69,20 @@ def test_idempotent_over_extracted_text():
 
 def test_golden_gen_consistency():
     assert gen_golden(10) == [golden_row(i) for i in range(10)]
+
+
+def test_oracle_golden_regenerates_truncated_file(tmp_path):
+    # a crash mid-copy leaves a truncated cache file: it is rebuilt, not
+    # raised and not trusted
+    import pyarrow.parquet as pq
+    from mre.fixtures import write_oracle_golden
+    path = str(tmp_path / "golden.parquet")
+    write_oracle_golden(path, n=10)
+    with open(path, "rb") as f:
+        whole = f.read()
+    with open(path, "wb") as f:
+        f.write(whole[:len(whole) // 2])
+    assert write_oracle_golden(path, n=10) == path
+    got = pq.read_table(path).to_pylist()
+    assert [r["doc_id"] for r in got] == list(range(10))
+    assert got[3]["headline"] == golden_row(3)["headline"]

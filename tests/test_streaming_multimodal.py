@@ -161,6 +161,75 @@ def test_ingest_epoch_retry_after_partial_index_update(spark, tmp_path):
     assert spark.read.parquet(eps).count() == n_eps
 
 
+def test_ingest_epoch_crash_before_indexed_marker_recovers(
+        spark, tmp_path, monkeypatch):
+    """Fault injection in the window between the dedup-index append and
+    its 'indexed' marker: the first run crashes in ``_mark_epoch`` for
+    phase 'indexed', after the survivors and their fingerprints are
+    committed. The retry (phases = {'written'}) must re-read the stored
+    survivors, not re-append them: the accepted partition equals a clean
+    run's and each survivor's fingerprint is in the index exactly once."""
+    import pytest
+
+    from mre import streaming
+    from mre.curate import build_dedup_index
+
+    def words(tag):
+        return " ".join(f"{tag}w{j}" for j in range(30))
+
+    corpus = spark.createDataFrame(
+        [(i, f"corpus doc {i} " + words(f"c{i}")) for i in range(5)],
+        "doc_id long, text string")
+    fresh = "fresh alpha " + words("a")
+    batch = spark.createDataFrame(
+        [(100, corpus.filter("doc_id = 0").first()["text"]),  # corpus dup
+         (101, fresh), (102, "fresh beta " + words("b")),
+         (103, fresh)],  # in-batch dup of 101
+        "doc_id long, text string")
+
+    def paths(name):
+        root = tmp_path / name
+        idx = str(root / "idx")
+        build_dedup_index(spark, corpus, idx)
+        return idx, str(root / "accepted"), str(root / "epochs")
+
+    def phases(eps):
+        return {r["phase"] for r in spark.read.parquet(eps).collect()}
+
+    def accepted(acc):
+        return sorted((r["doc_id"], r["text"])
+                      for r in spark.read.parquet(acc).collect())
+
+    idx0, acc0, eps0 = paths("clean")
+    streaming.ingest_epoch(spark, batch, 0, idx0, acc0, eps0)
+    want = accepted(acc0)
+    assert [d for d, _ in want] in ([101, 102], [102, 103])
+
+    idx, acc, eps = paths("crashed")
+    real, crashed = streaming._mark_epoch, []
+
+    def crash_once(spark_, dst, epoch_id, phase, n_docs):
+        if phase == "indexed" and not crashed:
+            crashed.append(epoch_id)
+            raise RuntimeError("crash before the 'indexed' marker")
+        real(spark_, dst, epoch_id, phase, n_docs)
+
+    monkeypatch.setattr(streaming, "_mark_epoch", crash_once)
+    with pytest.raises(RuntimeError, match="indexed"):
+        streaming.ingest_epoch(spark, batch, 0, idx, acc, eps)
+    assert phases(eps) == {"written"}
+    streaming.ingest_epoch(spark, batch, 0, idx, acc, eps)  # the retry
+
+    assert crashed == [0]
+    assert accepted(acc) == want
+    fp = spark.read.parquet(f"{idx}/fingerprints")
+    per_doc = {r["doc_id"]: r["count"]
+               for r in fp.groupBy("doc_id").count().collect()}
+    assert {d: per_doc.get(d) for d, _ in want} == {d: 1 for d, _ in want}
+    assert fp.count() == 5 + len(want)
+    assert phases(eps) == {"written", "indexed"}
+
+
 def test_ingest_stream_compact_every(spark, tmp_path):
     """compact_every=1 (round 7): the stream compacts the dedup index
     inside foreachBatch after each epoch — every bucket directory
