@@ -266,8 +266,8 @@ def write_lineage_golden(path: str,
                       ["n_corpus"].to_pylist())
             if set(ns) <= got:
                 return path
-        except Exception:
-            pass
+        except (OSError, pa.ArrowInvalid):
+            pass  # truncated or corrupt cached file: regenerate it
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     rows = []
     for n in ns:
@@ -358,8 +358,8 @@ def write_dedup_goldens(out_dir: str,
                       ["corpus_key"].to_pylist())
             if set(keys) <= got:
                 return dict(paths, coverage=cov_path)
-        except Exception:
-            pass
+        except (OSError, pa.ArrowInvalid):
+            pass  # truncated or corrupt cached file: regenerate it
     corpora = [_read_texts(d) for d in sf_dirs]
     for q, (fn, val_col, val_type) in specs.items():
         schema = pa.schema([

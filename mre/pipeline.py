@@ -23,7 +23,10 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
   top of ``spark.sql.execution.arrow.maxRecordsPerBatch``; cyclic GC is
   disabled for the whole UDF task and never collected (memory-bandwidth
   scaling, §7.1): ``extract_one`` releases each page's DOM, so reference
-  counting frees it as soon as that page's extraction returns.
+  counting frees it as soon as that page's extraction returns. The
+  output columns are built from Arrow buffers (never ``pa.array`` on a
+  Python list, whose array-like probe imports pandas), so no Python
+  worker imports pandas (about 31 MB less RSS per worker, §7.1 rule 2d).
 * resume: results are partitioned by salt_bucket and written with dynamic
   partition overwrite → re-processing a bucket is idempotent; a bucket
   counts as done only once its lineage row is appended (write-then-commit
@@ -34,7 +37,10 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
 
 from __future__ import annotations
 
+import datetime as _dt
 import time
+from array import array
+from itertools import accumulate
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -116,12 +122,82 @@ def with_salt_bucket(pages: DataFrame, buckets: int) -> DataFrame:
 # --------------------------------------------------------------------------
 # P6 — the extraction map (iterator Arrow UDF via mapInArrow)
 
+_EPOCH = _dt.datetime(1970, 1, 1)
+_MICROSECOND = _dt.timedelta(microseconds=1)
+
+
+def _validity(values):
+    """Arrow validity bitmap of ``values`` (None is null), or None when no
+    value is null."""
+    import pyarrow as pa
+
+    if all(v is not None for v in values):
+        return None
+    bits = bytearray((len(values) + 7) // 8)
+    for i, v in enumerate(values):
+        if v is not None:
+            bits[i >> 3] |= 1 << (i & 7)
+    return pa.py_buffer(bits)
+
+
+def _int_array(arrow_type, code, values):
+    """Non-null int32 (``code`` "i") or int64 ("q") column."""
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(arrow_type, len(values),
+                                 [None, pa.py_buffer(array(code, values))])
+
+
+def _utf8_array(values):
+    """utf8 column; int32 offsets overflow (OverflowError) past 2 GiB,
+    which ``byte_cap`` keeps a chunk far below."""
+    import pyarrow as pa
+
+    data = [b"" if v is None else v.encode() for v in values]
+    offsets = array("i", accumulate(map(len, data), initial=0))
+    return pa.Array.from_buffers(
+        pa.string(), len(values),
+        [_validity(values), pa.py_buffer(offsets),
+         pa.py_buffer(b"".join(data))])
+
+
+def _timestamp_array(arrow_type, values):
+    """timestamp[us, tz=UTC] column, converted as ``pa.array`` does: a
+    naive datetime is UTC wall time, an aware one is shifted to UTC
+    (``pa.array`` keeps its wall time instead when PYARROW_IGNORE_TIMEZONE
+    is set; the pubdates that reach here are naive or UTC, so both agree)."""
+    import pyarrow as pa
+
+    micros = array("q", (
+        0 if v is None else
+        (v.replace(tzinfo=None) - (v.utcoffset() or _dt.timedelta(0))
+         - _EPOCH) // _MICROSECOND
+        for v in values))
+    return pa.Array.from_buffers(arrow_type, len(values),
+                                 [_validity(values), pa.py_buffer(micros)])
+
+
+def _utf8_list_array(arrow_type, values):
+    """list<string> column; a None list is null, its strings as above."""
+    import pyarrow as pa
+
+    offsets = array("i", accumulate(
+        (0 if v is None else len(v) for v in values), initial=0))
+    child = _utf8_array([s for v in values if v is not None for s in v])
+    return pa.Array.from_buffers(arrow_type, len(values),
+                                 [_validity(values), pa.py_buffer(offsets)],
+                                 children=[child])
+
 
 def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
     """The body of mapInArrow — E15 over size-capped chunks, straight from
     Arrow record batches to Arrow record batches (no pandas round-trip:
     the block assembly for ~MB binary rows would be a measurable fraction
-    of the framework cost at scale).
+    of the framework cost at scale). ``url`` and ``salt_bucket`` pass
+    through as zero-copy slices of the input; every other output column is
+    built from buffers by the helpers above, never by ``pa.array`` on a
+    Python list, so no worker imports pandas (about 31 MB less RSS per
+    worker, SURVEY.md §7.1 rule 2d).
 
     Cyclic GC is disabled for the whole task: the generational collector
     otherwise rescans every live DOM container on allocation bursts,
@@ -138,13 +214,13 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     out_type = to_arrow_schema(EXTRACT_FULL_SCHEMA)
+    types = {f.name: f.type for f in out_type}
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
         for batch in batches:
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
-            salts = batch.column("salt_bucket").to_pylist()
             captures = batch.column("warc_ts").to_pylist()
             ctypes = (batch.column("content_type").to_pylist()
                       if "content_type" in batch.schema.names
@@ -167,11 +243,19 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
                                            content_type=ctypes[i]))
                     wall_us.append((time.perf_counter_ns() - t0) // 1000)
                 yield pa.RecordBatch.from_arrays(
-                    [urls[start:end], [r.headline for r in res],
-                     [r.pubdate for r in res], [r.authors for r in res],
-                     [r.extracted_text for r in res],
-                     [1 if r.ok else 0 for r in res], sizes[start:end],
-                     wall_us, salts[start:end]],
+                    [batch.column("url").slice(start, end - start),
+                     _utf8_array([r.headline for r in res]),
+                     _timestamp_array(types["pubdate"],
+                                      [r.pubdate for r in res]),
+                     _utf8_list_array(types["authors"],
+                                      [r.authors for r in res]),
+                     _utf8_array([r.extracted_text for r in res]),
+                     _int_array(types["ok"], "i",
+                                [1 if r.ok else 0 for r in res]),
+                     _int_array(types["n_bytes_html"], "q",
+                                sizes[start:end]),
+                     _int_array(types["wall_us"], "q", wall_us),
+                     batch.column("salt_bucket").slice(start, end - start)],
                     schema=out_type)
                 start = end
     finally:

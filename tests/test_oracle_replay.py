@@ -3,8 +3,12 @@ that back the MinHash driver oracles. The full
 differential against the live Spark queries runs in test_entry_oracle.py;
 these pin the building blocks."""
 
-from mre.oracle_replay import (_round_half_up, _tokens,
-                               minhash_pairs_expected, xxh64, xxh64_str)
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from mre.oracle_replay import (_round_half_up, _tokens, lineage_expected,
+                               minhash_pairs_expected, write_dedup_goldens,
+                               write_lineage_golden, xxh64, xxh64_str)
 
 # Vectors verified against Spark's xxhash64() (seed 42) in-session.
 XXH64_SPARK_VECTORS = {
@@ -50,3 +54,41 @@ def test_disjoint_docs_never_pair():
     texts = {1: "aaa bbb ccc ddd eee fff",
              2: "ggg hhh iii jjj kkk lll"}
     assert minhash_pairs_expected(texts, threshold=0.2) == []
+
+
+def _truncate(path):
+    # a crash mid-copy leaves a truncated cache file
+    with open(path, "rb") as f:
+        whole = f.read()
+    with open(path, "wb") as f:
+        f.write(whole[:len(whole) // 2])
+
+
+def test_lineage_golden_regenerates_truncated_file(tmp_path):
+    path = str(tmp_path / "lineage_golden.parquet")
+    write_lineage_golden(path, ns=(10,))
+    _truncate(path)
+    assert write_lineage_golden(path, ns=(10,)) == path
+    got = pq.read_table(path).to_pylist()
+    assert [dict(r, n_corpus=10) for r in lineage_expected(10)] == got
+
+
+def test_dedup_goldens_regenerate_truncated_coverage(tmp_path):
+    sf = tmp_path / "sf_tiny"
+    sf.mkdir()
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2, 3], pa.int64()),
+        "text": ["alpha beta gamma delta epsilon zeta",
+                 "alpha beta gamma delta epsilon zeta",
+                 "completely different words here now okay"]}),
+        str(sf / "documents.parquet"))
+    out = str(tmp_path / "goldens")
+    paths = write_dedup_goldens(out, sf_dirs=(str(sf),))
+    _truncate(paths["coverage"])
+    assert write_dedup_goldens(out, sf_dirs=(str(sf),)) == paths
+    key = sum(len(t) for t in pq.read_table(
+        str(sf / "documents.parquet"))["text"].to_pylist())
+    assert pq.read_table(paths["coverage"])["corpus_key"].to_pylist() \
+        == [key]
+    pairs = pq.read_table(paths["minhash_near_dups"]).to_pylist()
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
