@@ -90,141 +90,6 @@ def q_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# crawl bookkeeping (mre.sources.cdx, mre.linkgraph) over the test tables
-
-
-def _robots_fixture(d) -> "DataFrame":
-    """(host, robots_txt) fixture for the example-{0..19}.com hosts —
-    built in the executors from the arithmetic builder
-    (mre/linkgraph.py robots_txt_of); shared by the url_dedup
-    op='robots' gate and the full_outer op='plan' scheduler."""
-    from mre.linkgraph import robots_txt_of
-
-    def _rb(batches):
-        import pandas as pd
-        for pdf in batches:
-            yield pd.DataFrame({
-                "host": [f"example-{int(h)}.com" for h in pdf["hid"]],
-                "robots_txt": [robots_txt_of(int(h))
-                               for h in pdf["hid"]]})
-
-    return (d.select((F.col("doc_id") % 20).alias("hid")).distinct()
-            .mapInPandas(_rb, "host string, robots_txt string"))
-
-
-def _cdx_fixture(spark, sf_dir) -> str:
-    """Deterministic CDXJ snapshot pair derived from the documents
-    table (IF-guarded fixture writer, §7.4 rule 20 — written once per
-    corpus size, then reused): url = https://WWW.Example-{d%20}.com/
-    Articles/{d} (mixed case + www so SURT canonicalization is
-    observable), ts = 20240101000000+d; OLD side = docs with d%4 != 1
-    (d%7==0 gets a SECOND capture an 'hour' later, same digest — the
-    latest-capture reduction is observable in old_ts/n_captures); NEW
-    side = d%4 != 2, an 'hour' later still, digest changed to
-    md5(text||'v2') on d%5==2. The bounded collect here is fixture
-    GENERATION at test scale (the write_oracle_golden class), not an
-    operator."""
-    import os as _os
-    docs = _t(spark, sf_dir, "documents")
-    n = docs.count()
-    root = os.path.join(_REPO, "dist", f"cdx_fixture_n{n}")
-    marker = os.path.join(root, "_DONE")
-    if not os.path.exists(marker):
-        from mre.sources.cdx import format_cdxj_line, write_cdxj_gz
-        rows = docs.select(
-            "doc_id", F.md5("text").alias("dg"),
-            F.md5(F.concat(F.col("text"), F.lit("v2"))).alias("dg2")
-        ).collect()
-        old: dict = {0: [], 1: []}
-        new: dict = {0: [], 1: []}
-        for r in rows:
-            d = int(r["doc_id"])
-            url = f"https://WWW.Example-{d % 20}.com/Articles/{d}"
-            ts = str(20240101000000 + d)
-            if d % 4 != 1:
-                old[d % 2].append(
-                    format_cdxj_line(url, ts, r["dg"], length=d))
-                if d % 7 == 0:
-                    old[d % 2].append(format_cdxj_line(
-                        url, str(20240101000000 + d + 100000),
-                        r["dg"], length=d))
-            if d % 4 != 2:
-                dg = r["dg2"] if d % 5 == 2 else r["dg"]
-                new[d % 2].append(format_cdxj_line(
-                    url, str(20240101000000 + d + 200000), dg,
-                    length=d))
-        for side, shards in (("old", old), ("new", new)):
-            for i, lines in shards.items():
-                write_cdxj_gz(lines, _os.path.join(
-                    root, side, f"part{i}.cdxj.gz"))
-        with open(marker, "w") as f:
-            f.write(str(n))
-    return root
-
-
-def q_full_outer(spark, sf_dir):
-    """Full-outer semantics as one tagged union (registry-window rule).
-    Shared schema (op, doc_id, n_docs, n_events):
-
-    * op='fo' — the original documents⟗events rollup join.
-    * op='delta' (round 7) — re-crawl CAPTURE-INDEX delta over the CDX
-      source family: two deterministic CDXJ(.gz) snapshot shards are
-      read through the REAL `cdx:` path (binaryFile → line parse →
-      SURT urlkeys), reduced to the latest capture per urlkey (max_by)
-      and full-outer diffed (mre/sources/cdx.py capture_delta).
-      n_docs = status code (0 unchanged / 1 changed / 2 added /
-      3 gone), n_events = capture rows across both sides — so SURT,
-      the gzip shard parse, the latest-capture reduction and the
-      digest diff are all value-checked against the oracle's
-      arithmetic twin.
-    * op='plan' (round 7) — the re-crawl COMPOSITION: the delta's
-      added+changed urls (lowercased — robots prefix matching is
-      case-sensitive, so the fetcher canonicalizes) run through
-      ``fetch_plan`` against the shared robots fixture: robots-blocked
-      urls drop, each host's queue ranks in url order, start_ms =
-      (rank-1)·Crawl-delay. n_docs = rank, n_events = start_ms —
-      allow/deny, delay extraction and the per-host schedule are all
-      value-checked."""
-    _prep(spark)
-    d = (_t(spark, sf_dir, "documents")
-         .groupBy("doc_id").agg(F.count("*").alias("n_docs")))
-    ev = (_t(spark, sf_dir, "events")
-          .groupBy(F.col("user_id").alias("doc_id"))
-          .agg(F.count("*").alias("n_events")))
-    fo = (d.join(ev, "doc_id", "full_outer")
-          .select(F.lit("fo").alias("op"), "doc_id", "n_docs",
-                  "n_events"))
-    from mre.io import read_table
-    from mre.sources.cdx import capture_delta
-    root = _cdx_fixture(spark, sf_dir)
-    dd = capture_delta(
-        read_table(spark, f"cdx:{root}/old/*.cdxj.gz"),
-        read_table(spark, f"cdx:{root}/new/*.cdxj.gz"))
-    code = (F.when(F.col("status") == "unchanged", 0)
-            .when(F.col("status") == "changed", 1)
-            .when(F.col("status") == "added", 2)
-            .otherwise(3))
-    delta = dd.select(
-        F.lit("delta").alias("op"),
-        F.regexp_extract("urlkey", r"/articles/(\d+)", 1)
-        .cast("long").alias("doc_id"),
-        code.cast("long").alias("n_docs"),
-        F.col("n_captures").alias("n_events"))
-    from mre.linkgraph import fetch_plan
-    docs_d = _t(spark, sf_dir, "documents").select("doc_id")
-    fetch = (dd.filter(F.col("status").isin("added", "changed"))
-             .select(F.lower("url").alias("url")))
-    fp = fetch_plan(fetch, _robots_fixture(docs_d), agent="mrebot")
-    plan = fp.select(
-        F.lit("plan").alias("op"),
-        F.regexp_extract("url", r"/articles/(\d+)$", 1)
-        .cast("long").alias("doc_id"),
-        F.col("rank").cast("long").alias("n_docs"),
-        F.col("start_ms").alias("n_events"))
-    return fo.unionAll(delta).unionAll(plan)
-
-
-# --------------------------------------------------------------------------
 # training-data ops (mre.textops) over documents
 
 
@@ -344,98 +209,6 @@ def q_semi_anti_join(spark, sf_dir):
             .select("op", "doc_id", "lang", "n_chars"))
 
 
-_URL_NORM_STEPS = [
-    # (pattern, replacement) — applied in order; identical regex dialect in
-    # Spark (Java) and DuckDB (RE2) for these patterns
-    (r"#.*$", ""),                       # fragment
-    (r"([?&])utm_[a-z_]+=[^&#]*", r"$1"),  # tracking params
-    (r"^https?://(www\.)*", "https://"),   # scheme + ALL leading www.
-    (r"([^:/])[?&/]+$", r"$1"),  # trailing junk: slashes + dangling ?/&
-]
-# idempotence (norm∘norm == norm) is fuzz-tested in test_property_fuzz —
-# (www\.)* not (www\.)?, and ONE combined trailing-junk rule instead of
-# separate [?&]+$ / /+$ passes (separate rules weren't a fixpoint: the
-# slash strip could expose a dangling '&' that the separator strip then
-# ate only on the NEXT application, e.g. 'https://&/')
-
-
-def q_url_dedup(spark, sf_dir):
-    """URL-level curation as one tagged union (registry-window rule).
-
-    * op='norm' — canonicalization + dedup, the first operation any
-      web-scale corpus pipeline runs: two deterministic variants per
-      doc (clean + messy with scheme-case/www/utm/fragment/trailing-
-      slash noise) must collapse to one canonical url via a pure-regex
-      normalizer (JVM-side, no UDF). url_norm=the canonical url,
-      n_variants=count, sample_raw=min raw variant.
-    * op='uf' — url_filter (round 7, the RefinedWeb-family URL gate)
-      over planted spam/digit-host/clean variants of the clean url
-      (doc_id%23: digit-heavy host; %13: hard marker; %18: three soft
-      hits; %9: two soft hits — kept): url_norm=the url,
-      n_variants=spam_score*1000000 + host_digit_bp (both metrics in
-      one packed long), sample_raw=keep_url."""
-    from mre.textops import url_filter
-    _prep(spark)
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    sid = (F.col("doc_id") % 20).cast("string")
-    did = F.col("doc_id").cast("string")
-    clean = F.concat(F.lit("https://example-"), sid,
-                     F.lit(".com/articles/"), did)
-    messy = F.concat(F.lit("HTTP://WWW.Example-"), sid,
-                     F.lit(".COM/Articles/"), did,
-                     F.lit("/?utm_source=feed#top"))
-    urls = d.select("doc_id",
-                    F.explode(F.array(clean, messy)).alias("url"))
-    norm = F.lower(F.col("url"))
-    for pat, rep in _URL_NORM_STEPS:
-        norm = F.regexp_replace(norm, pat, rep)
-    nrm = (urls.withColumn("url_norm", norm)
-           .groupBy("url_norm")
-           .agg(F.count("*").alias("n_variants"),
-                F.min("url").alias("sample_raw"))
-           .select(F.lit("norm").alias("op"), "url_norm",
-                   "n_variants", "sample_raw"))
-    doc = F.col("doc_id")
-    uf_url = (
-        F.when(doc % 23 == 0,
-               F.concat(F.lit("https://h"),
-                        (doc * 9973).cast("string"),
-                        F.lit("9999999.com/p")))
-        .when(doc % 13 == 0, F.concat(clean, F.lit("-xxx")))
-        .when(doc % 18 == 0,
-              F.concat(clean, F.lit("/casino-casino-casino")))
-        .when(doc % 9 == 0,
-              F.concat(clean, F.lit("/casino-bonus-code")))
-        .otherwise(clean))
-    uf = (url_filter(d.select("doc_id", uf_url.alias("url")))
-          .select(F.lit("uf").alias("op"),
-                  F.col("url").alias("url_norm"),
-                  (F.col("spam_score") * 1000000
-                   + F.col("host_digit_bp")).alias("n_variants"),
-                  F.col("keep_url").cast("string").alias("sample_raw")))
-
-    # op='robots' — crawl-policy compliance: per-host robots.txt BUILT
-    # by arithmetic in the executors (mre/linkgraph.py robots_txt_of:
-    # even host idx → a specific 'mrebot' group that REPLACES '*',
-    # odd → '*' only), evaluated for agent 'mrebot' over the clean
-    # /articles/ urls by the REAL stdlib parser. n_variants packs
-    # allowed*1000000 + the matched group's Crawl-delay in ms (even
-    # idx: the mrebot group's 1+s%5 seconds; odd: the '*' group's
-    # 2+s%4 only when s%3==1) — RFC group selection, prefix matching
-    # AND delay extraction all value-checked per url against the
-    # oracle's arithmetic CASE.
-    from mre.linkgraph import robots_allowed
-    robots = _robots_fixture(d)
-    rb = (robots_allowed(d.select(clean.alias("url")), robots,
-                         agent="mrebot")
-          .select(F.lit("robots").alias("op"),
-                  F.col("url").alias("url_norm"),
-                  (F.col("allowed") * 1000000
-                   + F.col("crawl_delay_ms")).alias("n_variants"),
-                  F.col("host").alias("sample_raw")))
-    return nrm.unionAll(uf).unionAll(rb)
-
-
 def q_hash_split(spark, sf_dir):
     """Deterministic 90/10 train/test split by content hash; returns the
     per-(split, lang) counts so the whole assignment is value-checked."""
@@ -506,7 +279,6 @@ def q_curation_pipeline(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "extract_flagship": q_extract,
-        "full_outer": q_full_outer,
         "lang_id": q_lang_id,
         "fingerprint": q_fingerprint,
         "exact_dedup": q_exact_dedup,
@@ -516,7 +288,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contamination": q_contamination,
         "lineage_rollup": q_lineage_rollup,
         "semi_anti_join": q_semi_anti_join,
-        "url_dedup": q_url_dedup,
         "hash_split": q_hash_split,
         "gopher_quality": q_gopher_quality,
         "curation_pipeline": q_curation_pipeline,
@@ -779,109 +550,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{lineage_golden}')
             WHERE n_corpus = (SELECT count(*) FROM documents){_PLIN}
         """,
-        "url_dedup": r"""
-            WITH u AS (
-                SELECT doc_id, unnest([
-                    'https://example-' || (doc_id % 20)
-                        || '.com/articles/' || doc_id,
-                    'HTTP://WWW.Example-' || (doc_id % 20)
-                        || '.COM/Articles/' || doc_id
-                        || '/?utm_source=feed#top']) AS url
-                FROM documents),
-            n AS (
-                SELECT url,
-                       regexp_replace(regexp_replace(regexp_replace(
-                           regexp_replace(lower(url),
-                           '#.*$', '', 'g'),
-                           '([?&])utm_[a-z_]+=[^&#]*', '\1', 'g'),
-                           '^https?://(www\.)*', 'https://', 'g'),
-                           '([^:/])[?&/]+$', '\1', 'g') AS url_norm
-                FROM u),
-            ufu AS (
-                SELECT doc_id,
-                       CASE WHEN doc_id % 23 = 0
-                            THEN 'https://h' || (doc_id * 9973)
-                                 || '9999999.com/p'
-                            WHEN doc_id % 13 = 0
-                            THEN 'https://example-' || (doc_id % 20)
-                                 || '.com/articles/' || doc_id || '-xxx'
-                            WHEN doc_id % 18 = 0
-                            THEN 'https://example-' || (doc_id % 20)
-                                 || '.com/articles/' || doc_id
-                                 || '/casino-casino-casino'
-                            WHEN doc_id % 9 = 0
-                            THEN 'https://example-' || (doc_id % 20)
-                                 || '.com/articles/' || doc_id
-                                 || '/casino-bonus-code'
-                            ELSE 'https://example-' || (doc_id % 20)
-                                 || '.com/articles/' || doc_id
-                       END AS url
-                FROM documents),
-            ufs AS (
-                SELECT url,
-                       (len(regexp_extract_all(lower(url), 'porn'))
-                        + len(regexp_extract_all(lower(url), 'xxx'))
-                        + len(regexp_extract_all(lower(url), 'viagra'))
-                        + len(regexp_extract_all(lower(url), 'warez')))
-                           * 100
-                       + (len(regexp_extract_all(lower(url), 'casino'))
-                          + len(regexp_extract_all(lower(url),
-                                                   'lottery'))
-                          + len(regexp_extract_all(lower(url),
-                                                   'betting'))
-                          + len(regexp_extract_all(lower(url), 'pills'))
-                          + len(regexp_extract_all(lower(url),
-                                                   'torrent'))
-                          + len(regexp_extract_all(lower(url),
-                                                   'bonus-code'))
-                          + len(regexp_extract_all(lower(url),
-                                                   'free-money')))
-                           * 40 AS score,
-                       regexp_extract(lower(url),
-                           '^[a-z][a-z0-9+.-]*://(?:www\.)?([^/:?#]+)',
-                           1) AS host
-                FROM ufu),
-            ufo AS (
-                SELECT url, score,
-                       CASE WHEN length(host) > 0
-                            THEN length(regexp_replace(host, '[^0-9]',
-                                                       '', 'g'))
-                                 * 10000 // length(host)
-                            ELSE 0 END AS hbp
-                FROM ufs)
-            SELECT 'norm' AS op, url_norm, count(*) AS n_variants,
-                   min(url) AS sample_raw
-            FROM n GROUP BY url_norm
-            UNION ALL
-            SELECT 'uf' AS op, url AS url_norm,
-                   CAST(score * 1000000 + hbp AS BIGINT) AS n_variants,
-                   CAST(CAST(score < 100 AND hbp <= 5000
-                             AND length(url) <= 2048 AS INTEGER)
-                        AS VARCHAR) AS sample_raw
-            FROM ufo
-            UNION ALL
-            -- op='robots': arithmetic twin of robots_txt_of (even host
-            -- idx: a specific mrebot group disallows /articles/ iff
-            -- idx%4=0; odd: the * group disallows /articles/ iff
-            -- idx%3=0) — the Spark side derives the same flags by
-            -- PARSING the built robots.txt with urllib.robotparser
-            SELECT 'robots' AS op,
-                   'https://example-' || (doc_id % 20)
-                       || '.com/articles/' || doc_id AS url_norm,
-                   CAST(CASE WHEN (doc_id % 20) % 2 = 0
-                             THEN CASE WHEN (doc_id % 20) % 4 = 0
-                                       THEN 0 ELSE 1 END
-                             ELSE CASE WHEN (doc_id % 20) % 3 = 0
-                                       THEN 0 ELSE 1 END
-                        END * 1000000
-                      + CASE WHEN (doc_id % 20) % 2 = 0
-                             THEN (1 + (doc_id % 20) % 5) * 1000
-                             WHEN (doc_id % 20) % 3 = 1
-                             THEN (2 + (doc_id % 20) % 4) * 1000
-                             ELSE 0 END AS BIGINT) AS n_variants,
-                   'example-' || (doc_id % 20) || '.com' AS sample_raw
-            FROM documents
-        """,
         "hash_split": """
             SELECT CASE WHEN CAST(('0x' || substring(md5(text), 1, 4))
                              AS INTEGER) < CAST(FLOOR(0.9 * 65536) AS INTEGER)
@@ -952,61 +620,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'ingest' AS op, doc_id, lang, n_chars FROM b3
             WHERE doc_id NOT IN (SELECT doc_id FROM losers){_P4I}
-        """,
-        "full_outer": """
-            WITH d AS (SELECT doc_id, count(*) AS n_docs
-                       FROM documents GROUP BY doc_id),
-                 e AS (SELECT user_id AS doc_id, count(*) AS n_events
-                       FROM events GROUP BY user_id)
-            SELECT 'fo' AS op, coalesce(d.doc_id, e.doc_id) AS doc_id,
-                   n_docs, n_events
-            FROM d FULL OUTER JOIN e ON d.doc_id = e.doc_id
-            UNION ALL
-            -- op='delta': arithmetic twin of the CDX snapshot-pair
-            -- fixture (_cdx_fixture): old = d%4 != 1 (+ a second
-            -- same-digest capture on d%7==0), new = d%4 != 2 with the
-            -- digest changed on d%5==2; the Spark side derives the
-            -- same facts by READING the cdxj.gz shards and diffing
-            SELECT 'delta' AS op, doc_id,
-                   CAST(CASE WHEN doc_id % 4 = 1 THEN 2
-                             WHEN doc_id % 4 = 2 THEN 3
-                             WHEN doc_id % 5 = 2 THEN 1
-                             ELSE 0 END AS BIGINT) AS n_docs,
-                   CAST((CASE WHEN doc_id % 4 != 1 THEN 1 ELSE 0 END)
-                      + (CASE WHEN doc_id % 4 != 1 AND doc_id % 7 = 0
-                              THEN 1 ELSE 0 END)
-                      + (CASE WHEN doc_id % 4 != 2 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_events
-            FROM documents
-            UNION ALL
-            -- op='plan': fetchset = added (d%4=1) + changed (both
-            -- present, d%5=2); robots-allow + Crawl-delay per the
-            -- shared arithmetic (url_dedup op='robots'); rank = url
-            -- STRING order per host; start = (rank-1)*delay_ms
-            SELECT 'plan' AS op, doc_id,
-                   CAST(rk AS BIGINT) AS n_docs,
-                   CAST((rk - 1) * delay AS BIGINT) AS n_events
-            FROM (
-              SELECT doc_id,
-                     row_number() OVER (PARTITION BY s ORDER BY u)
-                         AS rk,
-                     delay
-              FROM (
-                SELECT doc_id, doc_id % 20 AS s,
-                       'https://www.example-' || (doc_id % 20)
-                           || '.com/articles/' || doc_id AS u,
-                       CASE WHEN (doc_id % 20) % 2 = 0
-                            THEN (1 + (doc_id % 20) % 5) * 1000
-                            WHEN (doc_id % 20) % 3 = 1
-                            THEN (2 + (doc_id % 20) % 4) * 1000
-                            ELSE 0 END AS delay
-                FROM documents
-                WHERE (doc_id % 4 = 1
-                       OR (doc_id % 4 NOT IN (1, 2)
-                           AND doc_id % 5 = 2))
-                  AND (CASE WHEN (doc_id % 20) % 2 = 0
-                            THEN (doc_id % 20) % 4 != 0
-                            ELSE (doc_id % 20) % 3 != 0 END)))
         """,
         "lang_id": r"""
             WITH s AS (

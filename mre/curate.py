@@ -8,10 +8,9 @@ user journey over a documents table, as one resumable job.
 Every stage exists (and is individually oracled) in ``mre.textops``; this
 module wires them into the single pipeline a 100 TB curation run actually
 executes, with the same stage-lineage/resume story ``run_extract`` has.
-These five stages are the whole default pipeline; a stage belongs here only
-while a checked workload (``corpus_e2e``, the ``curation_pipeline`` oracle)
-runs it. The one opt-in stage left, the ``url_gate`` URL filter, is the
-next to go under that rule.
+These five stages are the whole pipeline; a stage belongs here only while
+a checked workload (``corpus_e2e``, the ``curation_pipeline`` oracle) runs
+it.
 
 Scale design (10^12 docs):
 * Stage checkpoints are NARROW — each stage materializes only the
@@ -44,8 +43,7 @@ from pyspark.sql import functions as F
 from .io import read_if_present, read_table, write_append, write_overwrite
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
                       gopher_quality, hash_split, jaccard_on_candidates,
-                      minhash_bands, minhash_near_dups, minhash_signatures,
-                      url_filter)
+                      minhash_bands, minhash_near_dups, minhash_signatures)
 
 
 # --------------------------------------------------------------------------
@@ -162,8 +160,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                shingle_n: int = 3, minhash_threshold: float = 0.2,
                jaccard_threshold: float = 0.5, contamination_n: int = 5,
                contamination_min_shared: int = 1, train_frac: float = 0.9,
-               max_bucket: int | None = None, resume: bool = True,
-               url_gate: bool = False) -> None:
+               max_bucket: int | None = None, resume: bool = True) -> None:
     """Run the curation pipeline end-to-end with stage checkpoints.
 
     ``src`` is a documents table (doc_id, text, …) — a path/URI, or a
@@ -183,13 +180,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
     new lineage row with a bumped ``attempt`` counter, so duplicate
     (run_id, stage) rows are ordered and rollups can pick the latest
     (ADVICE r4). The run's lineage rows are read once, up front: they
-    give both the committed stages and each stage's next attempt.
-
-    ``url_gate`` (round 7) prepends the RefinedWeb-family URL filter
-    (``textops.url_filter``: blocklist score, digit-heavy hosts, length
-    cut — zero-shuffle projections) as the very first stage; requires a
-    ``url`` column (the extraction output has one) and raises if the
-    corpus lacks it."""
+    give both the committed stages and each stage's next attempt."""
     from .textops import cache_mark, release_caches
     _mark = cache_mark()
     docs = src if isinstance(src, DataFrame) else read_table(spark, src)
@@ -200,7 +191,7 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
         jaccard_threshold=jaccard_threshold,
         contamination_n=contamination_n,
         contamination_min_shared=contamination_min_shared,
-        train_frac=train_frac, max_bucket=max_bucket, url_gate=url_gate)
+        train_frac=train_frac, max_bucket=max_bucket)
     rows = _lineage_rows(spark, lineage_dst, run_id)
     done = _done_stages(rows, ph) if resume else set()
     attempts = Counter(r["stage"] for r in rows)
@@ -227,20 +218,6 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
                      lineage_dst)
         return out
 
-    if url_gate:
-        # stage 0 — the RefinedWeb-family URL gate, BEFORE any content
-        # work (zero-shuffle projection; cheapest possible first cut)
-        if "url" not in docs.columns:
-            raise ValueError(
-                "url_gate=True needs a 'url' column on the corpus "
-                "(extraction output has one; plain documents tables "
-                "may not)")
-        _pre_url = docs
-        sU = _stage("url_filter",
-                    lambda: url_filter(_pre_url)
-                    .filter(F.col("keep_url") == 1).select("doc_id"),
-                    _pre_url)
-        docs = docs.join(sU, "doc_id", "left_semi")
     s1 = _stage("quality", lambda: quality_keep_ids(docs), docs)
     d2 = docs.join(s1, "doc_id", "left_semi")
     s2 = _stage("exact_dedup", lambda: exact_keeper_ids(d2), s1)
@@ -895,113 +872,6 @@ def compact_dedup_index(spark: SparkSession, index_dst: str,
         swap_dirs(spark, f"{path}.tmp", path)
 
 
-def remove_from_dedup_index(spark: SparkSession, doc_ids,
-                            index_dst: str) -> None:
-    """Index lifecycle — DELETIONS (VERDICT r6 #8): retract docs from
-    the dedup index (takedowns, re-crawls, curation reversals). Without
-    this, dead index rows keep suppressing matching NEW docs forever —
-    a corpus that legally removed a document could never re-admit a
-    fresh crawl of equivalent content. After removal, re-ingesting the
-    same (or near-same) content is admitted again.
-
-    ``doc_ids``: a DataFrame with a ``doc_id`` column, or an iterable of
-    ids. Idempotent — a crash mid-way re-runs safely (each table's
-    delete is an anti-join rewrite; re-applying is a no-op). Tables are
-    processed bands → signatures → fingerprints: the bands delete
-    derives the victims' band rows from their still-present signature
-    rows, so it must run while those rows exist; a retry after any
-    partial state still finds what it needs.
-
-    Scale shape: on the hash-bucketed layout only the buckets that
-    actually CONTAIN victim rows are rewritten (signature buckets from
-    the victims' doc_ids, band buckets from their derived band hashes —
-    both computed without scanning the index; the fingerprint pass
-    scans the digest table once to discover the victims' digests, but
-    still rewrites only touched buckets). Buckets left EMPTY by the
-    delete are dropped at the filesystem (a dynamic overwrite with zero
-    rows would leave them stale). Flat legacy layouts fall back to a
-    full anti-join rewrite promoted by swap. On Iceberg this maps to a
-    plain ``DELETE WHERE`` (position/equality deletes). Like
-    compaction, do not run concurrently with ingest against the same
-    index. Same-session callers that ran dedup ops over this index
-    earlier should ``mre.textops.release_caches()`` first — Spark's
-    plan-matching cache would otherwise serve pre-removal index rows to
-    later probes (the ingest CLI already releases per command)."""
-    from .io import (_hadoop_fs, atomic_rename_fs, swap_dirs,
-                     write_overwrite_partitions)
-    from .textops import _release_local_checkpoint
-    meta = _index_meta(spark, index_dst)
-    parts = meta["parts"] if meta is not None else None
-    bands_n = meta["bands"] if meta is not None else None
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select("doc_id").distinct()
-    else:
-        ids = spark.createDataFrame([(int(i),) for i in doc_ids],
-                                    "doc_id long")
-    # pin the victim set — the loop below mutates the tables its own
-    # derivations would otherwise lazily re-read
-    ids = ids.localCheckpoint(eager=True)
-
-    def _full_rewrite(table: str, keep: DataFrame) -> None:
-        path = f"{index_dst}/{table}"
-        if not atomic_rename_fs(spark, path):
-            snap = keep.localCheckpoint(eager=True)
-            write_overwrite(snap, path)
-            _release_local_checkpoint(snap)
-            return
-        keep.write.mode("overwrite").parquet(f"{path}.tmp")
-        swap_dirs(spark, f"{path}.tmp", path)
-
-    def _bucket_rewrite(table: str, victim_keys: DataFrame) -> None:
-        """Rewrite only the pb buckets holding victim rows: dynamic
-        partition overwrite for buckets with survivors, fs-delete for
-        buckets emptied entirely."""
-        path = f"{index_dst}/{table}"
-        touched = [r["pb"] for r in victim_keys.select(
-            _bucket_expr(table, parts).alias("pb")).distinct().collect()]
-        if not touched:
-            return
-        df = read_table(spark, path).filter(F.col("pb").isin(touched))
-        keep = df.join(F.broadcast(ids), "doc_id", "left_anti") \
-            .localCheckpoint(eager=True)   # plan reads the path it rewrites
-        kept_pbs = {r["pb"] for r in
-                    keep.select("pb").distinct().collect()}
-        write_overwrite_partitions(keep, path, "pb")
-        for pb in set(touched) - kept_pbs:
-            fs, p = _hadoop_fs(spark, f"{path}/pb={pb}")
-            fs.delete(p, True)
-        _release_local_checkpoint(keep)
-
-    if parts is None:
-        # flat layout: full anti-join rewrite per table
-        if bands_n is not None:
-            _full_rewrite("bands",
-                          read_table(spark, f"{index_dst}/bands")
-                          .join(F.broadcast(ids), "doc_id", "left_anti"))
-        for t in ("signatures", "fingerprints"):
-            _full_rewrite(t, read_table(spark, f"{index_dst}/{t}")
-                          .join(F.broadcast(ids), "doc_id", "left_anti"))
-        return
-
-    # bucketed layout — victims' rows located without scanning:
-    # their signature rows (pruned by doc_id bucket) yield the exact
-    # band rows, hence the exact band buckets
-    victim_sigs = (_read_index(spark, index_dst, "signatures", parts, ids)
-                   .join(F.broadcast(ids), "doc_id", "left_semi")
-                   .localCheckpoint(eager=True))
-    if bands_n is not None:
-        _bucket_rewrite("bands", minhash_bands(victim_sigs, bands_n))
-    _bucket_rewrite("signatures", ids)
-    # fingerprints are keyed by digest, not doc_id: one discovery scan
-    # finds the victims' digest rows, then only their buckets rewrite
-    victim_fps = (read_table(spark, f"{index_dst}/fingerprints")
-                  .join(F.broadcast(ids), "doc_id", "left_semi")
-                  .drop("pb").localCheckpoint(eager=True))
-    _bucket_rewrite("fingerprints", victim_fps)
-    _release_local_checkpoint(victim_fps)
-    _release_local_checkpoint(victim_sigs)
-
-
 def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
                evals_src: Optional[str] = None,
                buckets: Optional[int] = None, dedup: str = "window",
@@ -1071,4 +941,4 @@ __all__ = ["run_curate", "read_curated", "completed_stages",
            "contaminated_ids", "read_curate_lineage",
            "extracted_to_documents", "run_corpus",
            "build_dedup_index", "update_dedup_index", "dedup_increment",
-           "compact_dedup_index", "remove_from_dedup_index"]
+           "compact_dedup_index"]

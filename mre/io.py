@@ -68,51 +68,16 @@ def get_spark(app: str = "mre", master: str | None = None,
     return spark
 
 
-_FORMAT_PREFIXES = ("orc:", "csv:", "json:")
-
-
 def read_pages(spark: SparkSession, src: str) -> DataFrame:
-    """P1 scan. ``src``: parquet path (file or dir, the default),
-    ``iceberg:db.table``, ``warc:`` + a WARC(.gz) path/glob (crawl-native,
-    carries the HTTP Content-Type through to the decoder),
-    ``jsonl:`` + a JSONL path (html as base64), or ``orc:``/``csv:``/
-    ``json:`` + path for the other formats Spark reads natively — every
-    source is reachable from the spark-submit CLI via this one dispatch."""
+    """P1 scan. ``src``: ``iceberg:db.table``, ``warc:`` + a WARC(.gz)
+    path/glob (crawl-native, carries the HTTP Content-Type through to the
+    decoder), or else a parquet path (file or dir). Any other prefix is
+    taken as a parquet path's URI scheme, so an unknown one raises."""
     if src.startswith(ICEBERG_PREFIX):
         return spark.read.format("iceberg").load(src[len(ICEBERG_PREFIX):])
     if src.startswith("warc:"):
         from .sources.warc import read_warc
         return read_warc(spark, src[len("warc:"):])
-    if src.startswith("wet:"):
-        # Common Crawl's extracted-text distribution → the DOCUMENTS
-        # shape (doc_id, url, warc_ts, text, lang, source, n_chars):
-        # feed it to run_curate / the textops, not to run_extract —
-        # the HTML extract stage is already done upstream
-        from .sources.warc import wet_documents
-        return wet_documents(spark, src[len("wet:"):])
-    if src.startswith("sitemap:"):
-        # sitemaps.org urlset / sitemapindex files — crawl discovery
-        from .sources.sitemap import read_sitemaps
-        return read_sitemaps(spark, src[len("sitemap:"):])
-    if src.startswith("feed:"):
-        # RSS 2.0 / Atom feeds — news-pipeline discovery
-        from .sources.sitemap import read_feeds
-        return read_feeds(spark, src[len("feed:"):])
-    if src.startswith("cdx:"):
-        # Common Crawl's capture-index distribution (CDXJ shards) —
-        # membership / freshness / re-crawl planning without payload
-        # bytes; see mre/sources/cdx.py capture_delta
-        from .sources.cdx import read_cdx
-        return read_cdx(spark, src[len("cdx:"):])
-    if src.startswith("jsonl:"):
-        return read_pages_jsonl(spark, src[len("jsonl:"):])
-    for p in _FORMAT_PREFIXES:
-        if src.startswith(p):
-            fmt = p[:-1]
-            reader = spark.read
-            if fmt == "csv":
-                reader = reader.option("header", "true")
-            return reader.format(fmt).load(src[len(p):])
     return spark.read.parquet(src)
 
 
@@ -306,35 +271,8 @@ def swap_dirs(spark: SparkSession, tmp: str, path: str) -> None:
     fs.delete(p_old, True)
 
 
-def read_pages_jsonl(spark: SparkSession, src: str) -> DataFrame:
-    """P1 scan over JSONL pages (one JSON object per line; ``html`` is
-    base64 — JSON can't carry raw bytes). Yields PAGES_SCHEMA. Useful for
-    crawl exports; file-level parallelism like the WARC source."""
-    from pyspark.sql import functions as F
-    from .schema import PAGES_SCHEMA
-    from pyspark.sql.types import (StringType, StructField, StructType,
-                                   TimestampType)
-    wire = StructType([
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("html_b64", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ])
-    df = spark.read.schema(wire).json(src)
-    # same columns/types as PAGES_SCHEMA; JSON sources can't declare
-    # non-null columns, so rows missing either non-null field (url,
-    # warc_ts) are dropped — the downstream dedup window and
-    # dedup_first_latest both assume warc_ts is never null
-    _ = PAGES_SCHEMA
-    return (df.filter(F.col("url").isNotNull()
-                      & F.col("warc_ts").isNotNull())
-            .select("url", "warc_ts",
-                    F.unbase64("html_b64").alias("html"), "text", "lang"))
-
-
 __all__ = ["get_spark", "read_pages", "write_append",
            "write_overwrite_partitions", "read_table", "read_if_present",
-           "read_pages_jsonl", "path_committed", "swap_dirs",
+           "path_committed", "swap_dirs",
            "atomic_rename_fs", "local_path", "recover_swapped_dir",
            "ICEBERG_PREFIX"]

@@ -113,56 +113,6 @@ def pages_from_warc_bytes(name: str, data: bytes) -> list[dict]:
     return rows
 
 
-def docs_from_wet_bytes(name: str, data: bytes) -> list[dict]:
-    """One WET(.gz) file → (url, warc_ts, text) rows. WET is Common
-    Crawl's extracted-text distribution: the same WARC container, but
-    ``WARC-Type: conversion`` records whose payload is the page's plain
-    UTF-8 text (no HTTP envelope) — the crawl-native input for a
-    text-only training pipeline that skips the HTML extract stage."""
-    if data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)
-    rows = []
-    for headers, payload in iter_warc_records(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri")
-        ts = _warc_ts(headers.get("warc-date", ""))
-        if not url or ts is None:
-            continue
-        rows.append({"url": url, "warc_ts": ts,
-                     "text": payload.decode("utf-8", "replace")})
-    return rows
-
-
-def read_wet(spark: SparkSession, path_glob: str) -> DataFrame:
-    """WET(.gz) files → (url, warc_ts, text) DataFrame. Same execution
-    shape as ``read_warc``: whole files via binaryFile (WET gzip members
-    are not block-splittable; Common Crawl shards ~64k files per crawl,
-    so file-level parallelism keeps a 1000-executor cluster busy),
-    record splitting distributed inside mapInPandas."""
-    from pyspark.sql.types import (StringType, StructField, StructType,
-                                   TimestampType)
-
-    files = (spark.read.format("binaryFile").load(path_glob)
-             .select("path", "content"))
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("text", StringType(), True),
-    ])
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                rows = docs_from_wet_bytes(row["path"],
-                                           bytes(row["content"]))
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(split, schema)
-
-
 def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     """WARC(.gz) files → pages DataFrame (PAGES_SCHEMA plus a nullable
     ``content_type`` side column carrying the HTTP header — the pipeline
@@ -218,52 +168,5 @@ def write_warc_gz(path: str, doc_ids: list[int]) -> None:
             f.write(buf.getvalue())
 
 
-def wet_documents(spark: SparkSession, path_glob: str) -> DataFrame:
-    """WET(.gz) files straight to the DOCUMENTS shape every curation op
-    consumes — (doc_id, url, warc_ts, text, lang, source, n_chars),
-    the same identity/lang/source projection as
-    ``curate.extracted_to_documents`` (doc_id = xxhash64(url);
-    marker-heuristic lang fused into the projection; source = host).
-    One mapInPandas split + one projection, zero shuffle: the
-    text-only crawl path that skips the HTML extract stage entirely."""
-    import pyspark.sql.functions as F
-
-    from ..textops import lang_pred_expr
-    return (read_wet(spark, path_glob)
-            .select(F.xxhash64("url").alias("doc_id"),
-                    "url", "warc_ts", "text",
-                    lang_pred_expr().alias("lang"),
-                    F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
-                    .alias("source"),
-                    F.length("text").alias("n_chars")))
-
-
-def write_wet_gz(path: str, doc_ids: list[int]) -> None:
-    """Render fixture pages' GOLDEN extracted text as a CC-style
-    .wet.gz (conversion records, one gzip member each) — the WET twin
-    of ``write_warc_gz``, so WET-read → curate can be checked against
-    the same spec-computed truth with no external data."""
-    from .. import fixtures as FX
-
-    with open(path, "wb") as f:
-        for i in doc_ids:
-            text = (FX.golden_row(i)["extracted_text"] or "")
-            body = text.encode("utf-8")
-            ts = FX.warc_ts_of(i).strftime("%Y-%m-%dT%H:%M:%SZ")
-            hdr = ("WARC/1.0\r\n"
-                   "WARC-Type: conversion\r\n"
-                   f"WARC-Target-URI: {FX.url_of(i)}\r\n"
-                   f"WARC-Date: {ts}\r\n"
-                   f"WARC-Record-ID: <urn:uuid:wet-fixture-{i}>\r\n"
-                   f"Content-Length: {len(body)}\r\n"
-                   "Content-Type: text/plain\r\n").encode("latin-1")
-            record = hdr + b"\r\n" + body + b"\r\n\r\n"
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(record)
-            f.write(buf.getvalue())
-
-
 __all__ = ["read_warc", "pages_from_warc_bytes", "iter_warc_records",
-           "write_warc_gz", "read_wet", "docs_from_wet_bytes",
-           "wet_documents", "write_wet_gz"]
+           "write_warc_gz"]

@@ -45,10 +45,6 @@ def main() -> None:
     ap.add_argument("--min-shared", type=int, default=1)
     ap.add_argument("--train-frac", type=float, default=0.9)
     ap.add_argument("--max-bucket", type=int, default=None)
-    ap.add_argument("--url-gate", action="store_true",
-                    help="prepend the RefinedWeb-family URL filter "
-                         "(blocklist score, digit-heavy hosts, length) "
-                         "as stage 0; requires a url column")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -66,7 +62,6 @@ def main() -> None:
                    contamination_min_shared=args.min_shared,
                    train_frac=args.train_frac,
                    max_bucket=args.max_bucket,
-                   url_gate=args.url_gate,
                    resume=not args.no_resume)
     finally:
         spark.stop()

@@ -56,14 +56,6 @@ def main() -> None:
     c = sub.add_parser("compact",
                        help="rewrite the index's small-file swarm")
     c.add_argument("--target-partitions", type=int, default=None)
-    r = sub.add_parser(
-        "remove",
-        help="retract docs from the index (takedowns / re-crawls) so "
-             "matching new content is admitted again")
-    r.add_argument("--doc-ids", default=None,
-                   help="comma-separated doc_id list")
-    r.add_argument("--ids-table", default=None,
-                   help="path/URI of a table with a doc_id column")
     s = sub.add_parser(
         "stream",
         help="continuous ingestion: watch a directory of incoming "
@@ -87,8 +79,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from mre.curate import (build_dedup_index, compact_dedup_index,
-                            dedup_increment, remove_from_dedup_index,
-                            update_dedup_index)
+                            dedup_increment, update_dedup_index)
     from mre.io import (get_spark, path_committed, read_table,
                         write_overwrite)
     from mre.textops import release_caches
@@ -101,13 +92,6 @@ def main() -> None:
         elif args.cmd == "compact":
             compact_dedup_index(spark, args.index,
                                 args.target_partitions)
-        elif args.cmd == "remove":
-            if bool(args.doc_ids) == bool(args.ids_table):
-                raise SystemExit(
-                    "remove: pass exactly one of --doc-ids / --ids-table")
-            ids = (read_table(spark, args.ids_table) if args.ids_table
-                   else [int(s) for s in args.doc_ids.split(",")])
-            remove_from_dedup_index(spark, ids, args.index)
         elif args.cmd == "stream":
             from mre.streaming import start_ingest_stream
             q = start_ingest_stream(

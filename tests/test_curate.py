@@ -370,34 +370,6 @@ def test_run_corpus_materialized_copy_not_rewritten_on_resume(
     assert mtimes2 == mtimes1
 
 
-def test_run_corpus_url_gate(spark, tmp_path):
-    """Round-7: --url-gate works across the zero-copy adapter (the
-    extraction output keeps url), dropping pages whose url trips the
-    blocklist before any content-stage work."""
-    from mre.curate import run_corpus
-    from mre.fixtures import write_fixture_parquet
-    from pyspark.sql import functions as F
-
-    fx = str(tmp_path / "fixtures")
-    write_fixture_parquet(fx, n=80)
-    # poison a handful of urls with a hard blocklist marker
-    pages = spark.read.parquet(f"{fx}/pages.parquet")
-    poisoned = pages.withColumn(
-        "url",
-        F.when(F.xxhash64("url") % 10 == 0,
-               F.concat(F.col("url"), F.lit("-xxx-casino")))
-        .otherwise(F.col("url")))
-    src = str(tmp_path / "pages2")
-    poisoned.write.parquet(src)
-    wd = str(tmp_path / "corpus")
-    run_corpus(spark, src, wd, run_id="ug", url_gate=True)
-    kept_urls = {r["url"] for r in spark.read.parquet(
-        f"{wd}/curated/url_filter").join(
-        spark.read.parquet(f"{wd}/extracted").withColumn(
-            "doc_id", F.xxhash64("url")), "doc_id").collect()}
-    assert kept_urls and all("-xxx-" not in u for u in kept_urls)
-
-
 def test_read_curate_lineage_resolves_attempts(spark, docs, evals,
                                                tmp_path):
     """Rollups consume ONE row per (run_id, stage) — the latest attempt —
@@ -444,31 +416,6 @@ def test_run_curate_param_flip_back_recomputes(spark, docs, evals,
     out_a2 = read_curated(spark, dst).orderBy("doc_id").toPandas()
     # outputs reflect A again (0.9 split ≠ the 0.5 split left by B)
     assert out_a2["split"].tolist() != out_b["split"].tolist()
-
-
-def test_run_curate_url_gate_stage(spark, docs, evals, tmp_path):
-    """Round-7 URL gate as stage 0: a spam-URL doc is dropped before
-    any content work, clean-URL docs flow through unchanged, and a
-    corpus without a url column raises."""
-    from pyspark.sql import functions as F
-    with_urls = docs.withColumn(
-        "url",
-        F.when(F.col("doc_id") == 0,
-               F.lit("https://example.com/xxx-casino-bonus"))
-        .otherwise(F.concat(F.lit("https://example.com/p/"),
-                            F.col("doc_id").cast("string"))))
-    src = str(tmp_path / "docs")
-    with_urls.write.parquet(src)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, src, dst, lin, run_id="ug1", url_gate=True)
-    kept = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/url_filter").collect()}
-    assert 0 not in kept and 1 in kept
-    surv = {r["doc_id"]
-            for r in spark.read.parquet(f"{dst}/split").collect()}
-    assert 0 not in surv and surv <= kept
-    with pytest.raises(ValueError, match="url"):
-        run_curate(spark, docs, dst, lin, run_id="ug2", url_gate=True)
 
 
 def test_release_caches_is_scopeable(spark, docs, evals):
@@ -910,80 +857,3 @@ def test_recover_swapped_dir(spark, tmp_path):
     spark.range(3).write.parquet(f"{live}.old")   # stale residue
     assert not recover_swapped_dir(spark, live)   # live wins
     assert spark.read.parquet(live).count() == 7
-
-
-def test_remove_from_dedup_index_readmits_content(spark, docs, tmp_path):
-    """VERDICT r6 #8 (index lifecycle): retracting docs removes their
-    suppression — a re-ingest of the same (exact) and near-same content
-    is admitted again; untouched docs keep deduping; compaction
-    preserves the removal; the delete is idempotent."""
-    import glob
-    from mre.curate import (build_dedup_index, compact_dedup_index,
-                            dedup_increment, remove_from_dedup_index)
-    idx = str(tmp_path / "idx")
-    build_dedup_index(spark, docs, idx)
-
-    t0 = docs.filter("doc_id = 0").first()["text"]
-    t1 = docs.filter("doc_id = 1").first()["text"]
-    t2 = docs.filter("doc_id = 2").first()["text"]
-    batch = spark.createDataFrame(
-        [(9000, t0),                                    # exact of removed
-         (9001, t1.replace("unique", "uniqxe", 1)),     # near of removed
-         (9002, t2)],                                   # exact of KEPT doc
-        "doc_id long, text string")
-    # precondition: all three suppressed before the retraction
-    pre = dedup_increment(spark, batch, idx, threshold=0.5,
-                          update_index=False)
-    assert pre.count() == 0
-    # the precondition call persisted frames OVER the index tables —
-    # release them, or Spark's plan-matching cache would serve the
-    # pre-removal rows to the post-removal run (module convention:
-    # update_index=False means the caller owns the release)
-    from mre.textops import release_caches
-    release_caches()
-
-    remove_from_dedup_index(spark, [0, 1], idx)
-    out = dedup_increment(spark, batch, idx, threshold=0.5,
-                          update_index=False)
-    got = {r["doc_id"] for r in out.collect()}
-    assert got == {9000, 9001}   # retracted content readmitted; 9002 not
-
-    # no trace of the victims in any table; no stale empty buckets
-    for t in ("fingerprints", "signatures", "bands"):
-        tbl = spark.read.parquet(f"{idx}/{t}")
-        assert tbl.filter("doc_id in (0, 1)").count() == 0
-        for d in glob.glob(f"{idx}/{t}/pb=*"):
-            assert glob.glob(f"{d}/*.parquet"), f"stale empty bucket {d}"
-
-    # idempotent: re-applying the same removal is a no-op
-    counts = {t: spark.read.parquet(f"{idx}/{t}").count()
-              for t in ("fingerprints", "signatures", "bands")}
-    remove_from_dedup_index(spark, [0, 1], idx)
-    for t, n in counts.items():
-        assert spark.read.parquet(f"{idx}/{t}").count() == n
-
-    # compaction preserves the removal
-    compact_dedup_index(spark, idx, target_partitions=1)
-    redo = dedup_increment(spark, batch, idx, threshold=0.5,
-                           update_index=False)
-    assert {r["doc_id"] for r in redo.collect()} == {9000, 9001}
-
-
-def test_remove_from_dedup_index_flat_layout(spark, docs, tmp_path):
-    """The legacy flat layout takes the full-rewrite path and reaches
-    the same post-retraction semantics."""
-    from mre.curate import (build_dedup_index, dedup_increment,
-                            remove_from_dedup_index)
-    idx = str(tmp_path / "idx")
-    build_dedup_index(spark, docs, idx, parts=None)
-    t0 = docs.filter("doc_id = 0").first()["text"]
-    batch = spark.createDataFrame([(9100, t0)], "doc_id long, text string")
-    assert dedup_increment(spark, batch, idx, threshold=0.5,
-                           update_index=False).count() == 0
-    from mre.textops import release_caches
-    release_caches()   # see readmits test: drop pre-removal cached scans
-    remove_from_dedup_index(
-        spark, spark.createDataFrame([(0,)], "doc_id long"), idx)
-    out = dedup_increment(spark, batch, idx, threshold=0.5,
-                          update_index=False)
-    assert {r["doc_id"] for r in out.collect()} == {9100}

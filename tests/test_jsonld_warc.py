@@ -165,188 +165,3 @@ def test_warc_content_type_charset_wins_over_meta(spark, tmp_path):
     from mre.core.extract import extract_one
     r = extract_one("https://ct.example/cafe", body)
     assert "�" in (r.extracted_text or "")
-
-
-def test_wet_roundtrip_and_curate(spark, tmp_path):
-    """WET source (round 7): conversion records round-trip byte-exactly
-    against the golden extracted text, the `wet:` dispatch lands the
-    documents shape, and the table feeds run_curate directly — the
-    text-only Common-Crawl path that skips the extract stage."""
-    import os
-
-    from mre import fixtures as FX
-    from mre.curate import run_curate
-    from mre.io import read_table
-    from mre.sources.warc import docs_from_wet_bytes, write_wet_gz
-
-    d = str(tmp_path / "wet")
-    os.makedirs(d)
-    write_wet_gz(os.path.join(d, "shard-0.wet.gz"), list(range(0, 40)))
-    write_wet_gz(os.path.join(d, "shard-1.wet.gz"), list(range(40, 80)))
-
-    # byte-level: records parse back to the exact golden text
-    with open(os.path.join(d, "shard-0.wet.gz"), "rb") as f:
-        rows = docs_from_wet_bytes("shard-0", f.read())
-    assert len(rows) == 40
-    by_url = {r["url"]: r for r in rows}
-    for i in (0, 7, 39):
-        g = FX.golden_row(i)
-        r = by_url[FX.url_of(i)]
-        assert r["text"] == (g["extracted_text"] or "")
-        assert r["warc_ts"] == FX.warc_ts_of(i)
-
-    # dispatch: documents shape, one row per record, stable identity
-    docs = read_table(spark, f"wet:{d}/*.wet.gz")
-    assert {"doc_id", "url", "text", "lang", "source", "n_chars"} \
-        <= set(docs.columns)
-    assert docs.count() == 80
-    assert docs.select("doc_id").distinct().count() == 80
-
-    # feeds the curation pipeline directly (quality stage + split run)
-    dst, lin = str(tmp_path / "c"), str(tmp_path / "l")
-    run_curate(spark, f"wet:{d}/*.wet.gz", dst, lin, run_id="wet1")
-    surv = spark.read.parquet(f"{dst}/split")
-    assert 0 < surv.count() <= 80
-
-
-# ---------------------------------------------------------------------------
-# CDX(J) capture-index source (mre/sources/cdx.py)
-
-
-def test_surt_key_canonicalization():
-    from mre.sources.cdx import surt_key
-    assert surt_key("https://www.Example-3.com/Articles/7?Q=1#top") == \
-        "com,example-3)/articles/7?q=1"
-    assert surt_key("http://sub.news.example.org/a/B") == \
-        "org,example,news,sub)/a/b"
-    assert surt_key("https://example.com") == "com,example)/"
-    # single-label host keeps its www (nothing to strip against)
-    assert surt_key("http://user:pw@HOST.io/x") == "io,host)/x"
-
-
-def test_cdxj_roundtrip_and_malformed_tolerance(tmp_path):
-    from mre.sources.cdx import (captures_from_cdx_bytes,
-                                 format_cdxj_line, parse_cdxj_line,
-                                 write_cdxj_gz)
-    line = format_cdxj_line("https://www.a.com/X", "20240101000001",
-                            "d1", status=200, length=5)
-    r = parse_cdxj_line(line)
-    assert r["urlkey"] == "com,a)/x" and r["ts"] == "20240101000001"
-    assert r["digest"] == "d1" and r["status"] == 200 and r["length"] == 5
-    p = write_cdxj_gz([line, "", "garbage no json", line],
-                      str(tmp_path / "s" / "part0.cdxj.gz"))
-    rows = captures_from_cdx_bytes(open(p, "rb").read())
-    assert len(rows) == 2  # blank + malformed skipped, not fatal
-
-
-def test_capture_delta_semantics(spark, tmp_path):
-    """Read through the real cdx: dispatch and diff two snapshots:
-    added/gone/changed/unchanged + latest-capture reduction."""
-    from mre.io import read_table
-    from mre.sources.cdx import capture_delta, format_cdxj_line, \
-        write_cdxj_gz
-
-    def cap(url, ts, dg):
-        return format_cdxj_line(url, ts, dg)
-
-    old = [cap("https://a.com/keep", "20240101000000", "d1"),
-           cap("https://a.com/keep", "20240102000000", "d2"),  # latest
-           cap("https://a.com/gone", "20240101000000", "dg"),
-           cap("https://a.com/chg", "20240101000000", "c1")]
-    new = [cap("https://a.com/keep", "20240103000000", "d2"),
-           cap("https://a.com/chg", "20240103000000", "c2"),
-           cap("https://a.com/new", "20240103000000", "dn")]
-    write_cdxj_gz(old, str(tmp_path / "old" / "p0.cdxj.gz"))
-    write_cdxj_gz(new, str(tmp_path / "new" / "p0.cdxj.gz"))
-    dd = {r["urlkey"]: (r["status"], r["old_ts"], r["new_ts"],
-                        r["n_captures"])
-          for r in capture_delta(
-              read_table(spark, f"cdx:{tmp_path}/old/*.cdxj.gz"),
-              read_table(spark, f"cdx:{tmp_path}/new/*.cdxj.gz"))
-          .collect()}
-    assert dd["com,a)/keep"] == ("unchanged", "20240102000000",
-                                 "20240103000000", 3)
-    assert dd["com,a)/chg"] == ("changed", "20240101000000",
-                                "20240103000000", 2)
-    assert dd["com,a)/gone"] == ("gone", "20240101000000", None, 1)
-    assert dd["com,a)/new"] == ("added", None, "20240103000000", 1)
-
-
-# ---------------------------------------------------------------------------
-# sitemap source (mre/sources/sitemap.py)
-
-
-def test_sitemap_roundtrip_index_and_malformed(tmp_path, spark):
-    from mre.io import read_table
-    from mre.sources.sitemap import sitemap_entries, write_sitemap
-    p1 = write_sitemap(
-        [("https://a.com/p1", "2024-01-02"),
-         ("https://a.com/p2", None)],
-        str(tmp_path / "maps" / "m1.xml.gz"))
-    write_sitemap([("https://a.com/maps/m1.xml.gz", "2024-01-03")],
-                  str(tmp_path / "maps" / "index.xml"), index=True)
-    # malformed shard is skipped, not fatal
-    (tmp_path / "maps" / "bad.xml").write_bytes(b"<urlset><url><loc>")
-    rows = sitemap_entries(open(p1, "rb").read())
-    assert [(r["kind"], r["loc"], r["lastmod"]) for r in rows] == [
-        ("url", "https://a.com/p1", "2024-01-02"),
-        ("url", "https://a.com/p2", None)]
-    got = {(r["kind"], r["loc"], r["lastmod"])
-           for r in read_table(
-               spark, f"sitemap:{tmp_path}/maps/*.xml*").collect()}
-    assert got == {
-        ("url", "https://a.com/p1", "2024-01-02"),
-        ("url", "https://a.com/p2", None),
-        ("sitemap", "https://a.com/maps/m1.xml.gz", "2024-01-03")}
-
-
-def test_undiscovered_urls_vs_capture_index(tmp_path, spark):
-    """Sitemap urls anti-join the capture index on the SURT key, so a
-    www/case variant of a KNOWN capture is not re-discovered."""
-    from mre.io import read_table
-    from mre.sources.cdx import format_cdxj_line, write_cdxj_gz
-    from mre.sources.sitemap import undiscovered_urls, write_sitemap
-    write_cdxj_gz([format_cdxj_line("https://a.com/old", "20240101000000",
-                                    "d1")],
-                  str(tmp_path / "idx" / "p0.cdxj.gz"))
-    write_sitemap(
-        [("https://WWW.A.com/OLD", None),     # known, despite the form
-         ("https://a.com/new", "2024-02-01")],
-        str(tmp_path / "maps" / "m.xml"))
-    got = [r["url"] for r in undiscovered_urls(
-        read_table(spark, f"sitemap:{tmp_path}/maps/*.xml"),
-        read_table(spark, f"cdx:{tmp_path}/idx/*.cdxj.gz")).collect()]
-    assert got == ["https://a.com/new"]
-
-
-def test_feed_discovery_roundtrip(tmp_path, spark):
-    """RSS + Atom feeds read through the feed: dispatch feed the same
-    SURT discovery anti-join as sitemaps."""
-    from mre.io import read_table
-    from mre.sources.cdx import format_cdxj_line, write_cdxj_gz
-    from mre.sources.sitemap import undiscovered_urls
-    (tmp_path / "feeds").mkdir()
-    (tmp_path / "feeds" / "r.xml").write_bytes(
-        b'<rss version="2.0"><channel>'
-        b'<item><link>https://n.com/a</link>'
-        b'<pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate></item>'
-        b'<item><link>https://n.com/b</link></item>'
-        b'</channel></rss>')
-    (tmp_path / "feeds" / "a.xml").write_bytes(
-        b'<feed xmlns="http://www.w3.org/2005/Atom">'
-        b'<entry><link rel="self" href="https://n.com/self"/>'
-        b'<link href="https://n.com/x"/><updated>2024-01-02</updated>'
-        b'</entry></feed>')
-    got = {(r["loc"], r["lastmod"]) for r in
-           read_table(spark, f"feed:{tmp_path}/feeds/*.xml").collect()}
-    assert got == {("https://n.com/a",
-                    "Mon, 01 Jan 2024 00:00:00 GMT"),
-                   ("https://n.com/b", None),
-                   ("https://n.com/x", "2024-01-02")}
-    write_cdxj_gz([format_cdxj_line("https://n.com/a",
-                                    "20240101000000", "d")],
-                  str(tmp_path / "idx" / "p0.cdxj.gz"))
-    new = {r["url"] for r in undiscovered_urls(
-        read_table(spark, f"feed:{tmp_path}/feeds/*.xml"),
-        read_table(spark, f"cdx:{tmp_path}/idx/*.cdxj.gz")).collect()}
-    assert new == {"https://n.com/b", "https://n.com/x"}

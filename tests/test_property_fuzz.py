@@ -156,65 +156,3 @@ def test_parse_doc_tag_soup_matches_stdlib(chunks):
         # sections like '<![;'): nothing to differentiate against
         assume(False)
     assert ours == ref
-
-
-@given(st.text(alphabet=st.characters(min_codepoint=33, max_codepoint=126),
-               max_size=200))
-@settings(**SETTINGS)
-def test_url_normalizer_idempotent(s):
-    """norm(norm(x)) == norm(x) for the url_dedup regex chain — a
-    normalizer that isn't idempotent merges different things on re-runs."""
-    import re
-
-    import __spark_entry__ as em
-
-    def norm(u: str) -> str:
-        u = u.lower()
-        for pat, rep in em._URL_NORM_STEPS:
-            u = re.sub(pat, rep.replace("$1", r"\1"), u)
-        return u
-
-    once = norm("http://" + s)
-    assert norm(once) == once
-
-
-@given(st.binary(max_size=400))
-@settings(**SETTINGS)
-def test_crawl_side_parsers_total_on_garbage(payload):
-    """The scan-path parsers are TOTAL on arbitrary bytes — one bad
-    shard in a 10^5-shard index scan must skip, never raise: CDXJ
-    records, sitemap/sitemapindex XML, RSS/Atom feeds."""
-    from mre.sources.cdx import captures_from_cdx_bytes
-    from mre.sources.sitemap import feed_entries, sitemap_entries
-    assert isinstance(captures_from_cdx_bytes(payload), list)
-    assert isinstance(sitemap_entries(payload), list)
-    assert isinstance(feed_entries(payload), list)
-
-
-@given(st.text(alphabet=st.characters(min_codepoint=33,
-                                      max_codepoint=126),
-               max_size=120))
-@settings(**SETTINGS)
-def test_parse_cdxj_line_total_and_surt_stable(s):
-    """parse_cdxj_line never raises on printable garbage, and surt_key
-    is total + IDEMPOTENT THROUGH ITS OWN OUTPUT FORM for http(s)
-    urls (keying a key-shaped string can't explode)."""
-    from mre.sources.cdx import parse_cdxj_line, surt_key
-    parse_cdxj_line(s)  # must not raise
-    k = surt_key("https://" + s) if s else "x)"
-    assert isinstance(k, str) and ")" in k
-
-
-@given(st.binary(max_size=300))
-@settings(**SETTINGS)
-def test_cdxj_roundtrip_on_wellformed(payload):
-    """Any line format_cdxj_line emits parses back to the same fields
-    (url values drawn from arbitrary bytes via latin-1 printable
-    projection)."""
-    from mre.sources.cdx import format_cdxj_line, parse_cdxj_line
-    url = "https://h.com/" + "".join(
-        chr(b) for b in payload if 33 <= b <= 126 and b != 32)
-    line = format_cdxj_line(url, "20240101000000", "dg", length=7)
-    r = parse_cdxj_line(line)
-    assert r is not None and r["url"] == url and r["length"] == 7
-    assert r["ts"] == "20240101000000" and r["digest"] == "dg"

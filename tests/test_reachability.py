@@ -15,7 +15,13 @@ lineage reader), which are roots as well.
 The same rule holds for options: every parameter with a default of the
 three job entry points (``run_extract``, ``run_curate``, ``run_corpus``)
 must be passed by name from a CLI or the benchmark, or it is an option
-nothing sets."""
+nothing sets; and every keyword those calls pass must name a parameter.
+
+The scan above drops a reference it cannot resolve, so a separate check
+holds every ``mre`` import and ``mre.x.y`` access in ``mre/``,
+``scripts/`` and ``perfbench/`` to an existing module or definition: no
+test runs the CLIs, so a dangling import there would otherwise only
+fail at spark-submit."""
 
 import ast
 import functools
@@ -26,11 +32,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TEST_SUPPORT = {"golden_diff", "gen_golden", "write_fixture_parquet",
-                "write_warc_gz", "write_wet_gz", "write_sitemap",
-                "parse_doc_stdlib", "read_curate_lineage",
-                # oracle fixture writers (linkgraph, sources.cdx):
-                # inputs for oracles of kept operators
-                "robots_txt_of", "format_cdxj_line", "write_cdxj_gz"}
+                "write_warc_gz", "parse_doc_stdlib", "read_curate_lineage"}
 
 
 def _mre_modules() -> dict:
@@ -82,10 +84,23 @@ def _definitions(tree) -> dict:
     return defs
 
 
+def _is_pkg(modname: str, modules) -> bool:
+    return any(k.startswith(modname + ".") for k in modules)
+
+
+def _from_source(modname: str, node: ast.ImportFrom, is_pkg: bool) -> str:
+    """The absolute module a ``from … import`` statement reads from."""
+    if not node.level:
+        return node.module or ""
+    pkg = modname if is_pkg else modname.rpartition(".")[0]
+    base = pkg.split(".")
+    base = base[:len(base) - (node.level - 1)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 def _imports(modname: str, tree, is_pkg: bool, modules) -> dict:
     """local alias -> ("mod", module) or ("sym", module, name), from every
     import statement in the file (function-local ones included)."""
-    pkg = modname if is_pkg else modname.rpartition(".")[0]
     out = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -95,12 +110,7 @@ def _imports(modname: str, tree, is_pkg: bool, modules) -> dict:
                 else:
                     out[a.name.split(".")[0]] = ("mod", a.name.split(".")[0])
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = pkg.split(".")
-                base = base[:len(base) - (node.level - 1)]
-                src = ".".join(base + ([node.module] if node.module else []))
-            else:
-                src = node.module or ""
+            src = _from_source(modname, node, is_pkg)
             for a in node.names:
                 sub = f"{src}.{a.name}"
                 out[a.asname or a.name] = (("mod", sub) if sub in modules
@@ -142,8 +152,7 @@ def scan() -> tuple[set, set]:
     defs = {m: _definitions(t) for m, t in modules.items()}
     imports = {}
     for m, t in modules.items():
-        is_pkg = any(k.startswith(m + ".") for k in modules)
-        imports[m] = _imports(m, t, is_pkg, modules)
+        imports[m] = _imports(m, t, _is_pkg(m, modules), modules)
     for m, t in roots.items():
         imports[m] = _imports(m, t, False, modules)
 
@@ -187,6 +196,77 @@ def test_every_mre_definition_is_reached():
                       f"roots): {dead}")
 
 
+def _is_mre(module: str) -> bool:
+    return module == "mre" or module.startswith("mre.")
+
+
+def _unresolved_mre_refs() -> list[str]:
+    """Every ``import mre.x``, ``from mre… import X`` and ``mre.x.y``
+    attribute access in ``mre/``, ``scripts/`` and ``perfbench/`` that
+    names no existing module and no definition, as "file: reference".
+    A name counts as defined in a module when the module defines it at
+    top level or imports it at top level (a re-export)."""
+    modules = _mre_modules()
+    defs = {m: _definitions(t) for m, t in modules.items()}
+    top_imports = {
+        m: _imports(m, ast.Module(body=[n for n in t.body if isinstance(
+            n, (ast.Import, ast.ImportFrom))], type_ignores=[]),
+            _is_pkg(m, modules), modules)
+        for m, t in modules.items()}
+
+    def exists(mod: str, name: str) -> bool:
+        if (f"{mod}.{name}" in modules or name in defs.get(mod, {})
+                or (name.startswith("__") and name.endswith("__"))):
+            return True
+        imp = top_imports.get(mod, {}).get(name)
+        if imp is None:
+            return False
+        return imp[0] == "mod" or not _is_mre(imp[1]) or exists(*imp[1:])
+
+    bad = []
+    for f, tree in {**modules, **_root_files()}.items():
+        is_pkg = f in modules and _is_pkg(f, modules)
+        aliases = _imports(f, tree, is_pkg, modules)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                bad += [f"{f}: {a.name}" for a in n.names
+                        if _is_mre(a.name) and a.name not in modules]
+            elif isinstance(n, ast.ImportFrom):
+                src = _from_source(f, n, is_pkg)
+                if not _is_mre(src):
+                    continue
+                if src not in modules:
+                    bad.append(f"{f}: {src}")
+                    continue
+                bad += [f"{f}: {src}.{a.name}" for a in n.names
+                        if a.name != "*" and not exists(src, a.name)]
+            elif isinstance(n, ast.Attribute):
+                chain = []
+                v = n
+                while isinstance(v, ast.Attribute):
+                    chain.append(v.attr)
+                    v = v.value
+                imp = aliases.get(v.id) if isinstance(v, ast.Name) else None
+                if not (imp and imp[0] == "mod" and _is_mre(imp[1])):
+                    continue
+                mod = imp[1]
+                for attr in reversed(chain):
+                    if f"{mod}.{attr}" in modules:
+                        mod = f"{mod}.{attr}"
+                        continue
+                    if not exists(mod, attr):
+                        bad.append(f"{f}: {mod}.{attr}")
+                    break
+    return sorted(set(bad))
+
+
+def test_every_root_import_resolves():
+    """A ``from mre.curate import gone`` left in a CLI after ``gone`` is
+    deleted must fail here, not at spark-submit."""
+    bad = _unresolved_mre_refs()
+    assert not bad, f"mre references that name nothing: {bad}"
+
+
 @pytest.mark.parametrize("name", sorted(TEST_SUPPORT))
 def test_exemption_is_a_definition(name):
     """An exemption that names nothing would hide a stale list."""
@@ -214,14 +294,17 @@ def _defaulted_params(fn) -> set:
     return {p.arg for p in named}
 
 
+def _named_params(name: str) -> set:
+    a = _entry_def(name).args
+    return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+
+
 def _passed_keywords() -> dict:
     """entry point -> keyword names passed to it by name from a call in
     ``scripts/`` or ``perfbench/``. A keyword passed to ``run_corpus``
     that ``run_corpus`` does not name itself counts for ``run_curate``,
     which receives it through ``**curate_knobs``."""
-    corpus = _entry_def("run_corpus").args
-    corpus_own = {p.arg for p in (corpus.posonlyargs + corpus.args
-                                  + corpus.kwonlyargs)}
+    corpus_own = _named_params("run_corpus")
     passed = {name: set() for name in ENTRY_POINTS}
     for tree in _root_files().values():
         for n in ast.walk(tree):
@@ -247,3 +330,16 @@ def test_every_option_is_set_by_a_root(entry):
                    - _passed_keywords()[entry])
     assert not unset, (f"{entry} options no CLI or benchmark call passes "
                        f"by name: {unset}")
+
+
+@pytest.mark.parametrize("entry", sorted(ENTRY_POINTS))
+def test_every_passed_keyword_is_a_parameter(entry):
+    """The converse: a keyword a CLI or benchmark call still passes after
+    its parameter is deleted fails at spark-submit with a TypeError.
+    ``run_corpus`` forwards what it does not name to ``run_curate``."""
+    known = _named_params(entry)
+    if entry == "run_corpus":
+        known |= _named_params("run_curate")
+    unknown = sorted(_passed_keywords()[entry] - known)
+    assert not unknown, (f"{entry} is called with keywords it does not "
+                         f"take: {unknown}")
