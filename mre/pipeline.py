@@ -60,44 +60,13 @@ DEFAULT_BYTE_CAP = 64 << 20  # 64 MB of html per Arrow chunk
 # P5 — url dedup: keep the latest capture per url
 
 
-def dedup_latest(pages: DataFrame) -> DataFrame:
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (pages.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-
-
-def dedup_first_latest(pages: DataFrame) -> DataFrame:
-    """Skew-resilient url dedup for HIGH duplicate-capture rates.
-
-    The window dedup shuffles every capture's html to its url's bucket
-    first — a viral url with millions of captures becomes one hot task
-    carrying all of them. This two-phase variant instead:
-
-    1. aggregates (url, max(warc_ts)) — a METADATA-only shuffle with
-       map-side partial aggregation, so the hot url contributes one row
-       per input partition, never a hot reduce task;
-    2. equi-joins back on url — the html-carrying shuffle then moves only
-       rows whose warc_ts ties the max (≈1 per url);
-    3. removes residual exact ties with a window INSIDE the join's
-       url-partitioning (no further exchange — same trick as
-       dedup_latest_in_bucket).
-
-    Same keep-the-latest semantics as dedup_latest. Use it when the
-    dup-capture rate is high or url-skewed; the default single-shuffle
-    window path is cheaper at low dup rates (§7.1 rule 2 untouched)."""
-    latest = pages.groupBy("url").agg(F.max("warc_ts").alias("_max_ts"))
-    kept = (pages.join(latest, "url")
-            .filter(F.col("warc_ts") == F.col("_max_ts"))
-            .drop("_max_ts"))
-    return dedup_latest(kept)
-
-
 def dedup_latest_in_bucket(pages: DataFrame) -> DataFrame:
-    """Same semantics as dedup_latest for a frame already salted: window
-    over (salt_bucket, url). salt_bucket is a pure function of url, so the
-    grouping is identical — but HashPartitioning(salt_bucket) from the salt
-    repartition already satisfies ClusteredDistribution(salt_bucket, url),
-    so Catalyst inserts NO second exchange. At 100 TB this halves the
+    """Keep the latest capture (max ``warc_ts``, one row on exact ties)
+    per url of a frame already salted: a window over (salt_bucket, url).
+    salt_bucket is a pure function of url, so the grouping is the url
+    grouping — but HashPartitioning(url) from the salt repartition
+    already satisfies ClusteredDistribution(salt_bucket, url), so
+    Catalyst inserts NO second exchange. At 100 TB this halves the
     number of full-corpus html shuffles (one instead of window+repartition)."""
     w = Window.partitionBy("salt_bucket", "url").orderBy(F.desc("warc_ts"))
     return (pages.withColumn("_rn", F.row_number().over(w))
@@ -265,7 +234,6 @@ def extract_batch_arrow(batches, byte_cap: int = DEFAULT_BYTE_CAP):
 
 def run_extract_df(pages: DataFrame, buckets: int,
                    byte_cap: int = DEFAULT_BYTE_CAP,
-                   dedup: str = "window",
                    done: Optional[DataFrame] = None) -> DataFrame:
     """Pages DF → extraction DF (with bookkeeping columns), no sink. The
     one plan builder behind ``run_extract``.
@@ -273,13 +241,11 @@ def run_extract_df(pages: DataFrame, buckets: int,
     Projection to (url, warc_ts, html) happens before the shuffle so
     shuffle bytes stay minimal (P3); html must survive the shuffle — it is
     the UDF's input. Salting comes FIRST, so the corpus shuffles exactly
-    once (see ``run_extract`` for the two ``dedup`` strategies). ``done``
+    once and the url dedup runs inside that partitioning. ``done``
     is a frame of completed ``salt_bucket`` values: a tiny distinct list,
     broadcast-anti-joined BEFORE the shuffle, so completed buckets never
     shuffle their html at all.
     """
-    if dedup not in ("window", "two-phase"):
-        raise ValueError(f"dedup must be 'window' or 'two-phase': {dedup!r}")
     # keep: minimal shuffle payload (P3) + the optional content_type side
     # column (WARC sources carry the HTTP header; it feeds E1's decode)
     keep = ["url", "warc_ts", "html"]
@@ -290,16 +256,12 @@ def run_extract_df(pages: DataFrame, buckets: int,
     pages = with_salt_bucket(pages, buckets)
     if done is not None:
         pages = pages.join(F.broadcast(done), "salt_bucket", "left_anti")
-    if dedup == "two-phase":
-        # skew-resilient path: dedup before the html-carrying shuffle
-        pages = dedup_first_latest(pages)
     # repartition by url: HashPartitioning places each row at
     # pmod(hash(url), B) == its salt_bucket -> bucket == physical partition;
-    # under "window" the dedup then runs inside that partitioning (no
-    # second exchange — see dedup_latest_in_bucket)
+    # the dedup then runs inside that partitioning (no second exchange —
+    # see dedup_latest_in_bucket)
     pages = pages.repartition(buckets, F.col("url"))
-    if dedup == "window":
-        pages = dedup_latest_in_bucket(pages)
+    pages = dedup_latest_in_bucket(pages)
     pages = pages.select(*keep, "salt_bucket")
     return pages.mapInArrow(
         lambda it: extract_batch_arrow(it, byte_cap), EXTRACT_FULL_SCHEMA)
@@ -343,33 +305,21 @@ def completed_buckets(spark: SparkSession, lineage_dst: str,
 def run_extract(spark: SparkSession, src: str, dst: str, lineage_dst: str,
                 run_id: str, buckets: Optional[int] = None,
                 byte_cap: int = DEFAULT_BYTE_CAP,
-                resume: bool = True, dedup: str = "window") -> None:
+                resume: bool = True) -> None:
     """Flagship pipeline with checkpoint/resume (SURVEY.md §3.2).
 
     Parquet sinks only in the sandbox; swap ``dst``/``lineage_dst`` for
-    ``iceberg:`` URIs in prod (mre.io handles both).
-
-    ``dedup`` picks the url-dedup strategy (same keep-latest semantics):
-
-    * ``"window"`` (default) — single full-corpus shuffle; the dedup
-      window runs inside the salt partitioning with no extra exchange.
-      Cheapest at low duplicate-capture rates.
-    * ``"two-phase"`` — ``dedup_first_latest`` BEFORE the salt shuffle: a
-      metadata-only (url, max warc_ts) aggregate with map-side combine,
-      then a join-back, so a viral url with millions of captures never
-      lands on one hot task and dropped captures never shuffle their
-      html. Costs extra (cheap) exchanges; wins when the dup rate is
-      high or url-skewed.
+    ``iceberg:`` URIs in prod (mre.io handles both). The corpus shuffles
+    once: the latest capture per url is kept inside the salt
+    partitioning (``dedup_latest_in_bucket``), with no extra exchange.
     """
-    if dedup not in ("window", "two-phase"):
-        raise ValueError(f"dedup must be 'window' or 'two-phase': {dedup!r}")
     if buckets is None:
         cores = spark.sparkContext.defaultParallelism
         buckets = max(4 * cores, 8)
 
     pages = read_pages(spark, src)
     done = completed_buckets(spark, lineage_dst, run_id) if resume else None
-    extracted = (run_extract_df(pages, buckets, byte_cap, dedup, done)
+    extracted = (run_extract_df(pages, buckets, byte_cap, done)
                  .withColumn("partition_id", F.spark_partition_id()))
 
     # write-then-commit: results land partitioned by bucket (idempotent via
@@ -410,8 +360,8 @@ def golden_diff(actual: DataFrame, expected: DataFrame) -> DataFrame:
 
 
 __all__ = [
-    "dedup_latest", "dedup_latest_in_bucket", "dedup_first_latest",
-    "extract_batch_arrow", "with_salt_bucket", "run_extract_df",
-    "run_extract", "read_results", "lineage_rollup", "completed_buckets",
-    "golden_diff", "EXTRACT_FULL_SCHEMA", "RESULT_COLS", "DEFAULT_BYTE_CAP",
+    "dedup_latest_in_bucket", "extract_batch_arrow", "with_salt_bucket",
+    "run_extract_df", "run_extract", "read_results", "lineage_rollup",
+    "completed_buckets", "golden_diff", "EXTRACT_FULL_SCHEMA",
+    "RESULT_COLS", "DEFAULT_BYTE_CAP",
 ]

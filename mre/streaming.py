@@ -42,31 +42,28 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
     from .io import local_path, write_append
     local = local_path(spark, epochs_dst)
     if local is not None:
-        try:
-            import datetime
-            import os
-            import uuid
+        import datetime
+        import os
+        import uuid
 
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            os.makedirs(local, exist_ok=True)
-            tbl = pa.table({
-                "epoch": pa.array([int(epoch_id)], pa.int64()),
-                "phase": pa.array([phase], pa.string()),
-                "n_docs": pa.array([int(n_docs)], pa.int64()),
-                # tz-aware (isAdjustedToUTC) so Spark reads the same
-                # TimestampType current_timestamp() would have written
-                "committed_at": pa.array(
-                    [datetime.datetime.now(datetime.timezone.utc)],
-                    pa.timestamp("us", tz="UTC")),
-            })
-            name = f"part-marker-{uuid.uuid4().hex}.parquet"
-            tmp = os.path.join(local, f".{name}")
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, os.path.join(local, name))
-            return
-        except ImportError:
-            pass
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        os.makedirs(local, exist_ok=True)
+        tbl = pa.table({
+            "epoch": pa.array([int(epoch_id)], pa.int64()),
+            "phase": pa.array([phase], pa.string()),
+            "n_docs": pa.array([int(n_docs)], pa.int64()),
+            # tz-aware (isAdjustedToUTC) so Spark reads the same
+            # TimestampType current_timestamp() would have written
+            "committed_at": pa.array(
+                [datetime.datetime.now(datetime.timezone.utc)],
+                pa.timestamp("us", tz="UTC")),
+        })
+        name = f"part-marker-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(local, f".{name}")
+        pq.write_table(tbl, tmp)
+        os.rename(tmp, os.path.join(local, name))
+        return
     write_append(
         spark.createDataFrame([(int(epoch_id), phase, int(n_docs))],
                               "epoch long, phase string, n_docs long")

@@ -35,8 +35,6 @@ def main() -> None:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--evals", default=None)
     ap.add_argument("--buckets", type=int, default=None)
-    ap.add_argument("--dedup", choices=("window", "two-phase"),
-                    default="window")
     ap.add_argument("--train-frac", type=float, default=0.9)
     ap.add_argument("--max-bucket", type=int, default=None)
     ap.add_argument("--materialize-documents", action="store_true",
@@ -55,7 +53,7 @@ def main() -> None:
     try:
         run_corpus(spark, args.src, args.workdir, run_id=args.run_id,
                    evals_src=args.evals, buckets=args.buckets,
-                   dedup=args.dedup, resume=not args.no_resume,
+                   resume=not args.no_resume,
                    train_frac=args.train_frac,
                    max_bucket=args.max_bucket,
                    materialize_documents=args.materialize_documents,

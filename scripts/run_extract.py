@@ -44,11 +44,6 @@ def main() -> None:
     ap.add_argument("--byte-cap", type=int, default=64 << 20,
                     help="max html bytes per Arrow chunk")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--dedup", choices=["window", "two-phase"],
-                    default="window",
-                    help="url-dedup strategy: single-shuffle window "
-                         "(default) or skew-resilient two-phase "
-                         "aggregate+join for viral-url capture skew")
     args = ap.parse_args()
 
     from mre.io import get_spark
@@ -58,8 +53,7 @@ def main() -> None:
     try:
         run_extract(spark, args.src, args.dst, args.lineage,
                     run_id=args.run_id, buckets=args.buckets,
-                    byte_cap=args.byte_cap, resume=not args.no_resume,
-                    dedup=args.dedup)
+                    byte_cap=args.byte_cap, resume=not args.no_resume)
     finally:
         spark.stop()
 

@@ -43,9 +43,11 @@ import argparse
 def main() -> None:
     ap = argparse.ArgumentParser(description="mre incremental ingestion")
     ap.add_argument("--index", required=True,
-                    help="dedup index root (fingerprints + signatures)")
+                    help="dedup index root (meta, fingerprints, "
+                         "signatures, bands)")
     sub = ap.add_subparsers(dest="cmd", required=True)
-    b = sub.add_parser("build", help="build the index from a corpus")
+    b = sub.add_parser("build", help="build (or rebuild) the index from "
+                                     "a corpus")
     b.add_argument("--src", required=True)
     g = sub.add_parser("ingest", help="dedup a new batch, update index")
     g.add_argument("--batch", required=True)

@@ -515,9 +515,8 @@ def test_dedup_index_is_prebanded_and_ingest_plan_is_scan_only(
     """VERDICT r5 #2: the index stores PRE-BANDED LSH rows, and the
     ingest candidate plan (a) never Generates (explodes) the index side
     — bands come from a plain scan of {index}/bands — and (b) never
-    shuffles the index side — the batch bands are broadcast. Also: a
-    bands-width mismatch with the recorded build parameter fails
-    loudly, and update_dedup_index maintains the bands table."""
+    shuffles the index side — the batch bands are broadcast. Also:
+    update_dedup_index maintains the bands table."""
     from mre.curate import (build_dedup_index, dedup_increment,
                             update_dedup_index)
     idx = str(tmp_path / "idx")
@@ -542,8 +541,6 @@ def test_dedup_index_is_prebanded_and_ingest_plan_is_scan_only(
         [(800, _variant(800) + " new content eight hundred closing"),
          (801, t1.replace("unique", "uniqxe", 1))],
         "doc_id long, text string")
-    with pytest.raises(ValueError, match="pre-banded"):
-        dedup_increment(spark, batch, idx, bands=4)
 
     # plan shape: no Generate over the index scan, index side unshuffled
     out = dedup_increment(spark, batch, idx, threshold=0.5,
@@ -601,8 +598,8 @@ def test_ingest_within_batch_uses_cluster_min_semantics(spark, tmp_path):
              for r in minhash_near_dups(chain, k=64, n=3, bands=32,
                                         threshold=0.3).collect()}
     assert pairs == {(900, 902), (901, 902)}, pairs
-    out = dedup_increment(spark, chain, idx, k=64, n=3, bands=32,
-                          threshold=0.3, update_index=False)
+    out = dedup_increment(spark, chain, idx, threshold=0.3,
+                          update_index=False)
     ids = {r["doc_id"] for r in out.collect()}
     assert ids == {900}          # cluster-min; direct-edge would be
     #                              {900, 901} — the ADVICE divergence
@@ -648,36 +645,57 @@ def test_compact_dedup_index_swaps_atomically(spark, docs, tmp_path):
     assert redo.count() == 0
 
 
-def test_dedup_increment_legacy_index_fallback(spark, docs, tmp_path):
-    """An index built BEFORE the pre-banded layout (no bands table, meta
-    without a bands column) still ingests correctly — bands derive at
-    read — and update_dedup_index skips the bands append for it."""
-    import shutil
-    from mre.curate import (build_dedup_index, dedup_increment,
-                            update_dedup_index)
-    idx = str(tmp_path / "idx")
-    build_dedup_index(spark, docs, idx, parts=None)   # flat legacy layout
-    # strip the round-6 layout back to the legacy shape
-    shutil.rmtree(f"{idx}/bands")
-    spark.createDataFrame([(32, 3)], "k int, n int") \
-        .write.mode("overwrite").parquet(f"{idx}/meta")
-
-    t0 = docs.filter("doc_id = 0").first()["text"]
-    batch = spark.createDataFrame(
-        [(600, t0),
-         (601, _variant(601) + " legacy path fresh six hundred one")],
-        "doc_id long, text string")
-    out = dedup_increment(spark, batch, idx, threshold=0.5)
-    assert {r["doc_id"] for r in out.collect()} == {601}
-    # survivor entered fp+sig tables; no bands table was (re)created
-    assert spark.read.parquet(f"{idx}/fingerprints") \
-        .filter("doc_id = 601").count() == 1
+def test_index_without_the_one_layout_raises(spark, docs, tmp_path):
+    """An index with no meta table, a meta row without bands or parts,
+    no bands table, or tables not laid out in pb= hash buckets is not
+    ingested into by another path: dedup_increment and
+    update_dedup_index each raise a ValueError naming the index path,
+    and the update writes nothing first."""
     import os
-    assert not os.path.exists(f"{idx}/bands")
-    # and the updated legacy index catches a re-ingest
-    again = dedup_increment(spark, batch, idx, threshold=0.5,
-                            update_index=False)
-    assert again.count() == 0
+    import re
+    import shutil
+
+    from mre.curate import (INDEX_TABLES, build_dedup_index,
+                            dedup_increment, update_dedup_index)
+    built = str(tmp_path / "built")
+    build_dedup_index(spark, docs, built)
+
+    def no_meta(idx):
+        shutil.rmtree(f"{idx}/meta")
+
+    def meta_without_bands(idx):   # the meta of an index from round 5
+        spark.createDataFrame([(32, 3)], "k int, n int") \
+            .write.mode("overwrite").parquet(f"{idx}/meta")
+
+    def meta_without_parts(idx):   # the meta of a flat-layout index
+        spark.createDataFrame([(32, 3, 8, None)],
+                              "k int, n int, bands int, parts int") \
+            .write.mode("overwrite").parquet(f"{idx}/meta")
+
+    def no_bands(idx):
+        shutil.rmtree(f"{idx}/bands")
+
+    def no_pb(idx):                # every table rewritten flat
+        for t in INDEX_TABLES:
+            spark.read.parquet(f"{idx}/{t}").drop("pb") \
+                .write.parquet(f"{idx}/{t}.flat")
+            shutil.rmtree(f"{idx}/{t}")
+            os.rename(f"{idx}/{t}.flat", f"{idx}/{t}")
+
+    batch = spark.createDataFrame(
+        [(600, _variant(600) + " layout check fresh six hundred")],
+        "doc_id long, text string")
+    for strip in (no_meta, meta_without_bands, meta_without_parts,
+                  no_bands, no_pb):
+        idx = str(tmp_path / strip.__name__)
+        shutil.copytree(built, idx)
+        strip(idx)
+        listing = sorted(os.walk(idx))
+        for call in (lambda: dedup_increment(spark, batch, idx),
+                     lambda: update_dedup_index(spark, batch, idx)):
+            with pytest.raises(ValueError, match=re.escape(idx)):
+                call()
+            assert sorted(os.walk(idx)) == listing, strip.__name__
 
 
 def test_swap_dirs_recovers_from_leftover_old(spark, tmp_path):
@@ -723,19 +741,16 @@ def test_path_committed_raises_on_io_error(spark):
 
 def test_dedup_index_param_guard_and_idempotent_update(spark, docs,
                                                        tmp_path):
-    """A k/n mismatch with the index's recorded build parameters fails
-    loudly; re-applying update_dedup_index is a no-op (fingerprint
-    guard), so crash-retry of an index update cannot duplicate docs."""
-    import pytest as _pytest
-    from mre.curate import (build_dedup_index, dedup_increment,
-                            update_dedup_index)
+    """update_dedup_index signs with the index's recorded (k, n) — the
+    parameters are read from meta, so no caller can pass others — and
+    re-applying it is a no-op (fingerprint guard), so crash-retry of an
+    index update cannot duplicate docs."""
+    from mre.curate import build_dedup_index, update_dedup_index
     idx = str(tmp_path / "idx")
     build_dedup_index(spark, docs, idx, k=32, n=3)
     batch = spark.createDataFrame(
         [(700, _variant(700) + " fresh seven hundred closing words")],
         "doc_id long, text string")
-    with _pytest.raises(ValueError, match="built with"):
-        dedup_increment(spark, batch, idx, k=64)
     n_before = spark.read.parquet(f"{idx}/fingerprints").count()
     update_dedup_index(spark, batch, idx)
     n_once = spark.read.parquet(f"{idx}/fingerprints").count()
@@ -743,8 +758,8 @@ def test_dedup_index_param_guard_and_idempotent_update(spark, docs,
     update_dedup_index(spark, batch, idx)   # retry → no-op
     assert spark.read.parquet(f"{idx}/fingerprints").count() == n_once
     sig_rows = spark.read.parquet(f"{idx}/signatures") \
-        .filter("doc_id = 700").count()
-    assert sig_rows == 1
+        .filter("doc_id = 700").collect()
+    assert len(sig_rows) == 1 and len(sig_rows[0]["sig"]) == 32
 
 
 def test_ingest_index_scans_are_bucket_pruned(spark, docs, tmp_path):
@@ -753,8 +768,9 @@ def test_ingest_index_scans_are_bucket_pruned(spark, docs, tmp_path):
     every index table) plus the batch-derived static isin filter means
     every index scan in the ingest plan carries a PartitionFilter on pb
     — Catalyst prunes untouched bucket directories at file-listing time,
-    so they are never opened. Also: pruning is semantics-preserving —
-    the survivor set equals the flat-layout (unpruned) run's."""
+    so they are never opened. The survivor set is the exact expected
+    one (the ingest registry oracle checks pruned survivors against an
+    unpruned DuckDB replay)."""
     from mre.curate import build_dedup_index, dedup_increment
 
     t1 = docs.filter("doc_id = 1").first()["text"]
@@ -765,7 +781,7 @@ def test_ingest_index_scans_are_bucket_pruned(spark, docs, tmp_path):
         "doc_id long, text string")
 
     idx = str(tmp_path / "idx")
-    build_dedup_index(spark, docs, idx, parts=32)
+    build_dedup_index(spark, docs, idx)
     out = dedup_increment(spark, batch, idx, threshold=0.5,
                           update_index=False)
     got = {r["doc_id"] for r in out.collect()}
@@ -778,23 +794,14 @@ def test_ingest_index_scans_are_bucket_pruned(spark, docs, tmp_path):
         assert "PartitionFilters: [" in ln, ln
         pf = ln.split("PartitionFilters:", 1)[1]
         assert "pb#" in pf, ln    # the bucket filter reached the scan
-
-    # equivalence: a flat (legacy-layout) index yields the same survivors
-    flat = str(tmp_path / "flat")
-    build_dedup_index(spark, docs, flat, parts=None)
-    ref = {r["doc_id"] for r in
-           dedup_increment(spark, batch, flat, threshold=0.5,
-                           update_index=False).collect()}
-    assert got == ref == {8000}
+    assert got == {8000}
 
 
 def test_update_dedup_index_param_guard_and_strict_meta(spark, docs,
                                                         tmp_path):
-    """ADVICE r6 #3: update_dedup_index (a) raises on a (k, n) mismatch
-    with the recorded build parameters instead of silently appending
-    incompatible signatures, and (b) propagates a meta READ failure
-    instead of treating it as a legacy index (which would silently skip
-    the bands append and leave {index}/bands stale)."""
+    """ADVICE r6 #3: update_dedup_index propagates a meta READ failure
+    instead of guessing the index's parameters or layout (a guess would
+    append bands or signatures that disagree with the index)."""
     import glob
     import os
     from mre.curate import build_dedup_index, update_dedup_index
@@ -803,8 +810,6 @@ def test_update_dedup_index_param_guard_and_strict_meta(spark, docs,
     batch = spark.createDataFrame(
         [(7100, _variant(7100) + " strict meta fresh tail")],
         "doc_id long, text string")
-    with pytest.raises(ValueError, match="built with"):
-        update_dedup_index(spark, batch, idx, k=64)
     # corrupt the meta table: present but unreadable → loud, not legacy.
     # The per-path meta memo (round 8) would otherwise serve the cached
     # parameters — clear it so this models a FRESH process hitting the
@@ -825,7 +830,8 @@ def test_index_meta_memo_sees_rebuild_by_another_process(spark, docs,
     build parameters. Another process rebuilding the index at the same
     path with a different (k, n) leaves this process's memo entry in
     place; restoring the entry after an in-process rebuild models that.
-    update_dedup_index's guard must then see the NEW parameters."""
+    update_dedup_index must then sign with the NEW parameters: a stale
+    memo would append signatures of the old width."""
     from mre.curate import (_META_CACHE, _index_meta, build_dedup_index,
                             update_dedup_index)
     idx = str(tmp_path / "idx")
@@ -837,8 +843,10 @@ def test_index_meta_memo_sees_rebuild_by_another_process(spark, docs,
     batch = spark.createDataFrame(
         [(7200, _variant(7200) + " rebuilt meta fresh tail")],
         "doc_id long, text string")
-    with pytest.raises(ValueError, match="built with"):
-        update_dedup_index(spark, batch, idx, k=32, n=3)
+    update_dedup_index(spark, batch, idx)
+    sig = spark.read.parquet(f"{idx}/signatures") \
+        .filter("doc_id = 7200").first()["sig"]
+    assert len(sig) == 64
     assert (_index_meta(spark, idx)["k"], _index_meta(spark, idx)["n"]) \
         == (64, 4)
 

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mre.pipeline import (dedup_latest, golden_diff, read_results,
+from mre.pipeline import (dedup_latest_in_bucket, golden_diff, read_results,
                           run_extract, run_extract_df, with_salt_bucket)
 
 N_DOCS = 120
@@ -40,7 +40,7 @@ def test_extract_df_matches_golden(spark, fixture_dir):
 def test_dedup_latest_keeps_latest(spark, fixture_dir):
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     assert pages.count() > N_DOCS  # dup captures exist
-    deduped = dedup_latest(pages)
+    deduped = dedup_latest_in_bucket(with_salt_bucket(pages, 8))
     assert deduped.count() == N_DOCS
     # the kept capture per duplicated url is the max warc_ts
     dup_urls = (pages.groupBy("url").count().filter("count > 1")
@@ -50,6 +50,19 @@ def test_dedup_latest_keeps_latest(spark, fixture_dir):
                 .groupBy("url").agg(F.max("warc_ts").alias("warc_ts")))
     assert kept.exceptAll(expected).count() == 0
     assert expected.exceptAll(kept).count() == 0
+
+    # viral-url skew: 500 captures of one url, 5 of them tied at the
+    # max warc_ts → exactly one row kept, at that max
+    import datetime as dt
+
+    from mre.schema import PAGES_SCHEMA
+    t0 = dt.datetime(2021, 1, 1)
+    rows = [("http://hot.example/x", t0 + dt.timedelta(minutes=m % 100),
+             b"<html><p>v</p></html>", None, "en") for m in range(500)]
+    hot = spark.createDataFrame(rows, PAGES_SCHEMA)
+    out = dedup_latest_in_bucket(with_salt_bucket(hot, 8))
+    assert out.count() == 1
+    assert out.first().warc_ts == t0 + dt.timedelta(minutes=99)
 
 
 def test_salt_bucket_distribution(spark, fixture_dir):
@@ -85,20 +98,17 @@ def test_run_extract_end_to_end_with_lineage(spark, fixture_dir, tmp_path):
     assert len(set(buckets_seen)) == len(buckets_seen)
 
 
-@pytest.mark.parametrize("dedup", ["window", "two-phase"])
-def test_resume_is_idempotent(spark, fixture_dir, tmp_path, dedup):
-    # both dedup strategies must be reachable from the flagship entry
-    # point and give identical resume/idempotence behavior (VERDICT r2 #4)
+def test_resume_is_idempotent(spark, fixture_dir, tmp_path):
     dst = str(tmp_path / "results")
     lin = str(tmp_path / "lineage")
     src = f"{fixture_dir}/pages.parquet"
-    run_extract(spark, src, dst, lin, run_id="r2", buckets=8, dedup=dedup)
+    run_extract(spark, src, dst, lin, run_id="r2", buckets=8)
     first = read_results(spark, dst).orderBy("url").toPandas()
     lineage_n = spark.read.parquet(lin).count()
 
     # second invocation with the same run_id: every bucket committed →
     # nothing re-extracted, outputs unchanged, no duplicate lineage rows
-    run_extract(spark, src, dst, lin, run_id="r2", buckets=8, dedup=dedup)
+    run_extract(spark, src, dst, lin, run_id="r2", buckets=8)
     second = read_results(spark, dst).orderBy("url").toPandas()
     assert len(second) == len(first) == N_DOCS
     assert first["url"].tolist() == second["url"].tolist()
@@ -110,7 +120,7 @@ def test_resume_is_idempotent(spark, fixture_dir, tmp_path, dedup):
     keep = spark.read.parquet(lin).filter(F.col("salt_bucket") < 4)
     lin2 = str(tmp_path / "lineage2")
     keep.write.parquet(lin2)
-    run_extract(spark, src, dst, lin2, run_id="r2", buckets=8, dedup=dedup)
+    run_extract(spark, src, dst, lin2, run_id="r2", buckets=8)
     results = read_results(spark, dst)
     golden = spark.read.parquet(f"{fixture_dir}/golden.parquet")
     assert golden_diff(results, golden).count() == 0
@@ -184,15 +194,13 @@ def _subtree(lines, i):
     return lines[i:end]
 
 
-@pytest.mark.parametrize("dedup", ["window", "two-phase"])
-def test_done_buckets_anti_join_before_the_shuffle(spark, fixture_dir,
-                                                   dedup):
+def test_done_buckets_anti_join_before_the_shuffle(spark, fixture_dir):
     """Resume: the completed-bucket frame is broadcast-anti-joined below
     every url shuffle, so completed buckets never shuffle their html, and
     their rows are not extracted."""
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     done = spark.createDataFrame([(1,), (3,)], "salt_bucket int")
-    out = run_extract_df(pages, 8, dedup=dedup, done=done)
+    out = run_extract_df(pages, 8, done=done)
     lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
     plan = "\n".join(lines)
     shuffles = [i for i, line in enumerate(lines)
@@ -238,29 +246,6 @@ def test_round3_ops_plan_shapes(spark):
     assert "Scan parquet" not in plan
     assert "Join" not in plan, plan
     assert len(plan.splitlines()) <= 6, plan
-
-
-def test_dedup_first_latest_matches_window_dedup(spark, fixture_dir):
-    """Two-phase skew-resilient dedup == window dedup on the fixture
-    corpus, and it keeps exactly one row per viral url."""
-    from mre.pipeline import dedup_first_latest
-
-    pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
-    a = dedup_latest(pages).select("url", "warc_ts")
-    b = dedup_first_latest(pages).select("url", "warc_ts")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-    # viral-url skew: 500 captures of one url (including exact-tie ts)
-    import datetime as dt
-    t0 = dt.datetime(2021, 1, 1)
-    rows = [("http://hot.example/x", t0 + dt.timedelta(minutes=m % 100),
-             b"<html><p>v</p></html>", None, "en") for m in range(500)]
-    from mre.schema import PAGES_SCHEMA
-    hot = spark.createDataFrame(rows, PAGES_SCHEMA)
-    out = dedup_first_latest(hot)
-    assert out.count() == 1
-    assert out.first().warc_ts == t0 + dt.timedelta(minutes=99)
 
 
 def test_read_pages_warc_dispatch(spark, tmp_path):
