@@ -51,8 +51,10 @@ def test_dedup_latest_keeps_latest(spark, fixture_dir):
     assert kept.exceptAll(expected).count() == 0
     assert expected.exceptAll(kept).count() == 0
 
-    # viral-url skew: 500 captures of one url, 5 of them tied at the
-    # max warc_ts → exactly one row kept, at that max
+
+def test_dedup_latest_in_bucket_keeps_one_row_per_viral_url(spark):
+    """Viral-url skew: 500 captures of one url, 5 of them tied at the max
+    warc_ts → exactly one row kept, at that max."""
     import datetime as dt
 
     from mre.schema import PAGES_SCHEMA
