@@ -35,7 +35,6 @@ _FAILED = (None, None, None, None)
 
 
 def extract_one(url: str, html: Optional[bytes],
-                horizon: Optional[_dt.date] = None,
                 capture_ts: Optional[_dt.datetime] = None,
                 content_type: Optional[str] = None) -> ExtractResult:
     """One page → (headline, pubdate, authors, extracted_text); never
@@ -55,7 +54,7 @@ def extract_one(url: str, html: Optional[bytes],
             return ExtractResult(url, *_FAILED, ok=False)
         jsonld = extract_jsonld(doc)
         headline, _h_node = score_headline(doc, url, jsonld=jsonld)
-        pubdate = pick_pubdate(doc, url, horizon=horizon, jsonld=jsonld,
+        pubdate = pick_pubdate(doc, url, jsonld=jsonld,
                                capture_ts=capture_ts)
         authors = extract_authors(doc, jsonld=jsonld)
         body = extract_text(doc)

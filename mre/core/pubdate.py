@@ -192,7 +192,8 @@ def elem_dates(doc: Node) -> list[DateCand]:
 
 _MIN_DATE = _dt.date(1990, 1, 1)
 # determinism (SURVEY.md §4.3): "future" is relative to a fixed horizon, not
-# wall clock; crawl pipelines pass the capture timestamp instead.
+# the wall clock; no caller passes another one (the capture timestamp only
+# anchors relative datelines, ``relative_pubdate``).
 _DEFAULT_HORIZON = _dt.date(2999, 12, 31)
 
 
@@ -214,12 +215,10 @@ def relative_pubdate(doc: Node,
 
 
 def pick_pubdate(doc: Node, url: str,
-                 horizon: Optional[_dt.date] = None,
                  jsonld=None,
                  capture_ts: Optional[_dt.datetime] = None
                  ) -> Optional[_dt.datetime]:
     """E6→E11 composed: best publication datetime for the document."""
-    horizon = horizon or _DEFAULT_HORIZON
     udate = url_date(url)
 
     # E6 short-circuit: a complete url date wins outright; only look at
@@ -236,7 +235,7 @@ def pick_pubdate(doc: Node, url: str,
 
     def in_range(fd: FuzzyDate) -> bool:
         d = fd.date()
-        return d is not None and _MIN_DATE <= d <= horizon
+        return d is not None and _MIN_DATE <= d <= _DEFAULT_HORIZON
 
     if udate is not None and udate.complete() and in_range(udate):
         ft: Optional[FuzzyTime] = None

@@ -40,7 +40,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io import read_if_present, read_table, write_append, write_overwrite
+from .io import (append_rows, read_if_present, read_table, write_append,
+                 write_overwrite)
 from .textops import (benchmark_contamination, dup_clusters, fingerprint,
                       gopher_quality, hash_split, jaccard_on_candidates,
                       minhash_bands, minhash_near_dups, minhash_signatures)
@@ -126,9 +127,9 @@ def _lineage_rows(spark: SparkSession, lineage_dst: str,
             lin.filter(F.col("run_id") == run_id).collect()]
 
 
-def _done_stages(rows: list[dict], params_hash: str | None) -> set:
-    """Stages the lineage rows commit. With ``params_hash`` given, a
-    stage only counts as done if its LATEST row (max attempt, then max
+def _done_stages(rows: list[dict], params_hash: str) -> set:
+    """Stages the lineage rows commit under ``params_hash``: a stage only
+    counts as done if its LATEST row (max attempt, then max
     completed_at — the row describing what is actually on disk, since
     stage outputs are overwrites) committed it under the SAME parameter
     digest: matching any historical row would wrongly reuse stale
@@ -136,8 +137,6 @@ def _done_stages(rows: list[dict], params_hash: str | None) -> set:
     set (A → B → A). Rows from a pre-params_hash lineage table are
     conservatively treated as parameter-mismatched (recompute — the
     overwrite sinks make that correct, merely not free)."""
-    if params_hash is None:
-        return {r["stage"] for r in rows}
     if rows and "params_hash" not in rows[0]:
         return set()
     latest = {}
@@ -147,12 +146,12 @@ def _done_stages(rows: list[dict], params_hash: str | None) -> set:
 
 
 def completed_stages(spark: SparkSession, lineage_dst: str,
-                     run_id: str, params_hash: str | None = None) -> set:
-    """Stages already committed for this run_id (see ``_done_stages``
-    for how ``params_hash`` narrows them). No lineage table means none;
-    a lineage table that fails to read raises."""
-    return _done_stages(_lineage_rows(spark, lineage_dst, run_id),
-                        params_hash)
+                     run_id: str) -> set:
+    """Stages with a committed lineage row for this run_id, under any
+    parameters (``run_curate`` narrows them to its own parameter digest,
+    ``_done_stages``). No lineage table means none; a lineage table that
+    fails to read raises."""
+    return {r["stage"] for r in _lineage_rows(spark, lineage_dst, run_id)}
 
 
 def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
@@ -170,8 +169,9 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
     column pruning keeps free). ``evals_src`` an
     optional (eval_id, text) table. Stage id-lists land under
     ``{dst}/{stage}``, the final per-doc split table under
-    ``{dst}/split``; one lineage row per completed stage is appended to
-    ``lineage_dst`` (run_id, stage, n_in, n_out, wall_ms, completed_at).
+    ``{dst}/split``; one lineage row per completed stage is committed to
+    ``lineage_dst`` (run_id, stage, n_in, n_out, wall_ms, completed_at)
+    through ``mre.io.append_rows``.
     Re-running with the same run_id AND the same parameters skips
     committed stages (the lineage row records a parameter digest — a
     changed parameter set recomputes rather than silently reusing
@@ -210,12 +210,12 @@ def run_curate(spark: SparkSession, src, dst: str, lineage_dst: str,
         out = read_table(spark, path)
         n_out = out.count()
         wall_ms = int((time.monotonic() - t0) * 1000)
-        row = spark.createDataFrame(
+        append_rows(
+            spark, lineage_dst,
             [(run_id, name, n_in, n_out, wall_ms, ph, attempts[name] + 1)],
             "run_id string, stage string, n_in long, n_out long, "
-            "wall_ms long, params_hash string, attempt long")
-        write_append(row.withColumn("completed_at", F.current_timestamp()),
-                     lineage_dst)
+            "wall_ms long, params_hash string, attempt long",
+            "completed_at")
         return out
 
     s1 = _stage("quality", lambda: quality_keep_ids(docs), docs)
@@ -282,22 +282,15 @@ def read_curate_lineage(spark: SparkSession, lineage_dst: str) -> DataFrame:
 # extract → curate glue (VERDICT r4 #5): the full crawl-to-corpus journey
 
 
-def extracted_to_documents(results: DataFrame,
-                           wide_id: bool = False) -> DataFrame:
+def extracted_to_documents(results: DataFrame) -> DataFrame:
     """Adapter from ``run_extract``'s url-keyed EXTRACT_SCHEMA output to
     the doc_id-keyed ``documents`` shape every curation op consumes.
 
     * ``doc_id = xxhash64(url)`` — deterministic and engine-stable, so
       re-runs and both pipeline halves agree on identity. 64-bit ids
       expect ~n²/2^65 collisions (≈3·10⁴ at 10^12 docs — two urls
-      sharing a doc_id would merge in per-doc stats). ``wide_id=True``
-      (VERDICT r5 #5) widens identity to 128 bits by adding a second
-      independent column ``doc_id_hi = xxhash64(url, 42)`` that rides
-      through every stage (the curation ops still key their shuffles on
-      the 64-bit half — collisions there only cost a merged stat row,
-      while the PAIR uniquely identifies the url at 10^12+ docs for
-      join-back / audit). Sandbox corpora are ≥15 orders of magnitude
-      below the 64-bit birthday bound, so the default stays narrow.
+      sharing a doc_id would merge in per-doc stats; the url rides
+      along, so a join-back or audit can still tell them apart).
     * ``text`` = extracted main content (docs the extractor failed on
       carry '' and are dropped by the quality stage, not lost silently —
       they stay visible in the extraction lineage's n_failed).
@@ -313,18 +306,13 @@ def extracted_to_documents(results: DataFrame,
     ONE projection over the scan — zero shuffle, single read."""
     from .textops import lang_pred_expr
     text = F.coalesce(F.col("extracted_text"), F.lit(""))
-    id_cols = [F.xxhash64("url").alias("doc_id")]
-    out_cols = ["doc_id"]
-    if wide_id:
-        id_cols.append(F.xxhash64("url", F.lit(42)).alias("doc_id_hi"))
-        out_cols.append("doc_id_hi")
     return (results
-            .select(*id_cols,
+            .select(F.xxhash64("url").alias("doc_id"),
                     "url", text.alias("text"),
                     "headline", "pubdate", "authors",
                     F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
                     .alias("source"))
-            .select(*out_cols, "url", "text",
+            .select("doc_id", "url", "text",
                     lang_pred_expr().alias("lang"), "source",
                     F.length("text").alias("n_chars"),
                     "headline", "pubdate", "authors"))
@@ -848,8 +836,7 @@ def compact_dedup_index(spark: SparkSession, index_dst: str,
 def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
                evals_src: Optional[str] = None,
                buckets: Optional[int] = None,
-               resume: bool = True, materialize_documents: bool = False,
-               wide_id: bool = False, **curate_knobs) -> None:
+               resume: bool = True, **curate_knobs) -> None:
     """The end-to-end corpus job: crawl pages → extraction → curation,
     one command, with lineage for BOTH halves under one root.
 
@@ -857,53 +844,25 @@ def run_corpus(spark: SparkSession, src: str, workdir: str, run_id: str, *,
         {workdir}/curated/...      curation stage id-lists + split table
         {workdir}/lineage/extract  per-bucket extraction lineage
         {workdir}/lineage/curate   per-stage curation lineage
-        {workdir}/documents        ONLY with materialize_documents=True
 
-    The adapter between the halves is ZERO-COPY by default (VERDICT r5
-    #1): ``extracted_to_documents`` is a pure projection, so the lazily-
+    The adapter between the halves is ZERO-COPY (VERDICT r5 #1):
+    ``extracted_to_documents`` is a pure projection, so the lazily-
     adapted DataFrame goes straight into ``run_curate`` — each curation
     stage's semi-join re-reads the extraction sink with the projection
     applied at scan time (column pruning makes it free), and NO second
-    full-corpus copy is ever written. ``materialize_documents=True``
-    opts back into a physical ``{workdir}/documents`` table for
-    downstream consumers — and even then the rewrite is skipped on
-    resume when the extract lineage shows no new work since the last
-    adapter write (a sidecar ``documents_meta`` row records the extract
-    lineage row count + row total the copy was derived from), so a
-    no-op resume never re-writes the corpus.
+    full-corpus copy is ever written. Both halves commit their lineage
+    rows through ``mre.io.append_rows``.
 
     Resume spans the boundary: the extraction half resumes per salt
     bucket (run_extract's broadcast anti-join), the curation half per
-    stage (run_curate's lineage). ``wide_id`` threads the 128-bit
-    doc-identity knob through the adapter (see extracted_to_documents).
-    ``curate_knobs`` pass through to run_curate (thresholds,
-    train_frac, max_bucket, ...)."""
+    stage (run_curate's lineage). ``curate_knobs`` pass through to
+    run_curate (thresholds, train_frac, max_bucket, ...)."""
     from .pipeline import read_results, run_extract
     run_extract(spark, src, f"{workdir}/extracted",
                 f"{workdir}/lineage/extract", run_id=run_id,
                 buckets=buckets, resume=resume)
     docs = extracted_to_documents(
-        read_results(spark, f"{workdir}/extracted"), wide_id=wide_id)
-    if materialize_documents:
-        ex_lin = read_table(spark, f"{workdir}/lineage/extract")
-        sig = ex_lin.agg(
-            F.count("*").alias("n_lineage_rows"),
-            F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_rows")).first()
-        cur = (int(sig["n_lineage_rows"]), int(sig["n_rows"]))
-        prev = None
-        meta = read_if_present(spark, f"{workdir}/documents_meta")
-        if meta is not None:
-            m = meta.first()
-            prev = (int(m["n_lineage_rows"]), int(m["n_rows"]))
-        if prev != cur:
-            docs.write.mode("overwrite").parquet(f"{workdir}/documents")
-            write_overwrite(
-                spark.createDataFrame(
-                    [cur], "n_lineage_rows long, n_rows long"),
-                f"{workdir}/documents_meta")
-        # the copy was paid for — curate from it (narrower scans than
-        # re-projecting the url-keyed extraction sink per stage)
-        docs = read_table(spark, f"{workdir}/documents")
+        read_results(spark, f"{workdir}/extracted"))
     run_curate(spark, docs, f"{workdir}/curated",
                f"{workdir}/lineage/curate", run_id=run_id,
                evals_src=evals_src, resume=resume, **curate_knobs)

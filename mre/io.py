@@ -11,9 +11,11 @@ assumes (UTC session TZ, AQE, capped Arrow batches — SURVEY.md §4.3).
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 ICEBERG_PREFIX = "iceberg:"
 
@@ -83,11 +85,13 @@ def read_pages(spark: SparkSession, src: str) -> DataFrame:
 
 def write_append(df: DataFrame, dst: str,
                  partition_col: str | None = None) -> None:
-    """P7 sink, append semantics (idempotence is handled one level up by
-    the lineage/resume protocol — pipeline.run_extract). With
+    """P7 sink, committer-backed append: one Spark write job (idempotence
+    is handled one level up, by the caller's resume protocol). With
     ``partition_col``, appended rows land in the matching hash-bucket
     directories of a partitioned layout (the dedup-index tables use this
-    so ingest can statically prune to touched buckets)."""
+    so ingest can statically prune to touched buckets). Bookkeeping rows
+    (lineage, epoch markers) go through ``append_rows`` instead, which
+    falls back to this writer only off the driver's disk."""
     if dst.startswith(ICEBERG_PREFIX):
         # Iceberg owns layout at the table level — partitioning was
         # declared at create time, appends inherit it
@@ -97,6 +101,63 @@ def write_append(df: DataFrame, dst: str,
         if partition_col is not None:
             w = w.partitionBy(partition_col)
         w.parquet(dst)
+
+
+def append_rows(spark: SparkSession, dst: str, rows: list[tuple],
+                schema: StructType | str,
+                commit_col: str) -> _dt.datetime:
+    """Commit a few bookkeeping rows to the append-only table ``dst``: the
+    one commit path of every lineage row and epoch marker (a bucket,
+    stage or epoch counts as done once its row lands). ``rows`` follow
+    the Spark ``schema`` (a StructType or DDL string); each gets the
+    column ``commit_col``, one commit time for the call, which is
+    returned. No rows, no write.
+
+    The commit time is a UTC-aware µs datetime taken here, never a
+    collected Spark timestamp (PySpark collects those as naive local
+    time, and a naive value would make Spark read a pyarrow file's column
+    as TimestampNTZ). Every column is written nullable, as Spark writes
+    files, so rows from either branch below read back as one schema.
+
+    When ``local_path`` resolves ``dst`` to the driver's disk, the rows
+    are written with pyarrow into a dot-prefixed temp file that is then
+    renamed into place: a Spark write job costs ~0.5 s of scheduling and
+    commit for a one-row table, the pyarrow write ~10 ms. The rename is
+    atomic and Spark ignores dot-prefixed files, so no reader sees a torn
+    file (one would fail every read of the table, and with it every
+    resume); a write that raises removes its temp file. ``iceberg:`` and
+    every other scheme take the committer-backed ``write_append``."""
+    stamp = _dt.datetime.now(_dt.timezone.utc)
+    if not rows:
+        return stamp
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    schema = StructType([StructField(f.name, f.dataType) for f in schema]
+                        + [StructField(commit_col, TimestampType())])
+    rows = [(*r, stamp) for r in rows]
+    local = local_path(spark, dst)
+    if local is None:
+        write_append(spark.createDataFrame(rows, schema), dst)
+        return stamp
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows],
+                                 schema=arrow)
+    os.makedirs(local, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(local, f".{name}")
+    try:
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(local, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return stamp
 
 
 def write_overwrite(df: DataFrame, dst: str,
@@ -271,7 +332,7 @@ def swap_dirs(spark: SparkSession, tmp: str, path: str) -> None:
     fs.delete(p_old, True)
 
 
-__all__ = ["get_spark", "read_pages", "write_append",
+__all__ = ["get_spark", "read_pages", "write_append", "append_rows",
            "write_overwrite_partitions", "read_table", "read_if_present",
            "path_committed", "swap_dirs",
            "atomic_rename_fs", "local_path", "recover_swapped_dir",

@@ -9,7 +9,7 @@ Flagship flow (``run_extract``)::
     url-dedup window inside that partitioning →
     mapInArrow(extract_batch_arrow) →
     write results (dynamic partition overwrite by salt_bucket) →
-    lineage rollup append
+    lineage rollup (≤ B rows) committed through ``mre.io.append_rows``
 
 Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
 * skew/balance: ``salt_bucket = pmod(murmur3(url), B)`` — the identical
@@ -31,8 +31,8 @@ Scale notes (10^12 rows — SURVEY.md §4.3, §7.1):
   partition overwrite → re-processing a bucket is idempotent; a bucket
   counts as done only once its lineage row is appended (write-then-commit
   order), so a crash mid-run re-does at most the uncommitted buckets.
-* one JVM↔Python crossing per task (the Arrow pipe in mapInArrow); no
-  collect()/driver loops anywhere.
+* one JVM↔Python crossing per task (the Arrow pipe in mapInArrow); the
+  only collect is the lineage rollup, at most one row per bucket.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core.extract import extract_one
-from .io import read_if_present, read_pages, read_table, write_append, \
+from .io import append_rows, read_if_present, read_pages, read_table, \
     write_overwrite_partitions
 from .schema import EXTRACT_FULL_SCHEMA, EXTRACT_SCHEMA
 
@@ -272,6 +272,8 @@ def run_extract_df(pages: DataFrame, buckets: int,
 
 
 def lineage_rollup(results: DataFrame, run_id: str) -> DataFrame:
+    """One row per (partition_id, salt_bucket) of the written results;
+    ``run_extract`` commits them with their ``completed_at``."""
     return (results
             .groupBy("partition_id", "salt_bucket")
             .agg(F.count("*").alias("n_rows"),
@@ -282,8 +284,7 @@ def lineage_rollup(results: DataFrame, run_id: str) -> DataFrame:
             .select(F.lit(run_id).alias("run_id"),
                     F.col("partition_id").cast("int"),
                     F.col("salt_bucket").cast("int"),
-                    "n_rows", "n_ok", "n_failed", "bytes_html", "wall_ms",
-                    F.current_timestamp().alias("completed_at")))
+                    "n_rows", "n_ok", "n_failed", "bytes_html", "wall_ms"))
 
 
 # --------------------------------------------------------------------------
@@ -312,6 +313,10 @@ def run_extract(spark: SparkSession, src: str, dst: str, lineage_dst: str,
     ``iceberg:`` URIs in prod (mre.io handles both). The corpus shuffles
     once: the latest capture per url is kept inside the salt
     partitioning (``dedup_latest_in_bucket``), with no extra exchange.
+    A bucket is done once its lineage row is committed: the rollup has at
+    most one row per bucket, so it is collected and appended through
+    ``mre.io.append_rows`` (one atomic file on the driver's disk, the
+    committer-backed write elsewhere), which stamps ``completed_at``.
     """
     if buckets is None:
         cores = spark.sparkContext.defaultParallelism
@@ -323,8 +328,8 @@ def run_extract(spark: SparkSession, src: str, dst: str, lineage_dst: str,
                  .withColumn("partition_id", F.spark_partition_id()))
 
     # write-then-commit: results land partitioned by bucket (idempotent via
-    # dynamic overwrite), lineage append marks the buckets done; both sinks
-    # route through mre.io so dst/lineage_dst may be iceberg: URIs
+    # dynamic overwrite), the lineage append marks the buckets done; both
+    # sinks route through mre.io so dst/lineage_dst may be iceberg: URIs
     write_overwrite_partitions(extracted, dst, "salt_bucket")
 
     # INVARIANT: this read-back is cheap at 100 TB ONLY because the rollup
@@ -337,7 +342,8 @@ def run_extract(spark: SparkSession, src: str, dst: str, lineage_dst: str,
     if done is not None:
         results = results.join(F.broadcast(done), "salt_bucket", "left_anti")
     lineage = lineage_rollup(results, run_id)
-    write_append(lineage, lineage_dst)
+    append_rows(spark, lineage_dst, lineage.collect(), lineage.schema,
+                "completed_at")
 
 
 def read_results(spark: SparkSession, dst: str) -> DataFrame:

@@ -27,48 +27,15 @@ def _epoch_phases(spark: SparkSession, epochs_dst: str,
 
 def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
                 phase: str, n_docs: int) -> None:
-    """Append one marker row. For plain local paths the row is written
-    directly with pyarrow into a dot-prefixed temp file and renamed
-    into place — a Spark write job for a 1-row table costs ~0.4 s of
-    pure scheduling/commit overhead, twice per epoch (round 8). The
-    rename is atomic on a local filesystem and Spark ignores
-    dot-prefixed files, so a reader can never observe a torn marker
-    file (a torn file would fail the WHOLE epochs-table read, and with
-    it every retry of the stream). Remote and iceberg: destinations
-    keep the committer-backed Spark write.
-    ``mre.io.local_path`` decides "local" from the resolved Hadoop
-    filesystem, so a ``file:/x`` marker lands where ``read_table`` looks
-    for it."""
-    from .io import local_path, write_append
-    local = local_path(spark, epochs_dst)
-    if local is not None:
-        import datetime
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        os.makedirs(local, exist_ok=True)
-        tbl = pa.table({
-            "epoch": pa.array([int(epoch_id)], pa.int64()),
-            "phase": pa.array([phase], pa.string()),
-            "n_docs": pa.array([int(n_docs)], pa.int64()),
-            # tz-aware (isAdjustedToUTC) so Spark reads the same
-            # TimestampType current_timestamp() would have written
-            "committed_at": pa.array(
-                [datetime.datetime.now(datetime.timezone.utc)],
-                pa.timestamp("us", tz="UTC")),
-        })
-        name = f"part-marker-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(local, f".{name}")
-        pq.write_table(tbl, tmp)
-        os.rename(tmp, os.path.join(local, name))
-        return
-    write_append(
-        spark.createDataFrame([(int(epoch_id), phase, int(n_docs))],
-                              "epoch long, phase string, n_docs long")
-        .withColumn("committed_at", F.current_timestamp()),
-        epochs_dst)
+    """Append one marker row (epoch, phase, n_docs, committed_at) through
+    ``mre.io.append_rows``, the commit path every bookkeeping row takes:
+    on the driver's disk an atomic single-file write, twice per epoch,
+    instead of a ~0.4 s Spark write job. A torn marker file would fail
+    the whole epochs-table read, and with it every retry of the stream;
+    the helper never leaves one visible."""
+    from .io import append_rows
+    append_rows(spark, epochs_dst, [(int(epoch_id), phase, int(n_docs))],
+                "epoch long, phase string, n_docs long", "committed_at")
 
 
 def ingest_epoch(spark: SparkSession, df: DataFrame, epoch_id: int,
@@ -151,12 +118,10 @@ def ingest_epoch(spark: SparkSession, df: DataFrame, epoch_id: int,
 
 def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
                         accepted_dst: str, checkpoint_dir: str, *,
-                        schema: str = "doc_id long, text string",
                         max_files_per_trigger: int = 16,
                         available_now: bool = False,
                         threshold: float = 0.5,
                         max_bucket: int | None = None,
-                        epochs_dst: str | None = None,
                         compact_every: int | None = None):
     """CONTINUOUS ingestion dedup (round 6): the Structured-Streaming
     twin of ``scripts/run_ingest.py`` — each micro-batch of newly
@@ -172,9 +137,9 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
     dynamic overwrite, the index append is fingerprint-guarded, and a
     retry after a PARTIAL index append re-reads the committed survivor
     set instead of recomputing it, so already-accepted docs can never
-    be silently dropped (ADVICE r6 #1). ``epochs_dst`` is the tiny
-    marker table backing that protocol (default:
-    ``{accepted_dst}_epochs``).
+    be silently dropped (ADVICE r6 #1). The tiny marker table backing
+    that protocol is ``{accepted_dst}_epochs``. The source files are
+    (doc_id long, text string) documents.
 
     Scale notes: the per-batch cost is O(batch) — the index side of
     every join is a bucket-pruned scan feeding broadcast probes; the
@@ -193,9 +158,9 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
     self-healing (it re-promotes a half-finished swap before
     rewriting), and the preceding ``ingest_epoch`` retry path is
     marker-guarded."""
-    ep_dst = epochs_dst or f"{accepted_dst}_epochs"
+    ep_dst = f"{accepted_dst}_epochs"
     batches = (spark.readStream
-               .schema(schema)
+               .schema("doc_id long, text string")
                .option("maxFilesPerTrigger", max_files_per_trigger)
                .parquet(src_dir))
 

@@ -15,9 +15,9 @@ Cluster usage::
         --run-id corpus-2024-w33
 
 Sandbox usage is identical with parquet paths and ``--master local[N]``.
-Layout under --workdir: extracted/ documents/ curated/ lineage/{extract,
-curate}. Resume: re-running with the same --run-id skips completed salt
-buckets (extraction half) and completed stages (curation half)."""
+Layout under --workdir: extracted/ curated/ lineage/{extract,curate}.
+Resume: re-running with the same --run-id skips completed salt buckets
+(extraction half) and completed stages (curation half)."""
 
 from __future__ import annotations
 
@@ -30,19 +30,13 @@ def main() -> None:
                     help="pages source: parquet path or iceberg:/warc: "
                          "URI")
     ap.add_argument("--workdir", required=True,
-                    help="output root (extracted/documents/curated/"
-                         "lineage land under it)")
+                    help="output root (extracted/curated/lineage land "
+                         "under it)")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--evals", default=None)
     ap.add_argument("--buckets", type=int, default=None)
     ap.add_argument("--train-frac", type=float, default=0.9)
     ap.add_argument("--max-bucket", type=int, default=None)
-    ap.add_argument("--materialize-documents", action="store_true",
-                    help="also write the doc_id-keyed corpus copy under "
-                         "{workdir}/documents (skipped on no-op resume); "
-                         "default is the zero-copy lazy adapter")
-    ap.add_argument("--wide-id", action="store_true",
-                    help="128-bit doc identity (doc_id + doc_id_hi)")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -55,9 +49,7 @@ def main() -> None:
                    evals_src=args.evals, buckets=args.buckets,
                    resume=not args.no_resume,
                    train_frac=args.train_frac,
-                   max_bucket=args.max_bucket,
-                   materialize_documents=args.materialize_documents,
-                   wide_id=args.wide_id)
+                   max_bucket=args.max_bucket)
     finally:
         spark.stop()
 

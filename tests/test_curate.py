@@ -333,43 +333,6 @@ def test_run_corpus_end_to_end(spark, tmp_path):
     assert final2["doc_id"].tolist() == final1["doc_id"].tolist()
 
 
-def test_run_corpus_materialized_copy_not_rewritten_on_resume(
-        spark, tmp_path):
-    """materialize_documents=True writes the physical copy ONCE; a no-op
-    resume (extract half unchanged) must NOT rewrite it (VERDICT r5 #1
-    done-criterion) — and a wide_id run carries the 128-bit identity
-    pair through to the curated output (VERDICT r5 #5)."""
-    import glob
-    import os
-    from mre.curate import read_curated, run_corpus
-    from mre.fixtures import write_fixture_parquet
-
-    fx = str(tmp_path / "fixtures")
-    write_fixture_parquet(fx, n=60)
-    wd = str(tmp_path / "corpus")
-    run_corpus(spark, f"{fx}/pages.parquet", wd, run_id="m1",
-               train_frac=0.9, materialize_documents=True, wide_id=True)
-    docs = spark.read.parquet(f"{wd}/documents")
-    assert docs.count() == 60
-    assert "doc_id_hi" in docs.columns
-    # the 128-bit pair is collision-free and genuinely two-dimensional
-    assert docs.select("doc_id", "doc_id_hi").distinct().count() == 60
-    assert docs.filter(F.col("doc_id") == F.col("doc_id_hi")).count() == 0
-    # wide id rides through curation to the final split table
-    out = read_curated(spark, f"{wd}/curated")
-    assert "doc_id_hi" in out.columns
-
-    mtimes1 = {p: os.path.getmtime(p)
-               for p in glob.glob(f"{wd}/documents/*")}
-    assert mtimes1
-    # no-op resume: extract lineage unchanged → adapter copy untouched
-    run_corpus(spark, f"{fx}/pages.parquet", wd, run_id="m1",
-               train_frac=0.9, materialize_documents=True, wide_id=True)
-    mtimes2 = {p: os.path.getmtime(p)
-               for p in glob.glob(f"{wd}/documents/*")}
-    assert mtimes2 == mtimes1
-
-
 def test_read_curate_lineage_resolves_attempts(spark, docs, evals,
                                                tmp_path):
     """Rollups consume ONE row per (run_id, stage) — the latest attempt —

@@ -14,8 +14,9 @@ lineage reader), which are roots as well.
 
 The same rule holds for options: every parameter with a default of the
 three job entry points (``run_extract``, ``run_curate``, ``run_corpus``)
-must be passed by name from a CLI or the benchmark, or it is an option
-nothing sets; and every keyword those calls pass must name a parameter.
+and of the ingest stream (``start_ingest_stream``) must be passed by name
+from a CLI or the benchmark, or it is an option nothing sets; and every
+keyword those calls pass must name a parameter.
 
 The scan above drops a reference it cannot resolve, so a separate check
 holds every ``mre`` import and ``mre.x.y`` access in ``mre/``,
@@ -276,7 +277,8 @@ def test_exemption_is_a_definition(name):
 
 # job entry point -> the module defining it
 ENTRY_POINTS = {"run_extract": "mre.pipeline", "run_curate": "mre.curate",
-                "run_corpus": "mre.curate"}
+                "run_corpus": "mre.curate",
+                "start_ingest_stream": "mre.streaming"}
 
 
 def _entry_def(name: str):

@@ -138,16 +138,16 @@ def test_run_extract_crash_before_lineage_commit_recovers(
     clean run's, and each bucket has exactly one lineage row."""
     import mre.pipeline as P
 
-    real_append = P.write_append
+    real_append = P.append_rows
     crashed = []
 
-    def append_crashing_once(df, path, *args, **kwargs):
+    def append_crashing_once(spark_, path, *args, **kwargs):
         if not crashed:
             crashed.append(path)
             raise RuntimeError("injected crash before the lineage commit")
-        return real_append(df, path, *args, **kwargs)
+        return real_append(spark_, path, *args, **kwargs)
 
-    monkeypatch.setattr(P, "write_append", append_crashing_once)
+    monkeypatch.setattr(P, "append_rows", append_crashing_once)
     src = f"{fixture_dir}/pages.parquet"
     dst, lin = str(tmp_path / "results"), str(tmp_path / "lineage")
     with pytest.raises(RuntimeError, match="injected crash"):
