@@ -168,45 +168,38 @@ def q_gopher_quality(spark, sf_dir):
     return gopher_quality(_t(spark, sf_dir, "documents"))
 
 
-def q_semi_anti_join(spark, sf_dir):
-    """LEFT SEMI and LEFT ANTI joins, plus the INCREMENTAL-INGEST dedup
-    path, as one tagged union (registry-window rule, SURVEY §7.4).
-    op='semi'/'anti' partition `documents` exactly, value-checking both
-    join types at once. op='ingest' (VERDICT r5 #3) drives the
-    index-based ingestion family end-to-end: the even-doc_id half of the
-    corpus is indexed (build_dedup_index → fingerprints + signatures +
-    pre-banded LSH rows in a temp dir), the batch is the odd half plus
-    planted exact copies of every doc_id%10==0 corpus doc (re-keyed
-    +10_000_000), and the rows are dedup_increment's survivors — so the
-    oracle value-checks within-batch exact keep-min, the
-    fingerprint-anti-join vs the index, the batch-vs-corpus banded
-    estimator (threshold 0.2 = the replay golden's), and the
-    cluster-min within-batch pass, all against DuckDB (golden pairs
-    restricted by endpoint parity + a recursive-CTE component replay —
+def q_ingest_dedup(spark, sf_dir):
+    """The INCREMENTAL-INGEST commit protocol end-to-end (VERDICT r5 #3):
+    the even-doc_id half of the corpus is indexed (build_dedup_index →
+    fingerprints + signatures + pre-banded LSH rows in a temp dir), the
+    batch is the odd half plus planted exact copies of every
+    doc_id%10==0 corpus doc (re-keyed +10_000_000), and the rows are the
+    accepted docs ``ingest_epoch`` — the code ``run_ingest.py ingest``
+    and the stream run — commits to its accepted table. So the oracle
+    value-checks within-batch exact keep-min, the fingerprint-anti-join
+    vs the index, the batch-vs-corpus banded estimator (threshold 0.2 =
+    the replay golden's), the cluster-min within-batch pass and the
+    accepted-table write, all against DuckDB (golden pairs restricted by
+    endpoint parity + a recursive-CTE component replay —
     signatures/bands/est are per-doc/per-pair pure, so full-corpus
     golden pairs restricted to cross/batch endpoints ARE the ingest
     candidates)."""
     import tempfile
-    from mre.curate import build_dedup_index, dedup_increment
+    from mre.curate import build_dedup_index
+    from mre.io import read_table
+    from mre.streaming import ingest_epoch
     _prep(spark)
     d = _t(spark, sf_dir, "documents")
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").alias("doc_id"))
-    semi = (d.join(ev, "doc_id", "left_semi")
-            .withColumn("op", F.lit("semi")))
-    anti = (d.join(ev, "doc_id", "left_anti")
-            .withColumn("op", F.lit("anti")))
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     planted = (corpus.filter(F.col("doc_id") % 10 == 0)
                .withColumn("doc_id", F.col("doc_id") + 10000000))
     batch = d.filter(F.col("doc_id") % 2 == 1).unionByName(planted)
-    idx = tempfile.mkdtemp(prefix="mre_ingest_q_")
-    build_dedup_index(spark, corpus, idx)
-    surv = dedup_increment(spark, batch, idx, threshold=0.2,
-                           update_index=False)
-    ing = surv.withColumn("op", F.lit("ingest"))
-    return (semi.unionAll(anti).unionAll(ing)
-            .select("op", "doc_id", "lang", "n_chars"))
+    base = tempfile.mkdtemp(prefix="mre_ingest_q_")
+    build_dedup_index(spark, corpus, f"{base}/index")
+    ingest_epoch(spark, batch, 0, f"{base}/index", f"{base}/accepted",
+                 threshold=0.2)
+    return read_table(spark, f"{base}/accepted").select("doc_id", "lang",
+                                                        "n_chars")
 
 
 def q_hash_split(spark, sf_dir):
@@ -287,7 +280,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_clusters": q_dup_clusters,
         "contamination": q_contamination,
         "lineage_rollup": q_lineage_rollup,
-        "semi_anti_join": q_semi_anti_join,
+        "ingest_dedup": q_ingest_dedup,
         "hash_split": q_hash_split,
         "gopher_quality": q_gopher_quality,
         "curation_pipeline": q_curation_pipeline,
@@ -342,7 +335,7 @@ def oracle_sql() -> dict[str, str]:
 
     _P2 = _cov_probe(_COV, "BIGINT", "BIGINT")
     _P3D = _cov_probe(_COV, "BIGINT", "BIGINT", "DOUBLE")
-    _P4I = _cov_probe(_COV, "VARCHAR", "BIGINT", "VARCHAR", "BIGINT")
+    _P3I = _cov_probe(_COV, "BIGINT", "VARCHAR", "BIGINT")
     _PCUR = _cov_probe(_COV, "BIGINT", "VARCHAR", "VARCHAR")
     _PLIN = _cov_probe(_LCOV, "VARCHAR", "BIGINT", "BIGINT", "BIGINT",
                        "BIGINT", "BIGINT", "BIGINT")
@@ -558,7 +551,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(min(doc_id) AS BIGINT) AS min_doc_id
             FROM documents GROUP BY 1, 2
         """,
-        # op='ingest' replays dedup_increment stage by stage: within-batch
+        # ingest_dedup replays the ingest dedup stage by stage: within-batch
         # exact keep-min + fingerprint-anti vs the indexed (even) half in
         # plain SQL; the banded estimator stage comes from the MinHash
         # replay golden restricted by endpoint parity (signatures, band
@@ -567,7 +560,7 @@ def oracle_sql() -> dict[str, str]:
         # endpoint ARE the batch-vs-index hits, and odd-odd pairs among
         # survivors ARE the within-batch pairs); cluster-min resolves via
         # the same recursive CTE as dup_clusters.
-        "semi_anti_join": f"""
+        "ingest_dedup": f"""
             WITH RECURSIVE batch AS (
                 SELECT doc_id, text, lang, n_chars FROM documents
                 WHERE doc_id % 2 = 1
@@ -610,16 +603,8 @@ def oracle_sql() -> dict[str, str]:
             losers AS (
                 SELECT node AS doc_id FROM reach
                 GROUP BY node HAVING node <> min(label))
-            SELECT 'semi' AS op, doc_id, lang, n_chars FROM documents d
-            WHERE EXISTS (SELECT 1 FROM events e
-                          WHERE e.user_id = d.doc_id)
-            UNION ALL
-            SELECT 'anti' AS op, doc_id, lang, n_chars FROM documents d
-            WHERE NOT EXISTS (SELECT 1 FROM events e
-                              WHERE e.user_id = d.doc_id)
-            UNION ALL
-            SELECT 'ingest' AS op, doc_id, lang, n_chars FROM b3
-            WHERE doc_id NOT IN (SELECT doc_id FROM losers){_P4I}
+            SELECT doc_id, lang, n_chars FROM b3
+            WHERE doc_id NOT IN (SELECT doc_id FROM losers){_P3I}
         """,
         "lang_id": r"""
             WITH s AS (

@@ -539,17 +539,19 @@ def update_dedup_index(spark: SparkSession, docs: DataFrame,
     Round-8 fast-path knobs (both default OFF — semantics unchanged):
 
     * ``sigs``: a precomputed (doc_id, sig) frame covering ⊇ the fresh
-      docs (e.g. the signature frame ``dedup_increment`` already
-      materialized for the same batch) — the k-hash signature scan is
-      replaced by a batch-shaped semi-join against it.
+      docs (the signature frame ``_dedup_batch`` already materialized
+      for the same batch) — the k-hash signature scan is replaced by a
+      batch-shaped semi-join against it.
     * ``assume_fresh=True``: skip the already-present probe entirely
       and treat every ``docs`` row as fresh. ONLY safe when the caller
       guarantees the index has not been touched for this batch — the
-      streaming ``ingest_epoch`` fresh path provides exactly that (its
-      marker protocol routes every retry-after-partial-append through
-      the 'written' path, which calls this WITHOUT assume_fresh, so the
-      fingerprint guard still protects the crash window). ``docs`` must
-      be materialized (checkpointed) by the caller in this mode."""
+      fresh path of ``mre.streaming.ingest_epoch``, the one ingest
+      commit protocol (``run_ingest.py ingest`` and the stream), provides
+      exactly that (its marker protocol routes every
+      retry-after-partial-append through the 'written' path, which calls
+      this WITHOUT assume_fresh, so the fingerprint guard still protects
+      the crash window). ``docs`` must be materialized (checkpointed) by
+      the caller in this mode."""
     meta = _index_layout(spark, index_dst)
     parts = meta["parts"]
     from pyspark import StorageLevel
@@ -632,10 +634,11 @@ def dedup_increment(spark: SparkSession, new_docs: DataFrame,
     digest/signature/band rows via ``update_dedup_index`` so the NEXT
     batch sees this one; the intermediates this call persisted are then
     released (scoped — other live plans' caches are untouched). With
-    ``update_index=False`` the caller owns both the write-ordering (see
-    scripts/run_ingest.py: commit the accepted table FIRST, then update
-    the index) and the cache release. ``max_bucket`` guards viral bands
-    with the same bucket-size-≤-cap semantics as ``minhash_candidates``,
+    ``update_index=False`` the caller owns both the index update and the
+    cache release; ``mre.streaming.ingest_epoch``, the one ingest commit
+    protocol, runs these steps through ``_dedup_batch`` instead.
+    ``max_bucket`` guards viral bands with the same bucket-size-≤-cap
+    semantics as ``minhash_candidates``,
     computed over only the buckets the batch touches (a semi-join of the
     bands table against the broadcast batch band keys — never a
     full-index groupBy per batch). k, n and bands come from the index's
@@ -645,14 +648,41 @@ def dedup_increment(spark: SparkSession, new_docs: DataFrame,
     step 3 is the estimator path (signatures only); run the
     LSH+exact-confirm ``run_curate`` pipeline over the full corpus at a
     slower cadence if exact-Jaccard confirmation is required."""
+    from .textops import (_CkptHandle, _register_cache, cache_mark,
+                          release_caches)
+    mark = cache_mark()
+    survivors, sig_surv = _dedup_batch(spark, new_docs, index_dst,
+                                       threshold, max_bucket)
+    if update_index:
+        # materialize BEFORE mutating the index the plan reads from
+        # (the survivor plan anti-joins those tables); batch-shaped
+        survivors = survivors.localCheckpoint(eager=True)
+        update_dedup_index(spark, survivors, index_dst, sigs=sig_surv)
+        # the checkpoint truncated the lineage — this call's persisted
+        # intermediates are dead; the checkpoint itself goes to the
+        # registry for the caller to release after consuming the result
+        release_caches(since=mark)
+        _register_cache(_CkptHandle(survivors))
+    return survivors
+
+
+def _dedup_batch(spark: SparkSession, new_docs: DataFrame,
+                 index_dst: str, threshold: float,
+                 max_bucket: int | None) -> tuple[DataFrame, DataFrame]:
+    """Steps 1-4 of ``dedup_increment`` (see there), with the index left
+    untouched. Returns ``(survivors, sig_surv)``: the surviving new docs
+    and the (doc_id, sig) frame this call already materialized, which
+    covers every survivor, so an index append can semi-join it instead
+    of re-running the k-hash signature scan (round 8). Both are plans
+    over intermediates this call persisted and registered; the caller
+    releases them (``release_caches(since=...)``) once the survivors are
+    checkpointed or consumed."""
     from pyspark import StorageLevel
-    from .textops import (EST_JACCARD_SQL, _CkptHandle, _register_cache,
-                          cache_mark, minhash_candidates,
-                          minhash_signatures, release_caches)
+    from .textops import (EST_JACCARD_SQL, _register_cache,
+                          minhash_candidates, minhash_signatures)
 
     meta = _index_layout(spark, index_dst)
     k, n, bands, parts = meta["k"], meta["n"], meta["bands"], meta["parts"]
-    mark = cache_mark()
 
     # 1+2: exact, within batch then vs index. The deduped batch feeds
     # four downstream plan branches (signatures ×2, near-dup, final
@@ -752,27 +782,7 @@ def dedup_increment(spark: SparkSession, new_docs: DataFrame,
               .select("doc_id"))
     survivors = deduped.join(losers, "doc_id", "left_anti")
 
-    if update_index:
-        # materialize BEFORE mutating the index the plan reads from
-        # (the survivor plan anti-joins those tables); batch-shaped
-        survivors = survivors.localCheckpoint(eager=True)
-        # reuse the signature frame this call already materialized —
-        # update_dedup_index semi-joins it instead of re-running the
-        # k-hash signature scan over the survivors (round 8)
-        update_dedup_index(spark, survivors, index_dst, sigs=sig_surv)
-        # the checkpoint truncated the lineage — this call's persisted
-        # intermediates are dead; the checkpoint itself goes to the
-        # registry for the caller to release after consuming the result
-        release_caches(since=mark)
-        _register_cache(_CkptHandle(survivors))
-    else:
-        # expose the already-materialized survivor signatures so a
-        # caller that owns the index update (scripts/run_ingest.py, the
-        # streaming ingest_epoch) can hand them to update_dedup_index
-        # instead of recomputing; the attribute dies with this plan
-        # object — checkpoint/copy it before the caller's release point
-        survivors._mre_sig_surv = sig_surv
-    return survivors
+    return survivors, sig_surv
 
 
 def compact_dedup_index(spark: SparkSession, index_dst: str,

@@ -230,29 +230,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, p
 
 
-def path_committed(spark: SparkSession, dst: str) -> bool:
-    """Has a previous write to ``dst`` COMMITTED? (ADVICE r5 #1.)
-
-    * ``iceberg:`` tables commit atomically (snapshot swap), so a
-      readable table IS a committed table — read-probe.
-    * Every other path (local AND remote parquet dirs) requires the
-      ``_SUCCESS`` marker, checked through the Hadoop FileSystem API.
-      Merely-readable is NOT committed: a crash mid-write under a v2
-      output committer leaves partially-promoted part files that
-      read_table happily loads — resuming from those silently adopts a
-      partial survivor set (and, for ingest, permanently pollutes the
-      dedup index with the dropped remainder's absence).
-
-    Only a real "no ``_SUCCESS``" answer is False: an I/O error (an
-    unknown scheme, an unreachable store) raises, because the caller's
-    answer to False is a recompute, and a recompute after a partial
-    index update drops the whole batch."""
-    if dst.startswith(ICEBERG_PREFIX):
-        return read_if_present(spark, dst) is not None
-    fs, p = _hadoop_fs(spark, f"{dst}/_SUCCESS")
-    return bool(fs.exists(p))
-
-
 def local_path(spark: SparkSession, path: str) -> str | None:
     """The driver-local OS path ``path`` names when its Hadoop filesystem
     is the local one, else None. The scheme is resolved, not read off the
@@ -334,6 +311,5 @@ def swap_dirs(spark: SparkSession, tmp: str, path: str) -> None:
 
 __all__ = ["get_spark", "read_pages", "write_append", "append_rows",
            "write_overwrite_partitions", "read_table", "read_if_present",
-           "path_committed", "swap_dirs",
-           "atomic_rename_fs", "local_path", "recover_swapped_dir",
-           "ICEBERG_PREFIX"]
+           "swap_dirs", "atomic_rename_fs", "local_path",
+           "recover_swapped_dir", "ICEBERG_PREFIX"]

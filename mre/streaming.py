@@ -1,9 +1,11 @@
-"""Structured Streaming ingest (round 6): each micro-batch of newly crawled
-documents is deduplicated against the pre-banded corpus index
-(``mre.curate.dedup_increment``), its survivors land under
-``{accepted_dst}/epoch=N`` and the index is extended, with per-epoch phase
-markers making a retried micro-batch converge (``ingest_epoch``).
-``start_ingest_stream`` is the streaming twin of ``scripts/run_ingest.py``.
+"""Incremental ingest: ``ingest_epoch`` is the one commit protocol for a
+batch of newly crawled documents. The batch is deduplicated against the
+pre-banded corpus index (the steps of ``mre.curate.dedup_increment``),
+its survivors land under ``{accepted_dst}/epoch=N`` and the index is
+extended, with per-epoch phase markers in ``{accepted_dst}_epochs``
+making a retried batch converge. ``scripts/run_ingest.py ingest`` runs
+it once, as epoch 0; ``start_ingest_stream`` runs it per Structured
+Streaming micro-batch (round 6).
 """
 
 from __future__ import annotations
@@ -39,14 +41,15 @@ def _mark_epoch(spark: SparkSession, epochs_dst: str, epoch_id: int,
 
 
 def ingest_epoch(spark: SparkSession, df: DataFrame, epoch_id: int,
-                 index_dst: str, accepted_dst: str, epochs_dst: str, *,
+                 index_dst: str, accepted_dst: str, *,
                  threshold: float = 0.5,
                  max_bucket: int | None = None) -> None:
-    """One idempotent ingest micro-batch: dedup ``df`` against the
-    corpus index, land survivors under ``{accepted_dst}/epoch=N``,
-    extend the index, and record progress in the tiny ``epochs_dst``
+    """One idempotent ingest batch: dedup ``df`` against the corpus
+    index, land survivors under ``{accepted_dst}/epoch=N``, extend the
+    index, and record progress in the tiny ``{accepted_dst}_epochs``
     marker table ('written' after the partition commit, 'indexed' after
-    the index append).
+    the index append). The only code that commits an ingest batch: the
+    CLI's ``ingest`` and every stream micro-batch run it.
 
     The markers exist for the retry path (ADVICE r6 #1 — the MEDIUM):
     ``update_dedup_index`` can crash after SOME of the batch's
@@ -70,11 +73,13 @@ def ingest_epoch(spark: SparkSession, df: DataFrame, epoch_id: int,
     harmless: phases are read as a set. Residual caveat: the guarantee
     assumes this function is the only writer mutating the index between
     a batch's two phases — which the per-epoch serial foreachBatch
-    contract provides."""
-    from .curate import dedup_increment, update_dedup_index
+    contract provides; CLI ingests into one index must likewise run one
+    at a time."""
+    from .curate import _dedup_batch, update_dedup_index
     from .io import read_table, write_overwrite_partitions
     from .textops import (_release_local_checkpoint, cache_mark,
                           release_caches)
+    epochs_dst = f"{accepted_dst}_epochs"
     phases = _epoch_phases(spark, epochs_dst, epoch_id)
     if "indexed" in phases:
         return
@@ -91,13 +96,9 @@ def ingest_epoch(spark: SparkSession, df: DataFrame, epoch_id: int,
             _release_local_checkpoint(surv)
             release_caches(since=mark)
         return
-    surv0 = dedup_increment(spark, df, index_dst, threshold=threshold,
-                            max_bucket=max_bucket, update_index=False)
-    # the signature frame dedup_increment already materialized for this
-    # batch — handed to update_dedup_index below so the index append
-    # does not re-run the k-hash signature scan (round 8)
-    sig_surv = getattr(surv0, "_mre_sig_surv", None)
-    surv = surv0.localCheckpoint(eager=True)
+    surv, sig_surv = _dedup_batch(spark, df, index_dst, threshold,
+                                  max_bucket)
+    surv = surv.localCheckpoint(eager=True)
     try:
         n = surv.count()
         write_overwrite_partitions(
@@ -123,13 +124,13 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
                         threshold: float = 0.5,
                         max_bucket: int | None = None,
                         compact_every: int | None = None):
-    """CONTINUOUS ingestion dedup (round 6): the Structured-Streaming
-    twin of ``scripts/run_ingest.py`` — each micro-batch of newly
-    crawled documents is deduplicated against the pre-banded corpus
-    index via ``mre.curate.dedup_increment`` (exact + near, vs corpus
-    AND within the batch), survivors land under
-    ``{accepted_dst}/epoch=N``, and the index is extended so the NEXT
-    micro-batch sees this one. Returns the StreamingQuery.
+    """CONTINUOUS ingestion dedup (round 6): each micro-batch of newly
+    crawled documents goes through ``ingest_epoch``, the same commit
+    protocol ``scripts/run_ingest.py ingest`` runs once — deduplicated
+    against the pre-banded corpus index (exact + near, vs corpus AND
+    within the batch), survivors land under ``{accepted_dst}/epoch=N``,
+    and the index is extended so the NEXT micro-batch sees this one.
+    Returns the StreamingQuery.
 
     Delivery semantics: foreachBatch re-runs a micro-batch after a
     failure; each epoch converges through the phase-marker protocol in
@@ -158,7 +159,6 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
     self-healing (it re-promotes a half-finished swap before
     rewriting), and the preceding ``ingest_epoch`` retry path is
     marker-guarded."""
-    ep_dst = f"{accepted_dst}_epochs"
     batches = (spark.readStream
                .schema("doc_id long, text string")
                .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -166,7 +166,7 @@ def start_ingest_stream(spark: SparkSession, src_dir: str, index_dst: str,
 
     def _one_batch(df, epoch_id: int) -> None:
         ingest_epoch(df.sparkSession, df, epoch_id, index_dst,
-                     accepted_dst, ep_dst, threshold=threshold,
+                     accepted_dst, threshold=threshold,
                      max_bucket=max_bucket)
         if compact_every and (epoch_id + 1) % compact_every == 0:
             from .curate import compact_dedup_index

@@ -16,17 +16,23 @@ Then per crawl batch::
         ingest --batch iceberg:warehouse.crawl_2024w34 \
                --dst iceberg:warehouse.accepted_2024w34
 
-``ingest`` drops batch docs that are exact or near duplicates of the
-corpus or of each other, COMMITS the survivors to --dst first, and only
-then appends their digest/signature rows to the index (write-then-
-update: a crash mid-index-update re-runs safely — the committed --dst
-is detected and reused, and the index update is idempotent). Re-running
-a fully-completed ingest is a no-op on both tables.
+``ingest`` runs the batch through ``mre.streaming.ingest_epoch`` as
+epoch 0, the one ingest commit protocol: it drops batch docs that are
+exact or near duplicates of the corpus or of each other, COMMITS the
+survivors to ``{dst}/epoch=0`` first, and only then appends their
+digest/signature/band rows to the index, recording each step as a
+'written' / 'indexed' marker row in the sibling ``{dst}_epochs`` table.
+A crash anywhere re-runs safely: after 'written' the committed
+survivors are re-read and the index update is idempotent. Re-running a
+fully-completed ingest is a no-op on both tables. --dst names ONE
+batch's accepted table: give each batch a fresh --dst (an ``iceberg:``
+--dst must be partitioned by ``epoch``). A --dst written flat, without
+markers, by an earlier version of this CLI is not resumed.
 
-``stream`` is the continuous twin: a Structured-Streaming job that
-watches a drop directory and runs the same dedup per micro-batch with
-per-epoch idempotent sinks (checkpointed — restarts resume; pass
-``--available-now`` to drain-and-stop for backfills)::
+``stream`` runs the same protocol per micro-batch of a Structured
+Streaming job that watches a drop directory (one epoch per micro-batch,
+checkpointed — restarts resume; pass ``--available-now`` to
+drain-and-stop for backfills)::
 
     spark-submit --py-files dist/mre.zip scripts/run_ingest.py \
         --index iceberg:warehouse.dedup_index \
@@ -49,12 +55,15 @@ def main() -> None:
     b = sub.add_parser("build", help="build (or rebuild) the index from "
                                      "a corpus")
     b.add_argument("--src", required=True)
-    g = sub.add_parser("ingest", help="dedup a new batch, update index")
+    g = sub.add_parser(
+        "ingest",
+        help="dedup a new batch against the index, commit its survivors "
+             "to --dst/epoch=0 and extend the index "
+             "(mre.streaming.ingest_epoch, markers in {dst}_epochs)")
     g.add_argument("--batch", required=True)
     g.add_argument("--dst", required=True)
     g.add_argument("--threshold", type=float, default=0.5)
     g.add_argument("--max-bucket", type=int, default=None)
-    g.add_argument("--no-index-update", action="store_true")
     c = sub.add_parser("compact",
                        help="rewrite the index's small-file swarm")
     c.add_argument("--target-partitions", type=int, default=None)
@@ -80,11 +89,8 @@ def main() -> None:
                         "contract)")
     args = ap.parse_args()
 
-    from mre.curate import (build_dedup_index, compact_dedup_index,
-                            dedup_increment, update_dedup_index)
-    from mre.io import (get_spark, path_committed, read_table,
-                        write_overwrite)
-    from mre.textops import release_caches
+    from mre.curate import build_dedup_index, compact_dedup_index
+    from mre.io import get_spark, read_table
 
     spark = get_spark(app="mre-ingest")
     try:
@@ -104,27 +110,10 @@ def main() -> None:
                 compact_every=args.compact_every)
             q.awaitTermination()
         else:
-            # write-then-update ordering: commit --dst BEFORE touching
-            # the index, and resume from a committed --dst instead of
-            # recomputing (a recompute after a partial index update
-            # would see the batch's own rows and drop everything).
-            # Committed means the _SUCCESS marker for every parquet dst
-            # — local AND remote — via the Hadoop FS API (ADVICE r5 #1:
-            # a merely-readable remote dir after a crash mid-write is
-            # partially-promoted part files, and adopting it as the
-            # accepted batch silently drops the rest of the batch and
-            # pollutes the index permanently); iceberg: commits are
-            # atomic, so there the read-probe is the right check.
-            if not path_committed(spark, args.dst):
-                out = dedup_increment(
-                    spark, read_table(spark, args.batch), args.index,
-                    threshold=args.threshold,
-                    max_bucket=args.max_bucket, update_index=False)
-                write_overwrite(out, args.dst)
-            accepted = read_table(spark, args.dst)
-            if not args.no_index_update:
-                update_dedup_index(spark, accepted, args.index)
-            release_caches()
+            from mre.streaming import ingest_epoch
+            ingest_epoch(spark, read_table(spark, args.batch), 0,
+                         args.index, args.dst, threshold=args.threshold,
+                         max_bucket=args.max_bucket)
     finally:
         spark.stop()
 

@@ -676,32 +676,6 @@ def test_swap_dirs_recovers_from_leftover_old(spark, tmp_path):
     assert not os.path.exists(f"{live}.old")
 
 
-def test_path_committed_requires_success_marker(spark, tmp_path):
-    """ADVICE r5 #1: a readable-but-uncommitted parquet dir (no _SUCCESS
-    — the crash-mid-write state on remote filesystems) is NOT treated
-    as committed; a properly written dir is."""
-    import os
-    from mre.io import path_committed
-    dst = str(tmp_path / "out")
-    spark.range(5).write.parquet(dst)
-    assert path_committed(spark, dst)
-    os.remove(f"{dst}/_SUCCESS")
-    assert spark.read.parquet(dst).count() == 5   # readable...
-    assert not path_committed(spark, dst)         # ...but not committed
-    assert not path_committed(spark, str(tmp_path / "absent"))
-
-
-def test_path_committed_raises_on_io_error(spark):
-    """An I/O error is not "not committed": run_ingest answers False
-    with a recompute, which after a partial index update would drop the
-    whole batch. A filesystem that cannot even be resolved must raise."""
-    from py4j.protocol import Py4JJavaError
-
-    from mre.io import path_committed
-    with pytest.raises(Py4JJavaError, match="nosuchfs"):
-        path_committed(spark, "nosuchfs://bucket/x")
-
-
 def test_dedup_index_param_guard_and_idempotent_update(spark, docs,
                                                        tmp_path):
     """update_dedup_index signs with the index's recorded (k, n) — the

@@ -79,3 +79,15 @@ def test_probe_absent_or_uncommitted_is_nothing_done(spark, tmp_path, name):
     (path / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"x")
     (path / ".part-00000.parquet.crc").write_bytes(b"x")
     assert probe(spark, str(path)) == set()
+
+
+@pytest.mark.parametrize("name", sorted(PROBES))
+def test_probe_raises_on_unresolvable_filesystem(spark, name):
+    """An I/O error is not "nothing done": every probe's caller answers
+    "nothing done" with a recompute, and an ingest recompute after a
+    partial index append drops the batch's already-accepted docs. A
+    filesystem that cannot even be resolved must raise."""
+    from py4j.protocol import Py4JJavaError
+    _, _, probe, _ = PROBES[name]
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        probe(spark, "nosuchfs://bucket/x")

@@ -124,7 +124,7 @@ def test_ingest_epoch_retry_after_partial_index_update(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_dedup_index(spark, corpus, idx)
     acc = str(tmp_path / "accepted")
-    eps = str(tmp_path / "epochs")
+    eps = f"{acc}_epochs"
 
     batch = spark.createDataFrame(
         [(100, "fresh alpha " + words("a")),
@@ -140,7 +140,7 @@ def test_ingest_epoch_retry_after_partial_index_update(spark, tmp_path):
     update_dedup_index(spark, batch.filter("doc_id = 100"), idx)
 
     # the retry: epoch 0 re-enters ingest_epoch with the SAME input df
-    ingest_epoch(spark, batch, 0, idx, acc, eps)
+    ingest_epoch(spark, batch, 0, idx, acc)
 
     # the accepted partition still holds BOTH docs (the old recompute
     # path would have rewritten it as {101} only)
@@ -156,7 +156,7 @@ def test_ingest_epoch_retry_after_partial_index_update(spark, tmp_path):
     # a further retry of a fully-converged epoch is a pure no-op
     n_fp = fp.count()
     n_eps = spark.read.parquet(eps).count()
-    ingest_epoch(spark, batch, 0, idx, acc, eps)
+    ingest_epoch(spark, batch, 0, idx, acc)
     assert spark.read.parquet(f"{idx}/fingerprints").count() == n_fp
     assert spark.read.parquet(eps).count() == n_eps
 
@@ -191,7 +191,8 @@ def test_ingest_epoch_crash_before_indexed_marker_recovers(
         root = tmp_path / name
         idx = str(root / "idx")
         build_dedup_index(spark, corpus, idx)
-        return idx, str(root / "accepted"), str(root / "epochs")
+        acc = str(root / "accepted")
+        return idx, acc, f"{acc}_epochs"
 
     def phases(eps):
         return {r["phase"] for r in spark.read.parquet(eps).collect()}
@@ -200,8 +201,8 @@ def test_ingest_epoch_crash_before_indexed_marker_recovers(
         return sorted((r["doc_id"], r["text"])
                       for r in spark.read.parquet(acc).collect())
 
-    idx0, acc0, eps0 = paths("clean")
-    streaming.ingest_epoch(spark, batch, 0, idx0, acc0, eps0)
+    idx0, acc0, _ = paths("clean")
+    streaming.ingest_epoch(spark, batch, 0, idx0, acc0)
     want = accepted(acc0)
     assert [d for d, _ in want] in ([101, 102], [102, 103])
 
@@ -216,9 +217,9 @@ def test_ingest_epoch_crash_before_indexed_marker_recovers(
 
     monkeypatch.setattr(streaming, "_mark_epoch", crash_once)
     with pytest.raises(RuntimeError, match="indexed"):
-        streaming.ingest_epoch(spark, batch, 0, idx, acc, eps)
+        streaming.ingest_epoch(spark, batch, 0, idx, acc)
     assert phases(eps) == {"written"}
-    streaming.ingest_epoch(spark, batch, 0, idx, acc, eps)  # the retry
+    streaming.ingest_epoch(spark, batch, 0, idx, acc)  # the retry
 
     assert crashed == [0]
     assert accepted(acc) == want
